@@ -93,12 +93,15 @@ class CheckpointLog:
         return [p for p in all_partitions if p not in done]
 
     def last_input_snapshot(self, stage: str, partition_key: str) -> int:
-        best = 0
+        return self.last_input_snapshots(stage).get(partition_key, 0)
+
+    def last_input_snapshots(self, stage: str) -> dict[str, int]:
+        """Newest DONE input snapshot per partition of ``stage``, from ONE
+        row scan — a run answers every partition's lookup from this map
+        instead of re-reading the log per partition."""
+        best: dict[str, int] = {}
         for r in self._rows():
-            if (
-                r["stage"] == stage
-                and r["partition_key"] == partition_key
-                and r["status"] == STATUS_DONE
-            ):
-                best = max(best, r["snapshot_id"])
+            if r["stage"] == stage and r["status"] == STATUS_DONE:
+                k = r["partition_key"]
+                best[k] = max(best.get(k, 0), r["snapshot_id"])
         return best

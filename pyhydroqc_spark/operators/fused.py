@@ -183,6 +183,154 @@ def fused_series_kernel(
     }
 
 
+def _token_series_tiers(toks, p, arima_order, tiers, t0_epoch, cadence_s, lo, hi):
+    """One series' token array → per-tier cell vectors: dequantize →
+    ``fused_series_kernel`` → ``reduceat`` per tier. Yields ``(tier,
+    bucket_s, cnt, sum_val, min_val, max_val)`` with NaN aggregates on
+    empty (cnt=0) cells; yields nothing for an empty series."""
+    from ..quantize import dequantize
+
+    x = dequantize(np.asarray(toks, dtype=np.int64), lo, hi)
+    n = len(x)
+    if n == 0:
+        return
+    epochs = t0_epoch + np.arange(n, dtype=np.int64) * cadence_s
+    out = fused_series_kernel(
+        x, pd.DatetimeIndex(pd.to_datetime(epochs, unit="s")), p, arima_order
+    )
+    v = out["det_cor"]
+    valid = np.isfinite(v)
+    vz = np.where(valid, v, 0.0)
+    vmin = np.where(valid, v, np.inf)
+    vmax = np.where(valid, v, -np.inf)
+    for t in tiers:
+        bucket = (epochs // t) * t
+        starts = np.flatnonzero(np.r_[True, bucket[1:] != bucket[:-1]])
+        cnt = np.add.reduceat(valid.astype(np.int64), starts)
+        empty = cnt == 0
+        yield (
+            t,
+            bucket[starts],
+            cnt,
+            np.where(empty, np.nan, np.add.reduceat(vz, starts)),
+            np.where(empty, np.nan, np.minimum.reduceat(vmin, starts)),
+            np.where(empty, np.nan, np.maximum.reduceat(vmax, starts)),
+        )
+
+
+def _kernel_setup(params, tier_seconds, t0, cadence_s, lo, hi):
+    """Resolve the token-kernel defaults shared by both emitters."""
+    from ..datagen import CADENCE_S, T0, VAL_HI, VAL_LO
+
+    tiers = (
+        (int(tier_seconds),)
+        if isinstance(tier_seconds, (int, float))
+        else tuple(int(t) for t in tier_seconds)
+    )
+    return dict(
+        p=params or DEFAULT_PARAMS,
+        tiers=tiers,
+        t0_epoch=int(pd.Timestamp(t0 or T0).timestamp()),
+        cadence_s=cadence_s or CADENCE_S,
+        lo=VAL_LO if lo is None else lo,
+        hi=VAL_HI if hi is None else hi,
+    )
+
+
+def fused_tokens_to_tiers(
+    tok_df: DataFrame,
+    params: SeriesParams | None = None,
+    tier_seconds: int | tuple = 900,
+    arima_order=(1, 1, 0),
+    t0=None,
+    cadence_s: int | None = None,
+    lo: float | None = None,
+    hi: float | None = None,
+    key: str = SERIES_KEY,
+    blobs: bool = True,
+) -> DataFrame:
+    """Token arrays in → ONE row per (series, tier) out: the tier's cell
+    vectors (``bucket_s``, ``cnt``, ``sum_val``, ``min_val``, ``max_val``,
+    empty cells carrying NaN aggregates) and, with ``blobs``, the tier's
+    compressed series blob (``n_tok``, ``blob``).
+
+    This is the commit path's shape: the pipeline caches this small frame
+    and writes every tier's cells (``explode_tier_cells``) and every tier's
+    blob from it, so the kernel is the only Python stage of a partition.
+    The blob is ``encode_series_blob(quantize(sum/cnt), bucket_s)`` —
+    byte-identical to ``compression.encode_tier_df`` over the committed
+    cells (tested), without its shuffle and second Arrow crossing."""
+    from pyspark.sql.types import ArrayType, BinaryType, LongType
+
+    from ..compression import encode_series_blob
+    from ..datagen import VAL_HI, VAL_LO
+    from ..quantize import quantize
+
+    kw = _kernel_setup(params, tier_seconds, t0, cadence_s, lo, hi)
+    fields = [
+        StructField(key, tok_df.schema[key].dataType, False),
+        StructField("tier", IntegerType(), False),
+        StructField("bucket_s", ArrayType(LongType(), False), False),
+        StructField("cnt", ArrayType(LongType(), False), False),
+        StructField("sum_val", ArrayType(DoubleType(), False), False),
+        StructField("min_val", ArrayType(DoubleType(), False), False),
+        StructField("max_val", ArrayType(DoubleType(), False), False),
+    ]
+    if blobs:
+        fields += [
+            StructField("n_tok", IntegerType(), False),
+            StructField("blob", BinaryType(), False),
+        ]
+    columns = [f.name for f in fields]
+
+    def gen(batches):
+        for pdf in batches:
+            rows = []
+            for doc_id, toks in zip(pdf[key], pdf["tokens"]):
+                for t, bucket, cnt, s, mn, mx in _token_series_tiers(
+                    toks, arima_order=arima_order, **kw
+                ):
+                    row = (doc_id, t, bucket, cnt, s, mn, mx)
+                    if blobs:
+                        # encode_tier_df's tokens: the quantized avg_val
+                        # (sum/cnt; NaN on empty cells → sentinel) under
+                        # the data generator's fixed value range
+                        with np.errstate(invalid="ignore", divide="ignore"):
+                            avg = s / cnt
+                        tok = quantize(avg, VAL_LO, VAL_HI)
+                        row += (len(tok), encode_series_blob(tok, bucket))
+                    rows.append(row)
+            if rows:
+                yield pd.DataFrame(rows, columns=columns)
+
+    return tok_df.select(key, "tokens").mapInPandas(gen, schema=StructType(fields))
+
+
+def explode_tier_cells(packed: DataFrame, key: str = SERIES_KEY) -> DataFrame:
+    """(series, tier) cell vectors → one row per cell, JVM-side
+    (``arrays_zip`` + ``posexplode``, inside codegen), with the
+    ``fused_tokens_to_cells`` schema; NaN aggregates become NULL."""
+    zipped = packed.select(
+        key,
+        "tier",
+        F.posexplode(
+            F.arrays_zip("bucket_s", "cnt", "sum_val", "min_val", "max_val")
+        ).alias("__i", "c"),
+    )
+    nn = lambda c: F.when(F.isnan(c), F.lit(None).cast("double")).otherwise(c)  # noqa: E731
+    s_val = nn(F.col("c.sum_val"))
+    return zipped.select(
+        key,
+        F.timestamp_seconds(F.col("c.bucket_s")).alias("bucket_start"),
+        F.col("c.cnt").alias("cnt"),
+        s_val.alias("sum_val"),
+        (s_val / F.col("c.cnt")).alias("avg_val"),
+        nn(F.col("c.min_val")).alias("min_val"),
+        nn(F.col("c.max_val")).alias("max_val"),
+        "tier",
+    )
+
+
 def fused_tokens_to_cells(
     tok_df: DataFrame,
     params: SeriesParams | None = None,
@@ -198,13 +346,13 @@ def fused_tokens_to_cells(
     """Token arrays in → FINISHED rollup cells out, one pass.
 
     ``emit="arrays"`` ships ONE row per (series, tier) out of the Python
-    kernel — the per-tier cell vectors as numpy arrays — and explodes to
-    cell rows JVM-side (``arrays_zip``+``posexplode``, inside codegen).
-    Output-identical to ``emit="rows"`` (tested). Measured a WASH on this
-    box at 8M/local[32] (2.44s rows vs 2.48s arrays steady state — the
-    numpy-column row path is already cheap through Arrow), so rows stays
-    the default; the arrays form is kept for environments where the
-    Python↔JVM crossing is the bottleneck.
+    kernel (``fused_tokens_to_tiers`` without blobs) and explodes to cell
+    rows JVM-side (``explode_tier_cells``). Output-identical to
+    ``emit="rows"`` (tested). It is the shape the ``fused_cells`` pipeline
+    commits from — there the packed frame also carries each tier's blob,
+    which saves the per-tier blob shuffles and Python stages. For a bare
+    cell read, rows stays the default: at 8M/local[32] the two emits
+    measured 2.44s (rows) vs 2.48s (arrays).
 
     The bandwidth-optimal physical strategy for the token table: instead of
     exploding to (doc_id, pos, ts, value) rows (≈40 B/point through the
@@ -224,22 +372,19 @@ def fused_tokens_to_cells(
     (cnt=0 cells carry NULL aggregates, like count/sum/min/max over an
     all-NULL bucket).
     """
-    from ..datagen import CADENCE_S, T0, VAL_HI, VAL_LO
-    from ..quantize import SENTINEL, TOKEN_MAX
-    from pyspark.sql.types import LongType, TimestampType
+    if emit == "arrays":
+        return explode_tier_cells(
+            fused_tokens_to_tiers(
+                tok_df, params, tier_seconds, arima_order, t0, cadence_s,
+                lo, hi, key, blobs=False,
+            ),
+            key,
+        )
 
-    p = params or DEFAULT_PARAMS
-    cadence_s = cadence_s or CADENCE_S
-    lo = VAL_LO if lo is None else lo
-    hi = VAL_HI if hi is None else hi
-    t0_epoch = int(pd.Timestamp(t0 or T0).timestamp())
+    from pyspark.sql.types import LongType, StringType, TimestampType
+
+    kw = _kernel_setup(params, tier_seconds, t0, cadence_s, lo, hi)
     key_type = tok_df.schema[key].dataType
-    tiers = (
-        (int(tier_seconds),)
-        if isinstance(tier_seconds, (int, float))
-        else tuple(int(t) for t in tier_seconds)
-    )
-
     schema = StructType(
         [
             StructField(key, key_type, False),
@@ -252,97 +397,6 @@ def fused_tokens_to_cells(
             StructField("tier", IntegerType(), False),
         ]
     )
-
-    if emit == "arrays":
-        from pyspark.sql.types import ArrayType
-
-        arr_schema = StructType(
-            [
-                StructField(key, key_type, False),
-                StructField("tier", IntegerType(), False),
-                StructField("bucket_s", ArrayType(LongType(), False), False),
-                StructField("cnt", ArrayType(LongType(), False), False),
-                StructField("sum_val", ArrayType(DoubleType(), False), False),
-                StructField("min_val", ArrayType(DoubleType(), False), False),
-                StructField("max_val", ArrayType(DoubleType(), False), False),
-            ]
-        )
-
-        def gen_arrays(batches):
-            for pdf in batches:
-                rows = []
-                for doc_id, toks in zip(pdf[key], pdf["tokens"]):
-                    tok = np.asarray(toks, dtype=np.int64)
-                    x = np.where(
-                        tok == SENTINEL,
-                        np.nan,
-                        lo + tok.astype(np.float64) / TOKEN_MAX * (hi - lo),
-                    )
-                    n = len(x)
-                    if n == 0:
-                        continue
-                    epochs = t0_epoch + np.arange(n, dtype=np.int64) * cadence_s
-                    out = fused_series_kernel(
-                        x, pd.DatetimeIndex(pd.to_datetime(epochs, unit="s")),
-                        p, arima_order,
-                    )
-                    v = out["det_cor"]
-                    valid = np.isfinite(v)
-                    vz = np.where(valid, v, 0.0)
-                    vmin = np.where(valid, v, np.inf)
-                    vmax = np.where(valid, v, -np.inf)
-                    for t in tiers:
-                        bucket = (epochs // t) * t
-                        starts = np.flatnonzero(
-                            np.r_[True, bucket[1:] != bucket[:-1]]
-                        )
-                        cnt = np.add.reduceat(valid.astype(np.int64), starts)
-                        s = np.add.reduceat(vz, starts)
-                        mn = np.minimum.reduceat(vmin, starts)
-                        mx = np.maximum.reduceat(vmax, starts)
-                        empty = cnt == 0
-                        # empty cells stay NaN here; the JVM side maps
-                        # NaN -> NULL after the explode (nanvl-style when)
-                        rows.append(
-                            (
-                                doc_id, t, bucket[starts], cnt,
-                                np.where(empty, np.nan, s),
-                                np.where(empty, np.nan, mn),
-                                np.where(empty, np.nan, mx),
-                            )
-                        )
-                if rows:
-                    yield pd.DataFrame(
-                        rows,
-                        columns=[
-                            key, "tier", "bucket_s", "cnt",
-                            "sum_val", "min_val", "max_val",
-                        ],
-                    )
-
-        packed = tok_df.select(key, "tokens").mapInPandas(gen_arrays, schema=arr_schema)
-        zipped = packed.select(
-            key,
-            "tier",
-            F.posexplode(
-                F.arrays_zip("bucket_s", "cnt", "sum_val", "min_val", "max_val")
-            ).alias("__i", "c"),
-        )
-        nn = lambda c: F.when(F.isnan(c), F.lit(None).cast("double")).otherwise(c)
-        s_val = nn(F.col("c.sum_val"))
-        return zipped.select(
-            key,
-            F.timestamp_seconds(F.col("c.bucket_s")).alias("bucket_start"),
-            F.col("c.cnt").alias("cnt"),
-            s_val.alias("sum_val"),
-            (s_val / F.col("c.cnt")).alias("avg_val"),
-            nn(F.col("c.min_val")).alias("min_val"),
-            nn(F.col("c.max_val")).alias("max_val"),
-            "tier",
-        )
-
-    from pyspark.sql.types import StringType
-
     dict_key = isinstance(key_type, StringType)
 
     def gen(batches):
@@ -350,32 +404,9 @@ def fused_tokens_to_cells(
             keys, buckets, cnts, sums, mins, maxs, tcol = [], [], [], [], [], [], []
             cats, cat_ix = [], {}
             for doc_id, toks in zip(pdf[key], pdf["tokens"]):
-                tok = np.asarray(toks, dtype=np.int64)
-                x = np.where(
-                    tok == SENTINEL,
-                    np.nan,
-                    lo + tok.astype(np.float64) / TOKEN_MAX * (hi - lo),
-                )
-                n = len(x)
-                if n == 0:
-                    continue
-                epochs = t0_epoch + np.arange(n, dtype=np.int64) * cadence_s
-                out = fused_series_kernel(
-                    x, pd.DatetimeIndex(pd.to_datetime(epochs, unit="s")), p, arima_order
-                )
-                v = out["det_cor"]
-                valid = np.isfinite(v)
-                vz = np.where(valid, v, 0.0)
-                vmin = np.where(valid, v, np.inf)
-                vmax = np.where(valid, v, -np.inf)
-                for t in tiers:
-                    bucket = (epochs // t) * t
-                    starts = np.flatnonzero(np.r_[True, bucket[1:] != bucket[:-1]])
-                    cnt = np.add.reduceat(valid.astype(np.int64), starts)
-                    s = np.add.reduceat(vz, starts)
-                    mn = np.minimum.reduceat(vmin, starts)
-                    mx = np.maximum.reduceat(vmax, starts)
-                    empty = cnt == 0
+                for t, bucket, cnt, s, mn, mx in _token_series_tiers(
+                    toks, arima_order=arima_order, **kw
+                ):
                     if dict_key:
                         # dictionary-encode the key: one int32 code per
                         # cell row + one dictionary entry per series —
@@ -385,15 +416,15 @@ def fused_tokens_to_cells(
                         ci = cat_ix.setdefault(doc_id, len(cat_ix))
                         if ci == len(cats):
                             cats.append(doc_id)
-                        keys.append(np.full(len(starts), ci, dtype=np.int32))
+                        keys.append(np.full(len(bucket), ci, dtype=np.int32))
                     else:
-                        keys.append(np.full(len(starts), doc_id, dtype=object))
-                    buckets.append(bucket[starts])
+                        keys.append(np.full(len(bucket), doc_id, dtype=object))
+                    buckets.append(bucket)
                     cnts.append(cnt)
-                    sums.append(np.where(empty, np.nan, s))
-                    mins.append(np.where(empty, np.nan, mn))
-                    maxs.append(np.where(empty, np.nan, mx))
-                    tcol.append(np.full(len(starts), t, dtype=np.int32))
+                    sums.append(s)
+                    mins.append(mn)
+                    maxs.append(mx)
+                    tcol.append(np.full(len(bucket), t, dtype=np.int32))
             if not keys:
                 continue
             cnt = np.concatenate(cnts)

@@ -10,7 +10,12 @@ checkpoint or when the input table's snapshot diff shows new files for it
 since the checkpointed snapshot — the Spark-idiomatic analogue of
 "continuous aggregates maintained incrementally as new partitions land".
 Each tier table commit is an atomic partition overwrite (Iceberg
-replacePartitions analogue — see tables.py).
+replacePartitions analogue — see tables.py). In ``fused_cells`` mode a
+partition costs one Spark write per tier family: the kernel emits every
+tier's cells and blobs in one pass, one write commits the cells of all
+``rollup_{t}s`` tables and one more the blobs of all ``comp_tier_{t}s``
+tables (``tables.commit_tables``: one staged write, then one atomic
+snapshot per table). The native and ``fused`` modes commit tier by tier.
 
 Skew: series are hash-repartitioned by doc_id before the grouped-map UDFs
 (hot sources own ~50% of series; doc_id hashing spreads them evenly;
@@ -30,7 +35,7 @@ from .operators import correct as correct_mod
 from .operators import detect as detect_mod
 from .operators.rollup import DEFAULT_TIERS, rollup_from_rollup, rollup_points
 from .params import DEFAULT_PARAMS
-from .tables import SnapshotTable
+from .tables import SnapshotTable, commit_tables
 
 
 class PipelineResult:
@@ -88,24 +93,25 @@ def run_pipeline(
 
     res = PipelineResult()
     in_snap = input_table.current_snapshot_id()
+    # one manifest parse and one checkpoint-log scan per run, not per
+    # partition: the per-partition skip test is then pure dict/set work
+    part_files_of: dict[str, list[str]] = {}
+    for f, pv in input_table._load(in_snap)["files"].items():
+        if pv is not None:
+            part_files_of.setdefault(pv, []).append(f)
     stage = "rollup"
+    last_snaps = ckpt.last_input_snapshots(stage)
+    seen_files: dict[int, set] = {}
     done = 0
-    for part in sorted(input_table.partitions()):
-        last_snap = ckpt.last_input_snapshot(stage, part)
+    for part in sorted(part_files_of):
+        part_files = part_files_of[part]
+        last_snap = last_snaps.get(part, 0)
         if last_snap > 0:
-            new = [
-                f
-                for f in input_table.added_files(last_snap, in_snap)
-                if input_table._load(in_snap)["files"].get(f) == part
-            ]
-            if not new:
+            if last_snap not in seen_files:
+                seen_files[last_snap] = set(input_table._load(last_snap)["files"])
+            if seen_files[last_snap].issuperset(part_files):
                 res.partitions_skipped.append(part)
                 continue
-        part_files = [
-            f
-            for f, pv in input_table._load(in_snap)["files"].items()
-            if pv == part
-        ]
         tok = spark.read.parquet(*part_files).withColumn("source", F.lit(part))
         n_points = _process_partition(
             spark, tok, part, p, tiers, tier_tables, comp_table,
@@ -130,30 +136,33 @@ def _process_partition(
     tier_comp_tables=None, repartition_input=True,
 ) -> int:
     if mode == "fused_cells":
-        # bandwidth-optimal: token arrays straight into the kernel, finished
-        # finest-tier cells out (operators/fused.py:fused_tokens_to_cells).
-        # Per-tier blob compression still applies; the per-point blob table
-        # needs per-point rows, i.e. mode="fused"/"native".
-        from .operators.fused import fused_tokens_to_cells
+        # bandwidth-optimal: token arrays straight into the kernel, which
+        # emits one row per (series, tier) carrying that tier's cell
+        # vectors and its compressed blob (operators/fused.py:
+        # fused_tokens_to_tiers). The small packed frame is cached and
+        # committed by two writes: every tier's cells, then every tier's
+        # blobs. The per-point blob table needs per-point rows, i.e.
+        # mode="fused"/"native".
+        from .operators.fused import explode_tier_cells, fused_tokens_to_tiers
 
-        tiers_sorted = sorted(tiers)
         src = repartition_series(tok, n_partitions) if repartition_input else tok
-        cells = fused_tokens_to_cells(
-            src, p,
-            tier_seconds=tuple(tiers_sorted), arima_order=arima_order,
+        packed = fused_tokens_to_tiers(
+            src, p, tier_seconds=tuple(sorted(tiers)), arima_order=arima_order,
+            blobs=tier_comp_tables is not None,
         ).cache()
         try:
-            total = 0
-            for t in tiers_sorted:
-                agg = cells.where(F.col("tier") == t)
-                # row count rides the parquet footers of the snapshot
-                # write — no separate count() pass over the partition
-                _, n = tier_tables[t].overwrite_partition_counted(agg, part)
-                _commit_tier_blobs(agg, part, t, tier_comp_tables)
-                total += n
-            return total
+            # the tier stays inside the cell files: write a copy as the key
+            cells = explode_tier_cells(packed).withColumn("__tier", F.col("tier"))
+            # row counts ride the parquet footers of the commit
+            counts = commit_tables(cells, "__tier", tier_tables, partition=part)
+            if tier_comp_tables is not None:
+                commit_tables(
+                    packed.select("doc_id", "n_tok", "blob", "tier"), "tier",
+                    tier_comp_tables, partition=part,
+                )
+            return sum(n for _, n in counts.values())
         finally:
-            cells.unpersist()
+            packed.unpersist()
     long_df = explode_tokens(repartition_series(tok, n_partitions))
     if mode == "fused":
         # single-pass per-series kernel (operators/fused.py): one shuffle,

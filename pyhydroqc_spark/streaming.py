@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .ingest import explode_tokens
 from .operators.rollup import rollup_points
-from .tables import SnapshotTable
+from .tables import SnapshotTable, commit_tables
 
 TOKEN_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
@@ -59,26 +59,34 @@ def merge_batch_tiers(
     retention tier's store (``agg_{t}s``). The finest tier aggregates the
     raw batch; coarser tiers re-aggregate the finest tier's PARTIAL cells
     (cnt/sum/min/max are monoids, so partials of partials are exact) — the
-    batch is scanned once regardless of tier count. Each store commits its
-    own batch id, so a crash between tier commits replays safely: finished
-    tiers skip, unfinished tiers apply. Returns how many tiers applied."""
+    batch is scanned once regardless of tier count, and all pending tiers
+    merge in one write. Each store commits its own batch id, so a crash
+    between tier commits replays safely: finished tiers skip, unfinished
+    tiers apply. Returns how many tiers applied."""
+    from functools import reduce
+
     from .operators.rollup import rollup_from_rollup
 
     tiers_sorted = sorted(int(t) for t in tiers)
+    stores = {t: os.path.join(out_dir, f"agg_{t}s") for t in tiers_sorted}
+    pending = _pending_stores(stores, batch_id)
+    if not pending:
+        return 0
     finest = rollup_points(batch_df, tiers_sorted[0], value_col=value_col).persist()
-    applied = 0
     try:
-        agg = finest
+        agg, parts = finest, []
         for t in tiers_sorted:
             if t != tiers_sorted[0]:
                 agg = rollup_from_rollup(agg.drop("tier"), t)
-            applied += _merge_cells_into(
-                batch_df.sparkSession, agg, batch_id,
-                os.path.join(out_dir, f"agg_{t}s"),
-            )
+            if t in pending:
+                parts.append(agg)
+        _merge_cells_into(
+            batch_df.sparkSession, reduce(DataFrame.unionByName, parts),
+            batch_id, pending,
+        )
     finally:
         finest.unpersist()
-    return applied
+    return len(pending)
 
 
 def merge_batch(
@@ -90,8 +98,8 @@ def merge_batch(
 ) -> bool:
     """Cell-scoped MERGE of one micro-batch: read ONLY the day-partitions
     the batch touches, fold the batch's partial aggregates in, and
-    atomically replace just those partitions via
-    ``SnapshotTable.overwrite_partitions``. Per-batch cost is O(touched
+    atomically replace just those partitions (``tables.commit_tables`` in
+    its ``overwrite_partitions`` form). Per-batch cost is O(touched
     cells), not O(store size).
 
     IDEMPOTENT under foreachBatch's at-least-once delivery: the batch id
@@ -99,35 +107,56 @@ def merge_batch(
     id is ≤ the last committed one is a retry of work already folded in —
     it must be skipped, or cnt/sum would double. Returns True if the batch
     was applied, False if it was recognized as a replay."""
-    cells = rollup_points(batch_df, tier_seconds, value_col=value_col)
-    return bool(
-        _merge_cells_into(batch_df.sparkSession, cells, batch_id, agg_path)
-    )
+    pending = _pending_stores({int(tier_seconds): agg_path}, batch_id)
+    if pending:
+        cells = rollup_points(batch_df, tier_seconds, value_col=value_col)
+        _merge_cells_into(batch_df.sparkSession, cells, batch_id, pending)
+    return bool(pending)
 
 
-def _merge_cells_into(spark, cells: DataFrame, batch_id: int, agg_path: str) -> int:
-    """Fold partial cells into one tier store (see merge_batch for the
-    idempotence contract). Returns 1 if applied, 0 if replay-skipped."""
-    store = SnapshotTable(agg_path)
-    # walk the snapshot lineage, not just the current snapshot: an
-    # interleaved non-stream commit (append / retention) would otherwise
-    # hide the streaming high-water mark and a retry would double-count
-    last = store.latest_extra_value("stream_batch_id")
-    if last is not None and batch_id <= int(last):
-        return 0
+def _pending_stores(stores: dict, batch_id: int) -> dict:
+    """{tier: SnapshotTable} of the stores that have not yet folded
+    ``batch_id`` in. Walks the snapshot lineage, not just the current
+    snapshot: an interleaved non-stream commit (append / retention) would
+    otherwise hide the streaming high-water mark and a retry would
+    double-count."""
+    pending = {}
+    for t, path in stores.items():
+        store = SnapshotTable(path)
+        last = store.latest_extra_value("stream_batch_id")
+        if last is None or batch_id > int(last):
+            pending[t] = store
+    return pending
+
+
+def _merge_cells_into(spark, cells: DataFrame, batch_id: int, stores: dict) -> None:
+    """Fold partial cells of several tiers into their stores ({tier:
+    SnapshotTable}): one distinct (tier, day) collect, one read of the
+    touched day-partitions of every store, one merge write, then one
+    commit per store carrying ``batch_id`` (see merge_batch for the
+    idempotence contract)."""
     incoming = cells.withColumn(
         "day", F.date_format("bucket_start", "yyyy-MM-dd")
     ).persist()
-    days = {r["day"] for r in incoming.select("day").distinct().collect()}
-    hit_files = store.files_for_partitions(days)
-    if hit_files:
-        existing = spark.read.parquet(*hit_files)
-        merged = _merge_cells(existing, incoming)
-    else:
-        merged = incoming
-    store.overwrite_partitions(merged, "day", extra={"stream_batch_id": int(batch_id)})
-    incoming.unpersist()
-    return 1
+    try:
+        days: dict[int, set] = {}
+        for r in incoming.select("tier", "day").distinct().collect():
+            days.setdefault(int(r["tier"]), set()).add(r["day"])
+        hit_files = [
+            f
+            for t, store in stores.items()
+            for f in store.files_for_partitions(days.get(t, set()))
+        ]
+        merged = _merge_cells(
+            spark.read.parquet(*hit_files) if hit_files else None, incoming
+        )
+        # the tier stays inside the store files: write a copy as the key
+        commit_tables(
+            merged.withColumn("__tier", F.col("tier")), "__tier", stores,
+            partition_col="day", extra={"stream_batch_id": int(batch_id)},
+        )
+    finally:
+        incoming.unpersist()
 
 
 def run_streaming_rollup(

@@ -19,8 +19,13 @@ Layout::
       _snapshots/v00001.json   {"id", "parent", "files": {file: partition}}
       _snapshots/CURRENT       ("1")
 
+``commit_tables`` lands several tables from ONE Spark write: rows staged
+once, partitioned by their target table, then one atomic commit per table
+(the fused_cells pipeline's tier families and the streaming tier merge).
+
 Swapping this for real Iceberg is a one-module change: the pipeline only
-uses append / read / added_files / overwrite_partition / drop_partitions.
+uses append / read / added_files / overwrite_partition / drop_partitions /
+commit_tables.
 """
 
 from __future__ import annotations
@@ -28,6 +33,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -94,8 +100,11 @@ class SnapshotTable:
 
     # -- writes ---------------------------------------------------------------
 
+    def _commit_dir(self) -> str:
+        return os.path.join(self.root, "data", uuid.uuid4().hex[:12])
+
     def _write_files(self, df: DataFrame, partition: str | None) -> list[str]:
-        commit_dir = os.path.join(self.root, "data", uuid.uuid4().hex[:12])
+        commit_dir = self._commit_dir()
         df.write.mode("overwrite").parquet(commit_dir)
         return sorted(glob.glob(os.path.join(commit_dir, "*.parquet")))
 
@@ -133,13 +142,19 @@ class SnapshotTable:
     def _overwrite_with(
         self, new_files: list, partition: str, extra: dict | None = None
     ) -> int:
+        return self._replace(
+            {fp: partition for fp in new_files}, {partition}, extra
+        )
+
+    def _replace(self, new_files: dict, replaced: set, extra: dict | None = None) -> int:
+        """Commit ``new_files`` ({file: partition}) in place of every live
+        file whose partition is in ``replaced``."""
         files = {
             fp: p
             for fp, p in self._load(self.current_snapshot_id())["files"].items()
-            if p != partition
+            if p not in replaced
         }
-        for fp in new_files:
-            files[fp] = partition
+        files.update(new_files)
         return self._commit(files, extra)
 
     def snapshot_extra(self, snapshot_id: int | None = None) -> dict:
@@ -185,30 +200,15 @@ class SnapshotTable:
         same schema whether they scan one file or the whole table)."""
         from pyspark.sql import functions as F
 
-        commit_dir = os.path.join(self.root, "data", uuid.uuid4().hex[:12])
+        commit_dir = self._commit_dir()
         (
             df.withColumn("__part", F.col(partition_col).cast("string"))
             .write.mode("overwrite")
             .partitionBy("__part")
             .parquet(commit_dir)
         )
-        from urllib.parse import unquote
-
-        new_files: dict[str, str] = {}
-        for fp in sorted(glob.glob(os.path.join(commit_dir, "__part=*", "*.parquet"))):
-            # Spark URL-escapes special chars in partition directory names
-            # (':' -> '%3A'); unescape so manifest values match the raw
-            # strings callers pass to files_for_partitions
-            pval = unquote(os.path.basename(os.path.dirname(fp)).split("=", 1)[1])
-            new_files[fp] = pval
-        touched = set(new_files.values())
-        files = {
-            fp: p
-            for fp, p in self._load(self.current_snapshot_id())["files"].items()
-            if p not in touched
-        }
-        files.update(new_files)
-        return self._commit(files, extra=extra)
+        new_files = _part_files(commit_dir)
+        return self._replace(new_files, set(new_files.values()), extra)
 
     # -- reads ----------------------------------------------------------------
 
@@ -328,6 +328,99 @@ class SnapshotTable:
                     os.remove(fp)
                     removed.append(fp)
         return removed
+
+
+def _part_files(commit_dir: str) -> dict[str, str]:
+    """{file: partition value} of a ``__part=<value>`` directory layout.
+    Spark URL-escapes special chars in partition directory names (':' ->
+    '%3A'); unescape so manifest values match the raw strings callers pass
+    to files_for_partitions."""
+    from urllib.parse import unquote
+
+    return {
+        fp: unquote(os.path.basename(os.path.dirname(fp)).split("=", 1)[1])
+        for fp in sorted(glob.glob(os.path.join(commit_dir, "__part=*", "*.parquet")))
+    }
+
+
+def commit_tables(
+    df: DataFrame,
+    key_col: str,
+    tables: dict,
+    partition: str | None = None,
+    partition_col: str | None = None,
+    extra: dict | None = None,
+) -> dict:
+    """ONE Spark write, one atomic snapshot commit per table.
+
+    ``tables`` maps each value of ``key_col`` to the ``SnapshotTable`` its
+    rows belong to. The rows are written once, partitioned by ``key_col``,
+    into a staging directory beside the tables; each key's directory is
+    then renamed into its table's ``data/<commit>/`` and that table's
+    manifest committed, in ``tables`` order. Like ``partitionBy``,
+    ``key_col`` is kept out of the data files (duplicate it first to keep
+    it inside).
+
+    Exactly one of:
+
+    * ``partition`` — every table's ``partition`` is replaced by its rows
+      (``overwrite_partition`` per table);
+    * ``partition_col`` — each table replaces only the values of
+      ``partition_col`` its rows carry (``overwrite_partitions`` per table,
+      same ``__part=<value>`` layout).
+
+    Each table commits on its own, so a crash between two commits leaves
+    every table either fully at its new snapshot or untouched; a table's
+    moved directory is removed again if its commit fails, and the staging
+    directory is always removed. ``extra`` rides every table's manifest.
+    Returns ``{key: (snapshot_id, rows)}``, the row count read from the
+    committed parquet footers."""
+    from urllib.parse import unquote
+
+    from pyspark.sql import functions as F
+
+    if (partition is None) == (partition_col is None):
+        raise ValueError("pass exactly one of partition / partition_col")
+    tables = {str(k): t for k, t in tables.items()}
+    parent = os.path.commonpath([os.path.dirname(t.root) for t in tables.values()])
+    stage = os.path.join(parent, "_staging", uuid.uuid4().hex[:12])
+    cols = [key_col]
+    if partition_col is not None:
+        df = df.withColumn("__part", F.col(partition_col).cast("string"))
+        cols.append("__part")
+    try:
+        df.write.mode("overwrite").partitionBy(*cols).parquet(stage)
+        staged = {
+            unquote(os.path.basename(d).split("=", 1)[1]): d
+            for d in glob.glob(os.path.join(stage, f"{key_col}=*"))
+        }
+        unknown = sorted(set(staged) - set(tables))
+        if unknown:
+            raise ValueError(f"rows for keys without a table: {unknown}")
+        out = {}
+        for k, table in tables.items():
+            commit_dir = table._commit_dir()
+            new_files: dict[str, str] = {}
+            if k in staged:
+                os.makedirs(os.path.dirname(commit_dir), exist_ok=True)
+                os.rename(staged[k], commit_dir)
+                if partition_col is None:
+                    new_files = {
+                        fp: partition
+                        for fp in sorted(glob.glob(os.path.join(commit_dir, "*.parquet")))
+                    }
+                else:
+                    new_files = _part_files(commit_dir)
+            replaced = {partition} if partition_col is None else set(new_files.values())
+            try:
+                sid = table._replace(new_files, replaced, extra)
+            except BaseException:
+                shutil.rmtree(commit_dir, ignore_errors=True)
+                raise
+            out[k] = (sid, _parquet_rows(list(new_files)))
+        return out
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
 def rewrite_data_files(

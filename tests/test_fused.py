@@ -12,7 +12,17 @@ from pyhydroqc_spark.operators import fused
 from pyhydroqc_spark.params import SeriesParams
 from tests.reference_oracle import load_reference
 
-REF = load_reference()
+
+@pytest.fixture(scope="module")
+def REF():
+    """The pyhydroqc reference modules. Only the three reference-parity
+    tests use them; they skip when the checkout is not importable, and
+    every other pin in this module runs without it."""
+    try:
+        return load_reference()
+    except ImportError as e:
+        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
+
 
 P = SeriesParams(max_range=25.0, min_range=-1.0, persist=30, window_sz=30,
                  alpha=0.0001, threshold_min=0.25, widen=1, pdq=(1, 1, 0))
@@ -28,7 +38,7 @@ def _series(seed=0, n=900):
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
-def test_numpy_helpers_match_reference(seed):
+def test_numpy_helpers_match_reference(seed, REF):
     x = _series(seed)
     idx = pd.date_range("2022-01-01", periods=len(x), freq="15min")
     rdf = pd.DataFrame({"raw": x}, index=idx)
@@ -45,7 +55,7 @@ def test_numpy_helpers_match_reference(seed):
     np.testing.assert_allclose(obs, rdf["observed"].to_numpy(), atol=1e-12, equal_nan=True)
 
 
-def test_threshold_np_matches_reference():
+def test_threshold_np_matches_reference(REF):
     rng = np.random.default_rng(5)
     r = rng.normal(0, 1, 400)
     lo, hi = fused.dynamic_threshold_np(r, 30, 0.001, 0.1)
@@ -59,7 +69,7 @@ def test_threshold_np_matches_reference():
 
 
 @pytest.mark.parametrize("wf", [0, 1, 3])
-def test_events_np_matches_reference(wf):
+def test_events_np_matches_reference(wf, REF):
     rng = np.random.default_rng(9)
     flags = rng.random(200) < 0.1
     got = fused.widen_events_np(flags, wf)

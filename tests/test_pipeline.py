@@ -227,3 +227,131 @@ def test_fused_cells_zero_shuffle_equals_repartitioned(spark, tmp_path):
             outs[False][t].reset_index(drop=True),
             check_exact=False, atol=1e-9,
         )
+
+
+TIERS = (900, 3600, 86400)
+
+
+@pytest.fixture(scope="module")
+def fused_canon(spark, tmp_path_factory):
+    """One uninterrupted fused_cells run with tier compression on: the
+    reference for the blob-parity and crash/resume tests."""
+    tmp = str(tmp_path_factory.mktemp("fused_canon"))
+    tbl, pdf = _input_table(spark, tmp, n_series=4, n_tok=800, seed=5)
+    out = os.path.join(tmp, "out")
+    P.run_pipeline(spark, tbl, out, PARAMS, mode="fused_cells")
+    return {"out": out, "pdf": pdf}
+
+
+def _read_blobs(spark, root, tier):
+    return (
+        SnapshotTable(os.path.join(root, f"comp_tier_{tier}s"))
+        .read(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
+    )
+
+
+def test_fused_cells_blobs_equal_encode_tier_df(spark, fused_canon):
+    """The kernel-encoded tier blobs are byte-identical to encode_tier_df
+    over the committed cells, for every (doc_id, tier)."""
+    from pyhydroqc_spark.compression import encode_tier_df
+
+    for tier in TIERS:
+        cells = SnapshotTable(
+            os.path.join(fused_canon["out"], f"rollup_{tier}s")
+        ).read(spark)
+        want = (
+            encode_tier_df(cells).toPandas()
+            .sort_values("doc_id").reset_index(drop=True)
+        )
+        got = _read_blobs(spark, fused_canon["out"], tier)
+        assert got["doc_id"].tolist() == want["doc_id"].tolist(), tier
+        assert got["n_tok"].tolist() == want["n_tok"].tolist(), tier
+        assert [bytes(b) for b in got["blob"]] == [bytes(b) for b in want["blob"]], tier
+
+
+def test_fused_cells_partition_runs_at_most_four_jobs(spark, tmp_path, monkeypatch):
+    """One fused_cells partition is the kernel plus two commit writes:
+    at most 4 Spark jobs (the doc_id exchange's map stage runs as its own
+    job under AQE), counted under a per-partition job group."""
+    sc = spark.sparkContext
+    tbl, _ = _input_table(spark, str(tmp_path), n_series=4, n_tok=800, seed=5)
+    real = P._process_partition
+    groups = {}
+
+    def in_group(spark_, tok, part, *a, **kw):
+        groups[part] = f"jobcount-{tmp_path.name}/part:{part}"
+        sc.setJobGroup(groups[part], groups[part])
+        try:
+            return real(spark_, tok, part, *a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(P, "_process_partition", in_group)
+    P.run_pipeline(spark, tbl, str(tmp_path / "out"), PARAMS, mode="fused_cells")
+    # job starts reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(groups) == 3
+    for part, g in groups.items():
+        n = len(sc.statusTracker().getJobIdsForGroup(g))
+        assert 1 <= n <= 4, (part, n)
+
+
+def test_fused_cells_crash_between_table_commits_resumes(spark, fused_canon, tmp_path):
+    """A crash after the staged write, between two tables' commits: no
+    table shows part of a partition, no checkpoint row is written, no
+    staged file is left under any table's data/, and the resume commits
+    the same cells and blobs as an uninterrupted run."""
+    import glob
+
+    tmp = str(tmp_path)
+    tbl, pdf = _input_table(spark, tmp, n_series=4, n_tok=800, seed=5)
+    out = os.path.join(tmp, "out")
+    first = sorted(pdf["source"].unique())[0]
+
+    real = SnapshotTable._replace
+    calls = {"n": 0}
+
+    def crash_on_second(self, new_files, replaced, extra=None):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("simulated crash between table commits")
+        return real(self, new_files, replaced, extra)
+
+    SnapshotTable._replace = crash_on_second
+    try:
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            P.run_pipeline(spark, tbl, out, PARAMS, mode="fused_cells")
+    finally:
+        SnapshotTable._replace = real
+
+    assert not CheckpointLog(os.path.join(out, "_checkpoints")).done_partitions("rollup")
+    docs = set(pdf.loc[pdf["source"] == first, "doc_id"])
+    committed = {}
+    for tier in TIERS:
+        got = _read_tier(spark, out, tier)
+        committed[tier] = got is not None
+        if got is None:
+            continue
+        want = _read_tier(spark, fused_canon["out"], tier)
+        want = want[want["doc_id"].isin(docs)].reset_index(drop=True)
+        pd.testing.assert_frame_equal(got.reset_index(drop=True), want)
+    # the first tier committed, the crash stopped the second
+    assert committed == {900: True, 3600: False, 86400: False}
+    for name in os.listdir(out):
+        if name.startswith(("rollup_", "comp_tier_")):
+            t = SnapshotTable(os.path.join(out, name))
+            on_disk = set(glob.glob(os.path.join(t.root, "data", "**", "*.parquet"),
+                                    recursive=True))
+            assert on_disk <= set(t.files()), name
+    assert not glob.glob(os.path.join(out, "_staging", "**", "*.parquet"), recursive=True)
+
+    P.run_pipeline(spark, tbl, out, PARAMS, mode="fused_cells")
+    for tier in TIERS:
+        pd.testing.assert_frame_equal(
+            _read_tier(spark, out, tier).reset_index(drop=True),
+            _read_tier(spark, fused_canon["out"], tier).reset_index(drop=True),
+        )
+        a, b = _read_blobs(spark, out, tier), _read_blobs(spark, fused_canon["out"], tier)
+        assert a["doc_id"].tolist() == b["doc_id"].tolist()
+        assert [bytes(x) for x in a["blob"]] == [bytes(x) for x in b["blob"]]

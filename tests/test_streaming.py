@@ -339,30 +339,32 @@ def test_drain_retention_drain_preserves_batch_lineage(spark, tmp_path):
 
 
 def test_crash_between_tier_commits_self_heals(spark, tmp_path):
-    """merge_batch_tiers commits each tier's store separately; a crash
-    between tier commits leaves tiers at different stream_batch_ids. On
-    replay the per-store idempotent skip must make every tier converge to
-    the one-shot result without double-counting the finished tier."""
+    """merge_batch_tiers writes every tier once but commits each tier's
+    store separately; a crash between tier commits leaves tiers at
+    different stream_batch_ids. On replay the per-store idempotent skip
+    must make every tier converge to the one-shot result without
+    double-counting the finished tier."""
     out_dir = str(tmp_path / "out")
     tiers = (900, 3600, 86400)
     pdf = gen_token_table(n_series=3, n_tok=600, seed=29)
     batch = explode_tokens(spark.createDataFrame(pdf, schema=_tok_schema()))
 
-    real = streaming._merge_cells_into
+    # the per-store commit step of the shared multi-table commit
+    real = SnapshotTable._replace
     calls = {"n": 0}
 
-    def crash_after_first(spark_, cells, batch_id, agg_path):
+    def crash_after_first(self, new_files, replaced, extra=None):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("simulated crash between tier commits")
-        return real(spark_, cells, batch_id, agg_path)
+        return real(self, new_files, replaced, extra)
 
-    streaming._merge_cells_into = crash_after_first
+    SnapshotTable._replace = crash_after_first
     try:
         with pytest.raises(RuntimeError, match="simulated crash"):
             streaming.merge_batch_tiers(batch, 0, out_dir, tiers)
     finally:
-        streaming._merge_cells_into = real
+        SnapshotTable._replace = real
 
     # tier stores are now divergent: finest applied, the rest missing
     assert SnapshotTable(os.path.join(out_dir, "agg_900s")).read(spark) is not None

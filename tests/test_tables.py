@@ -191,3 +191,58 @@ def test_rewrite_data_files_compacts_small_files(spark, tmp_path):
     assert len(t.files_for_partitions({"day1"}, snapshot_id=sid_before)) == before_d1
     # second run: nothing left to do
     assert tables.rewrite_data_files(t, spark, target_mb=64).get("day1") is None
+
+
+def test_commit_tables_static_partition(spark, tmp_path):
+    """One write lands each key's rows in its own table as that table's
+    partition; the key column stays out of the files, other partitions
+    are kept, footer row counts come back and no staging dir is left."""
+    import pytest
+
+    from pyhydroqc_spark.tables import commit_tables
+
+    a = SnapshotTable(str(tmp_path / "a"))
+    b = SnapshotTable(str(tmp_path / "b"))
+    a.append(spark.createDataFrame([Row(v=0)]), partition="old")
+    df = spark.createDataFrame(
+        [Row(t="a", v=1), Row(t="a", v=2), Row(t="b", v=3)]
+    )
+    out = commit_tables(df, "t", {"a": a, "b": b}, partition="p1")
+    assert {k: n for k, (_, n) in out.items()} == {"a": 2, "b": 1}
+    assert a.partitions() == {"old", "p1"} and b.partitions() == {"p1"}
+    assert sorted(r["v"] for r in a.read(spark).collect()) == [0, 1, 2]
+    assert b.read(spark).columns == ["v"]
+    # a second commit replaces only p1
+    commit_tables(df.where("v = 1"), "t", {"a": a, "b": b}, partition="p1")
+    assert sorted(r["v"] for r in a.read(spark).collect()) == [0, 1]
+    assert b.read(spark) is None
+    # a key without a table commits nothing
+    sid = a.current_snapshot_id()
+    with pytest.raises(ValueError, match="without a table"):
+        commit_tables(df, "t", {"a": a}, partition="p1")
+    assert a.current_snapshot_id() == sid
+    assert not glob.glob(str(tmp_path / "_staging" / "*"))
+
+
+def test_commit_tables_dynamic_partitions(spark, tmp_path):
+    """partition_col form: each table replaces only the values its rows
+    carry, in the __part=<value> layout (special chars round-trip), and
+    ``extra`` rides every table's manifest."""
+    from pyhydroqc_spark.tables import commit_tables
+
+    a = SnapshotTable(str(tmp_path / "a"))
+    b = SnapshotTable(str(tmp_path / "b"))
+    df = spark.createDataFrame(
+        [Row(t=1, d="x 10:00", v=1), Row(t=1, d="y", v=2), Row(t=2, d="y", v=3)]
+    )
+    commit_tables(df, "t", {1: a, 2: b}, partition_col="d", extra={"k": 7})
+    commit_tables(df.where("v = 2"), "t", {1: a, 2: b}, partition_col="d",
+                  extra={"k": 8})
+    assert a.partitions() == {"x 10:00", "y"} and b.partitions() == {"y"}
+    assert sorted(r["v"] for r in a.read(spark).collect()) == [1, 2]
+    assert sorted(r["v"] for r in b.read(spark).collect()) == [3]
+    assert a.snapshot_extra() == {"k": 8} and b.snapshot_extra() == {"k": 8}
+    assert all(
+        os.path.basename(os.path.dirname(f)).startswith("__part=") for f in a.files()
+    )
+    assert set(a.read(spark).columns) == {"d", "v"}
