@@ -291,7 +291,7 @@ def q_rollup_tiers(spark, sf_dir):
     hash-checked independently. Consolidates the four r4 gates
     rollup_15min/1h/1d/tiered_1d into one queries() slot (the driver
     artifact caps near 50 entries — see CHANGES_r05.md)."""
-    # ONE persisted copy of the windowed long frame feeds all six
+    # ONE checkpointed copy of the windowed long frame feeds all six
     # row-sets: the gate deliberately computes every tier DIRECT from
     # facts (to cross-check the cascade), so without the shared copy the
     # six subtrees each redo the scan+window — 4.7s -> ~1.4s at sf0.1.

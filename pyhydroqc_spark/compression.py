@@ -328,12 +328,6 @@ def _encode_keyed_df(df, value_col: str, ts_col: str, order_col: str):
     return df.groupBy("doc_id").applyInPandas(enc, schema=schema)
 
 
-def encode_series_df(df, value_col: str = "det_cor"):
-    """(doc_id, ts, pos, value) → (doc_id, n_tok, blob): re-quantize the
-    corrected series with the shared quantizer and compress per series."""
-    return _encode_keyed_df(df, value_col, ts_col="ts", order_col="pos")
-
-
 def encode_tier_df(df, value_col: str = "avg_val"):
     """Rollup cells → (doc_id, n_tok, blob) per series — the north-star
     "compression for each retention tier": delta-of-delta on the bucket

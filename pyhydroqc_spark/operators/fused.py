@@ -218,25 +218,6 @@ def _token_series_tiers(toks, p, arima_order, tiers, t0_epoch, cadence_s, lo, hi
         )
 
 
-def _kernel_setup(params, tier_seconds, t0, cadence_s, lo, hi):
-    """Resolve the token-kernel defaults shared by both emitters."""
-    from ..datagen import CADENCE_S, T0, VAL_HI, VAL_LO
-
-    tiers = (
-        (int(tier_seconds),)
-        if isinstance(tier_seconds, (int, float))
-        else tuple(int(t) for t in tier_seconds)
-    )
-    return dict(
-        p=params or DEFAULT_PARAMS,
-        tiers=tiers,
-        t0_epoch=int(pd.Timestamp(t0 or T0).timestamp()),
-        cadence_s=cadence_s or CADENCE_S,
-        lo=VAL_LO if lo is None else lo,
-        hi=VAL_HI if hi is None else hi,
-    )
-
-
 def fused_tokens_to_tiers(
     tok_df: DataFrame,
     params: SeriesParams | None = None,
@@ -263,18 +244,31 @@ def fused_tokens_to_tiers(
     from pyspark.sql.types import ArrayType, BinaryType, LongType
 
     from ..compression import encode_series_blob
-    from ..datagen import VAL_HI, VAL_LO
+    from ..datagen import CADENCE_S, T0, VAL_HI, VAL_LO
     from ..quantize import quantize
 
-    kw = _kernel_setup(params, tier_seconds, t0, cadence_s, lo, hi)
+    kw = dict(
+        p=params or DEFAULT_PARAMS,
+        tiers=(
+            (int(tier_seconds),)
+            if isinstance(tier_seconds, (int, float))
+            else tuple(int(t) for t in tier_seconds)
+        ),
+        t0_epoch=int(pd.Timestamp(t0 or T0).timestamp()),
+        cadence_s=cadence_s or CADENCE_S,
+        lo=VAL_LO if lo is None else lo,
+        hi=VAL_HI if hi is None else hi,
+    )
     fields = [
         StructField(key, tok_df.schema[key].dataType, False),
         StructField("tier", IntegerType(), False),
         StructField("bucket_s", ArrayType(LongType(), False), False),
         StructField("cnt", ArrayType(LongType(), False), False),
-        StructField("sum_val", ArrayType(DoubleType(), False), False),
-        StructField("min_val", ArrayType(DoubleType(), False), False),
-        StructField("max_val", ArrayType(DoubleType(), False), False),
+        # the Arrow crossing turns an empty cell's NaN aggregate into a
+        # NULL element, so these arrays must admit NULLs
+        StructField("sum_val", ArrayType(DoubleType(), True), False),
+        StructField("min_val", ArrayType(DoubleType(), True), False),
+        StructField("max_val", ArrayType(DoubleType(), True), False),
     ]
     if blobs:
         fields += [
@@ -308,8 +302,12 @@ def fused_tokens_to_tiers(
 
 def explode_tier_cells(packed: DataFrame, key: str = SERIES_KEY) -> DataFrame:
     """(series, tier) cell vectors → one row per cell, JVM-side
-    (``arrays_zip`` + ``posexplode``, inside codegen), with the
-    ``fused_tokens_to_cells`` schema; NaN aggregates become NULL."""
+    (``arrays_zip`` + ``posexplode``, inside codegen): ``key``,
+    ``bucket_start``, ``cnt``, ``sum_val``, ``avg_val``, ``min_val``,
+    ``max_val``, ``tier``. NaN aggregates become NULL, so an empty (cnt=0)
+    cell reads like count/sum/min/max over an all-NULL bucket. This is the
+    cell output of ``fused_tokens_to_cells`` and the cell commit of the
+    pipeline."""
     zipped = packed.select(
         key,
         "tier",
@@ -341,18 +339,8 @@ def fused_tokens_to_cells(
     lo: float | None = None,
     hi: float | None = None,
     key: str = SERIES_KEY,
-    emit: str = "rows",
 ) -> DataFrame:
     """Token arrays in → FINISHED rollup cells out, one pass.
-
-    ``emit="arrays"`` ships ONE row per (series, tier) out of the Python
-    kernel (``fused_tokens_to_tiers`` without blobs) and explodes to cell
-    rows JVM-side (``explode_tier_cells``). Output-identical to
-    ``emit="rows"`` (tested). It is the shape the ``fused_cells`` pipeline
-    commits from — there the packed frame also carries each tier's blob,
-    which saves the per-tier blob shuffles and Python stages. For a bare
-    cell read, rows stays the default: at 8M/local[32] the two emits
-    measured 2.44s (rows) vs 2.48s (arrays).
 
     The bandwidth-optimal physical strategy for the token table: instead of
     exploding to (doc_id, pos, ts, value) rows (≈40 B/point through the
@@ -362,7 +350,10 @@ def fused_tokens_to_cells(
     reduces to (doc_id, bucket) cells via ``np.*.reduceat`` before anything
     crosses back. Each input row is a COMPLETE series (the token-table
     contract, `collapse_to_tokens`), so the emitted cells are final — no
-    post-aggregation shuffle.
+    post-aggregation shuffle. The kernel ships ONE row per (series, tier)
+    (``fused_tokens_to_tiers`` without blobs) and the cell rows are
+    exploded JVM-side (``explode_tier_cells``) — the same kernel output
+    the ``fused_cells`` pipeline commits from.
 
     ``tier_seconds`` may be one tier or a tuple of tiers: with a tuple the
     kernel emits EVERY tier's cells in the same pass (distinguished by the
@@ -372,82 +363,13 @@ def fused_tokens_to_cells(
     (cnt=0 cells carry NULL aggregates, like count/sum/min/max over an
     all-NULL bucket).
     """
-    if emit == "arrays":
-        return explode_tier_cells(
-            fused_tokens_to_tiers(
-                tok_df, params, tier_seconds, arima_order, t0, cadence_s,
-                lo, hi, key, blobs=False,
-            ),
-            key,
-        )
-
-    from pyspark.sql.types import LongType, StringType, TimestampType
-
-    kw = _kernel_setup(params, tier_seconds, t0, cadence_s, lo, hi)
-    key_type = tok_df.schema[key].dataType
-    schema = StructType(
-        [
-            StructField(key, key_type, False),
-            StructField("bucket_start", TimestampType(), False),
-            StructField("cnt", LongType(), False),
-            StructField("sum_val", DoubleType(), True),
-            StructField("avg_val", DoubleType(), True),
-            StructField("min_val", DoubleType(), True),
-            StructField("max_val", DoubleType(), True),
-            StructField("tier", IntegerType(), False),
-        ]
+    return explode_tier_cells(
+        fused_tokens_to_tiers(
+            tok_df, params, tier_seconds, arima_order, t0, cadence_s,
+            lo, hi, key, blobs=False,
+        ),
+        key,
     )
-    dict_key = isinstance(key_type, StringType)
-
-    def gen(batches):
-        for pdf in batches:
-            keys, buckets, cnts, sums, mins, maxs, tcol = [], [], [], [], [], [], []
-            cats, cat_ix = [], {}
-            for doc_id, toks in zip(pdf[key], pdf["tokens"]):
-                for t, bucket, cnt, s, mn, mx in _token_series_tiers(
-                    toks, arima_order=arima_order, **kw
-                ):
-                    if dict_key:
-                        # dictionary-encode the key: one int32 code per
-                        # cell row + one dictionary entry per series —
-                        # the Arrow crossing ships ~4 B/row instead of a
-                        # per-row string (Spark decodes the categorical
-                        # to plain strings; value-identical, tested)
-                        ci = cat_ix.setdefault(doc_id, len(cat_ix))
-                        if ci == len(cats):
-                            cats.append(doc_id)
-                        keys.append(np.full(len(bucket), ci, dtype=np.int32))
-                    else:
-                        keys.append(np.full(len(bucket), doc_id, dtype=object))
-                    buckets.append(bucket)
-                    cnts.append(cnt)
-                    sums.append(s)
-                    mins.append(mn)
-                    maxs.append(mx)
-                    tcol.append(np.full(len(bucket), t, dtype=np.int32))
-            if not keys:
-                continue
-            cnt = np.concatenate(cnts)
-            s = np.concatenate(sums)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                avg = s / cnt
-            key_col = np.concatenate(keys)
-            if dict_key:
-                key_col = pd.Categorical.from_codes(key_col, cats)
-            yield pd.DataFrame(
-                {
-                    key: key_col,
-                    "bucket_start": pd.to_datetime(np.concatenate(buckets), unit="s"),
-                    "cnt": cnt,
-                    "sum_val": s,
-                    "avg_val": avg,
-                    "min_val": np.concatenate(mins),
-                    "max_val": np.concatenate(maxs),
-                    "tier": np.concatenate(tcol),
-                }
-            )
-
-    return tok_df.select(key, "tokens").mapInPandas(gen, schema=schema)
 
 
 def fused_qc_correct(

@@ -48,6 +48,15 @@ def asof_join(
     from the left time; the matched right time is returned as
     ``{on}{suffix}``. Unmatched left rows keep NULLs.
 
+    Duplicate right rows at the same (key, time) follow pandas
+    ``merge_asof``: backward takes the LAST of them, forward the FIRST,
+    in the right frame's row order. That order is the order of the right
+    frame's partitions and of the rows inside each, so the winner is only
+    as deterministic as that order: a right frame that comes out of a
+    shuffle (``repartition``, a join, an aggregation) may pick a
+    different duplicate on another run. Sort or deduplicate the right
+    frame first when duplicates carry different values.
+
     Physical shape: union + running window — one exchange on ``by``, one
     sort on (time, side-tag); never a range join."""
     if direction not in ("backward", "forward"):

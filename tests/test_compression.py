@@ -72,21 +72,21 @@ def test_blob_roundtrip_and_ratio():
 
 
 def test_encode_series_df(spark):
+    """A keyed Spark frame → one (doc_id, n_tok, blob) row per series,
+    through the tier encoder: values re-quantized with the shared
+    quantizer, timestamps taken from ``bucket_start``."""
     from pyhydroqc_spark.datagen import VAL_HI, VAL_LO
-    from pyhydroqc_spark.quantize import dequantize, quantize
+    from pyhydroqc_spark.quantize import quantize
 
     rng = np.random.default_rng(0)
     n = 400
     vals = 10 + np.cumsum(rng.normal(0, 0.05, n))
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["a"] * n,
-            "pos": range(n),
-            "ts": pd.date_range("2022-01-01", periods=n, freq="15min"),
-            "det_cor": vals,
-        }
-    )
-    out = C.encode_series_df(spark.createDataFrame(pdf)).toPandas()
+    starts = pd.date_range("2022-01-01", periods=n, freq="15min")
+    pdf = pd.DataFrame({"doc_id": ["a"] * n, "bucket_start": starts, "avg_val": vals})
+    # shuffled rows: the encoder orders each series by bucket_start
+    pdf = pdf.sample(frac=1.0, random_state=1)
+    out = C.encode_tier_df(spark.createDataFrame(pdf)).toPandas()
     assert len(out) == 1 and out["n_tok"][0] == n
     toks, ts = C.decode_series_blob(bytes(out["blob"][0]))
     np.testing.assert_array_equal(toks, quantize(vals, VAL_LO, VAL_HI))
+    np.testing.assert_array_equal(ts, starts.asi8 // 10**9)

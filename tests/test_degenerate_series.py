@@ -73,6 +73,37 @@ def test_fused_cells_agrees_with_exploded_on_degenerates(spark, tok):
         )
 
 
+def test_pipeline_commits_degenerates(spark, tok, tmp_path):
+    """The pipeline's commit path survives degenerate series: its finest
+    tier table holds the same cells as ``fused_tokens_to_cells``, empty
+    cells included, and every series gets a tier blob."""
+    import os
+
+    from pyhydroqc_spark.pipeline import run_pipeline
+    from pyhydroqc_spark.tables import SnapshotTable
+
+    inp = SnapshotTable(str(tmp_path / "input"))
+    inp.append(tok, partition="s")
+    out = str(tmp_path / "out")
+    run_pipeline(spark, inp, out, P)
+    got = (
+        SnapshotTable(os.path.join(out, "rollup_900s")).read(spark)
+        .orderBy("doc_id", "bucket_start").toPandas()
+    )
+    exp = (
+        fused.fused_tokens_to_cells(tok, P, tier_seconds=900)
+        .orderBy("doc_id", "bucket_start").toPandas()
+    )
+    assert got["cnt"].tolist() == exp["cnt"].tolist()
+    assert (got.loc[got["doc_id"] == "all_sentinel", "sum_val"]).isna().all()
+    for c in ["sum_val", "avg_val", "min_val", "max_val"]:
+        np.testing.assert_array_equal(
+            got[c].to_numpy(dtype=float), exp[c].to_numpy(dtype=float)
+        )
+    blobs = SnapshotTable(os.path.join(out, "comp_tier_900s")).read(spark).toPandas()
+    assert set(blobs["doc_id"]) == {d for d, _, n, _ in _tok_rows() if n > 0}
+
+
 def test_windowed_detector_survives_degenerates(spark, tok):
     from pyhydroqc_spark.operators import windowed_detect as wd
 

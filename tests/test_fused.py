@@ -222,36 +222,6 @@ def test_fused_multi_tier_emission_matches_per_tier(spark):
             )
 
 
-def test_emit_arrays_equals_rows(spark):
-    """fused_tokens_to_cells emit='arrays' (array-packed Arrow crossing +
-    JVM-side explode) is output-identical to the direct row emission,
-    including NULL aggregates on empty cells."""
-    import pandas as pd
-
-    from pyhydroqc_spark.datagen import gen_token_table
-    from pyhydroqc_spark.operators.fused import fused_tokens_to_cells
-    from pyhydroqc_spark.params import SeriesParams
-
-    p = SeriesParams(max_range=25.0, min_range=-1.0, persist=30, window_sz=30,
-                     alpha=0.0001, threshold_min=0.25, widen=1, pdq=(1, 1, 0))
-    pdf = gen_token_table(n_series=4, n_tok=900, seed=5)
-    tok = spark.createDataFrame(
-        pdf, "doc_id string, tokens array<int>, n_tok int, source string"
-    )
-    frames = {}
-    for emit in ("rows", "arrays"):
-        frames[emit] = (
-            fused_tokens_to_cells(tok, p, tier_seconds=(900, 3600, 86400), emit=emit)
-            .orderBy("tier", "doc_id", "bucket_start")
-            .toPandas()
-            .reset_index(drop=True)
-        )
-    pd.testing.assert_frame_equal(
-        frames["rows"][frames["arrays"].columns], frames["arrays"],
-        check_exact=False, atol=1e-12,
-    )
-
-
 def test_interpolate_np_matches_pandas_exactly():
     """The r7 pure-numpy interpolate replica must be BIT-identical to
     pd.Series.interpolate(method='linear', limit, limit_direction='both')

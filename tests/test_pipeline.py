@@ -1,11 +1,12 @@
 """End-to-end pipeline: snapshot tables, checkpointing, resume-equivalence,
 incremental maintenance, retention.
 
-The read-only assertions (end-to-end shape, lineage/metrics) and the
-destructive tests (retention, incremental, resume baseline) share ONE
-canonical pipeline run via the module-scoped ``canon`` fixture —
-destructive tests clone its tree (manifests embed absolute paths, so the
-clone rewrites them) instead of paying a fresh multi-stage run each."""
+The read-only assertions (end-to-end shape, lineage/metrics, tier parity
+with the native operator chain, blob parity) and the destructive tests
+(retention, incremental, resume and crash baselines) share ONE canonical
+pipeline run via the module-scoped ``canon`` fixture — destructive tests
+clone its tree (manifests embed absolute paths, so the clone rewrites
+them) instead of paying a fresh multi-stage run each."""
 
 import os
 import shutil
@@ -69,31 +70,65 @@ def _clone_tree(src: str, dst: str) -> None:
                         f.write(text.replace(src, dst))
 
 
+TIERS = (900, 3600, 86400)
+
+
 @pytest.fixture(scope="module")
 def canon(spark, tmp_path_factory):
-    """The canonical pipeline run: seed-42 input, model detect off,
-    compression on. Five tests assert on (clones of) this one run."""
+    """The canonical pipeline run: seed-42 input, tier compression on.
+    Every test but the job-count one asserts on (clones of) this run."""
     tmp = str(tmp_path_factory.mktemp("canon"))
     tbl, pdf = _input_table(spark, tmp)
     out = os.path.join(tmp, "out")
-    res = P.run_pipeline(spark, tbl, out, PARAMS, with_model_detect=False,
-                         arima_order=(1, 1, 0))
+    res = P.run_pipeline(spark, tbl, out, PARAMS, arima_order=(1, 1, 0))
     return {"tmp": tmp, "out": out, "pdf": pdf, "res": res}
+
+
+def _read_blobs(spark, root, tier):
+    return (
+        SnapshotTable(os.path.join(root, f"comp_tier_{tier}s"))
+        .read(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
+    )
 
 
 def test_pipeline_end_to_end(spark, canon):
     assert canon["res"].points_rolled_up > 0
-    for tier in (900, 3600, 86400):
+    for tier in TIERS:
         agg = _read_tier(spark, canon["out"], tier)
         assert agg is not None and len(agg) > 0
         assert (agg["cnt"] > 0).all()
-    # every series surfaces in the finest tier
-    fin = _read_tier(spark, canon["out"], 900)
-    assert set(fin["doc_id"]) == set(canon["pdf"]["doc_id"])
-    # compressed blobs round-trip row counts
-    comp = SnapshotTable(os.path.join(canon["out"], "compressed")).read(spark).toPandas()
-    assert set(comp["doc_id"]) == set(canon["pdf"]["doc_id"])
-    assert (comp["n_tok"] == 900).all()
+        # every series surfaces in every tier and has one blob per tier
+        # holding one token per cell
+        assert set(agg["doc_id"]) == set(canon["pdf"]["doc_id"])
+        comp = _read_blobs(spark, canon["out"], tier)
+        assert set(comp["doc_id"]) == set(canon["pdf"]["doc_id"])
+        n_cells = agg.groupby("doc_id").size()
+        assert (comp.set_index("doc_id")["n_tok"] == n_cells).all()
+    # the finest tier's cadence equals the input's: one cell per point
+    assert (_read_blobs(spark, canon["out"], 900)["n_tok"] == 900).all()
+
+
+def test_pipeline_tiers_equal_native_chain(spark, canon):
+    """The pipeline's tier tables equal the native operator chain over the
+    same input: arima_detect(rules=True) → generate_corrections →
+    rollup_points for the finest tier, rollup_from_rollup for the rest."""
+    from pyhydroqc_spark.ingest import explode_tokens
+    from pyhydroqc_spark.operators import correct, detect
+    from pyhydroqc_spark.operators.rollup import rollup_from_rollup, rollup_points
+
+    tok = spark.createDataFrame(canon["pdf"], schema=_tok_schema())
+    detected = detect.arima_detect(explode_tokens(tok), PARAMS, rules=True)
+    corrected = correct.generate_corrections(
+        detected.select("doc_id", "pos", "ts", "observed", "detected_event"),
+        "observed", "detected_event", arima_order=(1, 1, 0),
+    )
+    agg = rollup_points(corrected.select("doc_id", "ts", "pos", "det_cor"), TIERS[0])
+    for t in TIERS:
+        if t != TIERS[0]:
+            agg = rollup_from_rollup(agg.drop("tier"), t)
+        got = _read_tier(spark, canon["out"], t).reset_index(drop=True)
+        want = agg.orderBy("doc_id", "bucket_start").toPandas()[list(got.columns)]
+        pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
 
 
 def test_resume_equivalence(spark, canon, tmp_path):
@@ -104,15 +139,14 @@ def test_resume_equivalence(spark, canon, tmp_path):
 
     out1 = os.path.join(tmp1, "out")
     with pytest.raises(RuntimeError, match="simulated failure"):
-        P.run_pipeline(spark, tbl1, out1, PARAMS, with_model_detect=False,
-                       arima_order=(1, 1, 0), fail_after=1)
+        P.run_pipeline(spark, tbl1, out1, PARAMS, arima_order=(1, 1, 0),
+                       fail_after=1)
     ck = CheckpointLog(os.path.join(out1, "_checkpoints"))
     assert len(ck.done_partitions("rollup")) == 1
-    res = P.run_pipeline(spark, tbl1, out1, PARAMS, with_model_detect=False,
-                         arima_order=(1, 1, 0))
+    res = P.run_pipeline(spark, tbl1, out1, PARAMS, arima_order=(1, 1, 0))
     assert len(res.partitions_skipped) == 1  # the finished one was not redone
 
-    for tier in (900, 3600, 86400):
+    for tier in TIERS:
         a = _read_tier(spark, out1, tier)
         b = _read_tier(spark, canon["out"], tier)
         pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
@@ -124,7 +158,7 @@ def test_incremental_new_partition(spark, canon, tmp_path):
     tbl = SnapshotTable(os.path.join(tmp, "input"))
     out = os.path.join(tmp, "out")
     # second run over the finished tree: nothing new → everything skipped
-    res2 = P.run_pipeline(spark, tbl, out, PARAMS, with_model_detect=False, arima_order=(1, 1, 0))
+    res2 = P.run_pipeline(spark, tbl, out, PARAMS, arima_order=(1, 1, 0))
     assert not res2.partitions_processed
 
     # new data lands in one source → only that partition recomputes
@@ -132,7 +166,7 @@ def test_incremental_new_partition(spark, canon, tmp_path):
     extra["source"] = "src0"
     extra["doc_id"] = ["src0:new0", "src0:new1"]
     tbl.append(spark.createDataFrame(extra, schema=_tok_schema()), partition="src0")
-    res3 = P.run_pipeline(spark, tbl, out, PARAMS, with_model_detect=False, arima_order=(1, 1, 0))
+    res3 = P.run_pipeline(spark, tbl, out, PARAMS, arima_order=(1, 1, 0))
     assert res3.partitions_processed == ["src0"]
     fin = _read_tier(spark, out, 900)
     assert "src0:new0" in set(fin["doc_id"])
@@ -153,52 +187,24 @@ def test_retention_sweep(spark, canon, tmp_path):
     assert not any(d.startswith("src0") for d in fin["doc_id"])
 
 
-def test_fused_modes_equal_native(spark, tmp_path):
-    """pipeline modes 'fused' and 'fused_cells' produce identical tier
-    tables to the native chain (fused_cells runs without the per-point
-    blob encoder — compression off for all three for a fair compare)."""
-    outs = {}
-    for mode in ["native", "fused", "fused_cells"]:
-        tmp = str(tmp_path / mode)
-        tbl, _ = _input_table(spark, tmp, n_series=4, n_tok=800, seed=5)
-        out = os.path.join(tmp, "out")
-        P.run_pipeline(spark, tbl, out, PARAMS, arima_order=(1, 1, 0),
-                       with_model_detect=True, with_compression=False, mode=mode)
-        outs[mode] = {t: _read_tier(spark, out, t) for t in (900, 3600, 86400)}
-    for t in (900, 3600, 86400):
-        for mode in ["fused", "fused_cells"]:
-            pd.testing.assert_frame_equal(
-                outs["native"][t].reset_index(drop=True),
-                outs[mode][t].reset_index(drop=True),
-                check_exact=False, atol=1e-9,
-            )
+def test_run_pipeline_rejects_removed_modes(spark, canon):
+    tbl = SnapshotTable(os.path.join(canon["tmp"], "input"))
+    with pytest.raises(ValueError, match="fused_cells"):
+        P.run_pipeline(spark, tbl, canon["out"], PARAMS, mode="native")
 
 
-@pytest.mark.parametrize("mode", ["native", "fused_cells"])
-def test_tier_blob_compression_roundtrips(spark, tmp_path, mode):
+def test_tier_blob_compression_roundtrips(spark, canon):
     """north_rule: compression per retention tier — every tier table gets a
     companion blob table whose delta-of-delta timestamps and quantized
-    values round-trip to the stored cells, in ALL pipeline modes (the
-    per-point blob table exists only for modes with per-point rows)."""
+    values round-trip to the stored cells."""
     from pyhydroqc_spark.compression import decode_series_blob
     from pyhydroqc_spark.datagen import VAL_HI, VAL_LO
     from pyhydroqc_spark.quantize import quantize
 
-    tmp = str(tmp_path)
-    tbl, _ = _input_table(spark, tmp, n_series=2, n_tok=800, seed=5)
-    out = os.path.join(tmp, "out")
-    P.run_pipeline(spark, tbl, out, PARAMS, with_compression=True,
-                   with_model_detect=False, mode=mode)
-    if mode == "fused_cells":
-        assert not os.path.exists(os.path.join(out, "compressed"))
-    else:
-        assert os.path.exists(os.path.join(out, "compressed"))
-    for tier in (900, 3600, 86400):
+    out = canon["out"]
+    for tier in TIERS:
         cells = _read_tier(spark, out, tier)
-        blobs = (
-            SnapshotTable(os.path.join(out, f"comp_tier_{tier}s"))
-            .read(spark).toPandas().set_index("doc_id")
-        )
+        blobs = _read_blobs(spark, out, tier).set_index("doc_id")
         for doc, grp in cells.groupby("doc_id"):
             toks, ts = decode_series_blob(bytes(blobs.loc[doc, "blob"]))
             grp = grp.sort_values("bucket_start")
@@ -208,62 +214,20 @@ def test_tier_blob_compression_roundtrips(spark, tmp_path, mode):
             np.testing.assert_array_equal(toks, exp_toks)
 
 
-def test_fused_cells_zero_shuffle_equals_repartitioned(spark, tmp_path):
-    """mode='fused_cells' with repartition_input=False (the zero-shuffle
-    plan: scan -> kernel, no exchange) produces identical tier tables to
-    the default repartitioned run."""
-    outs = {}
-    for flag in (True, False):
-        tmp = str(tmp_path / f"rep_{flag}")
-        tbl, _ = _input_table(spark, tmp, n_series=4, n_tok=800, seed=5)
-        out = os.path.join(tmp, "out")
-        P.run_pipeline(spark, tbl, out, PARAMS, arima_order=(1, 1, 0),
-                       with_model_detect=True, with_compression=False,
-                       mode="fused_cells", repartition_input=flag)
-        outs[flag] = {t: _read_tier(spark, out, t) for t in (900, 3600, 86400)}
-    for t in (900, 3600, 86400):
-        pd.testing.assert_frame_equal(
-            outs[True][t].reset_index(drop=True),
-            outs[False][t].reset_index(drop=True),
-            check_exact=False, atol=1e-9,
-        )
-
-
-TIERS = (900, 3600, 86400)
-
-
-@pytest.fixture(scope="module")
-def fused_canon(spark, tmp_path_factory):
-    """One uninterrupted fused_cells run with tier compression on: the
-    reference for the blob-parity and crash/resume tests."""
-    tmp = str(tmp_path_factory.mktemp("fused_canon"))
-    tbl, pdf = _input_table(spark, tmp, n_series=4, n_tok=800, seed=5)
-    out = os.path.join(tmp, "out")
-    P.run_pipeline(spark, tbl, out, PARAMS, mode="fused_cells")
-    return {"out": out, "pdf": pdf}
-
-
-def _read_blobs(spark, root, tier):
-    return (
-        SnapshotTable(os.path.join(root, f"comp_tier_{tier}s"))
-        .read(spark).toPandas().sort_values("doc_id").reset_index(drop=True)
-    )
-
-
-def test_fused_cells_blobs_equal_encode_tier_df(spark, fused_canon):
+def test_fused_cells_blobs_equal_encode_tier_df(spark, canon):
     """The kernel-encoded tier blobs are byte-identical to encode_tier_df
     over the committed cells, for every (doc_id, tier)."""
     from pyhydroqc_spark.compression import encode_tier_df
 
     for tier in TIERS:
         cells = SnapshotTable(
-            os.path.join(fused_canon["out"], f"rollup_{tier}s")
+            os.path.join(canon["out"], f"rollup_{tier}s")
         ).read(spark)
         want = (
             encode_tier_df(cells).toPandas()
             .sort_values("doc_id").reset_index(drop=True)
         )
-        got = _read_blobs(spark, fused_canon["out"], tier)
+        got = _read_blobs(spark, canon["out"], tier)
         assert got["doc_id"].tolist() == want["doc_id"].tolist(), tier
         assert got["n_tok"].tolist() == want["n_tok"].tolist(), tier
         assert [bytes(b) for b in got["blob"]] == [bytes(b) for b in want["blob"]], tier
@@ -288,7 +252,7 @@ def test_fused_cells_partition_runs_at_most_four_jobs(spark, tmp_path, monkeypat
             sc.setLocalProperty("spark.job.description", None)
 
     monkeypatch.setattr(P, "_process_partition", in_group)
-    P.run_pipeline(spark, tbl, str(tmp_path / "out"), PARAMS, mode="fused_cells")
+    P.run_pipeline(spark, tbl, str(tmp_path / "out"), PARAMS)
     # job starts reach the status tracker through the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert len(groups) == 3
@@ -297,7 +261,7 @@ def test_fused_cells_partition_runs_at_most_four_jobs(spark, tmp_path, monkeypat
         assert 1 <= n <= 4, (part, n)
 
 
-def test_fused_cells_crash_between_table_commits_resumes(spark, fused_canon, tmp_path):
+def test_fused_cells_crash_between_table_commits_resumes(spark, canon, tmp_path):
     """A crash after the staged write, between two tables' commits: no
     table shows part of a partition, no checkpoint row is written, no
     staged file is left under any table's data/, and the resume commits
@@ -305,7 +269,7 @@ def test_fused_cells_crash_between_table_commits_resumes(spark, fused_canon, tmp
     import glob
 
     tmp = str(tmp_path)
-    tbl, pdf = _input_table(spark, tmp, n_series=4, n_tok=800, seed=5)
+    tbl, pdf = _input_table(spark, tmp)
     out = os.path.join(tmp, "out")
     first = sorted(pdf["source"].unique())[0]
 
@@ -321,7 +285,7 @@ def test_fused_cells_crash_between_table_commits_resumes(spark, fused_canon, tmp
     SnapshotTable._replace = crash_on_second
     try:
         with pytest.raises(RuntimeError, match="simulated crash"):
-            P.run_pipeline(spark, tbl, out, PARAMS, mode="fused_cells")
+            P.run_pipeline(spark, tbl, out, PARAMS)
     finally:
         SnapshotTable._replace = real
 
@@ -333,7 +297,7 @@ def test_fused_cells_crash_between_table_commits_resumes(spark, fused_canon, tmp
         committed[tier] = got is not None
         if got is None:
             continue
-        want = _read_tier(spark, fused_canon["out"], tier)
+        want = _read_tier(spark, canon["out"], tier)
         want = want[want["doc_id"].isin(docs)].reset_index(drop=True)
         pd.testing.assert_frame_equal(got.reset_index(drop=True), want)
     # the first tier committed, the crash stopped the second
@@ -346,12 +310,12 @@ def test_fused_cells_crash_between_table_commits_resumes(spark, fused_canon, tmp
             assert on_disk <= set(t.files()), name
     assert not glob.glob(os.path.join(out, "_staging", "**", "*.parquet"), recursive=True)
 
-    P.run_pipeline(spark, tbl, out, PARAMS, mode="fused_cells")
+    P.run_pipeline(spark, tbl, out, PARAMS)
     for tier in TIERS:
         pd.testing.assert_frame_equal(
             _read_tier(spark, out, tier).reset_index(drop=True),
-            _read_tier(spark, fused_canon["out"], tier).reset_index(drop=True),
+            _read_tier(spark, canon["out"], tier).reset_index(drop=True),
         )
-        a, b = _read_blobs(spark, out, tier), _read_blobs(spark, fused_canon["out"], tier)
+        a, b = _read_blobs(spark, out, tier), _read_blobs(spark, canon["out"], tier)
         assert a["doc_id"].tolist() == b["doc_id"].tolist()
         assert [bytes(x) for x in a["blob"]] == [bytes(x) for x in b["blob"]]

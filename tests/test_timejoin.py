@@ -96,12 +96,12 @@ def test_asof_duplicate_right_ts_ties_match_merge_asof(spark):
     L, R = spark.createDataFrame(lpdf), spark.createDataFrame(rpdf)
     for direction in ("backward", "forward"):
         ref = pd.merge_asof(
-            lpdf.sort_values("ts"),
-            rpdf.sort_values("ts"),
+            lpdf.sort_values("ts", kind="stable"),
+            rpdf.sort_values("ts", kind="stable"),
             on="ts",
             by="doc_id",
             direction=direction,
-        ).sort_values(["doc_id", "ts"])
+        ).sort_values(["doc_id", "ts"], kind="stable")
         out = (
             timejoin.asof_join(L, R, value_cols=["mark"],
                                direction=direction)
