@@ -157,26 +157,34 @@ def q_group_bools(spark, sf_dir):
 HIST = (32, -5.0, 30.0)  # (bins, lo, hi) — the composable sketch domain
 
 
-def _rollup_gate_cols(agg_with_stats):
+# the rollup row-sets' shared output columns as SQL text: one selectExpr
+# per row-set instead of several py4j round trips per Column node
+_ROLLUP_SCALARS = (
+    "CAST(unix_timestamp(`bucket_start`) AS BIGINT) AS bucket_s",
+    "CAST(`cnt` AS BIGINT) AS cnt",
+    "round(`sum_val`, 6) AS sum_val",
+    "round(`avg_val`, 6) AS avg_val",
+    "round(`min_val`, 6) AS min_val",
+    "round(`max_val`, 6) AS max_val",
+)
+
+
+def _doc_id_expr(df):
     # frames aggregated on raw user_id (the exchange-free cached path)
     # project the string doc_id back here — same values as grouping on
     # the cast, but the groupBy key matches the checkpoint partitioning
-    doc = (
-        F.col("user_id").cast("string")
-        if "user_id" in agg_with_stats.columns
-        else F.col("doc_id")
-    )
-    return agg_with_stats.select(
-        doc.alias("doc_id"),
-        F.unix_timestamp("bucket_start").cast("long").alias("bucket_s"),
-        F.col("cnt").cast("long").alias("cnt"),
-        F.round("sum_val", 6).alias("sum_val"),
-        F.round("avg_val", 6).alias("avg_val"),
-        F.round("min_val", 6).alias("min_val"),
-        F.round("max_val", 6).alias("max_val"),
-        F.round("open_val", 6).alias("open_val"),
-        F.round("close_val", 6).alias("close_val"),
-        F.round("counter_delta", 6).alias("counter_delta"),
+    if "user_id" in df.columns:
+        return "CAST(`user_id` AS STRING) AS doc_id"
+    return "`doc_id` AS doc_id"
+
+
+def _rollup_gate_cols(agg_with_stats):
+    return agg_with_stats.selectExpr(
+        _doc_id_expr(agg_with_stats),
+        *_ROLLUP_SCALARS,
+        "round(`open_val`, 6) AS open_val",
+        "round(`close_val`, 6) AS close_val",
+        "round(`counter_delta`, 6) AS counter_delta",
         "hist_checksum",
         "p50_bin",
         "p95_bin",
@@ -322,28 +330,18 @@ def q_rollup_tiers(spark, sf_dir):
 
 
 def _gapfill_parts(gf):
-    doc = (
-        F.col("user_id").cast("string")
-        if "user_id" in gf.columns
-        else F.col("doc_id")
-    )
-    return gf.select(
-        doc.alias("doc_id"),
-        F.unix_timestamp("bucket_start").cast("long").alias("bucket_s"),
-        F.col("cnt").cast("long").alias("cnt"),
-        F.round("sum_val", 6).alias("sum_val"),
-        F.round("avg_val", 6).alias("avg_val"),
-        F.round("min_val", 6).alias("min_val"),
-        F.round("max_val", 6).alias("max_val"),
+    return gf.selectExpr(
+        _doc_id_expr(gf),
+        *_ROLLUP_SCALARS,
         "is_gap",
         # sketch/OHLC columns ride only the tier row-sets (a synthesized
         # gap bucket has no histogram or first/last value)
-        F.lit(None).cast("double").alias("open_val"),
-        F.lit(None).cast("double").alias("close_val"),
-        F.lit(None).cast("double").alias("counter_delta"),
-        F.lit(None).cast("long").alias("hist_checksum"),
-        F.lit(None).cast("int").alias("p50_bin"),
-        F.lit(None).cast("int").alias("p95_bin"),
+        "CAST(NULL AS DOUBLE) AS open_val",
+        "CAST(NULL AS DOUBLE) AS close_val",
+        "CAST(NULL AS DOUBLE) AS counter_delta",
+        "CAST(NULL AS BIGINT) AS hist_checksum",
+        "CAST(NULL AS INT) AS p50_bin",
+        "CAST(NULL AS INT) AS p95_bin",
     )
 
 

@@ -27,6 +27,17 @@ DEFAULT_TIERS = (TIER_15MIN, TIER_1H, TIER_1D)
 AGG_COLS = ["cnt", "sum_val", "avg_val", "min_val", "max_val"]
 
 
+def _ident(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _double(x: float) -> str:
+    """A float as a DOUBLE literal: Spark parses a bare ``5.0`` as
+    DECIMAL, which would not analyze to the Column API's double."""
+    return f"({float(x)!r}D)"
+
+
 def bucket_col(ts_col: str, tier_seconds: int):
     return F.timestamp_seconds(
         F.floor(F.unix_timestamp(F.col(ts_col)) / tier_seconds) * tier_seconds
@@ -46,15 +57,21 @@ def rollup_points(
 ) -> DataFrame:
     """Fact rows → one aggregate row per (series, bucket). ``hist=(bins,
     lo, hi)`` rides the composable percentile sketch in the SAME hash
-    aggregation (32 extra conditional counts — no second corpus pass, no
-    join; this is how a continuous aggregate keeps percentile state next
-    to its scalars); ``order_col=`` adds OHLC open/close columns (the
-    bucket's first/last value in that order); ``sum_cols={in: out}``
-    rides extra plain sums (e.g. counter increments) in the same
-    aggregation; ``distinct_col=`` adds a mergeable HLL distinct-count
-    sketch (``uniq_sketch``, Spark's native DataSketches aggregate) —
-    like the histogram, distinct counts per bucket cannot compose
-    tier-from-tier as scalars, but the sketches union exactly."""
+    aggregation (one conditional count per bin — no second corpus pass,
+    no join; this is how a continuous aggregate keeps percentile state
+    next to its scalars). Bin ``clamp(floor((v-lo)/(hi-lo)·bins), 0,
+    bins-1)``: out-of-domain values land in the edge bins.
+    ``order_col=`` adds OHLC open/close columns (the bucket's first/last
+    value in that order); ``sum_cols={in: out}`` rides extra plain sums
+    (e.g. counter increments) in the same aggregation; ``distinct_col=``
+    adds a mergeable HLL distinct-count sketch (``uniq_sketch``, Spark's
+    native DataSketches aggregate) — like the histogram, distinct counts
+    per bucket cannot compose tier-from-tier as scalars, but the sketches
+    union exactly.
+
+    The bin counts are one SQL-text ``array(count(...), ...)``
+    expression: the driver parses the wide list once instead of paying a
+    py4j round trip per Column-API node (~10 per bin)."""
     aggs = [
         F.count(value_col).alias("cnt"),
         F.sum(value_col).alias("sum_val"),
@@ -81,33 +98,24 @@ def rollup_points(
         aggs.append(
             F.hll_sketch_agg(F.xxhash64(distinct_col)).alias("uniq_sketch")
         )
-    n_bins = 0
     if hist is not None:
         n_bins, lo, hi = hist
-        b = hist_col(value_col, n_bins, lo, hi)
-        aggs += [
-            F.count(F.when((b == i) & F.col(value_col).isNotNull(), 1)).alias(
-                f"__b{i}"
-            )
+        v = _ident(value_col)
+        b = (
+            f"least(greatest(CAST(floor(({v} - {_double(lo)}) / "
+            f"{_double(hi - lo)} * {int(n_bins)}) AS INT), 0), {int(n_bins) - 1})"
+        )
+        counts = ", ".join(
+            f"count(CASE WHEN {b} = {i} AND {v} IS NOT NULL THEN 1 END)"
             for i in range(n_bins)
-        ]
-    out = (
+        )
+        aggs.append(F.expr(f"array({counts}) AS `hist`"))
+    return (
         df.withColumn("bucket_start", bucket_col(ts_col, tier_seconds))
         .groupBy(key, "bucket_start")
         .agg(*aggs)
+        .withColumn("tier", F.lit(int(tier_seconds)))
     )
-    if hist is not None:
-        keep = [key, "bucket_start", "cnt", "sum_val", "avg_val", "min_val", "max_val"]
-        if order_col is not None:
-            keep += ["open_val", "close_val"]
-        keep += list((sum_cols or {}).values())
-        if distinct_col is not None:
-            keep.append("uniq_sketch")
-        out = out.select(
-            *keep,
-            F.array(*[F.col(f"__b{i}") for i in range(n_bins)]).alias("hist"),
-        )
-    return out.withColumn("tier", F.lit(int(tier_seconds)))
 
 
 def rollup_from_rollup(
@@ -144,13 +152,11 @@ def rollup_from_rollup(
     has_hist = "hist" in agg_df.columns
     if has_hist:
         aggs.append(
-            F.aggregate(
-                F.collect_list("hist"),
-                F.expr("CAST(array() AS array<bigint>)"),
-                lambda acc, x: F.when(F.size(acc) == 0, x).otherwise(
-                    F.zip_with(acc, x, lambda a, v: a + v)
-                ),
-            ).alias("hist")
+            F.expr(
+                "aggregate(collect_list(`hist`), CAST(array() AS array<bigint>), "
+                "(acc, x) -> CASE WHEN size(acc) = 0 THEN x "
+                "ELSE zip_with(acc, x, (a, v) -> a + v) END) AS `hist`"
+            )
         )
     cols = [key, "bucket_start", "cnt", "sum_val", "avg_val", "min_val", "max_val"]
     cols += list(sum_cols)
@@ -324,84 +330,20 @@ def gapfill(
 # t-digest), at 8·bins bytes per bucket.
 
 
-def hist_col(value_col: str, bins: int, lo: float, hi: float):
-    """Bin index per row: clamp(floor((v-lo)/(hi-lo)·bins)) — out-of-domain
-    values land in the edge bins (sketch semantics, nothing dropped)."""
-    raw = F.floor((F.col(value_col) - lo) / (hi - lo) * bins).cast("int")
-    return F.least(F.greatest(raw, F.lit(0)), F.lit(bins - 1))
-
-
-def hist_points(
-    df: DataFrame,
-    tier_seconds: int,
-    bins: int = 32,
-    lo: float = -5.0,
-    hi: float = 30.0,
-    value_col: str = "det_cor",
-    ts_col: str = "ts",
-    key: str = "doc_id",
-) -> DataFrame:
-    """(key, bucket_start, hist array<long>): one histogram per bucket,
-    built in ONE hash aggregation (conditional-count per bin — the same
-    codegen-fold shape as the simhash/minhash aggregates; no explode, no
-    second shuffle)."""
-    b = hist_col(value_col, bins, lo, hi)
-    aggs = [
-        F.count(F.when((b == i) & F.col(value_col).isNotNull(), 1)).alias(f"__b{i}")
-        for i in range(bins)
-    ]
-    return (
-        df.withColumn("bucket_start", bucket_col(ts_col, tier_seconds))
-        .groupBy(key, "bucket_start")
-        .agg(*aggs)
-        .select(
-            key,
-            "bucket_start",
-            F.array(*[F.col(f"__b{i}") for i in range(bins)]).alias("hist"),
-        )
-    )
-
-
-def hist_from_hist(
-    hist_df: DataFrame, tier_seconds: int, key: str = "doc_id"
-) -> DataFrame:
-    """Compose a coarser tier's histograms from a finer tier's: exact
-    elementwise integer sum (1h ← 15min, 1d ← 1h) — the property raw
-    percentiles lack. `zip_with` fold over the ≤fan-in collected arrays
-    stays JVM-side; the shuffle carries one sketch per bucket."""
-    return (
-        hist_df.withColumn("bucket_start", bucket_col("bucket_start", tier_seconds))
-        .groupBy(key, "bucket_start")
-        .agg(
-            F.aggregate(
-                F.collect_list("hist"),
-                F.expr("CAST(array() AS array<bigint>)"),
-                lambda acc, x: F.when(F.size(acc) == 0, x).otherwise(
-                    F.zip_with(acc, x, lambda a, v: a + v)
-                ),
-            ).alias("hist")
-        )
-    )
-
-
 def hist_stats(hist_df: DataFrame, quantiles=(0.5, 0.95)) -> DataFrame:
     """Read-side derivation from the sketch: total count, an
     order-weighted checksum (Σ cnt_b·(b+1) — pins the full histogram in
     one integer), and the bin index of each requested quantile (smallest
     bin whose cumulative count covers q·total, decided in exact integer
-    arithmetic: 100·cum ≥ q·100·total)."""
-    bins = F.size("hist")
-    idx = F.sequence(F.lit(1), bins)
-    total = F.aggregate("hist", F.lit(0).cast("long"), lambda a, x: a + x)
-    checksum = F.aggregate(
-        F.zip_with("hist", idx, lambda c, i: c * i.cast("long")),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-    out = hist_df.select(
+    arithmetic: 100·cum ≥ q·100·total). The folds are SQL-lambda text:
+    the same HOFs built from Python lambdas cost a py4j round trip per
+    node and per lambda variable on the driver."""
+    out = hist_df.selectExpr(
         "*",
-        total.alias("hist_n"),
-        checksum.alias("hist_checksum"),
+        "aggregate(`hist`, CAST(0 AS BIGINT), (a, x) -> a + x) AS hist_n",
+        "aggregate(zip_with(`hist`, sequence(1, size(`hist`)), "
+        "(c, i) -> c * CAST(i AS BIGINT)), CAST(0 AS BIGINT), (a, x) -> a + x)"
+        " AS hist_checksum",
     )
     # each quantile bin in ONE O(bins) fold (a slice-sum cumulative array
     # is O(bins²) of interpreted HOF ops per bucket — measured ~2s over
@@ -411,27 +353,15 @@ def hist_stats(hist_df: DataFrame, quantiles=(0.5, 0.95)) -> DataFrame:
     qcols = []
     for q in quantiles:
         qi = int(round(q * 100))
-        hn = F.col("hist_n")
-        fold = F.aggregate(
-            "hist",
-            F.struct(
-                F.lit(0).cast("long").alias("c"),
-                F.lit(None).cast("int").alias("b"),
-                F.lit(0).cast("int").alias("i"),
-            ),
-            lambda acc, x: F.struct(
-                (acc["c"] + x).alias("c"),
-                F.coalesce(
-                    acc["b"],
-                    F.when(
-                        (100 * (acc["c"] + x) >= qi * hn) & (hn > 0), acc["i"]
-                    ),
-                ).alias("b"),
-                (acc["i"] + 1).alias("i"),
-            ),
+        qcols.append(
+            "CAST(aggregate(`hist`, struct(CAST(0 AS BIGINT) AS c, "
+            "CAST(NULL AS INT) AS b, CAST(0 AS INT) AS i), "
+            "(acc, x) -> struct(acc.c + x AS c, coalesce(acc.b, "
+            f"CASE WHEN 100 * (acc.c + x) >= {qi} * hist_n AND hist_n > 0 "
+            "THEN acc.i END) AS b, acc.i + 1 AS i)).b AS INT)"
+            f" AS p{qi}_bin"
         )
-        qcols.append(fold["b"].cast("int").alias(f"p{qi}_bin"))
-    return out.select("*", *qcols)
+    return out.selectExpr("*", *qcols)
 
 
 # -- counter aggregates (Prometheus increase() / TimescaleDB counter_agg) ----

@@ -537,38 +537,36 @@ def simhash(
     was the dominant cost of the simhash path; the aggregation form is the
     same arithmetic JIT-compiled. The groupBy shuffles only ``bits+1``
     longs per doc after map-side partial aggregation — O(docs), not
-    O(words)."""
-    from functools import reduce
-
+    O(words). The per-bit sums and the signature fold are SQL text: as
+    Column-API trees they cost ~11k py4j round trips to build on the
+    driver, as text about 500."""
     if hash_fn == "md5" and bits > 60:
         raise ValueError("md5 hash provides 60 bits; pass bits<=60")
     words = F.array_distinct(_words(text_col))
+    w = F.col("__w")
+    # xxhash64(NULL) is its seed, not NULL: hash only real words so the
+    # NULL word explode_outer emits for a zero-word doc is not counted
     exploded = df.select(
         F.col(id_col).alias("id"), F.explode_outer(words).alias("__w")
-    ).select("id", _hash64(F.col("__w"), hash_fn).alias("__hv"))
+    ).select("id", F.when(w.isNotNull(), _hash64(w, hash_fn)).alias("__hv"))
     # acc_j = Σ ±1 = 2·(count of words with bit j set) − n, so the sign
     # test acc_j > 0 becomes 2·c_j > n. explode_outer keeps zero-word docs
-    # (n = 0 → all bits fail the test → signature 0, as before).
+    # (n = 0 → all bits fail the test → signature 0).
     counted = exploded.groupBy("id").agg(
-        F.count("__hv").alias("__n"),
+        F.expr("count(`__hv`) AS `__n`"),
         *[
-            F.sum(
-                F.shiftright(F.col("__hv"), j).bitwiseAND(F.lit(1)).cast("long")
-            ).alias(f"__c{j}")
+            F.expr(f"sum(CAST(shiftright(`__hv`, {j}) & 1 AS BIGINT)) AS `__c{j}`")
             for j in range(bits)
         ],
     )
-    sig = reduce(
-        lambda s, j: s.bitwiseOR(
-            F.when(
-                F.col(f"__c{j}") * 2 > F.col("__n"),
-                F.shiftleft(F.lit(1).cast("long"), j),
-            ).otherwise(F.lit(0).cast("long"))
-        ),
-        range(bits),
-        F.lit(0).cast("long"),
-    )
-    return counted.select("id", sig.alias("simhash"))
+    # bit j set iff 2·c_j > n: a left-deep OR chain, parenthesized
+    sig = "CAST(0 AS BIGINT)"
+    for j in range(bits):
+        sig = (
+            f"({sig} | CASE WHEN `__c{j}` * 2 > `__n` THEN "
+            f"shiftleft(CAST(1 AS BIGINT), {j}) ELSE CAST(0 AS BIGINT) END)"
+        )
+    return counted.selectExpr("id", f"{sig} AS simhash")
 
 
 def _enumerate_bucket_pairs(grouped: DataFrame) -> DataFrame:

@@ -41,7 +41,7 @@ _SMOKE = [
     "range_counts", "rollup_tiers", "dynamic_threshold", "point_metrics",
     "find_gaps", "ar11_residuals", "dedup_groups",
     "lang_stats", "doc_profile", "ann_topk", "comp_roundtrip",
-    "streaming_detect",
+    "streaming_detect", "simhash", "simhash_pairs",
 ]
 import os as _os
 
@@ -100,3 +100,25 @@ def test_queries_rebuild_fresh_per_call(spark):
         b = fn(spark, SF)
         assert a is not b, name
     assert qs["range_counts"](spark, SF).count() > 0
+
+
+def test_gate_build_round_trips(spark, monkeypatch):
+    """Driver build budget of the two widest gates, counted in py4j round
+    trips with no action beyond the builds' own eager checkpoints. Their
+    wide expression lists (histogram bins, quantile folds, per-bit simhash
+    sums) are built as SQL text, a handful of calls per list; a Column-API
+    tree pays several round trips per node (~24k and ~14k per build)."""
+    from py4j.clientserver import JavaClient
+
+    calls = [0]
+    send = JavaClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(JavaClient, "send_command", counting)
+    for name, budget in (("rollup_tiers", 8000), ("simhash_pairs", 5000)):
+        calls[0] = 0
+        QUERIES[name](spark, SF)
+        assert calls[0] <= budget, (name, calls[0])

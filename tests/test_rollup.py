@@ -112,11 +112,15 @@ def test_gapfill_semantics(spark):
 
 
 def test_hist_sketch_composes_and_quantiles(spark):
-    """Fixed-bin histogram sketches: 1d composed from 1h == 1d direct
-    (exact integer sums), quantile bins match numpy order statistics."""
+    """Fixed-bin histogram sketches of rollup_points(hist=): 1d composed
+    from 1h by rollup_from_rollup == 1d direct (exact integer sums),
+    every bucket's bins match the numpy bin formula (values exactly on
+    bin edges, at lo and hi, below lo and above hi included), and the
+    quantile bins match numpy order statistics."""
     import numpy as np
     import pandas as pd
 
+    hist = (32, -5.0, 30.0)
     rng = np.random.default_rng(7)
     n = 8000
     pdf = pd.DataFrame(
@@ -126,37 +130,64 @@ def test_hist_sketch_composes_and_quantiles(spark):
             "value": rng.normal(12, 6, n).round(2),
         }
     )
+    # one series of domain edges: every bin edge -5 + k·35/32 (k = 0 is
+    # lo, k = 32 is hi), then values below lo and above hi
+    edges = [-5.0 + k * 35.0 / 32 for k in range(33)] + [-5.5, -1e6, 30.5, 1e6]
+    pdf = pd.concat(
+        [
+            pdf,
+            pd.DataFrame(
+                {
+                    "doc_id": "edge",
+                    "ts": pd.to_datetime(np.arange(len(edges)) * 600, unit="s"),
+                    "value": edges,
+                }
+            ),
+        ],
+        ignore_index=True,
+    )
     df = spark.createDataFrame(pdf)
-    h1 = rollup.hist_points(df, 3600, value_col="value")
-    direct = {
-        (r["doc_id"], r["bucket_start"]): list(r["hist"])
-        for r in rollup.hist_points(df, 86400, value_col="value").collect()
-    }
-    composed = {
-        (r["doc_id"], r["bucket_start"]): list(r["hist"])
-        for r in rollup.hist_from_hist(h1, 86400).collect()
-    }
+
+    def points(tier):
+        return rollup.rollup_points(df, tier, value_col="value", hist=hist)
+
+    def hists(frame):
+        return {
+            (r["doc_id"], r["bucket_start"]): list(r["hist"])
+            for r in frame.collect()
+        }
+
+    direct = hists(points(86400))
+    composed = hists(rollup.rollup_from_rollup(points(3600).drop("tier"), 86400))
     assert composed == direct and len(direct) > 4
 
-    st = rollup.hist_stats(
-        rollup.hist_points(df, 86400, value_col="value")
-    ).toPandas()
-    row = st.iloc[0]
-    day = row["bucket_start"].timestamp()
-    sub = pdf[pdf.doc_id == row["doc_id"]]
-    sub = sub[(sub.ts.astype("int64") // 10**9 // 86400 * 86400) == day]
-    bins = np.clip(np.floor((sub.value + 5) / 35 * 32).astype(int), 0, 31)
-    cum = np.bincount(bins, minlength=32).cumsum()
-    assert int(row["p50_bin"]) == int(np.argmax(100 * cum >= 50 * cum[-1]))
-    assert int(row["p95_bin"]) == int(np.argmax(100 * cum >= 95 * cum[-1]))
-    assert int(row["hist_checksum"]) == int((bins + 1).sum())
+    def np_bins(values):
+        return np.clip(np.floor((values + 5) / 35 * 32).astype(int), 0, 31)
+
+    day = (pdf.ts.astype("int64") // 10**9 // 86400 * 86400).to_numpy()
+    st = rollup.hist_stats(points(86400)).toPandas()
+    assert len(st) == len(direct)
+    for row in st.itertuples():
+        sub = pdf[(pdf.doc_id == row.doc_id) & (day == row.bucket_start.timestamp())]
+        bins = np_bins(sub.value)
+        counts = np.bincount(bins, minlength=32)
+        cum = counts.cumsum()
+        assert list(row.hist) == counts.tolist(), row.doc_id
+        assert int(row.p50_bin) == int(np.argmax(100 * cum >= 50 * cum[-1]))
+        assert int(row.p95_bin) == int(np.argmax(100 * cum >= 95 * cum[-1]))
+        assert int(row.hist_checksum) == int((bins + 1).sum())
+        assert int(row.hist_n) == len(sub)
+    # edge k lands in bin k (k = 32, at hi, clamps to 31); below lo and
+    # above hi clamp to the edge bins
+    edge = st[st.doc_id == "edge"].iloc[0]
+    assert list(edge["hist"]) == [3] + [1] * 30 + [4]
     # empty/NULL-only bucket: zero checksum, NULL quantile bins
     null_df = spark.createDataFrame(
         pd.DataFrame({"doc_id": ["z"], "ts": pd.to_datetime([0], unit="s"),
                       "value": [None]}).astype({"value": "float64"})
     )
     zrow = rollup.hist_stats(
-        rollup.hist_points(null_df, 86400, value_col="value")
+        rollup.rollup_points(null_df, 86400, value_col="value", hist=hist)
     ).collect()[0]
     assert zrow["hist_checksum"] == 0 and zrow["p50_bin"] is None
 

@@ -228,6 +228,44 @@ def test_simhash_near_dups(spark):
     assert {(1, 2)} <= set(map(tuple, cands[["id_a", "id_b"]].values))
 
 
+def test_simhash_matches_reference_signature(spark):
+    """The default 64-bit xxhash64 signature equals a plain-Python rebuild
+    from each doc's distinct lower-cased word hashes: bit j is set iff
+    2·c_j > n (c_j words with bit j set, of n), and a doc with no words
+    signs 0. Pins bit 63 (the sign bit) and the fold order."""
+    texts = [
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa",
+        "Alpha  alpha BETA beta gamma",
+        "one two three four five six seven eight nine ten eleven",
+        "solo",
+        "",
+        "   ",
+        None,
+    ] + [" ".join(f"w{(i * 7 + k) % 50}" for k in range(3 + i % 9)) for i in range(40)]
+    df = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    words = df.select(
+        "doc_id",
+        F.explode(F.array_distinct(F.array_remove(F.split(F.lower("text"), r"\s+"), ""))).alias("w"),
+    )
+    hashes = {}
+    for r in words.select("doc_id", F.xxhash64("w").alias("h")).collect():
+        hashes.setdefault(r["doc_id"], []).append(r["h"] & (2**64 - 1))
+    expect = {}
+    for i in range(len(texts)):
+        hs = hashes.get(i, [])
+        sig = 0
+        for j in range(64):
+            if 2 * sum((h >> j) & 1 for h in hs) > len(hs):
+                sig |= 1 << j
+        expect[i] = sig - 2**64 if sig >= 2**63 else sig
+    got = {r["id"]: r["simhash"] for r in dedup.simhash(df).collect()}
+    assert got == expect
+    assert expect[4] == expect[5] == expect[6] == 0
+    assert any(v < 0 for v in expect.values())  # bit 63 is reached
+
+
 def test_cosine_topk_matches_numpy(spark, emb):
     queries = emb.where(F.col("vec_id") < 3)
     got = ann.cosine_topk(emb, queries, k=5).toPandas()
