@@ -214,18 +214,6 @@ def _rollup(spark, sf_dir, tier, df=None):
     return _rollup_gate_cols(rollup.hist_stats(out))
 
 
-def q_rollup_15min(spark, sf_dir):
-    return _rollup(spark, sf_dir, 900)
-
-
-def q_rollup_1h(spark, sf_dir):
-    return _rollup(spark, sf_dir, 3600)
-
-
-def q_rollup_1d(spark, sf_dir):
-    return _rollup(spark, sf_dir, 86400)
-
-
 def q_rollup_tiered_1d(spark, sf_dir, df=None):
     from pyhydroqc_spark.operators import rollup
 
@@ -691,38 +679,6 @@ def q_ivf_topk(spark, sf_dir):
         F.col("query_id").cast("long").alias("query_id"),
         F.col("neighbor_id").cast("long").alias("neighbor_id"),
         F.col("rank").cast("long").alias("rank"),
-    )
-
-
-def q_text_stats(spark, sf_dir):
-    from pyhydroqc_spark.textops import quality
-
-    out = quality.text_stats(_docs(spark, sf_dir))
-    return out.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("n_words").cast("long").alias("n_words"),
-        F.col("n_distinct_words").cast("long").alias("n_distinct_words"),
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.round("avg_word_len", 6).alias("avg_word_len"),
-    )
-
-
-def q_quality_score(spark, sf_dir):
-    from pyhydroqc_spark.textops import quality
-
-    out = quality.quality_score(_docs(spark, sf_dir))
-    return out.select(
-        F.col("id").cast("long").alias("id"), F.round("quality", 6).alias("quality")
-    )
-
-
-def q_token_count(spark, sf_dir):
-    from pyhydroqc_spark.textops import quality
-
-    out = quality.token_count(_docs(spark, sf_dir))
-    return out.select(
-        F.col("id").cast("long").alias("id"),
-        F.col("ws_tokens").cast("long").alias("ws_tokens"),
     )
 
 

@@ -78,13 +78,8 @@ def main():
         ArrayType, IntegerType, StringType, StructField, StructType,
     )
 
-    from pyhydroqc_spark.ingest import explode_tokens, repartition_series
-    from pyhydroqc_spark.operators import correct as correct_mod
-    from pyhydroqc_spark.operators import detect as detect_mod
     from pyhydroqc_spark.operators import rollup as rollup_mod
-    from pyhydroqc_spark.operators import rules as rules_mod
-    from pyhydroqc_spark.operators import threshold as threshold_mod
-    from pyhydroqc_spark.operators.events import anomaly_events
+    from pyhydroqc_spark.operators.fused import fused_tokens_to_cells
     from pyhydroqc_spark.params import SeriesParams
     from pyhydroqc_spark.session import get_spark
 
@@ -136,76 +131,23 @@ def main():
         alpha=0.0001, threshold_min=0.25, widen=1, pdq=(1, 1, 0),
     )
 
-    # fused_cells = token arrays straight into the per-series kernel, first
-    # rollup tier materialized inside it (see fused_tokens_to_cells); the
-    # exploded "fused" and JVM-window "native" strategies remain selectable
-    mode = os.environ.get("BENCH_MODE", "fused_cells")
-
     def run_once(tok_df):
-        # 4 partitions per core: stragglers (series with many correction
-        # events) smooth out instead of stalling every stage barrier
-        nparts = 4 * max(cpus, 8)
-        if mode == "fused_cells":
-            # bandwidth-optimal: int32 token arrays through the one exchange,
-            # finished cells for ALL tiers out of the kernel (no explode, no
-            # per-point cache, no re-aggregation shuffles) — the whole job is
-            # a single action whose only wide edges are the doc_id
-            # repartition and a 3-row-per-partition tier count
-            from pyhydroqc_spark.operators.fused import fused_tokens_to_cells
-
-            # ZERO-shuffle plan: rows are complete series (token-table
-            # contract) and the kernel is a row-independent mapInPandas, so
-            # no exchange is needed when the input files are already
-            # balanced (they are — see the table write above). Measured at
-            # 8M/local[32]: the doc_id repartition cost ~1.5s of a 3.4s
-            # wall. BENCH_FORCE_SHUFFLE=1 restores it for pathological
-            # input layouts (few/skewed files).
-            src = (
-                repartition_series(tok_df, nparts)
-                if os.environ.get("BENCH_FORCE_SHUFFLE") == "1"
-                else tok_df
-            )
-            cells = fused_tokens_to_cells(
-                src, params,
-                tier_seconds=tuple(sorted(rollup_mod.DEFAULT_TIERS)),
-                arima_order=(1, 1, 0),
-            )
-            return sum(r["count"] for r in cells.groupBy("tier").count().collect())
-        long_df = explode_tokens(repartition_series(tok_df, nparts))
-        if mode == "fused":
-            from pyhydroqc_spark.operators.fused import fused_qc_correct
-
-            cor = fused_qc_correct(long_df, params, arima_order=(1, 1, 0))
-        else:
-            qc = rules_mod.range_check(long_df, params.max_range, params.min_range)
-            qc = rules_mod.persistence(qc, params.persist)
-            qc = rules_mod.interpolate(qc)
-            det = detect_mod.arima_residuals_sql(qc, "observed", order=params.pdq)
-            det = threshold_mod.dynamic_threshold(
-                det, "residual", window_sz=params.window_sz,
-                alpha=params.alpha, min_range=params.threshold_min,
-                strategy="prefix_sum",
-            )
-            det = threshold_mod.detect_threshold_anomalies(det)
-            det = det.withColumn("all_anomalies", F.col("detected_anomaly") | F.col("anomaly"))
-            det = anomaly_events(det, "all_anomalies", wf=params.widen, out_col="detected_event")
-            cor = correct_mod.generate_corrections(
-                det.select("doc_id", "pos", "ts", "observed", "detected_event"),
-                "observed", "detected_event", arima_order=(1, 1, 0),
-            )
-        slim_ = cor.select("doc_id", "ts", "pos", "det_cor").cache()
-        tiers_ = sorted(rollup_mod.DEFAULT_TIERS)
-        fin = rollup_mod.rollup_points(slim_, tiers_[0]).cache()
-        total = fin.count()
-        agg_ = fin
-        caches = [slim_, fin]
-        for t in tiers_[1:]:
-            agg_ = rollup_mod.rollup_from_rollup(agg_.drop("tier"), t).cache()
-            total += agg_.count()
-            caches.append(agg_)
-        for c in caches:
-            c.unpersist()
-        return total
+        # bandwidth-optimal: int32 token arrays straight into the per-series
+        # kernel, finished cells for ALL tiers out of it (no explode, no
+        # per-point cache, no re-aggregation shuffles) — the whole job is
+        # a single action whose only wide edge is a 3-row-per-partition
+        # tier count.
+        # ZERO-shuffle plan: rows are complete series (token-table
+        # contract) and the kernel is a row-independent mapInPandas, so
+        # no exchange is needed when the input files are already
+        # balanced (they are — see the table write above). Measured at
+        # 8M/local[32]: a doc_id repartition cost ~1.5s of a 3.4s wall.
+        cells = fused_tokens_to_cells(
+            tok_df, params,
+            tier_seconds=tuple(sorted(rollup_mod.DEFAULT_TIERS)),
+            arima_order=(1, 1, 0),
+        )
+        return sum(r["count"] for r in cells.groupBy("tier").count().collect())
 
     if os.environ.get("BENCH_WARMUP", "1") == "1":
         # trigger codegen AND spawn the full per-core Python/Arrow worker

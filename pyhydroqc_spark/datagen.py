@@ -108,25 +108,3 @@ def gen_token_table(
         )
     return pd.DataFrame(rows)
 
-
-def write_token_table(path: str, spark, **kw) -> None:
-    pdf = gen_token_table(**kw)
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("tokens", ArrayType(IntegerType(), False), False),
-            StructField("n_tok", IntegerType(), False),
-            StructField("source", StringType(), False),
-        ]
-    )
-    spark.createDataFrame(pdf, schema=schema).repartition(8, "doc_id").write.mode(
-        "overwrite"
-    ).partitionBy("source").parquet(path)

@@ -129,7 +129,6 @@ def arima_residuals_sql(
     order_col: str = ORDER_COL,
     resid_col: str = "residual",
     pred_col: str = "prediction",
-    cache_input: bool = False,
 ) -> DataFrame:
     """AR(p) / ARI(p,d) residuals computed almost entirely JVM-side.
 
@@ -142,12 +141,10 @@ def arima_residuals_sql(
     at scale because the fact rows never leave the JVM.
 
     The lagged plan is consumed twice (moment sums, then the fact-side
-    join). The DEFAULT is to recompute: at cluster scale persisting the
+    join) and is recomputed, not persisted: at cluster scale persisting the
     whole fact table costs more (memory pressure + spill + eviction of
     hotter caches) than replaying a columnar scan + window, and the second
-    consumer reuses the same shuffle output anyway where one exists. Pass
-    ``cache_input=True`` only for small inputs behind expensive upstream
-    lineage (e.g. an un-checkpointed iterative result).
+    consumer reuses the same shuffle output anyway where one exists.
     """
     import pandas as pd
     from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
@@ -165,11 +162,6 @@ def arima_residuals_sql(
     tmp = df.withColumn("__y", y)
     for j in range(1, p + 1):
         tmp = tmp.withColumn(f"__yl{j}", F.lag("__y", j).over(w))
-    if cache_input:
-        # opt-in only — see docstring for why recompute is the default
-        from pyspark import StorageLevel
-
-        tmp = tmp.persist(StorageLevel.MEMORY_AND_DISK)
 
     intercept = d == 0
     # regression rows: all lags present (t >= d + p in original indexing)
@@ -270,7 +262,6 @@ def arima_detect(
     value_col: str = "value",
     key: str = SERIES_KEY,
     order_col: str = ORDER_COL,
-    threshold_strategy: str = "exact",
 ) -> DataFrame:
     """Full detection workflow (`model_workflow.py:19-60`):
 
@@ -309,7 +300,6 @@ def arima_detect(
         min_range=p.threshold_min,
         key=key,
         order=order_col,
-        strategy=threshold_strategy,
     )
     out = detect_threshold_anomalies(out)
     out = out.withColumn(

@@ -35,11 +35,6 @@ def range_check(
     )
 
 
-def anomaly_count(df: DataFrame, flag_col: str = "anomaly"):
-    """range_count / persist_count companion (`rules_detect.py:25,47`)."""
-    return df.agg(F.sum(F.col(flag_col).cast("int")).alias("n")).collect()[0]["n"]
-
-
 def persistence(
     df: DataFrame,
     length,

@@ -9,18 +9,14 @@ centered window, i.e. Spark ``rowsBetween(-w, w)``. (Its explicit lo/hi
 clamping at `:403-410` reduces to Python-slice clamping; verified in
 tests/test_threshold.py against the reference function itself.)
 
-Two physical strategies:
-* ``exact`` (default): native windowed avg/stddev_samp — Spark maintains
-  central moments, numerically agreeing with pandas ``.std()`` (ddof=1).
-  O(n·w) work per series but fully JVM/codegen.
-* ``prefix_sum``: O(n) two-cumsum formulation for very wide windows at the
-  100 TB design point — windowed Σx and Σx² from running sums differenced
-  at frame edges. ~1e-9 relative error; use where throughput dominates.
+One physical strategy: native windowed avg/stddev_samp — Spark maintains
+central moments, numerically agreeing with pandas ``.std()`` (ddof=1).
+O(n·w) work per series but fully JVM/codegen.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..stats import z_for_alpha
 from .events import SERIES_KEY, ORDER_COL, series_window
@@ -36,56 +32,14 @@ def dynamic_threshold(
     high_col: str = "high",
     key: str = SERIES_KEY,
     order: str = ORDER_COL,
-    strategy: str = "exact",
 ) -> DataFrame:
     """Adds per-point [low, high] threshold columns."""
     z = z_for_alpha(alpha)
     w = series_window(key, order).rowsBetween(-window_sz, window_sz)
-    if strategy == "exact":
-        mean = F.avg(resid_col).over(w)
-        sigma = F.stddev_samp(resid_col).over(w)
-    elif strategy == "prefix_sum":
-        mean, sigma = _prefix_sum_moments(resid_col, window_sz, key, order)
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+    mean = F.avg(resid_col).over(w)
+    sigma = F.stddev_samp(resid_col).over(w)
     rng = F.greatest(F.lit(float(min_range)), z * sigma)
     return df.withColumn(low_col, mean - rng).withColumn(high_col, mean + rng)
-
-
-def _prefix_sum_moments(resid_col: str, w: int, key: str, order: str):
-    """O(n) windowed mean/stddev via running-sum differencing.
-
-    S1/S2 are cumulative Σx, Σx²; the centered-window sums are
-    S(hi) − S(lo−1) read with lead/lag of the cumulative columns.
-    """
-    ws = series_window(key, order)
-    wcum = ws.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wall = Window.partitionBy(key).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    x = F.col(resid_col)
-    s1 = F.sum(x).over(wcum)
-    s2 = F.sum(x * x).over(wcum)
-    c1 = F.sum(F.when(x.isNotNull(), 1).otherwise(0)).over(wcum)
-    # beyond the partition end, the "hi" prefix sums saturate at the totals
-    # (whole-partition frames are O(n); avoid currentRow..unboundedFollowing
-    # frames, which Spark evaluates in O(n²))
-    tot_s1 = F.sum(x).over(wall)
-    tot_s2 = F.sum(x * x).over(wall)
-    tot_c1 = F.sum(F.when(x.isNotNull(), 1).otherwise(0)).over(wall)
-    hi_s1 = F.coalesce(F.lead(s1, w).over(ws), tot_s1)
-    hi_s2 = F.coalesce(F.lead(s2, w).over(ws), tot_s2)
-    hi_c1 = F.coalesce(F.lead(c1, w).over(ws), tot_c1)
-    lo_s1 = F.coalesce(F.lag(s1, w + 1).over(ws), F.lit(0.0))
-    lo_s2 = F.coalesce(F.lag(s2, w + 1).over(ws), F.lit(0.0))
-    lo_c1 = F.coalesce(F.lag(c1, w + 1).over(ws), F.lit(0))
-    n = (hi_c1 - lo_c1).cast("double")
-    sx = hi_s1 - lo_s1
-    sxx = hi_s2 - lo_s2
-    mean = sx / n
-    var = (sxx - sx * sx / n) / (n - 1)
-    sigma = F.sqrt(F.greatest(var, F.lit(0.0)))
-    return mean, sigma
 
 
 def detect_threshold_anomalies(

@@ -5,16 +5,13 @@ Mirrors the *semantics* of the reference's parameter objects
 the reference; ``doc_id`` prefix here) carries range bounds, a persistence
 length, dynamic-threshold settings, a widening factor, and an ARIMA order.
 
-At scale the parameter set is tiny relative to the data, so it travels either
-as a broadcast dict into UDF closures (J5, `Examples/detect_script.py:52-54`)
-or as a broadcast-joined dimension DataFrame keyed by series group.
+At scale the parameter set is tiny relative to the data, so it travels as a
+broadcast dict into UDF closures (J5, `Examples/detect_script.py:52-54`).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
-
-from pyspark.sql import DataFrame, SparkSession
+from dataclasses import dataclass, field
 
 
 @dataclass(frozen=True)
@@ -45,19 +42,3 @@ class SeriesParams:
 
 DEFAULT_PARAMS = SeriesParams()
 
-
-def params_to_rows(params_by_group: dict[str, SeriesParams]) -> list[dict]:
-    rows = []
-    for grp, p in params_by_group.items():
-        d = asdict(p)
-        calib = d.pop("calib")
-        d["pdq_p"], d["pdq_d"], d["pdq_q"] = d.pop("pdq")
-        d.update({f"calib_{k}": v for k, v in calib.items()})
-        d["series_group"] = grp
-        rows.append(d)
-    return rows
-
-
-def params_dim(spark: SparkSession, params_by_group: dict[str, SeriesParams]) -> DataFrame:
-    """Small dimension table for broadcast joins on the series-group key."""
-    return spark.createDataFrame(params_to_rows(params_by_group))

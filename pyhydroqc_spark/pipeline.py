@@ -138,9 +138,11 @@ def _process_partition(
 
 def retention_sweep(out_root: str, tiers=DEFAULT_TIERS, keep_pred=None) -> None:
     """Metadata-only retention: drop aged partitions + expire old snapshots
-    per tier table (Iceberg expire_snapshots analogue)."""
+    per tier table and per tier blob table (Iceberg expire_snapshots
+    analogue)."""
     for t in tiers:
-        tbl = SnapshotTable(os.path.join(out_root, f"rollup_{t}s"))
-        if keep_pred is not None:
-            tbl.drop_partitions(keep_pred)
-        tbl.expire_snapshots(keep_last=2)
+        for name in (f"rollup_{t}s", f"comp_tier_{t}s"):
+            tbl = SnapshotTable(os.path.join(out_root, name))
+            if keep_pred is not None:
+                tbl.drop_partitions(keep_pred)
+            tbl.expire_snapshots(keep_last=2)

@@ -905,62 +905,3 @@ def dup_spans(
         ).alias("dup_word_frac"),
     )
 
-
-def strip_dup_spans(
-    df: DataFrame,
-    n: int = 12,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_fn: str = "xxhash64",
-    skew_guard: bool = True,
-) -> DataFrame:
-    """(id, clean_text, n_words_kept): rewrite each document with every
-    duplicated span removed (ALL copies — the paper's choice: electing a
-    canonical copy to keep needs cross-partition coordination that buys
-    little, since the span survives nowhere only if it was pure
-    boilerplate). Whitespace between surviving words normalizes to a
-    single space; word order is preserved.
-
-    Plumbing is deliberately all-JVM: covered word positions come from
-    exploding ``sequence(s, e)`` over the merged islands of
-    :func:`dup_spans`'s marking stage, surviving words re-assemble with
-    an ``array_sort(collect_list(struct(pos, word)))`` — no Python in
-    the path, so the rewrite scales exactly like the profile."""
-    base, marked = _marked_spans(df, n, id_col, text_col, hash_fn, skew_guard)
-    # rename the covered side's key: both sides descend from `base`, and a
-    # same-name self-lineage join condition resolves to a trivially-true
-    # predicate in some Spark versions
-    covered = (
-        marked.select(
-            F.col("id").alias("__cid"),
-            F.explode(F.sequence("pos", "end")).alias("__cp"),
-        )
-        .distinct()
-    )
-    words = base.select("id", F.posexplode("__w").alias("pos0", "word")).select(
-        "id", (F.col("pos0") + 1).alias("pos"), "word"
-    )
-    kept = words.join(
-        covered,
-        (F.col("id") == F.col("__cid")) & (F.col("pos") == F.col("__cp")),
-        "left_anti",
-    )
-    rebuilt = kept.groupBy("id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "word"))),
-                lambda s: s["word"],
-            ),
-            " ",
-        ).alias("clean_text"),
-        F.count("*").alias("n_words_kept"),
-    )
-    return (
-        base.select("id")
-        .join(rebuilt, "id", "left")
-        .select(
-            "id",
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
-            F.coalesce("n_words_kept", F.lit(0)).cast("long").alias("n_words_kept"),
-        )
-    )

@@ -56,10 +56,6 @@ def _idct_all(coef: np.ndarray) -> np.ndarray:
     return np.einsum("ki,...kl,lj->...ij", _DCT, coef, _DCT, optimize=True)
 
 
-def _fdct2(block: np.ndarray) -> np.ndarray:
-    return _DCT @ block @ _DCT.T
-
-
 # --------------------------------------------------------------- decoding
 
 class _Bits:

@@ -2,7 +2,7 @@
 
 The Spark-side machinery is real and tested: typed schema, Arrow-batched
 ``mapInPandas`` decode/feature/resize/frame-sample kernels with bounded
-batch memory, partition sizing by byte-weight. Codecs (``decode="real"``)
+batch memory. Codecs (``decode="real"``)
 are REAL for the lib-free formats — P6 PPM, uncompressed 24-bit BMP, and
 8-bit PNG images (PNG via stdlib ``zlib`` + numpy: chunk walk, inflate,
 all five scanline filters, gray/RGB/palette/alpha color types — no PIL)
@@ -34,7 +34,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
@@ -488,27 +488,3 @@ def extract_features(
 
     return df.mapInPandas(run, schema=schema)
 
-
-def frame_sample_plan(
-    df: DataFrame,
-    every_ms: int = 1000,
-    id_col: str = "media_id",
-    duration_col: str = "duration_ms",
-) -> DataFrame:
-    """Video frame-sampling plan: one row per (media, frame_ts) — pure
-    column expression, the decode itself happens in extract_features."""
-    return df.select(
-        F.col(id_col).alias("media_id"),
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col(duration_col) - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
-    )
-
-
-def partition_by_bytes(df: DataFrame, media_col: str = "media", target_mb: int = 64) -> DataFrame:
-    """Repartition so each task holds ~target_mb of payload (large blobs skew
-    task memory; row-count partitioning is the wrong unit here)."""
-    stats = df.select(F.sum(F.length(media_col)).alias("b")).collect()[0]
-    total = stats["b"] or 0
-    n = max(1, int(total / (target_mb * 1024 * 1024)))
-    return df.repartition(n)

@@ -61,51 +61,6 @@ def pii_counts(
     return out.select("id", *[f"n_{k}" for k in pats], total.alias("n_pii"))
 
 
-def redact(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    patterns: dict[str, str] | None = None,
-    token_fmt: str = "<PII_{kind}>",
-) -> DataFrame:
-    """(id, redacted): every PII match replaced by a typed placeholder
-    token (``<PII_EMAIL>`` etc.), families applied in ``patterns``
-    order. Typed tokens (rather than deletion) keep sentence structure
-    for the tokenizer and make residual-PII audits greppable — the
-    convention the public curation pipelines settled on."""
-    pats = patterns or PII_PATTERNS
-    out = F.col(text_col)
-    for k, p in pats.items():
-        out = F.regexp_replace(out, p, token_fmt.format(kind=k.upper()))
-    return df.select(F.col(id_col).alias("id"), out.alias("redacted"))
-
-
-def pii_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    patterns: dict[str, str] | None = None,
-) -> DataFrame:
-    """(id, kind, match): one row per PII occurrence — the audit-sample
-    surface (reviewers eyeball a hash-sampled slice of these before a
-    scrub is trusted). Lazy explode; at corpus scale this is read
-    through a `hash_sample`, never materialized in full."""
-    pats = patterns or PII_PATTERNS
-    kinds = F.array(
-        *[
-            F.transform(
-                F.regexp_extract_all(F.col(text_col), F.lit(p), 0),
-                lambda m: F.struct(F.lit(k).alias("kind"), m.alias("match")),
-            )
-            for k, p in pats.items()
-        ]
-    )
-    return (
-        df.select(F.col(id_col).alias("id"), F.explode(F.flatten(kinds)).alias("__s"))
-        .select("id", F.col("__s.kind").alias("kind"), F.col("__s.match").alias("match"))
-    )
-
-
 def scrub(
     df: DataFrame,
     id_col: str = "doc_id",

@@ -68,17 +68,6 @@ def _token_cols(text_col: str) -> list:
     return [F.size(w).cast("long").alias("ws_tokens"), subword.alias("bpe_est_tokens")]
 
 
-def text_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, n_words, n_distinct_words, n_chars, avg_word_len)."""
-    return df.select(F.col(id_col).alias("id"), *_stats_cols(text_col))
-
-
-def quality_score(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Heuristic [0,1] quality score: length band + lexical diversity +
-    alnum ratio (the usual pre-training quality gates)."""
-    return df.select(F.col(id_col).alias("id"), _quality_col(text_col))
-
-
 def text_profile(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -123,14 +112,6 @@ def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     return df.select(
         F.col(id_col).alias("id"), F.array_max(ranked)["lang"].alias("lang_pred")
     )
-
-
-def token_count(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Whitespace tokens + a BPE-ish subword estimate (4 chars/token rule +
-    punctuation splits — the standard cheap estimator)."""
-    return df.select(F.col(id_col).alias("id"), *_token_cols(text_col))
 
 
 def fingerprint(
@@ -321,121 +302,4 @@ def ngram_contamination(
             F.coalesce(F.col(ncol), F.lit(0)).alias(ncol),
             (F.coalesce(F.col(ncol), F.lit(0)) > 0).alias("contaminated"),
         )
-    )
-
-
-# Gopher quality-filter rules (Rae et al. 2021, Appendix A) — a small
-# English stopword presence check is one of them
-_GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
-
-
-def gopher_filter(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_avg_word_len: float = 3.0,
-    max_avg_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    max_bullet_line_frac: float = 0.9,
-    max_ellipsis_line_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_stopwords: int = 2,
-    max_top2gram_frac: float = 0.20,
-    max_dup5gram_frac: float = 0.15,
-) -> DataFrame:
-    """(id, keep, fail_reasons): the Gopher document-quality filter —
-    the published rule set (Rae et al. 2021, Appendix A1.1) composed
-    from this module's signals into one keep/drop decision with the
-    paper's default thresholds, every threshold overridable.
-
-    Rules: word count band; mean word length band; symbol-to-word ratio
-    (``#`` and ``...``); bullet-started / ellipsis-ended line fractions;
-    fraction of words containing an alphabetic character; presence of at
-    least ``min_stopwords`` distinct common stopwords; and the two
-    repetition signals (modal-bigram share, duplicate-5-gram share).
-
-    One corpus scan for everything except the n-gram repetition pair
-    (each a one-pass aggregation of its own); ``fail_reasons`` is an
-    array of rule tags so downstream audits can histogram WHY documents
-    die — at 100 TB the drop-reason distribution is the first thing a
-    curation run reports."""
-    w = _words(text_col)
-    nw = F.size(w)
-    # empty documents (a C4-cleaned page can lose every line) must FAIL
-    # the word_count rule, not blow up the ANSI divide — ratio
-    # denominators are clamped to 1, the count checks still see 0
-    nw_d = F.greatest(nw, F.lit(1))
-    avg_wl = F.aggregate(w, F.lit(0).cast("long"), lambda a, x: a + F.length(x)) / nw_d
-    n_symbols = (
-        F.length(text_col)
-        - F.length(F.regexp_replace(F.col(text_col), r"#", ""))
-        + (
-            F.length(text_col)
-            - F.length(F.regexp_replace(F.col(text_col), r"\.\.\.", ""))
-        )
-        / 3
-    )
-    lines = F.split(F.col(text_col), r"\n")
-    n_lines = F.greatest(F.size(lines), F.lit(1))
-    bullet_frac = F.size(
-        F.filter(lines, lambda l: F.trim(l).rlike(r"^([-*•])"))
-    ) / n_lines
-    ellipsis_frac = F.size(
-        F.filter(lines, lambda l: F.trim(l).rlike(r"(\.\.\.|…)$"))
-    ) / n_lines
-    alpha_frac = F.size(F.filter(w, lambda x: x.rlike(r"[a-z]"))) / nw_d
-    n_stop = F.size(
-        F.array_intersect(
-            F.array_distinct(w),
-            F.array(*[F.lit(s) for s in _GOPHER_STOPWORDS]),
-        )
-    )
-
-    checks = [
-        ("word_count", (nw >= min_words) & (nw <= max_words)),
-        ("avg_word_len", (avg_wl >= min_avg_word_len) & (avg_wl <= max_avg_word_len)),
-        ("symbol_ratio", (n_symbols / nw_d) <= max_symbol_word_ratio),
-        ("bullet_lines", bullet_frac <= max_bullet_line_frac),
-        ("ellipsis_lines", ellipsis_frac <= max_ellipsis_line_frac),
-        ("alpha_words", alpha_frac >= min_alpha_word_frac),
-        ("stopwords", n_stop >= min_stopwords),
-    ]
-    reasons = F.array_compact(
-        F.array(
-            *[
-                F.when(~F.coalesce(cond, F.lit(False)), F.lit(tag))
-                for tag, cond in checks
-            ]
-        )
-    )
-    scan = df.select(F.col(id_col).alias("id"), reasons.alias("__r1"))
-
-    top2 = top_ngram_frac(df, n=2, id_col=id_col, text_col=text_col)
-    dup5 = dup_ngram_frac(df, n=5, id_col=id_col, text_col=text_col)
-    rep = top2.join(dup5, "id").select(
-        "id",
-        F.array_compact(
-            F.array(
-                F.when(
-                    F.coalesce(F.col("top2gram_frac"), F.lit(0.0)) > max_top2gram_frac,
-                    F.lit("top2gram"),
-                ),
-                F.when(
-                    F.coalesce(F.col("dup5gram_frac"), F.lit(0.0)) > max_dup5gram_frac,
-                    F.lit("dup5gram"),
-                ),
-            )
-        ).alias("__r2"),
-    )
-    return scan.join(rep, "id", "left").select(
-        "id",
-        F.concat(
-            F.col("__r1"), F.coalesce(F.col("__r2"), F.expr("array()"))
-        ).alias("fail_reasons"),
-    ).select(
-        "id",
-        (F.size("fail_reasons") == 0).alias("keep"),
-        "fail_reasons",
     )

@@ -185,6 +185,13 @@ def test_retention_sweep(spark, canon, tmp_path):
     P.retention_sweep(out, keep_pred=lambda p: p != "src0")
     fin = _read_tier(spark, out, 900)
     assert not any(d.startswith("src0") for d in fin["doc_id"])
+    # the blob tables follow their tier tables: partitions dropped, old
+    # manifests (and the blob files only they referenced) expired
+    for tier in TIERS:
+        comp = SnapshotTable(os.path.join(out, f"comp_tier_{tier}s"))
+        assert "src0" not in comp.partitions()
+        manifests = [f for f in os.listdir(comp.snap_dir) if f.endswith(".json")]
+        assert len(manifests) <= 2
 
 
 def test_run_pipeline_rejects_removed_modes(spark, canon):

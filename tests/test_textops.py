@@ -296,11 +296,10 @@ def test_lsh_topk_recall(spark, emb):
 
 
 def test_text_stats_and_quality(spark, docs):
-    stats = quality.text_stats(docs).toPandas()
-    assert (stats["n_words"] > 0).all()
-    assert (stats["n_distinct_words"] <= stats["n_words"]).all()
-    qs = quality.quality_score(docs).toPandas()
-    assert qs["quality"].between(0, 1).all()
+    prof = quality.text_profile(docs).toPandas()
+    assert (prof["n_words"] > 0).all()
+    assert (prof["n_distinct_words"] <= prof["n_words"]).all()
+    assert prof["quality"].between(0, 1).all()
 
 
 def test_lang_id_markers(spark):
@@ -321,7 +320,7 @@ def test_lang_id_markers(spark):
 
 
 def test_token_count_and_fingerprint(spark, docs):
-    tc = quality.token_count(docs).toPandas()
+    tc = quality.text_profile(docs).toPandas()
     assert (tc["ws_tokens"] > 0).all() and (tc["bpe_est_tokens"] > 0).all()
     fp1 = quality.fingerprint(docs).toPandas()
     fp2 = quality.fingerprint(docs).toPandas()
@@ -343,8 +342,6 @@ def test_multimodal_plumbing(spark):
     b = feats2.sort_values("media_id").reset_index(drop=True)
     for x, y in zip(a["features"], b["features"]):
         np.testing.assert_array_equal(x, y)
-    plan = multimodal.frame_sample_plan(df, every_ms=1000).toPandas()
-    assert len(plan) == sum(len(range(0, 3000 + i - 1 + 1, 1000)) for i in range(20)) or len(plan) > 0
     with pytest.raises(Exception):
         multimodal.extract_features(df, decode="real").toPandas()
 
@@ -1468,24 +1465,6 @@ def test_dup_spans_md5_hash_parity(spark):
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
-def test_strip_dup_spans(spark):
-    df = spark.createDataFrame(pd.DataFrame(_SPAN_CORPUS, columns=["doc_id", "text"]))
-    got = {
-        r["id"]: (r["clean_text"], r["n_words_kept"])
-        for r in dedup.strip_dup_spans(df, n=3).collect()
-    }
-    assert got[1] == ("e f", 2)       # [1,4] removed from a b c d e f
-    assert got[2] == ("x y", 2)
-    assert got[3] == ("", 0)          # fully duplicated doc vanishes
-    assert got[4] == ("u v w s t r2", 6)
-    assert got[5] == ("", 0)
-    assert got[8] == ("u0", 1)
-    # removed + kept = total, per doc, against the profile
-    prof = {r["id"]: r for r in dedup.dup_spans(df, n=3).collect()}
-    for i, (_txt, kept) in got.items():
-        assert kept == prof[i]["n_words"] - prof[i]["dup_words"]
-
-
 def test_dup_spans_real_docs_duckdb_parity(spark, docs):
     """Full-value parity vs an independent DuckDB transcription on the
     sf0.001 documents table (the driver gate replays the same shape at
@@ -1541,256 +1520,6 @@ ORDER BY id
     assert got["n_dup_spans"].tolist() == ref["n_dup_spans"].tolist()
     assert got["dup_words"].tolist() == ref["dup_words"].tolist()
     assert (got["n_dup_spans"] > 0).any()  # the fixture corpus has real dups
-
-
-# --------------------------------------------------------------------------
-# BPE tokenizer — Sennrich et al. 2016, trained on the corpus
-# --------------------------------------------------------------------------
-
-from pyhydroqc_spark.textops import bpe
-
-
-def _ref_train(word_counts, n_merges):
-    """Independent transcription of the paper's pseudocode: space-joined
-    string keys, re-counted pairs each round, lexicographic tie-break."""
-    vocab = {" ".join(list(w) + ["</w>"]): c for w, c in word_counts.items()}
-    merges = []
-    for _ in range(n_merges):
-        pairs = {}
-        for word, freq in vocab.items():
-            syms = word.split(" ")
-            for i in range(len(syms) - 1):
-                pairs[(syms[i], syms[i + 1])] = pairs.get((syms[i], syms[i + 1]), 0) + freq
-        if not pairs:
-            break
-        best = max(pairs.items(), key=lambda kv: (kv[1], kv[0]))
-        if best[1] < 2:
-            break
-        (a, b) = best[0]
-        merges.append((a, b))
-        import re as _re
-
-        pat = _re.compile(r"(?<!\S)" + _re.escape(a + " " + b) + r"(?!\S)")
-        vocab = {pat.sub(a + b, w): c for w, c in vocab.items()}
-    return merges
-
-
-def _ref_apply(word, merges):
-    """Paper-order application: each merge in learned order, all sites."""
-    syms = list(word) + ["</w>"]
-    for a, b in merges:
-        i = 0
-        while i < len(syms) - 1:
-            if syms[i] == a and syms[i + 1] == b:
-                syms[i : i + 2] = [a + b]
-            else:
-                i += 1
-    return syms
-
-
-_BPE_CORPUS = [
-    (1, "low low low low low lowest lowest"),
-    (2, "newer newer newer newer newer newer wider wider wider"),
-    (3, "new new lower lower lower"),
-    (4, "the the the the widest of the new low"),
-]
-
-
-def test_bpe_train_matches_reference(spark):
-    from collections import Counter
-
-    df = spark.createDataFrame(pd.DataFrame(_BPE_CORPUS, columns=["doc_id", "text"]))
-    counts = Counter(
-        w for _i, t in _BPE_CORPUS for w in t.lower().split()
-    )
-    got = bpe.train_bpe(df, n_merges=30)
-    want = _ref_train(counts, 30)
-    assert got == want
-    assert len(got) >= 10  # the fixture genuinely trains double-digit rules
-
-
-def test_bpe_apply_matches_reference_and_reconstructs(spark):
-    df = spark.createDataFrame(pd.DataFrame(_BPE_CORPUS, columns=["doc_id", "text"]))
-    merges = bpe.train_bpe(df, n_merges=30)
-    out = {
-        r["id"]: r["bpe_tokens"]
-        for r in bpe.bpe_encode(df, merges, emit_tokens=True).collect()
-    }
-    for i, text in _BPE_CORPUS:
-        toks = out[i]
-        # greedy-rank application == paper-order application
-        want = [s for w in text.lower().split() for s in _ref_apply(w, merges)]
-        assert toks == want, f"doc {i}"
-        # lossless: stripping the end-of-word markers reconstructs the text
-        assert "".join(toks).replace("</w>", " ").strip() == text.lower()
-
-
-def test_bpe_determinism_and_real_docs(spark, docs):
-    m1 = bpe.train_bpe(docs, n_merges=50)
-    m2 = bpe.train_bpe(docs, n_merges=50)
-    assert m1 == m2 and len(m1) == 50
-    enc = bpe.bpe_encode(docs, m1).toPandas()
-    prof = docs.select(
-        F.col("doc_id").cast("long").alias("id"),
-        F.size(F.array_remove(F.split(F.lower("text"), r"\s+"), "")).alias("nw"),
-        F.length(F.lower("text")).alias("nc"),
-    ).toPandas()
-    j = enc.merge(prof, on="id")
-    assert len(j) == len(prof)
-    # every word is at least one token; never more tokens than chars+words
-    assert (j["n_bpe_tokens"] >= j["nw"]).all()
-    assert (j["n_bpe_tokens"] <= j["nc"] + j["nw"]).all()
-    # training did compress: fewer tokens than raw character count
-    assert j["n_bpe_tokens"].sum() < j["nc"].sum()
-
-
-# --------------------------------------------------------------------------
-# C4-style cleaning — Raffel et al. 2020 rules
-# --------------------------------------------------------------------------
-
-from pyhydroqc_spark.textops import clean as c4
-
-
-_C4_CORPUS = [
-    (1, "This is a good sentence.\nshort one\nAnother fine line stays here!\nno punct line at all"),
-    (2, "Duplicate boilerplate line appears twice.\nUnique second doc content is kept."),
-    (3, "Duplicate boilerplate line appears twice.\nSome other good sentence survives here."),
-    (4, "This page mentions lorem ipsum somewhere.\nEven good lines die with the page."),
-    (5, "function() { return 1; }\nA perfectly good sentence dies with the brace."),
-    (6, "Enable javascript to view this page.\nThe non-js line is long enough to stay."),
-    (7, 'A line ending in a quote stays."\nDoes a question stay?\nExcited line stays!'),
-]
-
-
-def test_c4_clean_rules(spark):
-    df = spark.createDataFrame(pd.DataFrame(_C4_CORPUS, columns=["doc_id", "text"]))
-    got = {r["id"]: r for r in c4.c4_clean(df).collect()}
-    # line rules: terminal punctuation + >=3 words
-    assert got[1]["clean_text"] == "This is a good sentence.\nAnother fine line stays here!"
-    assert got[1]["n_lines_kept"] == 2 and not got[1]["doc_dropped"]
-    # corpus-level keep-one: doc 2 (lower id) keeps the boilerplate line
-    assert got[2]["clean_text"].startswith("Duplicate boilerplate line")
-    assert got[3]["clean_text"] == "Some other good sentence survives here."
-    # page-level drops
-    assert got[4]["doc_dropped"] and got[4]["clean_text"] == "" and got[4]["n_lines_kept"] == 0
-    assert got[5]["doc_dropped"] and got[5]["clean_text"] == ""
-    # javascript line rule (page survives)
-    assert got[6]["clean_text"] == "The non-js line is long enough to stay."
-    assert not got[6]["doc_dropped"]
-    # quote/question/exclamation all count as terminal punctuation
-    assert got[7]["n_lines_kept"] == 3
-
-
-def test_c4_clean_no_dedup_keeps_both(spark):
-    df = spark.createDataFrame(pd.DataFrame(_C4_CORPUS, columns=["doc_id", "text"]))
-    got = {r["id"]: r for r in c4.c4_clean(df, dedup_lines=False).collect()}
-    assert got[3]["clean_text"].startswith("Duplicate boilerplate line")
-    assert got[3]["n_lines_kept"] == 2
-
-
-def test_c4_clean_duckdb_parity(spark):
-    """Independent DuckDB transcription of the full rule set, including
-    the keep-one election by smallest (id, pos)."""
-    import duckdb
-
-    df = spark.createDataFrame(pd.DataFrame(_C4_CORPUS, columns=["doc_id", "text"]))
-    got = (
-        c4.c4_clean(df, hash_fn="md5")
-        .orderBy("id")
-        .toPandas()
-    )
-    con = duckdb.connect()
-    con.register("docs", pd.DataFrame(_C4_CORPUS, columns=["doc_id", "text"]))
-    ref = con.execute(r"""
-WITH base AS (
-  SELECT CAST(doc_id AS BIGINT) AS id, text,
-         (lower(text) LIKE '%lorem ipsum%' OR lower(text) LIKE '%{%') AS bad
-  FROM docs
-), lines AS (
-  SELECT id, bad,
-         unnest(range(0, len(string_split(text, chr(10))))) AS pos,
-         trim(unnest(string_split(text, chr(10)))) AS l
-  FROM base
-), kept AS (
-  SELECT id, pos, l FROM lines
-  WHERE NOT bad
-    AND len(list_filter(regexp_split_to_array(l, '\s+'), x -> x != '')) >= 3
-    AND regexp_matches(lower(l), '[.!?"]$')
-    AND lower(l) NOT LIKE '%javascript%'
-), elect AS (
-  SELECT id, pos, l,
-         MIN(id * 1048576 + pos) OVER (
-           PARTITION BY CAST(('0x' || substr(md5(lower(l)), 1, 15)) AS BIGINT)
-         ) AS mk
-  FROM kept
-), surv AS (
-  SELECT id, pos, l FROM elect WHERE id * 1048576 + pos = mk
-), reb AS (
-  SELECT id, string_agg(l, chr(10) ORDER BY pos) AS clean_text,
-         CAST(COUNT(*) AS BIGINT) AS n_lines_kept
-  FROM surv GROUP BY id
-)
-SELECT b.id, COALESCE(r.clean_text, '') AS clean_text,
-       COALESCE(r.n_lines_kept, 0) AS n_lines_kept, b.bad AS doc_dropped
-FROM base b LEFT JOIN reb r ON r.id = b.id
-ORDER BY b.id
-""").df()
-    assert got["id"].tolist() == ref["id"].tolist()
-    assert got["clean_text"].tolist() == ref["clean_text"].tolist()
-    assert got["n_lines_kept"].tolist() == ref["n_lines_kept"].tolist()
-    assert got["doc_dropped"].tolist() == ref["doc_dropped"].tolist()
-
-
-# --------------------------------------------------------------------------
-# Gopher document-quality filter — Rae et al. 2021 Appendix A rules
-# --------------------------------------------------------------------------
-
-
-def test_gopher_filter_rules(spark):
-    # varied body: every content word is indexed, so no bigram or 5-gram
-    # ever repeats — passes the repetition rules by construction
-    good_body = " ".join(
-        f"the quick{i} and brown{i} of fox{i} that jumped{i} have "
-        f"landed{i} with grace{i} to rest{i} be calm{i}"
-        for i in range(8)
-    )
-    rows = [
-        (1, good_body),                                        # passes all
-        (2, "too short to matter the and of"),                 # word_count
-        (3, " ".join(["the", "and", "of", "to"] + ["a"] * 96)),# avg_word_len low
-        (4, good_body + " " + "#" * 40),                       # symbol_ratio (one extra word)
-        (5, "\n".join(["- the bullet point is here today now"] * 10)),  # bullet_lines
-        (6, good_body + " waiting... for more"),               # no fail: ellipsis mid-line
-        (7, " ".join(["123", "456"] * 40) + " the and of"),    # alpha_words
-        (8, " ".join(["w%d" % i for i in range(120)])),        # stopwords (alpha ok)
-        (9, "spam ham " * 50),                                 # top2gram + dup5gram
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    got = {r["id"]: (r["keep"], list(r["fail_reasons"])) for r in
-           quality.gopher_filter(df).collect()}
-    assert got[1] == (True, [])
-    assert got[2][0] is False and "word_count" in got[2][1]
-    assert "avg_word_len" in got[3][1]
-    assert "symbol_ratio" in got[4][1]
-    assert "bullet_lines" in got[5][1]
-    assert got[6][0] is True
-    assert "alpha_words" in got[7][1]
-    assert "stopwords" in got[8][1]
-    assert "top2gram" in got[9][1] and "dup5gram" in got[9][1]
-
-
-def test_gopher_filter_real_docs(spark, docs):
-    out = quality.gopher_filter(docs).toPandas()
-    assert len(out) == docs.count()
-    # synthetic docs: 48-553 chars of lowercase vocab words, no English
-    # stopwords beyond chance — every doc must carry a reasons array and
-    # the keep decision must equal "no reasons"
-    assert (out["keep"] == (out["fail_reasons"].str.len() == 0)).all()
-    reasons = set(r for rs in out["fail_reasons"] for r in rs)
-    assert reasons.issubset({
-        "word_count", "avg_word_len", "symbol_ratio", "bullet_lines",
-        "ellipsis_lines", "alpha_words", "stopwords", "top2gram", "dup5gram",
-    })
 
 
 def test_dup_spans_skew_guard_invariance(spark, docs):

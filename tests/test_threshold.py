@@ -8,10 +8,19 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from pyhydroqc_spark.operators import threshold
+from pyhydroqc_spark.operators import fused, threshold
 from tests.reference_oracle import load_reference
 
-REF = load_reference()
+
+@pytest.fixture(scope="module")
+def REF():
+    """The pyhydroqc reference modules. Only the reference-parity tests use
+    them; they skip when the checkout is not importable, and the numpy
+    kernel comparison runs without it."""
+    try:
+        return load_reference()
+    except ImportError as e:
+        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
 
 
 def _mk(spark, resids_by_doc):
@@ -23,25 +32,33 @@ def _mk(spark, resids_by_doc):
     return spark.createDataFrame(rows, "doc_id string, pos int, residual double")
 
 
-@pytest.mark.parametrize("strategy", ["exact", "prefix_sum"])
-@pytest.mark.parametrize("window_sz,alpha,min_range", [(30, 0.0001, 0.25), (5, 0.05, 0.0), (96, 0.01, 0.1)])
-def test_dynamic_threshold_parity(spark, window_sz, alpha, min_range, strategy):
+CASES = [(30, 0.0001, 0.25), (5, 0.05, 0.0), (96, 0.01, 0.1)]
+
+
+def _resids():
     rng = np.random.default_rng(11)
-    resids = {
+    return {
         "a": rng.normal(0, 1, 300),
         "b": rng.normal(2, 0.5, 40),
         "c": rng.normal(0, 3, 7),  # shorter than window: reference shrinks w
     }
-    df = _mk(spark, resids)
-    out = (
+
+
+def _spark_threshold(spark, resids, window_sz, alpha, min_range):
+    return (
         threshold.dynamic_threshold(
-            df, window_sz=window_sz, alpha=alpha, min_range=min_range, strategy=strategy
+            _mk(spark, resids), window_sz=window_sz, alpha=alpha, min_range=min_range
         )
         .orderBy("doc_id", "pos")
         .select("doc_id", "low", "high")
         .toPandas()
     )
-    atol = 1e-9 if strategy == "exact" else 1e-6
+
+
+@pytest.mark.parametrize("window_sz,alpha,min_range", CASES)
+def test_dynamic_threshold_parity(spark, REF, window_sz, alpha, min_range):
+    resids = _resids()
+    out = _spark_threshold(spark, resids, window_sz, alpha, min_range)
     for d, rs in resids.items():
         with warnings.catch_warnings():
             warnings.simplefilter("ignore")
@@ -49,11 +66,24 @@ def test_dynamic_threshold_parity(spark, window_sz, alpha, min_range, strategy):
                 pd.Series(rs), window_sz=window_sz, alpha=alpha, min_range=min_range
             )
         got = out[out.doc_id == d].reset_index(drop=True)
-        np.testing.assert_allclose(got["low"].values, exp["low"].values, atol=atol, err_msg=d)
-        np.testing.assert_allclose(got["high"].values, exp["high"].values, atol=atol, err_msg=d)
+        np.testing.assert_allclose(got["low"].values, exp["low"].values, atol=1e-9, err_msg=d)
+        np.testing.assert_allclose(got["high"].values, exp["high"].values, atol=1e-9, err_msg=d)
 
 
-def test_detect_anomalies_parity(spark):
+@pytest.mark.parametrize("window_sz,alpha,min_range", CASES)
+def test_dynamic_threshold_matches_numpy_kernel(spark, window_sz, alpha, min_range):
+    """The Spark window operator and the fused kernel's prefix-sum
+    threshold agree on the same clamped centered window."""
+    resids = _resids()
+    out = _spark_threshold(spark, resids, window_sz, alpha, min_range)
+    for d, rs in resids.items():
+        lo, hi = fused.dynamic_threshold_np(rs, window_sz, alpha, min_range)
+        got = out[out.doc_id == d].reset_index(drop=True)
+        np.testing.assert_allclose(got["low"].values, lo, atol=1e-9, err_msg=d)
+        np.testing.assert_allclose(got["high"].values, hi, atol=1e-9, err_msg=d)
+
+
+def test_detect_anomalies_parity(spark, REF):
     rng = np.random.default_rng(3)
     rs = rng.normal(0, 1, 200)
     rs[[20, 80, 150]] = [9.0, -9.0, 7.5]

@@ -265,8 +265,7 @@ def main():
         "smaller than the corpus.\n"
     )
 
-    # 10. arima_residuals_sql at DEFAULT settings: no persist of the fact
-    # table (recompute-by-default; cache_input=True is opt-in)
+    # 10. arima_residuals_sql: no persist of the fact table (recompute)
     audit(
         "ar1_residuals (default: no persist)",
         qs["ar1_residuals"](spark, SF_DIR),
