@@ -293,9 +293,8 @@ def q_rollup_tiers(spark, sf_dir):
     # six subtrees each redo the scan+window — 4.7s -> ~1.4s at sf0.1.
     # It is materialized EAGERLY (one cheap action) and rebuilt on every
     # invocation (no cross-call memo — see _rollup_long_checkpointed).
-    # At corpus
-    # scale you would not cache facts; rollup_all_tiers' tier-from-tier
-    # cascade scans them once instead.
+    # At corpus scale you would not cache facts; the pipeline's
+    # tier-from-tier cascade (rollup_from_rollup) scans them once instead.
     long_df = _rollup_long_checkpointed(spark, sf_dir)
     parts = [
         _rollup(spark, sf_dir, 900, df=long_df).withColumn("tier", F.lit("15min")),

@@ -1,19 +1,22 @@
 """From-scratch ARIMA for per-series residual flagging and correction casts.
 
 The reference delegates to statsmodels SARIMAX / pmdarima auto_arima
-(`/root/reference/pyhydroqc/modeling_utilities.py:23-82`,
-`arima_correct.py:50-66`); neither library exists in this runtime, so the
-engine carries its own deterministic numpy implementation:
+(`pyhydroqc/modeling_utilities.py:23-82`, `arima_correct.py:50-66`);
+neither library exists in this runtime, so the engine carries its own
+deterministic numpy implementation:
 
 * ARMA(p,q) estimation via Hannan–Rissanen two-stage least squares
   (long-AR innovations proxy, then joint AR/MA regression) — a published,
   closed-form method: deterministic, no MLE iteration, fast enough to run
-  per series inside a grouped-map Arrow UDF at 10^12-series scale.
+  per series inside a grouped-map Arrow UDF at 10^12-series scale
+  (``fit_arma``). ``fit_arma_mle`` polishes that start to the exact
+  Kalman-filter likelihood for once-per-sensor offline fits.
 * d-fold differencing/integration for ARIMA(p,d,q).
 * In-sample one-step predictions + residuals, with the reference's
   first-point fixups (resid[0]=0, pred[0]=x[0], `modeling_utilities.py:72-73`).
 * l-step forecasts (future innovations = 0) for correction casts.
-* A small AIC grid as the auto-order stand-in for pmdarima.
+* One order search: a small AIC grid (``auto_order``) as the stand-in for
+  pmdarima's auto_arima, used when no order is given.
 
 Everything is per-series numpy executed inside ``applyInPandas`` workers —
 the cross-series axis is the parallel one.
@@ -151,7 +154,7 @@ def _kalman_neg_loglik(y: np.ndarray, c: float, phi: np.ndarray, theta: np.ndarr
     This is the objective statsmodels SARMAX maximizes
     (`modeling_utilities.py:38-82` delegates there); CSS differs from it
     only in the treatment of the pre-sample — an O(1/n) effect that the
-    MLE polish in ``fit_arma`` removes. σ² is concentrated out:
+    MLE polish in ``fit_arma_mle`` removes. σ² is concentrated out:
     −ℓ ∝ (n/2)·log σ̂² + ½·Σ log F_t with σ̂² = (1/n)·Σ v_t²/F_t.
     Returns +inf outside the stationary/invertible region (the optimizer's
     feasibility penalty)."""
@@ -311,24 +314,15 @@ def fit_arma_mle(y: np.ndarray, p: int, q: int, intercept: bool = True):
     return unpack(xb)
 
 
-def fit_arma(
-    y: np.ndarray, p: int, q: int, intercept: bool = True, method: str = "css"
-):
+def fit_arma(y: np.ndarray, p: int, q: int, intercept: bool = True):
     """ARMA(p,q) coefficient fit: returns (c, phi[p], theta[q]).
 
-    ``method="css"`` (default): Hannan–Rissanen two-stage least squares,
-    CSS Gauss–Newton-polished when q>0 — closed-form-ish and cheap enough
-    for the grouped-map hot path at 10^12-series scale.
-    ``method="mle"``: exact-likelihood polish on top of that start
-    (``fit_arma_mle`` — Kalman-filter Gaussian likelihood, Nelder–Mead),
-    the statsmodels-SARIMAX estimator class the reference uses
-    (`modeling_utilities.py:38-82`); the CSS↔MLE difference is O(1/n)
-    (pre-sample treatment), so use "mle" for the fit-once-per-sensor
-    offline path and "css" in per-batch kernels."""
-    if method == "mle":
-        return fit_arma_mle(y, p, q, intercept)
-    if method != "css":
-        raise ValueError(f"method must be 'css' or 'mle', got {method!r}")
+    Hannan–Rissanen two-stage least squares, CSS Gauss–Newton-polished
+    when q>0 — closed-form-ish and cheap enough for the grouped-map hot
+    path at 10^12-series scale. ``fit_arma_mle`` polishes this start to
+    the exact likelihood (the statsmodels-SARIMAX estimator class the
+    reference uses, `modeling_utilities.py:38-82`); the CSS↔MLE
+    difference is O(1/n) (pre-sample treatment)."""
     n = len(y)
     k = max(p, q)
     if n <= k + 2 or (p == 0 and q == 0):
@@ -449,44 +443,35 @@ def apply_arima(x: np.ndarray, c: float, phi: np.ndarray, theta: np.ndarray, d: 
     return resid, pred
 
 
-def fit_arima(x: np.ndarray, p: int, d: int, q: int, method: str = "css"):
+def fit_arima(x: np.ndarray, p: int, d: int, q: int):
     """ARIMA(p,d,q) in-sample fit on the original scale.
 
     Returns (residuals, predictions, model) where model = (c, phi, theta, d).
     First max(d,1) predictions are pinned to the observations and their
     residuals to 0, mirroring `modeling_utilities.py:72-73`.
-    ``method="mle"`` fits coefficients by exact Kalman likelihood (the
-    offline once-per-sensor estimator); default "css" is the at-scale path.
     """
     x = np.asarray(x, dtype=float)
     if len(x) == 0:
         return np.zeros(0), np.zeros(0), (0.0, np.zeros(p), np.zeros(q), d)
     y = _diff(x, d)
-    c, phi, theta = fit_arma(y, p, q, intercept=(d == 0), method=method)
+    c, phi, theta = fit_arma(y, p, q, intercept=(d == 0))
     resid, pred = apply_arima(x, c, phi, theta, d)
     return resid, pred, (c, phi, theta, d)
 
 
-def forecast_arima(x: np.ndarray, l: int, order=None, order_search: str = "grid"):
+def forecast_arima(x: np.ndarray, l: int, order=None):
     """Fit on ``x`` and forecast ``l`` steps ahead (future innovations 0).
 
     Engine-side replacement for `arima_correct.arima_forecast`
-    (`arima_correct.py:50-66`). ``order=None`` → automatic order:
-    ``order_search="grid"`` is the exhaustive AIC grid (``auto_order``),
-    ``"stepwise"`` the Hyndman–Khandakar walk pmdarima's default uses
-    (``auto_order_stepwise``).
+    (`arima_correct.py:50-66`). ``order=None`` picks the order by the
+    ``auto_order`` AIC grid.
     """
     x = np.asarray(x, dtype=float)
     if len(x) == 0:
         return np.zeros(l)
     if len(x) < 8:
         return np.full(l, x.mean())
-    if order is not None:
-        p, d, q = order
-    elif order_search == "stepwise":
-        p, d, q = auto_order_stepwise(x)
-    else:
-        p, d, q = auto_order(x)
+    p, d, q = order if order is not None else auto_order(x)
     y = _diff(x, d)
     c, phi, theta = fit_arma(y, p, q, intercept=(d == 0))
     if q == 0:
@@ -542,14 +527,12 @@ def _lag1_corr(x: np.ndarray) -> float:
     return float(np.corrcoef(a, b)[0, 1])
 
 
-def auto_order(x: np.ndarray, max_p: int = 3, max_q: int = 2, method: str = "css"):
+def auto_order(x: np.ndarray, max_p: int = 3, max_q: int = 2):
     """Small deterministic AIC grid — the pmdarima auto_arima stand-in.
 
     d by successive differencing while the series looks integrated
     (lag-1 autocorrelation > 0.95), then (p,q) minimizing
-    n·log(σ̂²) + 2(p+q+1) on conditional residuals. ``method="mle"``
-    scores the grid with exact-likelihood fits (the offline once-per-
-    sensor configuration path; the CSS grid is the at-scale default).
+    n·log(σ̂²) + 2(p+q+1) on conditional residuals.
     """
     x = np.asarray(x, dtype=float)
     d = 0
@@ -565,7 +548,7 @@ def auto_order(x: np.ndarray, max_p: int = 3, max_q: int = 2, method: str = "css
         for q in range(max_q + 1):
             if p == 0 and q == 0 and d == 0:
                 continue
-            c, phi, theta = fit_arma(y, p, q, intercept=(d == 0), method=method)
+            c, phi, theta = fit_arma(y, p, q, intercept=(d == 0))
             _, e = arma_one_step(y, c, phi, theta)
             k = max(p, q)
             with np.errstate(over="ignore", invalid="ignore"):
@@ -576,133 +559,3 @@ def auto_order(x: np.ndarray, max_p: int = 3, max_q: int = 2, method: str = "css
             if aic < best[0]:
                 best = (aic, (p, d, q))
     return best[1]
-
-
-def kpss_stat(y: np.ndarray, lags: int | None = None) -> float:
-    """KPSS level-stationarity statistic (Kwiatkowski–Phillips–Schmidt–Shin
-    1992): η = n⁻²·Σ S_t² / ŝ², with S_t the partial sums of the demeaned
-    series and ŝ² the Bartlett-weighted Newey–West long-run variance.
-    ``lags`` defaults to the R/pmdarima "lshort" rule ⌊3√n/13⌋. Large
-    values (> the 5% critical value 0.463) reject level stationarity."""
-    y = np.asarray(y, dtype=float)
-    n = len(y)
-    if n < 4:
-        return 0.0
-    e = y - y.mean()
-    s = np.cumsum(e)
-    if lags is None:
-        lags = int(3.0 * np.sqrt(n) / 13.0)
-    s2 = float(e @ e) / n
-    for l in range(1, min(lags, n - 1) + 1):
-        s2 += 2.0 * (1.0 - l / (lags + 1.0)) * float(e[l:] @ e[:-l]) / n
-    if s2 <= 0:
-        return 0.0
-    return float(s @ s) / (n * n * s2)
-
-
-def ndiffs_kpss(x: np.ndarray, max_d: int = 2, crit: float = 0.463) -> int:
-    """Number of differences to level stationarity by repeated KPSS tests
-    at the 5% critical value — R forecast's ``ndiffs(test="kpss")``, the
-    d-selection pmdarima's auto_arima uses by default."""
-    y = np.asarray(x, dtype=float)
-    d = 0
-    while d < max_d and len(y) > 4 and kpss_stat(y) > crit:
-        y = np.diff(y)
-        d += 1
-    return d
-
-
-def _aic_of(y, p, q, intercept, method):
-    """AIC of one fitted ARMA candidate under the search's scoring rule.
-
-    method="mle": 2·nll + 2k with the exact concentrated Kalman likelihood
-    (k counts p+q+intercept+σ² — the statsmodels/pmdarima df). method
-    "css": the conditional n·log(σ̂²) + 2k surrogate used by the grid."""
-    n = len(y)
-    k = p + q + (1 if intercept else 0) + 1
-    try:
-        c, phi, theta = fit_arma(y, p, q, intercept=intercept, method=method)
-    except Exception:
-        return np.inf, None
-    if method == "mle":
-        nll = _kalman_neg_loglik(y, c, phi, theta)
-        if not np.isfinite(nll):
-            return np.inf, None
-        return 2.0 * nll + 2.0 * k, (c, phi, theta)
-    _, e = arma_one_step(y, c, phi, theta)
-    m = max(p, q)
-    with np.errstate(over="ignore", invalid="ignore"):
-        sig2 = float(np.mean(e[m:] ** 2)) if n > m else np.inf
-    if not np.isfinite(sig2) or sig2 <= 0:
-        return np.inf, None
-    return n * np.log(sig2) + 2.0 * k, (c, phi, theta)
-
-
-def auto_order_stepwise(
-    x: np.ndarray,
-    max_p: int = 5,
-    max_q: int = 5,
-    max_order: int = 5,
-    max_d: int = 2,
-    method: str = "css",
-    trace: list | None = None,
-):
-    """Hyndman–Khandakar stepwise order search — the algorithm behind
-    pmdarima's ``auto_arima(stepwise=True)`` the reference calls at
-    `modeling_utilities.py:23-35` (§3.2 of Hyndman & Khandakar, JSS 27(3),
-    2008; public spec — implemented from the paper, not from pmdarima).
-
-    d by repeated KPSS tests; then from the four HK starting models
-    {(2,d,2), (0,d,0), (1,d,0), (0,d,1)} walk the (p,q,intercept)
-    neighborhood — p±1, q±1, both together, constant toggled — moving to
-    any AIC improvement until a local minimum. Path-dependent by design
-    (that is the pmdarima semantic the flat grid in ``auto_order``
-    deliberately lacks); every visited candidate is memoized so the walk
-    fits strictly fewer models than the (max_p+1)×(max_q+1) grid.
-    ``trace`` (optional list) collects ((p,q,intercept), aic) per fit.
-    Returns (p, d, q)."""
-    x = np.asarray(x, dtype=float)
-    d = ndiffs_kpss(x, max_d=max_d)
-    y = np.diff(x, n=d) if d else x
-    n = len(y)
-    if n < 8:
-        return (0, d, 0)
-    const_ok = d < 2  # HK: no constant at d=2
-    seen: dict = {}
-
-    def score(p, q, intercept):
-        if p < 0 or q < 0 or p > max_p or q > max_q or p + q > max_order:
-            return np.inf
-        if p == 0 and q == 0 and not intercept:
-            return np.inf  # degenerate: no parameters at all
-        key = (p, q, intercept)
-        if key not in seen:
-            seen[key] = _aic_of(y, p, q, intercept, method)[0]
-            if trace is not None:
-                trace.append((key, seen[key]))
-        return seen[key]
-
-    start = [(2, 2), (0, 0), (1, 0), (0, 1)]
-    best = min(
-        ((score(p, q, const_ok), (p, q, const_ok)) for p, q in start),
-        key=lambda t: t[0],
-    )
-    while True:
-        p, q, ic = best[1]
-        moves = [
-            (p - 1, q, ic), (p + 1, q, ic),
-            (p, q - 1, ic), (p, q + 1, ic),
-            (p - 1, q - 1, ic), (p + 1, q + 1, ic),
-            (p - 1, q + 1, ic), (p + 1, q - 1, ic),
-        ]
-        if const_ok:
-            moves.append((p, q, not ic))
-        cand = min(
-            ((score(pp, qq, ii), (pp, qq, ii)) for pp, qq, ii in moves),
-            key=lambda t: t[0],
-        )
-        if cand[0] < best[0] - 1e-12:
-            best = cand
-        else:
-            break
-    return (best[1][0], d, best[1][1])

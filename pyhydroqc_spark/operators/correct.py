@@ -1,7 +1,7 @@
 """Anomaly correction — forecast/backcast blend per anomalous event.
 
 Clean-room re-implementation of the reference's correction pass
-(`/root/reference/pyhydroqc/arima_correct.py:13-188`): alternate-run
+(`pyhydroqc/arima_correct.py:13-188`): alternate-run
 grouping, conditional widening of too-short valid groups, then an
 iterative shortest-event-first loop that forecasts from the preceding
 valid group, backcasts from the following one, and cross-fades the two.
@@ -9,9 +9,10 @@ valid group, backcasts from the following one, and cross-fades the two.
 The whole loop is inherently sequential *within* a series (group ids are
 renumbered as events are corrected) and embarrassingly parallel *across*
 series — exactly the applyInPandas shape. Forecasts come from the engine's
-own numpy ARIMA (`arima.forecast_arima`); the reference's pmdarima calls
-are swapped for the same function in the parity tests so the loop logic is
-compared like-for-like.
+own numpy ARIMA (`arima.forecast_arima`) at the given order, or at the
+order the ``auto_order`` AIC grid picks when none is given; the
+reference's pmdarima calls are swapped for the same function in the
+parity tests so the loop logic is compared like-for-like.
 
 Deviation from the reference (documented): when a series is entirely
 anomalous the reference prints an error and loops forever
@@ -78,7 +79,6 @@ def correct_series(
     min_group_len: int = MIN_GROUP_LEN,
     model_limit_days: int = MODEL_LIMIT_DAYS,
     order=None,
-    order_search: str = "grid",
 ):
     """Run the correction loop on one series.
 
@@ -123,15 +123,13 @@ def correct_series(
             pv, pt = vals[pm], ts_i8[pm]
             # pre[last-limit : last] label slice = first index ≥ lower bound
             start = int(np.searchsorted(pt, pt[-1] - limit_ns, side="left"))
-            yfor = forecast_arima(pv[start:], glen, order=order, order_search=order_search)
+            yfor = forecast_arima(pv[start:], glen, order=order)
         if i != gmax:
             qm = agrp == (i + 1)
             qv, qt = vals[qm], ts_i8[qm]
             # post[first : first+limit] label slice = last index ≤ upper bound
             end = int(np.searchsorted(qt, qt[0] + limit_ns, side="right"))
-            ybac = np.flip(
-                forecast_arima(np.flip(qv[:end]), glen, order=order, order_search=order_search)
-            )
+            ybac = np.flip(forecast_arima(np.flip(qv[:end]), glen, order=order))
 
         if yfor is None and ybac is None:
             # whole series anomalous — leave as-is, terminate (see module doc)
@@ -165,7 +163,6 @@ def generate_corrections(
     min_group_len: int = MIN_GROUP_LEN,
     model_limit_days: int = MODEL_LIMIT_DAYS,
     arima_order=None,
-    order_search: str = "grid",
 ) -> DataFrame:
     """Distributed correction: one grouped-map UDF per series.
 
@@ -190,7 +187,6 @@ def generate_corrections(
             min_group_len=min_group_len,
             model_limit_days=model_limit_days,
             order=arima_order,
-            order_search=order_search,
         )
         pdf["det_cor"] = det
         pdf["corrected"] = cor

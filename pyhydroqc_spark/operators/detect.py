@@ -28,17 +28,12 @@ def arima_residuals(
     df: DataFrame,
     value_col: str = "observed",
     order=(1, 1, 1),
-    order_by_group: dict | None = None,
     key: str = SERIES_KEY,
     order_col: str = ORDER_COL,
     resid_col: str = "residual",
     pred_col: str = "prediction",
 ) -> DataFrame:
-    """Per-series ARIMA(p,d,q) in-sample residuals + one-step predictions.
-
-    ``order_by_group`` optionally maps doc_id → (p,d,q) (params lookup J5);
-    it is broadcast into the UDF closure.
-    """
+    """Per-series ARIMA(p,d,q) in-sample residuals + one-step predictions."""
     out_schema = StructType(
         list(df.schema.fields)
         + [
@@ -46,13 +41,10 @@ def arima_residuals(
             StructField(pred_col, DoubleType(), True),
         ]
     )
-    sc = df.sparkSession.sparkContext
-    bc_orders = sc.broadcast(order_by_group or {})
-    default_order = tuple(order)
+    o = tuple(order)
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        o = bc_orders.value.get(pdf[key].iloc[0], default_order)
         x = pdf[value_col].to_numpy(dtype=float)
         valid = ~np.isnan(x)
         resid = np.full(len(x), np.nan)

@@ -2,15 +2,18 @@
 
 Engine-added operators (north_star): aggregates of the anomaly-corrected
 series (`det_cor`, the output of the correction pass — semantics anchor
-`/root/reference/pyhydroqc/arima_correct.py:96,151,161,171`).
+`pyhydroqc/arima_correct.py:96,151,161,171`).
 
 Scale design:
-* the 15min tier aggregates the long fact table: ``groupBy(doc_id, bucket)``
-  → partial+final hash aggregation from Catalyst (map-side combine shrinks
-  the shuffle by the bucket fan-in, here 1 row per 1..N points);
-* coarser tiers re-aggregate the next-finer tier (1h from 15min, 1d from
-  1h) — sum/min/max/count compose, avg is recomputed as Σsum/Σcnt; this is
-  a ~96× smaller input than re-scanning facts;
+* the 15min tier aggregates the long fact table (``rollup_points``):
+  ``groupBy(doc_id, bucket)`` → partial+final hash aggregation from
+  Catalyst (map-side combine shrinks the shuffle by the bucket fan-in,
+  here 1 row per 1..N points);
+* coarser tiers re-aggregate the next-finer tier (``rollup_from_rollup``:
+  1h from 15min, 1d from 1h) — sum/min/max/count compose, avg is
+  recomputed as Σsum/Σcnt; this is a ~96× smaller input than re-scanning
+  facts. The optional histogram, OHLC and counter columns compose
+  tier-from-tier too;
 * bucket = epoch-floor, a pure column expression (partition-prunable when
   the table is laid out by bucket day).
 """
@@ -53,7 +56,6 @@ def rollup_points(
     hist: tuple | None = None,
     order_col: str | None = None,
     sum_cols: dict | None = None,
-    distinct_col: str | None = None,
 ) -> DataFrame:
     """Fact rows → one aggregate row per (series, bucket). ``hist=(bins,
     lo, hi)`` rides the composable percentile sketch in the SAME hash
@@ -63,11 +65,7 @@ def rollup_points(
     bins-1)``: out-of-domain values land in the edge bins.
     ``order_col=`` adds OHLC open/close columns (the bucket's first/last
     value in that order); ``sum_cols={in: out}`` rides extra plain sums
-    (e.g. counter increments) in the same aggregation; ``distinct_col=``
-    adds a mergeable HLL distinct-count sketch (``uniq_sketch``, Spark's
-    native DataSketches aggregate) — like the histogram, distinct counts
-    per bucket cannot compose tier-from-tier as scalars, but the sketches
-    union exactly.
+    (e.g. counter increments) in the same aggregation.
 
     The bin counts are one SQL-text ``array(count(...), ...)``
     expression: the driver parses the wide list once instead of paying a
@@ -91,13 +89,6 @@ def rollup_points(
         ]
     for c_in, c_out in (sum_cols or {}).items():
         aggs.append(F.sum(c_in).alias(c_out))
-    if distinct_col is not None:
-        # hll_sketch_agg takes int/long/string/binary only — hash any
-        # type to a stable 64-bit key first (distinct-of-hashes equals
-        # distinct up to collisions far below the sketch's own error)
-        aggs.append(
-            F.hll_sketch_agg(F.xxhash64(distinct_col)).alias("uniq_sketch")
-        )
     if hist is not None:
         n_bins, lo, hi = hist
         v = _ident(value_col)
@@ -136,9 +127,6 @@ def rollup_from_rollup(
     ]
     for c in sum_cols:
         aggs.append(F.sum(c).alias(c))
-    has_uniq = "uniq_sketch" in agg_df.columns
-    if has_uniq:
-        aggs.append(F.hll_union_agg("uniq_sketch").alias("uniq_sketch"))
     has_ohlc = "open_val" in agg_df.columns
     if has_ohlc:
         # the earliest finer bucket's open / latest finer bucket's close —
@@ -164,8 +152,6 @@ def rollup_from_rollup(
         cols += ["open_val", "close_val"]
     if has_hist:
         cols.append("hist")
-    if has_uniq:
-        cols.append("uniq_sketch")
     src = agg_df
     if has_ohlc:
         src = src.withColumn("__fine_b", F.col("bucket_start"))
@@ -177,25 +163,6 @@ def rollup_from_rollup(
         .select(*cols)
         .withColumn("tier", F.lit(int(tier_seconds)))
     )
-
-
-def rollup_all_tiers(
-    df: DataFrame,
-    tiers=DEFAULT_TIERS,
-    value_col: str = "det_cor",
-    ts_col: str = "ts",
-    key: str = "doc_id",
-) -> dict[int, DataFrame]:
-    """All tiers, each coarser one derived tier-from-tier."""
-    tiers = sorted(tiers)
-    out: dict[int, DataFrame] = {}
-    finest = rollup_points(df, tiers[0], value_col, ts_col, key)
-    out[tiers[0]] = finest
-    prev = finest
-    for t in tiers[1:]:
-        prev = rollup_from_rollup(prev.drop("tier"), t, key)
-        out[t] = prev
-    return out
 
 
 # -- gap-fill (the TimescaleDB time_bucket_gapfill / locf / interpolate
@@ -239,8 +206,8 @@ def gapfill(
         fill = dict(fill)
     else:
         # default: counts/sums zero-fill, numeric stats interpolate;
-        # non-numeric columns (hist array, uniq_sketch binary) densify
-        # only — interpolation arithmetic over them fails plan analysis
+        # non-numeric columns (the hist array) densify only —
+        # interpolation arithmetic over them fails plan analysis
         from pyspark.sql.types import NumericType
 
         types = {f.name: f.dataType for f in agg_df.schema.fields}
@@ -405,9 +372,3 @@ def with_counter_increments(
     prev = F.lag(value_col).over(w)
     v = F.col(value_col)
     return df.withColumn(out_col, counter_increment_expr(v, prev, reset_aware))
-
-
-def uniq_estimate(agg_df: DataFrame, out_col: str = "uniq_est") -> DataFrame:
-    """Read-side distinct-count estimate from the ``uniq_sketch`` column
-    (±~1.6% at the default lgK=12; 2-4 KB of state per bucket)."""
-    return agg_df.withColumn(out_col, F.hll_sketch_estimate("uniq_sketch"))

@@ -1,16 +1,16 @@
-"""Windowed-regression detection workflows — the engine's stand-in for the
+"""Windowed-regression residuals — the engine's stand-in for the
 reference's LSTM detectors (surface parity, documented semantic deviation).
 
 The reference trains keras LSTMs over sliding windows and flags large
-one-step residuals (`/root/reference/pyhydroqc/modeling_utilities.py:125-536`,
-workflows `model_workflow.py:97-189` univar / `:192-317` multivar). Keras/
-tensorflow are absent from this runtime, so the engine keeps the WORKFLOW —
-window the series with ``time_steps``, train a per-series predictor on the
-windows, score residuals, dynamic-threshold them, OR with rules flags,
-widen+enumerate events — and swaps the model for a deterministic ridge
-linear autoregressor fit by normal equations in numpy (per-series, inside
-one grouped-map Arrow UDF; the series axis is the parallel one, identical
-physical shape to the ARIMA path).
+one-step residuals (`pyhydroqc/modeling_utilities.py:125-536`, workflows
+`model_workflow.py:97-189` univar / `:192-317` multivar). Keras/tensorflow
+are absent from this runtime, so the engine keeps the windowing — one-step
+predictions from ``time_steps`` neighbours — and swaps the model for one
+deterministic ridge linear autoregressor fit by normal equations in numpy
+(per series, inside one grouped-map Arrow UDF; the series axis is the
+parallel one, the same physical shape as the ARIMA path). The residuals
+feed the same chain the ARIMA residuals do: ``threshold.dynamic_threshold``
+then ``threshold.detect_threshold_anomalies``.
 
 Window conventions mirror the reference exactly:
 
@@ -30,251 +30,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from .events import ORDER_COL, SERIES_KEY, anomaly_events
-from .rules import interpolate, persistence, range_check
-from .threshold import detect_threshold_anomalies, dynamic_threshold
-
-
-def _mlp_predict(X: np.ndarray, t: np.ndarray, seed: int = 7,
-                 hidden: int = 16, epochs: int = 300, lr: float = 0.01,
-                 l2: float = 1e-4) -> np.ndarray:
-    """Deterministic one-hidden-layer tanh MLP (full-batch Adam, pinned
-    seed/epochs/lr) — the nonlinear head option standing in for the
-    reference's LSTM (`modeling_utilities.py:125-351`): same train-on-
-    windows / predict-one-step surface, learnable nonlinearity, exactly
-    reproducible. Inputs and target are standardized on the training
-    region (the reference scales with MinMaxScaler before its LSTM,
-    `modeling_utilities.py:154-160`); returns predictions on the ORIGINAL
-    scale."""
-    mu, sd = X.mean(axis=0), X.std(axis=0)
-    sd = np.where(sd > 1e-12, sd, 1.0)
-    Xs = (X - mu) / sd
-    tmu, tsd = t.mean(), t.std()
-    tsd = tsd if tsd > 1e-12 else 1.0
-    ts_ = (t - tmu) / tsd
-
-    rng = np.random.default_rng(seed)
-    d = Xs.shape[1]
-    W1 = rng.normal(0, 1.0 / np.sqrt(d), (d, hidden))
-    b1 = np.zeros(hidden)
-    W2 = rng.normal(0, 1.0 / np.sqrt(hidden), hidden)
-    b2 = 0.0
-    mom = [np.zeros_like(W1), np.zeros_like(b1), np.zeros_like(W2), 0.0]
-    vel = [np.zeros_like(W1), np.zeros_like(b1), np.zeros_like(W2), 0.0]
-    beta1, beta2, eps = 0.9, 0.999, 1e-8
-    n = len(ts_)
-    for ep in range(1, epochs + 1):
-        H = np.tanh(Xs @ W1 + b1)
-        out = H @ W2 + b2
-        err = out - ts_
-        # grads (MSE/2 + L2)
-        gW2 = H.T @ err / n + l2 * W2
-        gb2 = err.mean()
-        dH = np.outer(err, W2) * (1.0 - H * H)
-        gW1 = Xs.T @ dH / n + l2 * W1
-        gb1 = dH.mean(axis=0)
-        for i, g in enumerate((gW1, gb1, gW2, gb2)):
-            mom[i] = beta1 * mom[i] + (1 - beta1) * g
-            vel[i] = beta2 * vel[i] + (1 - beta2) * (g * g if i == 3 else g**2)
-            mhat = mom[i] / (1 - beta1**ep)
-            vhat = vel[i] / (1 - beta2**ep)
-            upd = lr * mhat / (np.sqrt(vhat) + eps)
-            if i == 0:
-                W1 -= upd
-            elif i == 1:
-                b1 -= upd
-            elif i == 2:
-                W2 -= upd
-            else:
-                b2 -= upd
-    H = np.tanh(Xs @ W1 + b1)
-    return (H @ W2 + b2) * tsd + tmu
-
-
-def _sigmoid(a: np.ndarray) -> np.ndarray:
-    return 1.0 / (1.0 + np.exp(-a))
-
-
-def _gru_predict(x: np.ndarray, hidden: int = 8, epochs: int = 60,
-                 lr: float = 0.02, seed: int = 7, clip: float = 5.0) -> np.ndarray:
-    """Deterministic scalar-input GRU trained by full-series BPTT — the
-    RECURRENT head (reference: keras LSTM, `modeling_utilities.py:125-351`).
-    Unlike the ridge/MLP heads, which see only the fixed ``time_steps``
-    window, the GRU's hidden state is carried across the WHOLE series:
-    h_t = GRU(h_{t-1}, x_t), pred(x_{t+1}) = w·h_t + b — sequence memory
-    with no lag horizon, the one model family the windowed heads cannot
-    emulate (e.g. a drifting level whose optimal estimate is an EMA over
-    unboundedly many past points). Pinned seed, fixed epochs, full-batch
-    Adam with global-norm clipping: bit-reproducible. Input standardized;
-    returns predictions on the original scale (pred[0] undefined)."""
-    mu, sd = x.mean(), x.std()
-    sd = sd if sd > 1e-12 else 1.0
-    xs = (x - mu) / sd
-    n = len(xs)
-    rng = np.random.default_rng(seed)
-    H = hidden
-    Wz, Wr, Wh = (rng.normal(0, 0.5, H) for _ in range(3))
-    Uz, Ur, Uh = (rng.normal(0, 1.0 / np.sqrt(H), (H, H)) for _ in range(3))
-    # update-gate bias < 0 starts the cell as a slow integrator (the
-    # long-memory regime we want reachable); others at zero
-    bz, br, bh = np.full(H, -1.0), np.zeros(H), np.zeros(H)
-    w = rng.normal(0, 1.0 / np.sqrt(H), H)
-    b = 0.0
-    params = [Wz, Wr, Wh, Uz, Ur, Uh, bz, br, bh, w]
-    mom = [np.zeros_like(p) for p in params] + [0.0]
-    vel = [np.zeros_like(p) for p in params] + [0.0]
-    b1, b2, eps = 0.9, 0.999, 1e-8
-
-    for ep in range(1, epochs + 1):
-        Wz, Wr, Wh, Uz, Ur, Uh, bz, br, bh, w = params
-        zs = np.zeros((n - 1, H)); rs = np.zeros((n - 1, H))
-        hhs = np.zeros((n - 1, H)); hps = np.zeros((n - 1, H))
-        hcur = np.zeros((n - 1, H))
-        h = np.zeros(H)
-        for t in range(n - 1):
-            z = _sigmoid(Wz * xs[t] + Uz @ h + bz)
-            r = _sigmoid(Wr * xs[t] + Ur @ h + br)
-            hh = np.tanh(Wh * xs[t] + Uh @ (r * h) + bh)
-            zs[t], rs[t], hhs[t], hps[t] = z, r, hh, h
-            h = (1 - z) * h + z * hh
-            hcur[t] = h
-        err = hcur @ w + b - xs[1:]
-        loss_n = n - 1
-        gw = hcur.T @ err / loss_n
-        gb = err.mean()
-        gWz = np.zeros(H); gWr = np.zeros(H); gWh = np.zeros(H)
-        gUz = np.zeros((H, H)); gUr = np.zeros((H, H)); gUh = np.zeros((H, H))
-        gbz = np.zeros(H); gbr = np.zeros(H); gbh = np.zeros(H)
-        dh_next = np.zeros(H)
-        for t in range(n - 2, -1, -1):
-            dh = w * err[t] / loss_n + dh_next
-            z, r, hh, hp = zs[t], rs[t], hhs[t], hps[t]
-            dz = dh * (hh - hp); da_z = dz * z * (1 - z)
-            dhh = dh * z; da_h = dhh * (1 - hh * hh)
-            tmp = Uh.T @ da_h
-            dr = tmp * hp; da_r = dr * r * (1 - r)
-            dh_next = dh * (1 - z) + tmp * r + Uz.T @ da_z + Ur.T @ da_r
-            gWz += da_z * xs[t]; gWr += da_r * xs[t]; gWh += da_h * xs[t]
-            gUz += np.outer(da_z, hp); gUr += np.outer(da_r, hp)
-            gUh += np.outer(da_h, r * hp)
-            gbz += da_z; gbr += da_r; gbh += da_h
-        grads = [gWz, gWr, gWh, gUz, gUr, gUh, gbz, gbr, gbh, gw, gb]
-        gn = np.sqrt(sum(float(np.sum(g * g)) for g in grads))
-        if gn > clip:
-            grads = [g * (clip / gn) for g in grads]
-        for i, g in enumerate(grads):
-            mom[i] = b1 * mom[i] + (1 - b1) * g
-            vel[i] = b2 * vel[i] + (1 - b2) * (g * g)
-            mh = mom[i] / (1 - b1 ** ep)
-            vh = vel[i] / (1 - b2 ** ep)
-            upd = lr * mh / (np.sqrt(vh) + eps)
-            if i < 10:
-                params[i] = params[i] - upd
-            else:
-                b = b - upd
-
-    Wz, Wr, Wh, Uz, Ur, Uh, bz, br, bh, w = params
-    pred = np.full(n, np.nan)
-    h = np.zeros(H)
-    for t in range(n - 1):
-        z = _sigmoid(Wz * xs[t] + Uz @ h + bz)
-        r = _sigmoid(Wr * xs[t] + Ur @ h + br)
-        hh = np.tanh(Wh * xs[t] + Uh @ (r * h) + bh)
-        h = (1 - z) * h + z * hh
-        pred[t + 1] = (w @ h + b) * sd + mu
-    return pred
-
-
-def _gru_predict_multi(X: np.ndarray, hidden: int = 8, epochs: int = 60,
-                       lr: float = 0.02, seed: int = 7,
-                       clip: float = 5.0) -> np.ndarray:
-    """Vector-input, n-output GRU — the recurrent analogue of the
-    reference's MULTIVARIATE LSTM (`modeling_utilities.py:354-536`): one
-    shared hidden state reads all of a site's sensors each step,
-    h_t = GRU(h_{t-1}, x_t ∈ R^D), and a linear readout predicts every
-    sensor's next value, x̂_{t+1} = W_o h_t + b_o ∈ R^D. Same training
-    recipe as the scalar head (pinned seed, full-series BPTT, clipped
-    full-batch Adam, slow-integrator update-gate bias): bit-reproducible.
-    Input (n, D) standardized per column; returns (n, D) predictions on
-    the original scale, row 0 undefined."""
-    n, D = X.shape
-    mu, sd = X.mean(axis=0), X.std(axis=0)
-    sd = np.where(sd > 1e-12, sd, 1.0)
-    xs = (X - mu) / sd
-    rng = np.random.default_rng(seed)
-    H = hidden
-    Wz, Wr, Wh = (rng.normal(0, 0.5, (H, D)) for _ in range(3))
-    Uz, Ur, Uh = (rng.normal(0, 1.0 / np.sqrt(H), (H, H)) for _ in range(3))
-    bz, br, bh = np.full(H, -1.0), np.zeros(H), np.zeros(H)
-    Wo = rng.normal(0, 1.0 / np.sqrt(H), (D, H))
-    bo = np.zeros(D)
-    params = [Wz, Wr, Wh, Uz, Ur, Uh, bz, br, bh, Wo, bo]
-    mom = [np.zeros_like(p) for p in params]
-    vel = [np.zeros_like(p) for p in params]
-    b1, b2, eps = 0.9, 0.999, 1e-8
-
-    for ep in range(1, epochs + 1):
-        Wz, Wr, Wh, Uz, Ur, Uh, bz, br, bh, Wo, bo = params
-        zs = np.zeros((n - 1, H)); rs = np.zeros((n - 1, H))
-        hhs = np.zeros((n - 1, H)); hps = np.zeros((n - 1, H))
-        hcur = np.zeros((n - 1, H))
-        h = np.zeros(H)
-        for t in range(n - 1):
-            z = _sigmoid(Wz @ xs[t] + Uz @ h + bz)
-            r = _sigmoid(Wr @ xs[t] + Ur @ h + br)
-            hh = np.tanh(Wh @ xs[t] + Uh @ (r * h) + bh)
-            zs[t], rs[t], hhs[t], hps[t] = z, r, hh, h
-            h = (1 - z) * h + z * hh
-            hcur[t] = h
-        err = hcur @ Wo.T + bo - xs[1:]  # (n-1, D)
-        loss_n = (n - 1) * D
-        gWo = err.T @ hcur / loss_n
-        gbo = err.sum(axis=0) / loss_n
-        gWz = np.zeros((H, D)); gWr = np.zeros((H, D)); gWh = np.zeros((H, D))
-        gUz = np.zeros((H, H)); gUr = np.zeros((H, H)); gUh = np.zeros((H, H))
-        gbz = np.zeros(H); gbr = np.zeros(H); gbh = np.zeros(H)
-        dh_next = np.zeros(H)
-        for t in range(n - 2, -1, -1):
-            dh = Wo.T @ err[t] / loss_n + dh_next
-            z, r, hh, hp = zs[t], rs[t], hhs[t], hps[t]
-            dz = dh * (hh - hp); da_z = dz * z * (1 - z)
-            dhh = dh * z; da_h = dhh * (1 - hh * hh)
-            tmp = Uh.T @ da_h
-            dr = tmp * hp; da_r = dr * r * (1 - r)
-            dh_next = dh * (1 - z) + tmp * r + Uz.T @ da_z + Ur.T @ da_r
-            gWz += np.outer(da_z, xs[t]); gWr += np.outer(da_r, xs[t])
-            gWh += np.outer(da_h, xs[t])
-            gUz += np.outer(da_z, hp); gUr += np.outer(da_r, hp)
-            gUh += np.outer(da_h, r * hp)
-            gbz += da_z; gbr += da_r; gbh += da_h
-        grads = [gWz, gWr, gWh, gUz, gUr, gUh, gbz, gbr, gbh, gWo, gbo]
-        gn = np.sqrt(sum(float(np.sum(g * g)) for g in grads))
-        if gn > clip:
-            grads = [g * (clip / gn) for g in grads]
-        for i, g in enumerate(grads):
-            mom[i] = b1 * mom[i] + (1 - b1) * g
-            vel[i] = b2 * vel[i] + (1 - b2) * (g * g)
-            mh = mom[i] / (1 - b1 ** ep)
-            vh = vel[i] / (1 - b2 ** ep)
-            params[i] = params[i] - lr * mh / (np.sqrt(vh) + eps)
-
-    Wz, Wr, Wh, Uz, Ur, Uh, bz, br, bh, Wo, bo = params
-    pred = np.full((n, D), np.nan)
-    h = np.zeros(H)
-    for t in range(n - 1):
-        z = _sigmoid(Wz @ xs[t] + Uz @ h + bz)
-        r = _sigmoid(Wr @ xs[t] + Ur @ h + br)
-        hh = np.tanh(Wh @ xs[t] + Uh @ (r * h) + bh)
-        h = (1 - z) * h + z * hh
-        pred[t + 1] = (Wo @ h + bo) * sd + mu
-    return pred
+from .events import ORDER_COL, SERIES_KEY
 
 
 def _fit_predict(x: np.ndarray, time_steps: int, mode: str, ridge: float,
-                 intercept: bool, head: str = "ridge", seed: int = 7) -> np.ndarray:
+                 intercept: bool) -> np.ndarray:
     """One series → one-step predictions (NaN on the undefined edges)."""
     n = len(x)
     ts = time_steps
@@ -290,33 +53,6 @@ def _fit_predict(x: np.ndarray, time_steps: int, mode: str, ridge: float,
         cols += [x[lo + j + 1 : hi + j + 1] for j in range(ts)]  # x_{t+1}..x_{t+ts}
     X = np.column_stack(cols)
     t = x[lo:hi]
-    if head == "gru":
-        # the recurrent head consumes the SERIES, not the windows: full
-        # memory, but keep the same undefined edges as the windowed heads
-        # so downstream alignment is head-agnostic
-        full = _gru_predict(x, seed=seed)
-        if mode == "bidir":
-            # reference bidir = keras Bidirectional(LSTM) + Dense
-            # (`modeling_utilities.py:282-351`): a backward pass sees the
-            # future. Same shape here: a second GRU on the reversed
-            # series, then the Dense analog — a least-squares combine of
-            # (1, forward, backward) fitted on the valid range.
-            # Deterministic: both passes share the pinned seed.
-            back = _gru_predict(x[::-1], seed=seed)[::-1]
-            M = np.column_stack(
-                [np.ones(hi - lo), full[lo:hi], back[lo:hi]]
-            )
-            if np.isfinite(M).all():
-                beta = np.linalg.lstsq(M, x[lo:hi], rcond=None)[0]
-                pred[lo:hi] = M @ beta
-                return pred
-        pred[lo:hi] = full[lo:hi]
-        return pred
-    if head == "mlp":
-        pred[lo:hi] = _mlp_predict(X, t, seed=seed)
-        return pred
-    if head != "ridge":
-        raise ValueError(f"head must be 'ridge', 'mlp' or 'gru', got {head!r}")
     if intercept:
         X = np.column_stack([np.ones(len(X)), X])
     XtX = X.T @ X + ridge * np.eye(X.shape[1])
@@ -335,8 +71,6 @@ def windowed_regression_residuals(
     mode: str = "vanilla",
     ridge: float = 1e-3,
     intercept: bool = True,
-    head: str = "ridge",
-    seed: int = 7,
     key: str = SERIES_KEY,
     order_col: str = ORDER_COL,
     resid_col: str = "residual",
@@ -366,69 +100,12 @@ def windowed_regression_residuals(
                 valid, x,
                 np.interp(np.arange(len(x)), np.flatnonzero(valid), x[valid]),
             )
-        pred = _fit_predict(x, time_steps, mode, ridge, intercept, head, seed)
+        pred = _fit_predict(x, time_steps, mode, ridge, intercept)
         pdf[pred_col] = pred
         pdf[resid_col] = pdf[value_col].to_numpy(dtype=float) - pred
         return pdf
 
     return df.groupBy(key).applyInPandas(kernel, schema=out_schema)
-
-
-def regression_detect_univar(
-    df: DataFrame,
-    params=None,
-    time_steps: int = 10,
-    mode: str = "vanilla",
-    rules: bool = True,
-    value_col: str = "value",
-    head: str = "ridge",
-    key: str = SERIES_KEY,
-    order_col: str = ORDER_COL,
-) -> DataFrame:
-    """Univariate detection workflow (`model_workflow.py:97-189` shape):
-
-    1. (rules) range_check + persistence + interpolate → observed
-    2. per-series windowed regression residuals (LSTM stand-in)
-    3. dynamic threshold over the modeled region's residuals
-    4. residual-vs-threshold anomalies, OR'd with rules anomalies
-    5. widen + enumerate → detected_event
-
-    Edge rows (no prediction) carry detected_anomaly = false, like the
-    reference's trimmed frame never scoring them."""
-    from ..params import DEFAULT_PARAMS
-
-    p = params or DEFAULT_PARAMS
-    out = df
-    if rules:
-        out = range_check(out, p.max_range, p.min_range, value_col)
-        out = persistence(out, p.persist, value_col)
-        out = interpolate(out, 10000, value_col)
-    else:
-        out = out.withColumn("anomaly", F.lit(False)).withColumn(
-            "observed", F.col(value_col)
-        )
-    out = windowed_regression_residuals(
-        out, "observed", time_steps=time_steps, mode=mode, head=head,
-        key=key, order_col=order_col,
-    )
-    out = dynamic_threshold(
-        out,
-        "residual",
-        window_sz=p.window_sz,
-        alpha=p.alpha,
-        min_range=p.threshold_min,
-        key=key,
-        order=order_col,
-    )
-    out = detect_threshold_anomalies(out)
-    out = out.withColumn(
-        "detected_anomaly",
-        F.coalesce(F.col("detected_anomaly") & F.col("residual").isNotNull(), F.lit(False)),
-    )
-    out = out.withColumn("all_anomalies", F.col("detected_anomaly") | F.col("anomaly"))
-    return anomaly_events(
-        out, "all_anomalies", wf=p.widen, out_col="detected_event", key=key, order=order_col
-    )
 
 
 def multivar_regression_residuals(
@@ -441,22 +118,15 @@ def multivar_regression_residuals(
     site_col: str = "source",
     sensor_col: str = "sensor",
     order_col: str = ORDER_COL,
-    head: str = "ridge",
-    seed: int = 7,
 ) -> DataFrame:
     """Per-site multivariate windowed residuals: all of a site's sensors
     feed one feature block; each sensor gets its own regression head over
     that block (the linear analogue of the reference's n-output LSTM,
-    `modeling_utilities.py:354-536`). ``head="gru"`` swaps the windowed
-    ridge for the shared-state recurrent model (``_gru_predict_multi``):
-    one GRU reads all sensors each step and predicts all of them — the
-    actual n-output sequence-model family of the reference; with
-    ``mode="bidir"`` a reversed pass is combined per sensor by least
-    squares (the Dense-merge analog). Input: long rows keyed by
+    `modeling_utilities.py:354-536`). Input: long rows keyed by
     (site, sensor, pos); the site is the grouping axis — one grouped-map
     Arrow UDF per site, sensors pivoted wide inside the kernel."""
-    if head not in ("ridge", "gru"):
-        raise ValueError(f"head must be 'ridge' or 'gru', got {head!r}")
+    if mode not in ("vanilla", "bidir"):
+        raise ValueError(f"mode must be vanilla|bidir, got {mode!r}")
     out_schema = StructType(
         list(df.schema.fields)
         + [
@@ -486,25 +156,7 @@ def multivar_regression_residuals(
         # all-missing sensors survive interpolation as all-NaN: exclude
         # them from the feature block and leave their predictions NaN
         finite = [j for j in range(M.shape[1]) if np.isfinite(M[:, j]).all()]
-        if head == "gru":
-            if finite and hi - lo >= ts + 2:
-                Mf = M[:, finite]
-                P = _gru_predict_multi(Mf, seed=seed)
-                if mode == "bidir":
-                    Pb = _gru_predict_multi(Mf[::-1], seed=seed)[::-1]
-                    for k, sj in enumerate(finite):
-                        Mk = np.column_stack(
-                            [np.ones(hi - lo), P[lo:hi, k], Pb[lo:hi, k]]
-                        )
-                        if np.isfinite(Mk).all():
-                            beta = np.linalg.lstsq(Mk, Mf[lo:hi, k], rcond=None)[0]
-                            preds[sensors[sj]][lo:hi] = Mk @ beta
-                        else:
-                            preds[sensors[sj]][lo:hi] = P[lo:hi, k]
-                else:
-                    for k, sj in enumerate(finite):
-                        preds[sensors[sj]][lo:hi] = P[lo:hi, k]
-        elif finite and hi - lo >= ts * len(finite) + 2:
+        if finite and hi - lo >= ts * len(finite) + 2:
             Mf = M[:, finite]
             blocks = [Mf[lo - j - 1 : hi - j - 1, :] for j in range(ts)]
             if mode == "bidir":
@@ -529,63 +181,3 @@ def multivar_regression_residuals(
         return pdf
 
     return df.groupBy(site_col).applyInPandas(kernel, schema=out_schema)
-
-
-def regression_detect_multivar(
-    df: DataFrame,
-    params=None,
-    time_steps: int = 10,
-    mode: str = "vanilla",
-    rules: bool = True,
-    value_col: str = "value",
-    site_col: str = "source",
-    sensor_col: str = "sensor",
-    key: str = SERIES_KEY,
-    order_col: str = ORDER_COL,
-    head: str = "ridge",
-) -> DataFrame:
-    """Multivariate workflow (`model_workflow.py:192-317` shape): rules QC,
-    then ``multivar_regression_residuals``, then the shared threshold/
-    event chain. ``head`` selects ridge or the shared-state recurrent
-    model (see ``multivar_regression_residuals``)."""
-    from ..params import DEFAULT_PARAMS
-
-    p = params or DEFAULT_PARAMS
-    out = df
-    if rules:
-        out = range_check(out, p.max_range, p.min_range, value_col)
-        out = persistence(out, p.persist, value_col)
-        out = interpolate(out, 10000, value_col)
-    else:
-        out = out.withColumn("anomaly", F.lit(False)).withColumn(
-            "observed", F.col(value_col)
-        )
-
-    out = multivar_regression_residuals(
-        out,
-        "observed",
-        time_steps=time_steps,
-        mode=mode,
-        site_col=site_col,
-        sensor_col=sensor_col,
-        order_col=order_col,
-        head=head,
-    )
-    out = dynamic_threshold(
-        out,
-        "residual",
-        window_sz=p.window_sz,
-        alpha=p.alpha,
-        min_range=p.threshold_min,
-        key=key,
-        order=order_col,
-    )
-    out = detect_threshold_anomalies(out)
-    out = out.withColumn(
-        "detected_anomaly",
-        F.coalesce(F.col("detected_anomaly") & F.col("residual").isNotNull(), F.lit(False)),
-    )
-    out = out.withColumn("all_anomalies", F.col("detected_anomaly") | F.col("anomaly"))
-    return anomaly_events(
-        out, "all_anomalies", wf=p.widen, out_col="detected_event", key=key, order=order_col
-    )

@@ -1,8 +1,8 @@
 """Small numeric helpers (no scipy in the runtime image).
 
-``norm_ppf`` replaces ``scipy.stats.norm.ppf`` used by the reference at
-`/root/reference/pyhydroqc/anomaly_utilities.py:394`; stdlib ``NormalDist``
-is exact to double precision.
+``z_for_alpha`` replaces the ``scipy.stats.norm.ppf`` call of the
+reference's dynamic threshold (`pyhydroqc/anomaly_utilities.py:394`);
+stdlib ``NormalDist`` is exact to double precision.
 """
 
 from __future__ import annotations
@@ -10,10 +10,6 @@ from __future__ import annotations
 from statistics import NormalDist
 
 _ND = NormalDist()
-
-
-def norm_ppf(q: float) -> float:
-    return _ND.inv_cdf(q)
 
 
 def z_for_alpha(alpha: float) -> float:

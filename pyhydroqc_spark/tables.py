@@ -23,6 +23,10 @@ Layout::
 once, partitioned by their target table, then one atomic commit per table
 (the fused_cells pipeline's tier families and the streaming tier merge).
 
+Table maintenance is metadata-only: ``rewrite_manifests`` and
+``expire_snapshots``. Data files are never compacted; each commit writes
+one Spark job's files.
+
 Swapping this for real Iceberg is a one-module change: the pipeline only
 uses append / read / added_files / overwrite_partition / drop_partitions /
 commit_tables.
@@ -421,57 +425,3 @@ def commit_tables(
         return out
     finally:
         shutil.rmtree(stage, ignore_errors=True)
-
-
-def rewrite_data_files(
-    table: SnapshotTable,
-    spark: SparkSession,
-    target_mb: int = 128,
-    partitions: set | None = None,
-) -> dict:
-    """Small-file compaction — the Iceberg ``rewrite_data_files`` half of
-    table maintenance (``rewrite_manifests`` is the metadata half).
-    Streaming ingest and per-batch overwrites accumulate many small
-    parquet files per partition; at scan time each file is an open cost
-    and a scheduling unit, so a long-lived store slowly turns its reads
-    into small-file storms. This rewrites every partition whose MEAN live
-    file size is under ``target_mb`` into ceil(bytes/target) files, one
-    atomic snapshot per partition (readers pinned to older snapshots are
-    untouched; ``expire_snapshots`` reclaims the replaced files later).
-
-    Only partitions failing the size test are read or written — the
-    check is pure file metadata, no Spark job for healthy partitions.
-    Returns {partition: (files_before, files_after)}.
-
-    Concurrency: optimistic per-partition validation (the Iceberg commit
-    model) — immediately before each partition's overwrite commit, the
-    CURRENT snapshot's file set for that partition is re-read and must
-    still equal the planning-time set; a concurrent append/overwrite to
-    the same partition aborts THAT partition's rewrite (reported as
-    (files_before, -1), retried on the next maintenance run) instead of
-    silently dropping the newly committed rows. The residual window
-    between the re-check and the commit is single-writer territory:
-    like Iceberg, concurrent writers to one table need an external
-    commit lock for full serializability."""
-    sid = table.current_snapshot_id()
-    by_part: dict = {}
-    for fp, p in table._load(sid)["files"].items():
-        if p is None or (partitions is not None and p not in partitions):
-            continue
-        by_part.setdefault(p, []).append(fp)
-    out = {}
-    for p, fps in sorted(by_part.items()):
-        total = sum(os.path.getsize(fp) for fp in fps)
-        if len(fps) <= 1 or total / len(fps) >= target_mb * 1024 * 1024:
-            continue
-        n_out = max(1, -(-total // (target_mb * 1024 * 1024)))
-        df = spark.read.parquet(*fps).coalesce(int(n_out))
-        # optimistic validation right before the commit: abort this
-        # partition if its live file set changed since planning
-        current = set(table.files_for_partitions({p}))
-        if current != set(fps):
-            out[p] = (len(fps), -1)
-            continue
-        table.overwrite_partition(df, p)
-        out[p] = (len(fps), len(table.files_for_partitions({p})))
-    return out

@@ -38,6 +38,9 @@ Physical shape per batch — the store is NEVER shuffled:
    never depend on the failed attempt's partial state — uncommitted
    snapshots are invisible).
 
+The caller drives the batches: one ``incremental_dedup`` call per landed
+partition, in id order. There is no streaming (foreachBatch) driver.
+
 Reference: the pyhydroqc pipeline has no dedup analogue; this extends
 the engine's training-data stack (SURVEY §2 engine-added operators) the
 same way streaming_rollup extends the batch rollups.
@@ -126,9 +129,9 @@ def _decide(
             old_b.withColumnRenamed("id", "id_a")
             .join(probe.withColumnRenamed("id", "id_b"), ["band", "bucket"])
             # id_a < id_b is a no-op in a consistent store (everything
-            # stored is smaller by the id-order contract) but shields the
-            # streaming partial-commit window, where a replayed batch can
-            # see its own bucket rows from an interrupted attempt
+            # stored is smaller by the id-order contract) but shields a
+            # replay after an interrupted commit, where the batch can see
+            # its own bucket rows from the failed attempt
             .where(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b")
             .distinct()
@@ -216,9 +219,9 @@ def incremental_dedup(
     )
     if update_store and bounds["n"] > 0:
         tag = f"ids_le_{bounds['hi']}"
-        # buckets FIRST, sigs (carrying the max_id high-water mark) LAST —
-        # dedup_stream's commit order. The reverse order could crash after
-        # the sigs append: max_id already advanced but the batch's bucket
+        # buckets FIRST, sigs (carrying the max_id high-water mark) LAST.
+        # The reverse order could crash after the sigs append: max_id
+        # already advanced but the batch's bucket
         # rows gone forever, so later batches would silently miss
         # duplicates against this one AND the id-order contract blocks a
         # replay. With sigs last, an interrupted commit leaves only
@@ -230,81 +233,3 @@ def incremental_dedup(
         )
     sig_new.unpersist()
     return decisions
-
-
-def dedup_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    store: DedupStore | None = None,
-    doc_schema: str = "doc_id long, text string",
-    **dedup_kwargs,
-) -> None:
-    """Structured-streaming incremental dedup: drain landing document
-    files (``Trigger.AvailableNow`` — the scheduled-job shape), decide
-    each micro-batch against the store, write decisions to a
-    ``decisions`` SnapshotTable under ``out_dir``.
-
-    Replay safety under foreachBatch's at-least-once delivery, without
-    tripping the id-order contract:
-
-    * a FULLY committed batch is recognized by ``stream_batch_id`` on the
-      signature store (the LAST write of the commit sequence) and skipped
-      outright;
-    * a PARTIALLY committed batch (crash mid-sequence) re-runs and every
-      write is an ``overwrite_partition`` keyed on the batch id, so the
-      interrupted attempt's files are replaced, never duplicated. Its
-      decisions are identical on replay because the signature table —
-      the only store input the verification reads — only commits at the
-      end, and the candidate join drops ids the signature table does not
-      know (plus the ``id_a < id_b`` guard against the batch's own
-      orphaned bucket rows).
-
-    The store and the stream checkpoint are scoped together (same rule as
-    run_streaming_rollup): wipe both or neither."""
-    import os
-
-    dec_table = SnapshotTable(os.path.join(out_dir, "decisions"))
-    if store is None:
-        store = DedupStore(os.path.join(out_dir, "store"))
-    ckpt = os.path.join(out_dir, "_stream_checkpoint")
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        last = store.sigs.latest_extra_value("stream_batch_id")
-        if last is not None and int(batch_id) <= int(last):
-            return  # committed batch replayed
-        decisions, sig_new, b_new, bounds = _decide(
-            batch_df,
-            store,
-            dedup_kwargs.get("threshold", 0.5),
-            dedup_kwargs.get("num_perm", 32),
-            dedup_kwargs.get("bands", 8),
-            dedup_kwargs.get("shingle_k", 5),
-            dedup_kwargs.get("hash_fn", "xxhash64"),
-            dedup_kwargs.get("id_col", "doc_id"),
-            dedup_kwargs.get("text_col", "text"),
-            dedup_kwargs.get("broadcast_batch", True),
-        )
-        tag = f"b{int(batch_id)}"
-        dec_table.overwrite_partition(decisions, tag)
-        store.buckets.overwrite_partition(b_new, tag)
-        # LAST: the batch-id high-water mark rides the final commit, so a
-        # crash anywhere earlier leaves the batch recognizably incomplete
-        extra = {"stream_batch_id": int(batch_id)}
-        if bounds["n"] > 0:
-            extra["max_id"] = _new_max(store, bounds)
-        # empty batch: no max_id key on this snapshot — the lineage walk
-        # (latest_extra_value) still finds the previous one
-        store.sigs.overwrite_partition(sig_new, tag, extra=extra)
-        sig_new.unpersist()
-
-    q = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", 64)
-        .parquet(input_dir)
-        .writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()

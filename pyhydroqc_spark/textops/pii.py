@@ -7,13 +7,13 @@ placeholder tokens (the C4 / Dolma / BigScience-ROOTS convention — see
 e.g. the BigScience PII pipeline and Dolma's `pii` taggers, which use
 exactly this regex-family shape at scale).
 
-Everything here is a pure JVM column expression — `regexp_count` /
-`regexp_extract_all` / `regexp_replace` run inside whole-stage codegen,
-so the scrub rides the very first corpus scan for free (no Python, no
-shuffle, no second pass). The patterns are deliberately restricted to
-the regex dialect intersection of Java (Spark) and RE2 (DuckDB/Go): no
-lookaround, no backreferences — so a plain-SQL engine can replay the
-scrub bit-for-bit, which is how the driver gate verifies it.
+Everything here is a pure JVM column expression — ``scrub`` is one
+`regexp_replace` per family plus a literal placeholder count — so it runs
+inside whole-stage codegen and rides the very first corpus scan for free
+(no Python, no shuffle, no second pass). The patterns are deliberately
+restricted to the regex dialect intersection of Java (Spark) and RE2
+(DuckDB/Go): no lookaround, no backreferences — so a plain-SQL engine can
+replay the scrub bit-for-bit, which is how the driver gate verifies it.
 
 Detection recall/precision is the usual regex-PII tradeoff (these rules
 are an audit-grade first pass, not an NER model); the published
@@ -39,28 +39,6 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_counts(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    patterns: dict[str, str] | None = None,
-) -> DataFrame:
-    """(id, n_<kind>..., n_pii): non-overlapping match counts per PII
-    family plus the total — the corpus-audit surface (what fraction of
-    documents carry PII, and of which kind). One scan, all codegen."""
-    pats = patterns or PII_PATTERNS
-    cols = [
-        F.regexp_count(F.col(text_col), F.lit(p)).cast("long").alias(f"n_{k}")
-        for k, p in pats.items()
-    ]
-    out = df.select(F.col(id_col).alias("id"), *cols)
-    total = None
-    for k in pats:
-        c = F.col(f"n_{k}")
-        total = c if total is None else total + c
-    return out.select("id", *[f"n_{k}" for k in pats], total.alias("n_pii"))
-
-
 def scrub(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -78,9 +56,7 @@ def scrub(
     pass over the original — measured at 1M docs this halves the scrub
     (the count regexes cost as much as the replace regexes; the literal
     count is ~free). Caveat: a document that already contains the
-    literal placeholder (e.g. ``<PII_EMAIL>``) inflates its count —
-    if the corpus may contain prior scrub output, use ``pii_counts``
-    (exact-on-original) for the audit numbers instead."""
+    literal placeholder (e.g. ``<PII_EMAIL>``) inflates its count."""
     pats = patterns or PII_PATTERNS
     red = F.col(text_col)
     for k, p in pats.items():

@@ -126,72 +126,6 @@ def test_arima_residuals_fixed_requires_model():
         detect.arima_residuals_fixed(None, "observed")
 
 
-# ---- Hyndman–Khandakar stepwise search (pmdarima auto_arima semantics,
-# `modeling_utilities.py:23-35`) -------------------------------------------
-
-
-def test_kpss_separates_stationary_from_integrated():
-    rng = np.random.default_rng(7)
-    wn = rng.normal(size=800)
-    rw = np.cumsum(rng.normal(size=800))
-    assert arima.kpss_stat(wn) < 0.463 < arima.kpss_stat(rw)
-
-
-def test_ndiffs_kpss_orders():
-    rng = np.random.default_rng(11)
-    wn = rng.normal(size=1000)
-    rw = np.cumsum(rng.normal(size=1000))
-    rw2 = np.cumsum(np.cumsum(rng.normal(size=1000)))
-    assert arima.ndiffs_kpss(wn) == 0
-    assert arima.ndiffs_kpss(rw) == 1
-    assert arima.ndiffs_kpss(rw2) == 2
-
-
-def test_stepwise_recovers_ar2_with_fewer_fits_than_grid():
-    rng = np.random.default_rng(3)
-    n = 2000
-    e = rng.normal(size=n)
-    y = np.zeros(n)
-    for t in range(2, n):
-        y[t] = 1.2 * y[t - 1] - 0.5 * y[t - 2] + e[t]
-    tr = []
-    assert arima.auto_order_stepwise(y, trace=tr) == (2, 0, 0)
-    # the walk must fit strictly fewer candidates than the exhaustive
-    # (max_p+1)×(max_q+1) grid it replaces (here ≤ half)
-    assert len(tr) <= 24 < 36
-
-
-def test_stepwise_recovers_ma1():
-    rng = np.random.default_rng(2)
-    e = rng.normal(size=2000)
-    y = e[1:] + 0.7 * e[:-1]
-    assert arima.auto_order_stepwise(y) == (0, 0, 1)
-
-
-def test_stepwise_differences_then_searches():
-    rng = np.random.default_rng(3)
-    n = 3000
-    e = rng.normal(size=n)
-    y = np.zeros(n)
-    for t in range(1, n):
-        y[t] = 0.5 * y[t - 1] + e[t] + 0.3 * e[t - 1]
-    p, d, q = arima.auto_order_stepwise(np.cumsum(y))
-    assert d == 1
-    assert (p, q) == (1, 1)
-
-
-def test_stepwise_deterministic():
-    rng = np.random.default_rng(19)
-    y = np.cumsum(rng.normal(size=900))
-    a = arima.auto_order_stepwise(y, method="css")
-    b = arima.auto_order_stepwise(y, method="css")
-    assert a == b
-
-
-def test_stepwise_short_series_degenerates():
-    assert arima.auto_order_stepwise(np.arange(5, dtype=float))[::2] == (0, 0)
-
-
 def test_forecast_ar_fast_path_matches_general_recursion():
     """The r7 q=0 fast path (no innovation pass, truncated history) must
     be BIT-identical to the general ARMA recursion it bypasses."""

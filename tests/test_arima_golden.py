@@ -212,7 +212,7 @@ def test_mle_recovers_arma11_tight():
     for t in range(1, n):
         y[t] = PHI * y[t - 1] + eps[t] + TH * eps[t - 1]
     c_css, phi_css, th_css = arima.fit_arma(y, 1, 1)
-    c, phi, th = arima.fit_arma(y, 1, 1, method="mle")
+    c, phi, th = arima.fit_arma_mle(y, 1, 1)
     assert abs(phi[0] - PHI) < 0.015, phi
     assert abs(th[0] - TH) < 0.015, th
     nll_css = arima._kalman_neg_loglik(y, c_css, phi_css, th_css)
@@ -250,7 +250,7 @@ def test_mle_recovers_arma21_golden():
     for t in range(2, n):
         y[t] = P1 * y[t - 1] + P2 * y[t - 2] + eps[t] + TH * eps[t - 1]
     c_css, phi_css, th_css = arima.fit_arma(y, 2, 1)
-    c, phi, th = arima.fit_arma(y, 2, 1, method="mle")
+    c, phi, th = arima.fit_arma_mle(y, 2, 1)
     np.testing.assert_allclose(phi, [P1, P2], atol=0.08)
     np.testing.assert_allclose(th, [TH], atol=0.08)
     nll = arima._kalman_neg_loglik(y, c, phi, th)
@@ -272,7 +272,7 @@ def test_mle_recovers_ma4_site_order():
     y = eps.copy()
     for j, t in enumerate(TH, 1):
         y[j:] += t * eps[:-j]
-    c, phi, th = arima.fit_arma(y, 0, 4, method="mle")
+    c, phi, th = arima.fit_arma_mle(y, 0, 4)
     np.testing.assert_allclose(th, TH, atol=0.02)
     nll = arima._kalman_neg_loglik(y, c, phi, th)
     assert nll <= arima._kalman_neg_loglik(y, 0.0, np.zeros(0), TH)

@@ -1,7 +1,8 @@
 """Parity: correction loop vs the genuine reference generate_corrections,
 with pmdarima patched to the engine's own forecaster on BOTH sides so the
 loop logic (grouping, widening, ordering, renumbering, crossfade) is
-compared like-for-like."""
+compared like-for-like. The parity tests skip without the reference
+checkout; the termination and Spark-wrapper tests run without it."""
 
 import warnings
 
@@ -13,7 +14,15 @@ from pyhydroqc_spark.operators import correct
 from pyhydroqc_spark.operators.arima import forecast_arima
 from tests.reference_oracle import load_reference
 
-REF = load_reference()
+
+@pytest.fixture(scope="module")
+def REF():
+    """The pyhydroqc reference modules. Only the parity tests use them;
+    they skip when the checkout is not importable."""
+    try:
+        return load_reference()
+    except ImportError as e:
+        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
 
 
 class _PatchedModel:
@@ -24,8 +33,10 @@ class _PatchedModel:
         return forecast_arima(self.x, l, order=(1, 1, 0))
 
 
-@pytest.fixture(autouse=True)
-def patch_forecasters(monkeypatch):
+@pytest.fixture
+def ref_patched(REF, monkeypatch):
+    """The reference with its pmdarima forecaster swapped for the engine's
+    fixed-order one, and pandas' positional-axis drop restored."""
     import sys
 
     monkeypatch.setattr(
@@ -40,6 +51,7 @@ def patch_forecasters(monkeypatch):
         return orig_drop(self, labels, axis=axis, **kw)
 
     monkeypatch.setattr(pd.DataFrame, "drop", drop_compat)
+    return REF
 
 
 def _series_with_events(seed=0, n=800):
@@ -55,7 +67,7 @@ def _series_with_events(seed=0, n=800):
 
 
 @pytest.mark.parametrize("seed", [0, 1])
-def test_correct_series_parity(seed):
+def test_correct_series_parity(ref_patched, seed):
     rdf = _series_with_events(seed)
     mine_det, mine_cor = correct.correct_series(
         rdf["observed"].to_numpy(),
@@ -65,14 +77,14 @@ def test_correct_series_parity(seed):
     )
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
-        ref = REF["arima_correct"].generate_corrections(
+        ref = ref_patched["arima_correct"].generate_corrections(
             rdf.copy(), "observed", "detected_event"
         )
     np.testing.assert_allclose(mine_det, ref["det_cor"].to_numpy(), atol=1e-9)
     assert mine_cor.astype(bool).tolist() == ref["corrected"].astype(bool).tolist()
 
 
-def test_correct_short_valid_group_merging():
+def test_correct_short_valid_group_merging(ref_patched):
     # valid group of 8 (< min_group_len=20) between two events must be absorbed
     n = 300
     rng = np.random.default_rng(4)
@@ -87,12 +99,12 @@ def test_correct_short_valid_group_merging():
     )
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
-        ref = REF["arima_correct"].generate_corrections(rdf.copy(), "observed", "detected_event")
+        ref = ref_patched["arima_correct"].generate_corrections(rdf.copy(), "observed", "detected_event")
     np.testing.assert_allclose(mine_det, ref["det_cor"].to_numpy(), atol=1e-9)
     assert mine_cor[125]  # the sandwiched valid points were corrected too
 
 
-def test_event_at_edges_parity():
+def test_event_at_edges_parity(ref_patched):
     n = 400
     rng = np.random.default_rng(8)
     x = 3 + np.cos(np.arange(n) / 30) + rng.normal(0, 0.15, n)
@@ -104,7 +116,7 @@ def test_event_at_edges_parity():
     mine_det, _ = correct.correct_series(x, ev, idx, order=(1, 1, 0))
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
-        ref = REF["arima_correct"].generate_corrections(rdf.copy(), "observed", "detected_event")
+        ref = ref_patched["arima_correct"].generate_corrections(rdf.copy(), "observed", "detected_event")
     np.testing.assert_allclose(mine_det, ref["det_cor"].to_numpy(), atol=1e-9)
 
 

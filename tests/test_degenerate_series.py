@@ -107,12 +107,14 @@ def test_pipeline_commits_degenerates(spark, tok, tmp_path):
 def test_windowed_detector_survives_degenerates(spark, tok):
     from pyhydroqc_spark.operators import windowed_detect as wd
 
-    long_df = explode_tokens(tok)
-    out = wd.regression_detect_univar(long_df, P, time_steps=5).toPandas()
+    long_df = explode_tokens(tok).withColumnRenamed("value", "observed")
+    out = wd.windowed_regression_residuals(long_df, time_steps=5).toPandas()
     assert len(out) == sum(n for _, _, n, _ in _tok_rows())
-    # short series never produce predictions, hence never detections
-    short = out[out["doc_id"].isin(["single_point", "two_points"])]
-    assert not short["detected_anomaly"].any()
+    # short and all-missing series never get a model, hence no residuals
+    short = out[out["doc_id"].isin(["single_point", "two_points", "all_sentinel"])]
+    assert short["prediction"].isna().all()
+    assert short["residual"].isna().all()
+    assert out.loc[out["doc_id"] == "normal", "prediction"].notna().sum() > 0
 
 
 def test_multivar_detector_survives_all_missing_sensor(spark):
@@ -127,14 +129,14 @@ def test_multivar_detector_survives_all_missing_sensor(spark):
         rows.append(("site:good", "site", "good", i, float(10 + rng.normal())))
         rows.append(("site:dead", "site", "dead", i, None))
     df = spark.createDataFrame(
-        rows, "doc_id string, source string, sensor string, pos long, value double"
+        rows, "doc_id string, source string, sensor string, pos long, observed double"
     )
-    out = wd.regression_detect_multivar(df, P, time_steps=4).toPandas()
+    out = wd.multivar_regression_residuals(df, time_steps=4).toPandas()
     good = out[out["sensor"] == "good"]
     dead = out[out["sensor"] == "dead"]
     assert good["prediction"].notna().sum() > 0
     assert dead["prediction"].isna().all()
-    assert not dead["detected_anomaly"].any()
+    assert dead["residual"].isna().all()
 
 
 def test_streaming_merge_survives_all_sentinel_batch(spark, tmp_path):

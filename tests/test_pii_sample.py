@@ -20,14 +20,16 @@ def pii_docs(spark):
 
 
 def test_pii_counts(spark, pii_docs):
-    out = pii.pii_counts(pii_docs).toPandas().set_index("id").sort_index()
-    assert out.loc[0].tolist() == [2, 0, 0, 0, 2]
+    """scrub's per-family audit counts, one column per PII family."""
+    cols = ["n_email", "n_ipv4", "n_phone", "n_ssn"]
+    out = pii.scrub(pii_docs).toPandas().set_index("doc_id").sort_index()[cols]
+    assert out.loc[0].tolist() == [2, 0, 0, 0]
     # 1.2.3.4.5: the first 4 octets match (audit-pass semantics)
-    assert out.loc[1].tolist() == [0, 3, 0, 0, 3]
-    assert out.loc[2].tolist() == [0, 0, 2, 0, 2]
-    assert out.loc[3].tolist() == [0, 0, 0, 1, 1]
-    assert out.loc[4].tolist() == [0, 0, 0, 0, 0]
-    assert out.loc[5].tolist() == [1, 1, 1, 1, 4]
+    assert out.loc[1].tolist() == [0, 3, 0, 0]
+    assert out.loc[2].tolist() == [0, 0, 2, 0]
+    assert out.loc[3].tolist() == [0, 0, 0, 1]
+    assert out.loc[4].tolist() == [0, 0, 0, 0]
+    assert out.loc[5].tolist() == [1, 1, 1, 1]
 
 
 def test_redact_and_scrub(spark, pii_docs):
@@ -146,84 +148,3 @@ def test_incremental_dedup_matches_oneshot(spark, tmp_path):
     assert sorted(got) == oneshot
     with pytest.raises(ValueError, match="id-ordered"):
         incremental.incremental_dedup(docs.where("doc_id < 5"), incremental.DedupStore(root))
-
-
-def test_dedup_stream_replay_safe(spark, tmp_path):
-    """dedup_stream drains landing files == one-shot decisions; a replayed
-    partially-committed batch (orphan bucket rows, no signatures) decides
-    identically and overwrites, never duplicates."""
-    import glob
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from pyhydroqc_spark.tables import SnapshotTable
-    from pyhydroqc_spark.textops import dedup, incremental
-
-    rows = []
-    for i in range(60):
-        words = [f"w{(7 * i + j * j) % 53}" for j in range(30)]
-        if i % 9 == 4:
-            words = [f"w{(7 * (i - 1) + j * j) % 53}" for j in range(30)]
-            words[0] = "X"
-        rows.append((i, " ".join(words)))
-    docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-
-    land = str(tmp_path / "land")
-    out = str(tmp_path / "out")
-    for k, (lo, hi) in enumerate([(0, 30), (30, 60)]):
-        docs.where(f"doc_id>={lo} and doc_id<{hi}").coalesce(1).write.parquet(
-            f"{land}/stage{k}"
-        )
-    import os
-
-    os.makedirs(f"{land}/all")
-    for k in range(2):
-        for p in glob.glob(f"{land}/stage{k}/*.parquet"):
-            shutil.copy(p, f"{land}/all/batch{k}.parquet")
-
-    incremental.dedup_stream(spark, f"{land}/all", out)
-    got = sorted(
-        tuple(r) for r in SnapshotTable(f"{out}/decisions").read(spark).collect()
-    )
-
-    sig = dedup.minhash_signatures(docs, num_perm=32)
-    cand = dedup.minhash_candidates(sig, bands=8)
-    ver = (
-        cand.join(sig.select(F.col("id").alias("id_a"), F.col("signature").alias("sa")), "id_a")
-        .join(sig.select(F.col("id").alias("id_b"), F.col("signature").alias("sb")), "id_b")
-        .where(
-            F.size(F.filter(F.zip_with("sa", "sb", lambda x, y: x == y), lambda v: v))
-            / 32.0
-            >= 0.5
-        )
-        .groupBy("id_b")
-        .agg(F.min("id_a").alias("dup_of"))
-    )
-    oneshot = sorted(
-        tuple(r)
-        for r in sig.select("id")
-        .join(ver.withColumnRenamed("id_b", "id"), "id", "left")
-        .select("id", F.col("dup_of").isNull().alias("keep"), "dup_of")
-        .collect()
-    )
-    assert got == oneshot
-
-    # partial-commit replay: write ONLY the bucket rows of a new batch
-    # (the crash window), then decide the same batch again — identical
-    store = incremental.DedupStore(f"{out}/store")
-    extra = spark.createDataFrame(
-        pd.DataFrame([(i, rows[i - 40][1]) for i in range(60, 70)],
-                     columns=["doc_id", "text"])
-    )
-    d1, s1, b1, _ = incremental._decide(
-        extra, store, 0.5, 32, 8, 5, "xxhash64", "doc_id", "text", True
-    )
-    first = sorted(tuple(r) for r in d1.collect())
-    store.buckets.overwrite_partition(b1, "b_crash")
-    s1.unpersist()
-    d2, s2, _, _ = incremental._decide(
-        extra, store, 0.5, 32, 8, 5, "xxhash64", "doc_id", "text", True
-    )
-    assert sorted(tuple(r) for r in d2.collect()) == first
-    s2.unpersist()

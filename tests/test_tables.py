@@ -167,32 +167,6 @@ def test_rewrite_manifests_extra_carry_order_past_99999(tmp_path):
     assert tbl.latest_extra_value("stream_batch_id") == 9
 
 
-def test_rewrite_data_files_compacts_small_files(spark, tmp_path):
-    """Ten 1-row appends to one partition become one file; healthy and
-    other partitions untouched; row content identical; snapshot history
-    intact (old snapshots still readable until expiry)."""
-    from pyhydroqc_spark import tables
-
-    t = tables.SnapshotTable(str(tmp_path / "t"))
-    for i in range(10):
-        t.append(spark.range(i * 10, i * 10 + 10).toDF("v"), partition="day1")
-    t.append(spark.range(1000, 1100).coalesce(1).toDF("v"), partition="day2")
-    before_d1 = len(t.files_for_partitions({"day1"}))
-    assert before_d1 >= 10  # range() splits per append: many tiny files
-    pre_rows = sorted(r["v"] for r in t.read(spark).collect())
-    sid_before = t.current_snapshot_id()
-
-    res = tables.rewrite_data_files(t, spark, target_mb=64)
-    assert "day1" in res and res["day1"] == (before_d1, 1)
-    assert len(t.files_for_partitions({"day1"})) == 1
-    post_rows = sorted(r["v"] for r in t.read(spark).collect())
-    assert post_rows == pre_rows
-    # reader pinned to the pre-compaction snapshot still sees every file
-    assert len(t.files_for_partitions({"day1"}, snapshot_id=sid_before)) == before_d1
-    # second run: nothing left to do
-    assert tables.rewrite_data_files(t, spark, target_mb=64).get("day1") is None
-
-
 def test_commit_tables_static_partition(spark, tmp_path):
     """One write lands each key's rows in its own table as that table's
     partition; the key column stays out of the files, other partitions

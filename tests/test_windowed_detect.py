@@ -1,18 +1,23 @@
-"""Windowed-regression detection workflows (the LSTM-workflow stand-in,
-`model_workflow.py:97-189` univar / `:192-317` multivar shapes)."""
+"""Windowed-regression residuals (the LSTM-workflow stand-in,
+`model_workflow.py:97-189` univar / `:192-317` multivar shapes), scored
+by the chain the driver queries use: residuals → ``dynamic_threshold`` →
+``detect_threshold_anomalies``."""
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
+from pyhydroqc_spark.operators import threshold
 from pyhydroqc_spark.operators import windowed_detect as wd
-from pyhydroqc_spark.params import SeriesParams
 
-PARAMS = SeriesParams(
-    max_range=1e9, min_range=-1e9, persist=10**6, window_sz=40,
-    alpha=0.0001, threshold_min=0.5, widen=1, pdq=(1, 1, 0),
-)
+
+def _detect(resid_df):
+    """Threshold the residuals (window 40, alpha 1e-4, floor 0.5); edge
+    rows have no residual and are never flagged."""
+    out = threshold.dynamic_threshold(
+        resid_df, "residual", window_sz=40, alpha=0.0001, min_range=0.5
+    )
+    return threshold.detect_threshold_anomalies(out, "residual")
 
 
 def _series_with_spikes(n=400, spikes=(120, 260), seed=5):
@@ -53,16 +58,15 @@ def test_edge_rows_carry_no_prediction(spark, spiky, mode):
 
 @pytest.mark.parametrize("mode", ["vanilla", "bidir"])
 def test_univar_flags_spikes_only(spark, spiky, mode):
-    out = (
-        wd.regression_detect_univar(spiky, PARAMS, time_steps=10, mode=mode)
-        .orderBy("pos")
-        .toPandas()
+    resid = wd.windowed_regression_residuals(
+        spiky.withColumnRenamed("value", "observed"), time_steps=10, mode=mode
     )
+    out = _detect(resid).orderBy("pos").toPandas()
     flagged = set(out.loc[out["detected_anomaly"], "pos"])
     for s in (120, 260):
         assert s in flagged, (mode, sorted(flagged))
-    # widen=1 events: every flagged point sits inside a numbered event
-    assert (out.loc[out["detected_anomaly"], "detected_event"] > 0).all()
+    # rows without a prediction are never flagged
+    assert not out.loc[out["residual"].isna(), "detected_anomaly"].any()
     # the quiet stretch stays clean
     assert not any(40 <= p <= 100 for p in flagged)
 
@@ -102,166 +106,24 @@ def test_multivar_uses_sibling_sensors(spark):
         for i, v in enumerate(arr):
             rows.append(("site:" + s, "site", s, i, float(v)))
     df = spark.createDataFrame(
-        rows, "doc_id string, source string, sensor string, pos long, value double"
+        rows, "doc_id string, source string, sensor string, pos long, observed double"
     )
-    out = wd.regression_detect_multivar(
-        df, PARAMS, time_steps=4
-    ).toPandas()
+    out = _detect(wd.multivar_regression_residuals(df, time_steps=4)).toPandas()
     hit = out[(out["sensor"] == "B") & (out["pos"] == 200)]
     assert bool(hit["detected_anomaly"].iloc[0])
     quiet = out[(out["sensor"] == "B") & out["pos"].between(40, 150)]
     assert quiet["detected_anomaly"].sum() <= 2
 
 
-def test_mlp_head_beats_ridge_on_nonlinear_series(spark):
-    """r5 nonlinear head: the deterministic numpy MLP (pinned seed/epochs,
-    full-batch Adam, tanh hidden layer) must clearly beat the ridge
-    stand-in on a nonlinear autoregression — the capability the reference
-    buys with its LSTM — while being exactly reproducible. Driven through
-    the Spark workflow end to end (not just the kernel)."""
-    rng = np.random.default_rng(5)
-    n = 1500
-    x = np.zeros(n)
-    for t in range(2, n):
-        x[t] = (
-            0.8 * np.sin(2.5 * x[t - 1])
-            - 0.4 * np.tanh(x[t - 2])
-            + 0.15 * rng.normal()
+def test_mode_is_validated(spark, spiky):
+    """Both residual functions reject an unknown mode up front: past the
+    check, a typo such as "bidr" would trim the bidir edge but add no
+    lead features, a mis-trimmed vanilla model."""
+    df = spiky.withColumnRenamed("value", "observed")
+    with pytest.raises(ValueError, match="mode"):
+        wd.windowed_regression_residuals(df, mode="bidr")
+    with pytest.raises(ValueError, match="mode"):
+        wd.multivar_regression_residuals(
+            df.withColumn("source", df["doc_id"]).withColumn("sensor", df["doc_id"]),
+            mode="bidr",
         )
-    pdf = pd.DataFrame({"doc_id": "s", "pos": np.arange(n), "observed": x})
-    df = spark.createDataFrame(pdf)
-
-    def rmse(out):
-        r = out.toPandas().sort_values("pos")["residual"].to_numpy()
-        return float(np.sqrt(np.nanmean(np.square(r))))
-
-    kw = dict(time_steps=6, mode="vanilla", order_col="pos")
-    r_ridge = rmse(wd.windowed_regression_residuals(df, head="ridge", **kw))
-    r_mlp = rmse(wd.windowed_regression_residuals(df, head="mlp", **kw))
-    # noise floor is 0.15; ridge ~0.20, MLP must land within 15% of floor
-    assert r_mlp < 0.9 * r_ridge, (r_mlp, r_ridge)
-    assert r_mlp < 0.175, r_mlp
-
-    # deterministic: a second run is bit-identical
-    a = wd.windowed_regression_residuals(df, head="mlp", **kw).toPandas()
-    b = wd.windowed_regression_residuals(df, head="mlp", **kw).toPandas()
-    np.testing.assert_array_equal(
-        a.sort_values("pos")["prediction"].to_numpy(),
-        b.sort_values("pos")["prediction"].to_numpy(),
-    )
-
-    # unknown head raises
-    with pytest.raises(Exception):
-        wd.windowed_regression_residuals(df, head="cnn", **kw).count()
-
-
-def test_gru_head_beats_windowed_heads_on_long_memory_series(spark):
-    """r6 recurrent head: a drifting-level series (random-walk level under
-    heavy observation noise) is the canonical LONG-memory task — the
-    Bayes-optimal predictor is a steady-state Kalman/EMA over unboundedly
-    many past points, while any fixed-lag window can only average its
-    ``time_steps`` observations. Both ridge and MLP (window heads) must
-    therefore miss; the full-series GRU (h_t carried across the whole
-    series) must beat them AND land within a few percent of the exact
-    Kalman filter run with the TRUE noise parameters. This is the model
-    family the reference buys with its LSTM (`modeling_utilities.py:
-    125-351`) — sequence memory, not window regression."""
-    rng = np.random.default_rng(3)
-    n, q_sd, r_sd = 2500, 0.03, 0.5
-    level = np.cumsum(rng.normal(0, q_sd, n))
-    x = level + rng.normal(0, r_sd, n)
-    pdf = pd.DataFrame({"doc_id": "s", "pos": np.arange(n), "observed": x})
-    df = spark.createDataFrame(pdf)
-
-    def rmse(out):
-        r = out.toPandas().sort_values("pos")["residual"].to_numpy()
-        return float(np.sqrt(np.nanmean(np.square(r))))
-
-    kw = dict(time_steps=4, mode="vanilla", order_col="pos")
-    r_ridge = rmse(wd.windowed_regression_residuals(df, head="ridge", **kw))
-    r_mlp = rmse(wd.windowed_regression_residuals(df, head="mlp", **kw))
-    r_gru = rmse(wd.windowed_regression_residuals(df, head="gru", **kw))
-
-    # exact Kalman one-step errors with the true (q, r) — the floor a
-    # window model cannot reach
-    mu_hat, Pt, errs = x[0], 1.0, []
-    for i in range(1, n):
-        Pt = Pt + q_sd**2
-        errs.append(x[i] - mu_hat)
-        K = Pt / (Pt + r_sd**2)
-        mu_hat = mu_hat + K * (x[i] - mu_hat)
-        Pt = (1 - K) * Pt
-    r_kalman = float(np.sqrt(np.mean(np.square(errs[3:]))))
-
-    assert r_gru < 0.96 * r_ridge, (r_gru, r_ridge)
-    assert r_gru < 0.96 * r_mlp, (r_gru, r_mlp)
-    assert r_gru < 1.03 * r_kalman, (r_gru, r_kalman)
-
-    # deterministic: two kernel fits are bit-identical (kernel-level —
-    # the Spark path above already exercised the distributed plumbing;
-    # a short series keeps this check cheap)
-    xs = x[:300]
-    np.testing.assert_array_equal(
-        wd._gru_predict(xs, epochs=20), wd._gru_predict(xs, epochs=20)
-    )
-
-
-def test_bidir_gru_uses_future_context_on_level_shifts():
-    """mode='bidir' + head='gru' = forward + reversed GRU with a learned
-    dense combine (reference: keras Bidirectional(LSTM)+Dense,
-    `modeling_utilities.py:282-351`). On abrupt level shifts the backward
-    pass sees the new level before the forward pass has converged to it,
-    so the bidirectional fit must beat the forward-only one — and stay
-    bit-deterministic."""
-    from pyhydroqc_spark.operators.windowed_detect import _fit_predict
-
-    rng = np.random.default_rng(5)
-    n = 800
-    levels = np.repeat(rng.normal(0, 2.0, 8), n // 8)
-    x = levels + rng.normal(0, 0.25, n)
-    pf = _fit_predict(x, 10, "vanilla", 1e-3, True, head="gru")
-    pb = _fit_predict(x, 10, "bidir", 1e-3, True, head="gru")
-    m = ~np.isnan(pf) & ~np.isnan(pb)
-    rmse_f = float(np.sqrt(np.mean((pf[m] - x[m]) ** 2)))
-    rmse_b = float(np.sqrt(np.mean((pb[m] - x[m]) ** 2)))
-    assert rmse_b < rmse_f - 0.02  # 0.283 vs 0.318 on this fixture
-    pb2 = _fit_predict(x, 10, "bidir", 1e-3, True, head="gru")
-    assert np.array_equal(pb, pb2, equal_nan=True)
-
-
-def test_multivar_gru_exploits_precise_sibling_sensor(spark):
-    """head='gru' on the multivar surface = ONE shared-state GRU reading
-    all of a site's sensors and predicting all of them (the reference's
-    n-output LSTM family, `modeling_utilities.py:354-536`). Fixture: two
-    sensors track the same random-walk level, s0 noisy (r=0.5), s1
-    precise (r=0.05) — predicting s0 from s1's history beats anything s0
-    alone can do; the univar GRU on s0 cannot reach it. Driven through
-    the Spark multivar workflow end to end."""
-    rng = np.random.default_rng(3)
-    n, q_sd = 1000, 0.08
-    level = np.cumsum(rng.normal(0, q_sd, n))
-    s0 = level + rng.normal(0, 0.5, n)
-    s1 = level + rng.normal(0, 0.05, n)
-    rows = []
-    for s, arr in (("A", s0), ("B", s1)):
-        for i, v in enumerate(arr):
-            rows.append(("site:" + s, "site", s, i, float(v)))
-    df = spark.createDataFrame(
-        rows, "doc_id string, source string, sensor string, pos long, observed double"
-    )
-    out = (
-        wd.multivar_regression_residuals(df, time_steps=4, head="gru")
-        .toPandas()
-        .sort_values(["sensor", "pos"])
-    )
-    r0 = out[out["sensor"] == "A"]["residual"].to_numpy()
-    rmse_multi = float(np.sqrt(np.nanmean(np.square(r0))))
-
-    from pyhydroqc_spark.operators.windowed_detect import _gru_predict
-
-    p_scalar = _gru_predict(s0)
-    rmse_scalar = float(np.sqrt(np.nanmean(np.square(p_scalar[1:] - s0[1:]))))
-    # measured 0.506 vs 0.528 (floor ~= s0's own r = 0.5)
-    assert rmse_multi < rmse_scalar - 0.01, (rmse_multi, rmse_scalar)
-    with pytest.raises(ValueError):
-        wd.multivar_regression_residuals(df, head="cnn")
