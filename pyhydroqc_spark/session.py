@@ -2,6 +2,16 @@
 
 Local testing runs ``local[N]``; on a real cluster the same code ships via
 ``spark-submit --py-files`` (the engine is pure-Python + Arrow UDFs, no jars).
+
+The local sessions ``get_spark`` builds start their Python workers through
+``worker_daemon`` (``spark.python.daemon.module``): it takes Spark's
+``pyspark.zip``, py4j zip and spark-core jar off the workers' ``sys.path``,
+so workers import the installed, byte-compiled pyspark instead of compiling
+the zip's sources and re-reading its directory on every Python task. It
+falls back to Spark's path when no pyspark and py4j are installed outside
+the archives or the installed pyspark's ``version.py`` differs from the
+zip's. Sessions built elsewhere (``spark-submit`` on a cluster) keep
+Spark's own daemon.
 """
 
 from __future__ import annotations
@@ -9,6 +19,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import worker_daemon
 
 
 def get_spark(
@@ -48,6 +60,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", worker_daemon.__name__)
     )
     # shuffle/spill on tmpfs: at 32 local threads the single overlay disk
     # serializes shuffle writes; RAM-backed local dirs keep scaling honest

@@ -150,6 +150,12 @@ def _merge_cells_into(spark, cells: DataFrame, batch_id: int, stores: dict) -> N
         merged = _merge_cells(
             spark.read.parquet(*hit_files) if hit_files else None, incoming
         )
+        # each write task writes one file per (tier, day) it holds: range
+        # partitioning gives a task one or two of them instead of all, and
+        # doc_id still splits a large finest-tier day across tasks
+        merged = merged.repartitionByRange(
+            int(spark.conf.get("spark.sql.shuffle.partitions")), "tier", "day", "doc_id"
+        )
         # the tier stays inside the store files: write a copy as the key
         commit_tables(
             merged.withColumn("__tier", F.col("tier")), "__tier", stores,

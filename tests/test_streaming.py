@@ -223,6 +223,32 @@ def test_multi_tier_streaming_matches_batch(spark, tmp_path):
         )
 
 
+def test_multi_tier_drain_file_fan_out(spark, tmp_path):
+    """The merge write range-partitions by (tier, day, doc_id): a write
+    task holds one or two (tier, day) groups, so a store gets at most
+    one file per write task plus one per day, not one per (task, day)."""
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    os.makedirs(in_dir)
+    tiers = (900, 3600, 86400)
+
+    pdf = gen_token_table(n_series=3, n_tok=600, seed=13)
+    spark.createDataFrame(pdf, schema=_tok_schema()).write.mode("append").parquet(in_dir)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=tiers)
+
+    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    for t in tiers:
+        store = SnapshotTable(os.path.join(out_dir, f"agg_{t}s"))
+        n_days = (
+            store.read(spark)
+            .select(F.date_format("bucket_start", "yyyy-MM-dd"))
+            .distinct()
+            .count()
+        )
+        assert n_days > 1
+        assert len(store.files()) <= n_tasks + n_days, t
+
+
 def test_retry_after_interleaved_commit_still_skipped(spark, tmp_path):
     """A non-stream commit (append / retention) between a batch commit and
     its retry carries no stream_batch_id; replay detection must walk the
