@@ -158,8 +158,12 @@ HIST = (32, -5.0, 30.0)  # (bins, lo, hi) — the composable sketch domain
 
 
 # the rollup row-sets' shared output columns as SQL text: one selectExpr
-# per row-set instead of several py4j round trips per Column node
+# per row-set instead of several py4j round trips per Column node. The
+# row-sets group on raw user_id (the checkpoint's partitioning key) and
+# project the string doc_id back here — same values as grouping on the
+# cast.
 _ROLLUP_SCALARS = (
+    "CAST(`user_id` AS STRING) AS doc_id",
     "CAST(unix_timestamp(`bucket_start`) AS BIGINT) AS bucket_s",
     "CAST(`cnt` AS BIGINT) AS cnt",
     "round(`sum_val`, 6) AS sum_val",
@@ -169,18 +173,8 @@ _ROLLUP_SCALARS = (
 )
 
 
-def _doc_id_expr(df):
-    # frames aggregated on raw user_id (the exchange-free cached path)
-    # project the string doc_id back here — same values as grouping on
-    # the cast, but the groupBy key matches the checkpoint partitioning
-    if "user_id" in df.columns:
-        return "CAST(`user_id` AS STRING) AS doc_id"
-    return "`doc_id` AS doc_id"
-
-
 def _rollup_gate_cols(agg_with_stats):
     return agg_with_stats.selectExpr(
-        _doc_id_expr(agg_with_stats),
         *_ROLLUP_SCALARS,
         "round(`open_val`, 6) AS open_val",
         "round(`close_val`, 6) AS close_val",
@@ -191,49 +185,33 @@ def _rollup_gate_cols(agg_with_stats):
     )
 
 
-def _rollup(spark, sf_dir, tier, df=None):
+def _rollup(df, tier):
     """Scalar aggregates AND the percentile sketch in ONE hash
     aggregation (hist= rides the same groupBy — no second pass, no
-    join), stats derived in a projection. A frame that already carries
-    ``increment`` (the cached long frame — computed once in the same
-    window as ``pos``) skips the per-subtree lag window entirely."""
+    join), stats derived in a projection. ``df`` is the checkpointed long
+    frame, which carries ``increment`` (computed once in the same window
+    as ``pos``), so no row-set pays its own lag window."""
     from pyhydroqc_spark.operators import rollup
 
-    if df is None:
-        df = _events_long(spark, sf_dir)
-    inc = (
-        df
-        if "increment" in df.columns
-        else rollup.with_counter_increments(df, value_col="value", order_col="pos")
-    )
-    key = "user_id" if "user_id" in df.columns else "doc_id"
     out = rollup.rollup_points(
-        inc, tier, value_col="value", hist=HIST, order_col="pos",
-        sum_cols={"increment": "counter_delta"}, key=key,
+        df, tier, value_col="value", hist=HIST, order_col="pos",
+        sum_cols={"increment": "counter_delta"}, key="user_id",
     )
     return _rollup_gate_cols(rollup.hist_stats(out))
 
 
-def q_rollup_tiered_1d(spark, sf_dir, df=None):
+def _rollup_tiered_1d(df):
     from pyhydroqc_spark.operators import rollup
 
     # the sketch composes through the cascade (rollup_from_rollup sums
     # the 1h histograms elementwise): composed 1d stats must hash-match
     # the direct 1d row-set — the driver-checked mergeability proof
-    if df is None:
-        df = _events_long(spark, sf_dir)
-    inc = (
-        df
-        if "increment" in df.columns
-        else rollup.with_counter_increments(df, value_col="value", order_col="pos")
-    )
-    key = "user_id" if "user_id" in df.columns else "doc_id"
     h1 = rollup.rollup_points(
-        inc, 3600, value_col="value", hist=HIST, order_col="pos",
-        sum_cols={"increment": "counter_delta"}, key=key,
+        df, 3600, value_col="value", hist=HIST, order_col="pos",
+        sum_cols={"increment": "counter_delta"}, key="user_id",
     )
     d1 = rollup.rollup_from_rollup(
-        h1.drop("tier"), 86400, sum_cols=("counter_delta",), key=key
+        h1.drop("tier"), 86400, sum_cols=("counter_delta",), key="user_id"
     )
     return _rollup_gate_cols(rollup.hist_stats(d1))
 
@@ -297,10 +275,10 @@ def q_rollup_tiers(spark, sf_dir):
     # tier-from-tier cascade (rollup_from_rollup) scans them once instead.
     long_df = _rollup_long_checkpointed(spark, sf_dir)
     parts = [
-        _rollup(spark, sf_dir, 900, df=long_df).withColumn("tier", F.lit("15min")),
-        _rollup(spark, sf_dir, 3600, df=long_df).withColumn("tier", F.lit("1h")),
-        _rollup(spark, sf_dir, 86400, df=long_df).withColumn("tier", F.lit("1d")),
-        q_rollup_tiered_1d(spark, sf_dir, df=long_df).withColumn("tier", F.lit("tiered_1d")),
+        _rollup(long_df, 900).withColumn("tier", F.lit("15min")),
+        _rollup(long_df, 3600).withColumn("tier", F.lit("1h")),
+        _rollup(long_df, 86400).withColumn("tier", F.lit("1d")),
+        _rollup_tiered_1d(long_df).withColumn("tier", F.lit("tiered_1d")),
     ]
     out = parts[0].withColumn("is_gap", F.lit(False))
     for p in parts[1:]:
@@ -311,14 +289,11 @@ def q_rollup_tiers(spark, sf_dir):
     # interpolated in bucket time), and a 6-series 1h grid exercising
     # every strategy at once (locf avg, interpolated min, NULL-densified
     # max). is_gap marks the synthesized rows, hash-checked like all else.
-    return out.unionByName(_gapfill_tier(spark, sf_dir, df=long_df)).unionByName(
-        _gapfill_tier_1h(spark, sf_dir, df=long_df)
-    )
+    return out.unionByName(_gapfill_tier(long_df)).unionByName(_gapfill_tier_1h(long_df))
 
 
 def _gapfill_parts(gf):
     return gf.selectExpr(
-        _doc_id_expr(gf),
         *_ROLLUP_SCALARS,
         "is_gap",
         # sketch/OHLC columns ride only the tier row-sets (a synthesized
@@ -332,30 +307,24 @@ def _gapfill_parts(gf):
     )
 
 
-def _gapfill_tier(spark, sf_dir, df=None):
+def _gapfill_tier(df):
     from pyhydroqc_spark.operators import rollup
 
-    if df is None:
-        df = _events_long(spark, sf_dir)
-    key = "user_id" if "user_id" in df.columns else "doc_id"
-    agg = rollup.rollup_points(df, 86400, value_col="value", key=key).drop("tier")
-    return _gapfill_parts(rollup.gapfill(agg, 86400, key=key)).withColumn(
+    agg = rollup.rollup_points(df, 86400, value_col="value", key="user_id").drop("tier")
+    return _gapfill_parts(rollup.gapfill(agg, 86400, key="user_id")).withColumn(
         "tier", F.lit("gapfill_1d")
     )
 
 
-def _gapfill_tier_1h(spark, sf_dir, df=None):
+def _gapfill_tier_1h(df):
     from pyhydroqc_spark.operators import rollup
 
-    if df is None:
-        df = _events_long(spark, sf_dir)
     df = df.where(F.col("doc_id").cast("long") % 25 == 0)
-    key = "user_id" if "user_id" in df.columns else "doc_id"
-    agg = rollup.rollup_points(df, 3600, value_col="value", key=key).drop("tier")
+    agg = rollup.rollup_points(df, 3600, value_col="value", key="user_id").drop("tier")
     gf = rollup.gapfill(
         agg,
         3600,
-        key=key,
+        key="user_id",
         fill={
             "cnt": "zero",
             "sum_val": "zero",
@@ -602,8 +571,7 @@ def q_embed_dup_pairs(spark, sf_dir):
 
     emb = _emb(spark, sf_dir)
     lsh = ann.cosine_dup_pairs(
-        emb, threshold=0.35, n_planes=4, n_tables=8, dim=64,
-        plane_source="md5",
+        emb, threshold=0.35, n_planes=4, n_tables=8, dim=64
     )
 
     base = emb.select(
@@ -780,7 +748,7 @@ def q_doc_profile(spark, sf_dir):
         F.col("n_shared_13grams").cast("long").alias("n_shared_13grams"),
         "contaminated",
     )
-    spans = dedup.dup_spans(docs, n=12, hash_fn="md5").select(
+    spans = dedup.dup_spans(docs, n=12).select(
         F.col("id").cast("long").alias("id"),
         "n_dup_spans",
         "dup_words",
@@ -925,7 +893,7 @@ def q_ar11_residuals(spark, sf_dir):
 
         y = pdf.sort_values("pos")["value"].to_numpy()
         p, q = orders[key[0]]
-        cc, ph, th = _a.fit_arma_mle(y, p, q, intercept=True)
+        cc, ph, th = _a.fit_arma_mle(y, p, q)
         nll = _a._kalman_neg_loglik(y, cc, np.asarray(ph), np.asarray(th))
         coefs = [cc, *ph, *th, nll]
         return pd.DataFrame(
@@ -1029,8 +997,8 @@ def q_multivar_residuals(spark, sf_dir):
 def q_minhash_candidates(spark, sf_dir):
     from pyhydroqc_spark.textops import dedup
 
-    sig = dedup.minhash_signatures(_docs(spark, sf_dir), num_perm=32, hash_fn="md5")
-    out = dedup.minhash_candidates(sig, bands=8, hash_fn="md5")
+    sig = dedup.minhash_signatures(_docs(spark, sf_dir), num_perm=32)
+    out = dedup.minhash_candidates(sig, bands=8)
     return out.select(
         F.col("id_a").cast("long").alias("id_a"),
         F.col("id_b").cast("long").alias("id_b"),
@@ -1040,7 +1008,7 @@ def q_minhash_candidates(spark, sf_dir):
 def q_simhash(spark, sf_dir):
     from pyhydroqc_spark.textops import dedup
 
-    out = dedup.simhash(_docs(spark, sf_dir), bits=60, hash_fn="md5")
+    out = dedup.simhash(_docs(spark, sf_dir), bits=60)
     return out.select(
         F.col("id").cast("long").alias("id"),
         F.col("simhash").cast("long").alias("simhash"),
@@ -1061,7 +1029,7 @@ def q_simhash_pairs(spark, sf_dir):
     large plans)."""
     from pyhydroqc_spark.textops import dedup
 
-    sig = dedup.simhash(_docs(spark, sf_dir), bits=60, hash_fn="md5").localCheckpoint(
+    sig = dedup.simhash(_docs(spark, sf_dir), bits=60).localCheckpoint(
         eager=True
     )
     out = dedup.simhash_candidates(sig, max_hamming=3)
@@ -1173,7 +1141,6 @@ def q_lsh_topk(spark, sf_dir):
         n_planes=4,
         n_tables=8,
         dim=64,
-        plane_source="md5",
     )
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),
@@ -1192,7 +1159,7 @@ def q_lang_id(spark, sf_dir):
 def q_fingerprint(spark, sf_dir):
     from pyhydroqc_spark.textops import quality
 
-    out = quality.fingerprint(_docs(spark, sf_dir), hash_fn="md5")
+    out = quality.fingerprint(_docs(spark, sf_dir))
     return out.select(
         F.col("id").cast("long").alias("id"),
         F.col("fingerprint").cast("long").alias("fingerprint"),
@@ -1392,7 +1359,7 @@ def q_multimodal_features(spark, sf_dir):
             yield pd.DataFrame(rows, columns=["media_id", "media", "kind"])
 
     media = ids.mapInPandas(build, schema=media_schema)
-    feats = multimodal.extract_features(media, decode="real")
+    feats = multimodal.extract_features(media)
     return feats.select(
         F.col("media_id").cast("long").alias("id"),
         F.posexplode("features").alias("fi", "f"),
@@ -1459,11 +1426,11 @@ def q_ivfpq_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
     cents = ann.ivf_centroids(64, 16)
     books = ann.pq_codebooks_hash(64, m=8, k=16)
-    idx = ann.ivfpq_index(emb, cents, books, encode="raw")
+    idx = ann.ivfpq_index(emb, cents, books)
     queries = emb.where(F.col("vec_id") < 5)
     out = ann.ivfpq_topk(
         idx, queries, cents, books, k=10, nprobe=4, refine=30,
-        full_vectors=emb, encode="raw",
+        full_vectors=emb,
     )
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),
@@ -1498,10 +1465,10 @@ def q_streaming_rollup(spark, sf_dir):
     tok = collapse_to_tokens(base)
     even = F.col("doc_id").cast("long") % 2 == 0
     tok.where(even).write.mode("append").parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=3600)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(3600,))
     tok.where(~even).write.mode("append").parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=3600)
-    agg = SnapshotTable(os.path.join(out_dir, "agg")).read(spark)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(3600,))
+    agg = SnapshotTable(os.path.join(out_dir, "agg_3600s")).read(spark)
     return agg.select(
         "doc_id",
         F.unix_timestamp("bucket_start").cast("long").alias("bucket"),
@@ -1643,10 +1610,10 @@ def q_dup_keep_list(spark, sf_dir):
     try:
         store = incremental.DedupStore(root)
         d1 = incremental.incremental_dedup(
-            docs.where(F.col("doc_id") <= mid), store, threshold=0.5, hash_fn="md5"
+            docs.where(F.col("doc_id") <= mid), store, threshold=0.5
         )
         d2 = incremental.incremental_dedup(
-            docs.where(F.col("doc_id") > mid), store, threshold=0.5, hash_fn="md5"
+            docs.where(F.col("doc_id") > mid), store, threshold=0.5
         )
         inc = (
             d1.unionByName(d2)

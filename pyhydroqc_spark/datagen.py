@@ -39,7 +39,7 @@ class Defects:
     holes: list         # (start, length) NaN runs
 
 
-def gen_series(rng: np.random.Generator, n: int, with_defects: bool = True):
+def gen_series(rng: np.random.Generator, n: int):
     """One float series + its injected-defect positions."""
     t = np.arange(n)
     base = 10.0 + 4.0 * np.sin(2 * np.pi * t / 96.0)  # diurnal, 96 pts/day
@@ -51,7 +51,7 @@ def gen_series(rng: np.random.Generator, n: int, with_defects: bool = True):
         ar[i] = phi * ar[i - 1] + eps[i]
     x = base + ar
     d = Defects([], [], [], [], [])
-    if with_defects and n >= 400:
+    if n >= 400:
         k = max(1, n // 2000)
         for pos in rng.integers(50, n - 50, size=k):
             x[pos] = VAL_HI + 10.0 + float(rng.normal(0, 2))

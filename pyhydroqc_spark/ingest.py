@@ -31,30 +31,30 @@ def explode_tokens(
     cadence_s: int = CADENCE_S,
     lo: float = VAL_LO,
     hi: float = VAL_HI,
-    dequantize: bool = True,
 ) -> DataFrame:
-    """(doc_id, tokens, …) → (doc_id, source, pos, ts, value[, token]).
+    """(doc_id, tokens, …) → (doc_id, source, pos, token, ts, value).
 
     Sentinel ``-1`` tokens become NULL values (missing observations,
     mirrors the reference's NaN handling at `rules_detect.py:90-104`).
     """
     t0 = t0 or T0.to_pydatetime()
-    out = tok_df.select(
-        "doc_id",
-        "source",
-        F.posexplode("tokens").alias("pos", "token"),
-    ).withColumn(
-        "ts",
-        (F.lit(t0).cast("timestamp") + F.make_interval(secs=F.col("pos") * cadence_s)),
-    )
-    if dequantize:
-        out = out.withColumn(
+    return (
+        tok_df.select(
+            "doc_id",
+            "source",
+            F.posexplode("tokens").alias("pos", "token"),
+        )
+        .withColumn(
+            "ts",
+            (F.lit(t0).cast("timestamp") + F.make_interval(secs=F.col("pos") * cadence_s)),
+        )
+        .withColumn(
             "value",
             F.when(F.col("token") == SENTINEL, F.lit(None).cast("double")).otherwise(
                 F.lit(lo) + F.col("token").cast("double") / TOKEN_MAX * (hi - lo)
             ),
         )
-    return out
+    )
 
 
 def collapse_to_tokens(

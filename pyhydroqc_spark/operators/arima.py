@@ -273,29 +273,28 @@ def _nelder_mead(fn, x0: np.ndarray, max_iter: int = 400, tol: float = 1e-8):
     return simplex[best], fv[best]
 
 
-def fit_arma_mle(y: np.ndarray, p: int, q: int, intercept: bool = True):
+def fit_arma_mle(y: np.ndarray, p: int, q: int):
     """Exact-likelihood ARMA(p,q): Kalman-filter Gaussian likelihood
     (stationary exact initialization, σ² concentrated out) maximized by
     Nelder–Mead from the Hannan–Rissanen + CSS start. This is the same
     estimator class as statsmodels SARIMAX's default (exact MLE), closing
     the r4 'fitted-coefficient gap' for q>0 — the remaining difference to
     a reference fit is optimizer tolerance, not objective. Deterministic:
-    fixed start, fixed simplex recipe. Returns (c, phi, theta)."""
+    fixed start, fixed simplex recipe. The intercept is always fitted.
+    Returns (c, phi, theta)."""
     y = np.asarray(y, dtype=float)
-    c0, phi0, theta0 = fit_arma(y, p, q, intercept)
+    c0, phi0, theta0 = fit_arma(y, p, q)
     if p + q == 0 or len(y) <= max(p, q) + 2:
         return c0, phi0, theta0
 
     def unpack(x):
-        i = 1 if intercept else 0
-        cc = float(x[0]) if intercept else 0.0
-        return cc, x[i:i + p].copy(), x[i + p:i + p + q].copy()
+        return float(x[0]), x[1:1 + p].copy(), x[1 + p:1 + p + q].copy()
 
     def obj(x):
         cc, ph, th = unpack(x)
         return _kalman_neg_loglik(y, cc, ph, th)
 
-    x0 = np.r_[[c0] if intercept else [], phi0, theta0]
+    x0 = np.r_[[c0], phi0, theta0]
     f0 = obj(x0)
     if not np.isfinite(f0):
         # infeasible start (explosive HR estimate survived shrinkage):

@@ -145,11 +145,11 @@ def compare_events_sql(
     return out.withColumn(out_col, cm).drop("__g")
 
 
-def point_metrics(df: DataFrame, cm_col: str = "conf_mtx", by_key: bool = False) -> DataFrame:
-    """tp/fp/fn/tn counts + prc/npv/acc/rcl/f1/f2 (`anomaly_utilities.py:215-247`)."""
+def point_metrics(df: DataFrame, cm_col: str = "conf_mtx") -> DataFrame:
+    """tp/fp/fn/tn counts + prc/npv/acc/rcl/f1/f2 over all rows
+    (`anomaly_utilities.py:215-247`)."""
     cnt = lambda v: F.sum((F.col(cm_col) == v).cast("long"))
-    gb = df.groupBy(SERIES_KEY) if by_key else df.groupBy()
-    agg = gb.agg(
+    agg = df.agg(
         cnt("tp").alias("tp"),
         cnt("fp").alias("fp"),
         cnt("fn").alias("fn"),
@@ -171,9 +171,9 @@ def point_metrics(df: DataFrame, cm_col: str = "conf_mtx", by_key: bool = False)
     )
 
 
-def event_metrics(df: DataFrame, cm_col: str = "conf_mtx", by_key: bool = False) -> DataFrame:
-    """Event-level counts: a category change into tp/fp/fn counts one event
-    (`anomaly_utilities.py:268-295`)."""
+def event_metrics(df: DataFrame, cm_col: str = "conf_mtx") -> DataFrame:
+    """Event-level counts over all series: a category change into tp/fp/fn
+    counts one event (`anomaly_utilities.py:268-295`)."""
     w = series_window()
     prev = F.coalesce(F.lag(cm_col).over(w), F.lit("tn"))
     changed = F.col(cm_col) != prev
@@ -181,8 +181,7 @@ def event_metrics(df: DataFrame, cm_col: str = "conf_mtx", by_key: bool = False)
     cnt = lambda v: F.sum(
         (F.col("__new_ev") & (F.col(cm_col) == v)).cast("long")
     )
-    gb = flagged.groupBy(SERIES_KEY) if by_key else flagged.groupBy()
-    agg = gb.agg(
+    agg = flagged.agg(
         cnt("tp").alias("tp"), cnt("fp").alias("fp"), cnt("fn").alias("fn")
     )
     tp, fp, fn = (F.col(c).cast("double") for c in ("tp", "fp", "fn"))

@@ -334,41 +334,24 @@ def hist_stats(hist_df: DataFrame, quantiles=(0.5, 0.95)) -> DataFrame:
 # -- counter aggregates (Prometheus increase() / TimescaleDB counter_agg) ----
 
 
-def counter_increment_expr(v, prev, reset_aware: bool = True):
-    """The per-row counter-increment column expression given the value and
-    its within-series predecessor — exposed so callers that already pay a
-    window over (key, order) (e.g. a row_number pass) can ride the SAME
-    exchange+sort instead of adding a second one (guide §2.4)."""
-    return (
-        F.when(prev.isNull() | v.isNull(), F.lit(0.0))
-        .when(v >= prev, v - prev)
-        .otherwise(v if reset_aware else F.lit(0.0))
-    )
-
-
-def with_counter_increments(
-    df: DataFrame,
-    value_col: str = "det_cor",
-    key: str = "doc_id",
-    order_col: str = "ts",
-    out_col: str = "increment",
-    reset_aware: bool = True,
-) -> DataFrame:
-    """Per-row counter increment under monotonic-counter semantics: the
-    rise since the previous sample, and on a reset (value < previous —
-    the process restarted and the counter rebooted at 0) the new value
-    itself counts as the increase (the Prometheus ``increase()`` rule).
-    First sample of a series contributes 0.
+def counter_increment_expr(v, prev):
+    """Per-row counter increment under monotonic-counter semantics, given
+    the value and its within-series predecessor: the rise since the
+    previous sample, and on a reset (value < previous — the process
+    restarted and the counter rebooted at 0) the new value itself counts
+    as the increase (the Prometheus ``increase()`` rule). First sample of
+    a series contributes 0.
 
     Computed BEFORE bucketing, so bucket sums of the increment column
     compose exactly through every tier (the per-row increment at a
     bucket boundary belongs to the row's own bucket, and a coarser
     bucket's delta is the plain sum of its finer buckets' deltas —
     unlike max-minus-min-per-bucket, which loses cross-boundary rises).
-    One window (exchange+sort per key), then it rides any rollup."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(key).orderBy(order_col)
-    prev = F.lag(value_col).over(w)
-    v = F.col(value_col)
-    return df.withColumn(out_col, counter_increment_expr(v, prev, reset_aware))
+    A column expression, so callers that already pay a window over
+    (key, order) (e.g. a row_number pass) pass ``lag(value)`` from that
+    window and ride the SAME exchange+sort (guide §2.4)."""
+    return (
+        F.when(prev.isNull() | v.isNull(), F.lit(0.0))
+        .when(v >= prev, v - prev)
+        .otherwise(v)
+    )

@@ -60,9 +60,20 @@ def merge_batch_tiers(
     raw batch; coarser tiers re-aggregate the finest tier's PARTIAL cells
     (cnt/sum/min/max are monoids, so partials of partials are exact) — the
     batch is scanned once regardless of tier count, and all pending tiers
-    merge in one write. Each store commits its own batch id, so a crash
-    between tier commits replays safely: finished tiers skip, unfinished
-    tiers apply. Returns how many tiers applied."""
+    merge in one write.
+
+    Cell-scoped MERGE: read ONLY the day-partitions the batch touches,
+    fold the batch's partial aggregates in, and atomically replace just
+    those partitions (``tables.commit_tables`` in its
+    ``overwrite_partitions`` form). Per-batch cost is O(touched cells),
+    not O(store size).
+
+    IDEMPOTENT under foreachBatch's at-least-once delivery: the batch id
+    rides each store's atomic snapshot commit (manifest ``extra``), and a
+    batch whose id is ≤ a store's last committed one is a retry of work
+    already folded in — that store skips it, or cnt/sum would double. A
+    crash between tier commits therefore replays safely: finished tiers
+    skip, unfinished tiers apply. Returns how many tiers applied."""
     from functools import reduce
 
     from .operators.rollup import rollup_from_rollup
@@ -89,31 +100,6 @@ def merge_batch_tiers(
     return len(pending)
 
 
-def merge_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    agg_path: str,
-    tier_seconds: int = 900,
-    value_col: str = "value",
-) -> bool:
-    """Cell-scoped MERGE of one micro-batch: read ONLY the day-partitions
-    the batch touches, fold the batch's partial aggregates in, and
-    atomically replace just those partitions (``tables.commit_tables`` in
-    its ``overwrite_partitions`` form). Per-batch cost is O(touched
-    cells), not O(store size).
-
-    IDEMPOTENT under foreachBatch's at-least-once delivery: the batch id
-    rides the atomic snapshot commit (manifest ``extra``), and a batch whose
-    id is ≤ the last committed one is a retry of work already folded in —
-    it must be skipped, or cnt/sum would double. Returns True if the batch
-    was applied, False if it was recognized as a replay."""
-    pending = _pending_stores({int(tier_seconds): agg_path}, batch_id)
-    if pending:
-        cells = rollup_points(batch_df, tier_seconds, value_col=value_col)
-        _merge_cells_into(batch_df.sparkSession, cells, batch_id, pending)
-    return bool(pending)
-
-
 def _pending_stores(stores: dict, batch_id: int) -> dict:
     """{tier: SnapshotTable} of the stores that have not yet folded
     ``batch_id`` in. Walks the snapshot lineage, not just the current
@@ -133,8 +119,8 @@ def _merge_cells_into(spark, cells: DataFrame, batch_id: int, stores: dict) -> N
     """Fold partial cells of several tiers into their stores ({tier:
     SnapshotTable}): one distinct (tier, day) collect, one read of the
     touched day-partitions of every store, one merge write, then one
-    commit per store carrying ``batch_id`` (see merge_batch for the
-    idempotence contract)."""
+    commit per store carrying ``batch_id`` (see merge_batch_tiers for
+    the idempotence contract)."""
     incoming = cells.withColumn(
         "day", F.date_format("bucket_start", "yyyy-MM-dd")
     ).persist()
@@ -169,14 +155,14 @@ def run_streaming_rollup(
     spark: SparkSession,
     input_dir: str,
     out_dir: str,
-    tier_seconds=900,
+    tier_seconds: tuple[int, ...],
     value_col: str = "value",
 ) -> None:
     """Drain new token files → rollup cells → merge into out_dir.
 
-    ``tier_seconds`` may be one tier (store ``agg``) or a tuple of tiers
-    (one store per tier, ``agg_{t}s`` — ALL retention tiers maintained
-    continuously from the same single scan of each micro-batch).
+    ``tier_seconds`` is a tuple of tiers: one store per tier,
+    ``agg_{t}s`` — ALL retention tiers maintained continuously from the
+    same single scan of each micro-batch.
 
     ``Trigger.AvailableNow`` processes everything pending then stops —
     the scheduled-job shape of "continuous aggregates maintained
@@ -188,7 +174,6 @@ def run_streaming_rollup(
     would replay ids from 0 and be skipped as duplicates — wipe both or
     neither.
     """
-    agg_path = os.path.join(out_dir, "agg")
     ckpt_path = os.path.join(out_dir, "_stream_checkpoint")
 
     stream = (
@@ -199,10 +184,7 @@ def run_streaming_rollup(
     long_df = explode_tokens(stream)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if isinstance(tier_seconds, (tuple, list, set)):
-            merge_batch_tiers(batch_df, batch_id, out_dir, tier_seconds, value_col)
-        else:
-            merge_batch(batch_df, batch_id, agg_path, tier_seconds, value_col)
+        merge_batch_tiers(batch_df, batch_id, out_dir, tier_seconds, value_col)
 
     q = (
         long_df.writeStream.foreachBatch(process_batch)

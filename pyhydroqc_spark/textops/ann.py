@@ -119,11 +119,11 @@ def cosine_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    exclude_self: bool = True,
 ) -> DataFrame:
     """Exact top-k by cosine: (query_id, neighbor_id, cosine, rank).
 
-    Ties broken by neighbor id ascending (deterministic across engines).
+    A query is never its own neighbor. Ties broken by neighbor id
+    ascending (deterministic across engines).
     """
     base = df.select(
         F.col(id_col).alias("neighbor_id"),
@@ -135,9 +135,9 @@ def cosine_topk(
         F.col(vec_col).alias("__q"),
         _norm(F.col(vec_col)).alias("__nq"),
     )
-    joined = base.crossJoin(F.broadcast(q))
-    if exclude_self:
-        joined = joined.where(F.col("neighbor_id") != F.col("query_id"))
+    joined = base.crossJoin(F.broadcast(q)).where(
+        F.col("neighbor_id") != F.col("query_id")
+    )
     scored = joined.withColumn(
         "cosine", _dot(F.col("__v"), F.col("__q")) / (F.col("__nv") * F.col("__nq"))
     )
@@ -151,28 +151,30 @@ def cosine_topk(
     )
 
 
-def hyperplanes(dim: int, n_planes: int = 12, seed: int = 42) -> list[list[float]]:
-    """Deterministic random hyperplanes for sign-projection LSH."""
-    rng = np.random.default_rng(seed)
-    return rng.normal(0, 1, (n_planes, dim)).tolist()
-
-
-def md5_planes(dim: int, n_planes: int, table: int) -> list[list[float]]:
-    """Hash-derived hyperplanes, uniform in [-1, 1): component (p, d) of
-    table t is md5_60(f"{t}|{p}|{d}") / 2^59 - 1. Replayable in any SQL
-    engine with md5 (DuckDB: ``CAST('0x'||substr(md5(k),1,15) AS BIGINT)``),
-    which makes the whole LSH pipeline oracle-checkable. Uniform (not
-    Gaussian) components are fine for sign-projection LSH."""
+def md5_planes(
+    df: DataFrame, vec_col: str, n_planes: int, n_tables: int, dim: int | None
+) -> list[list[list[float]]]:
+    """Hash-derived projection planes for sign-projection LSH, uniform in
+    [-1, 1): component (p, d) of table t is md5_60(f"{t}|{p}|{d}") / 2^59
+    - 1. Replayable in any SQL engine with md5 (DuckDB:
+    ``CAST('0x'||substr(md5(k),1,15) AS BIGINT)``), which makes the whole
+    LSH pipeline oracle-checkable. Uniform (not Gaussian) components are
+    fine for sign-projection LSH. ``dim=None`` probes the first vector."""
     import hashlib
 
+    if dim is None:
+        dim = len(df.select(vec_col).first()[0])
     return [
         [
-            int(hashlib.md5(f"{table}|{p}|{d}".encode()).hexdigest()[:15], 16)
-            / 2.0**59
-            - 1.0
-            for d in range(dim)
+            [
+                int(hashlib.md5(f"{t}|{p}|{d}".encode()).hexdigest()[:15], 16)
+                / 2.0**59
+                - 1.0
+                for d in range(dim)
+            ]
+            for p in range(n_planes)
         ]
-        for p in range(n_planes)
+        for t in range(n_tables)
     ]
 
 
@@ -307,14 +309,6 @@ def ivf_topk(
     )
 
 
-def _plane_tables(df, vec_col, n_planes, n_tables, seed, dim, plane_source):
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    if plane_source == "md5":
-        return [md5_planes(dim, n_planes, t) for t in range(n_tables)]
-    return [hyperplanes(dim, n_planes, seed + t) for t in range(n_tables)]
-
-
 def _with_buckets(d: DataFrame, tables, id_col: str, vec_col: str, idc: str) -> DataFrame:
     """(idc, table, bucket) — one row per (vector, hash table), ids only.
 
@@ -402,9 +396,7 @@ def cosine_dup_pairs(
     vec_col: str = "embedding",
     n_planes: int = 8,
     n_tables: int = 4,
-    seed: int = 42,
     dim: int | None = None,
-    plane_source: str = "gaussian",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine).
 
@@ -413,9 +405,9 @@ def cosine_dup_pairs(
     lesson: a self-join of the banded table scans and shuffles the
     signature subtree twice; groupBy + collect_list + an array-HOF
     upper-triangle expansion scans it once) — never the n² cross join.
-    Exact cosine rerank keeps pairs ≥ threshold. ``plane_source="md5"``
-    makes the candidate set replayable by a SQL oracle."""
-    tables = _plane_tables(df, vec_col, n_planes, n_tables, seed, dim, plane_source)
+    Exact cosine rerank keeps pairs ≥ threshold. The ``md5_planes``
+    make the candidate set replayable by a SQL oracle."""
+    tables = md5_planes(df, vec_col, n_planes, n_tables, dim)
     banded = _with_buckets(df, tables, id_col, vec_col, "id")
     # pin the bucket-stage parallelism (the simhash_candidates lesson):
     # banded rows are tiny by BYTES so AQE coalescing would serialize the
@@ -460,9 +452,7 @@ def lsh_topk(
     vec_col: str = "embedding",
     n_planes: int = 10,
     n_tables: int = 4,
-    seed: int = 42,
     dim: int | None = None,
-    plane_source: str = "gaussian",
 ) -> DataFrame:
     """Approximate top-k: candidates = vectors sharing a bucket with the
     query in ANY of ``n_tables`` hash tables, reranked exactly.
@@ -471,10 +461,10 @@ def lsh_topk(
     of a cross join — the piece that survives 10^9 rows.
 
     Pass ``dim`` explicitly to avoid a metadata job (falls back to a
-    ``.first()`` probe). ``plane_source="md5"`` uses hash-derived planes
-    (``md5_planes``) so an external SQL oracle can replay the bucketing.
+    ``.first()`` probe). The planes are hash-derived (``md5_planes``) so
+    an external SQL oracle can replay the bucketing.
     """
-    tables = _plane_tables(df, vec_col, n_planes, n_tables, seed, dim, plane_source)
+    tables = md5_planes(df, vec_col, n_planes, n_tables, dim)
 
     def with_buckets(d, idc):
         return _with_buckets(d, tables, id_col, vec_col, idc)
@@ -537,11 +527,7 @@ def train_pq_codebooks(
         frac_df = frac_df.sample(fraction=min(1.0, sample_n * 1.2 / n_total), seed=seed)
     X = np.array(frac_df.limit(sample_n).toPandas()[vec_col].tolist(), dtype=np.float64)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    return _subspace_kmeans(X, m, k, iters, np.random.default_rng(seed))
-
-
-def _subspace_kmeans(X: np.ndarray, m: int, k: int, iters: int, rng) -> list:
-    """Lloyd k-means per equal subspace of an in-memory sample → m books."""
+    rng = np.random.default_rng(seed)
     d = X.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
@@ -562,34 +548,6 @@ def _subspace_kmeans(X: np.ndarray, m: int, k: int, iters: int, rng) -> list:
                     cents[c] = S[int(d2[np.arange(len(S)), assign].argmax())]
         books.append(cents.tolist())
     return books
-
-
-def train_pq_codebooks_residual(
-    df: DataFrame,
-    centroids: list,
-    m: int = 8,
-    k: int = 256,
-    vec_col: str = "embedding",
-    sample_n: int = 10_000,
-    iters: int = 8,
-    seed: int = 42,
-) -> list:
-    """PQ codebooks trained on IVF RESIDUALS — the codebooks
-    ``ivfpq_index(encode="residual")`` actually quantizes. Codebooks fit
-    to raw vectors model the wrong distribution for residual encoding
-    (residuals are centered near zero with per-cell spread); training on
-    ``x_norm − centroid[cell]`` of the bounded sample is the FAISS IVFADC
-    recipe. Same driver-sample contract as ``train_pq_codebooks``."""
-    frac_df = df.select(vec_col)
-    n_total = frac_df.count()
-    if n_total > sample_n:
-        frac_df = frac_df.sample(fraction=min(1.0, sample_n * 1.2 / n_total), seed=seed)
-    X = np.array(frac_df.limit(sample_n).toPandas()[vec_col].tolist(), dtype=np.float64)
-    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    cents = np.asarray(centroids, dtype=np.float64)
-    d2 = (cents**2).sum(axis=1)[None, :] - 2.0 * (X @ cents.T)
-    R = X - cents[d2.argmin(axis=1)]
-    return _subspace_kmeans(R, m, k, iters, np.random.default_rng(seed))
 
 
 def pq_encode(
@@ -778,7 +736,6 @@ def ivfpq_index(
     codebooks: list,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    encode: str = "raw",
     n_assign: int = 1,
 ) -> DataFrame:
     """Build the IVFADC index: (id, vector) → (id, cell, codes) in ONE
@@ -787,12 +744,10 @@ def ivfpq_index(
 
     Vectors are L2-normalized first (cells partition the unit sphere, so
     coarse assignment ranks like cosine — same convention as
-    ``train_pq_codebooks``/``pq_encode``). ``encode="residual"`` quantizes
-    ``x − centroid[cell]`` instead of ``x`` (the FAISS IVFADC recipe —
-    residuals have much smaller spread per cell, so the same codebook
-    budget buys more recall; requires centroids trained in the normalized
-    space). ``encode="raw"`` keeps codes independent of the cell so a SQL
-    oracle can replay them with the ``pq_codebooks_hash`` recipe.
+    ``train_pq_codebooks``/``pq_encode``). Codes quantize ``x`` itself,
+    not the residual ``x − centroid[cell]``: they are independent of the
+    cell, so a SQL oracle can replay them with the ``pq_codebooks_hash``
+    recipe and a multi-assigned vector is encoded once.
 
     ``n_assign > 1`` replicates each vector into its n nearest cells
     (multi-assignment) — the standard mitigation for IVF's boundary
@@ -808,8 +763,6 @@ def ivfpq_index(
     import pandas as pd
     from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-    if encode not in ("raw", "residual"):
-        raise ValueError(f"encode must be 'raw' or 'residual', got {encode!r}")
     cents = np.asarray(centroids, dtype=np.float64)
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
     m = len(books)
@@ -830,32 +783,18 @@ def ivfpq_index(
             # cell id (stable argsort), matching ORDER BY d, c in SQL
             d2 = (cents**2).sum(axis=1)[None, :] - 2.0 * (X @ cents.T)
             ranked = np.argsort(d2, axis=1, kind="stable")[:, :n_assign]
-
-            def encode_for(cell):
-                base = X - cents[cell] if encode == "residual" else X
-                codes = np.empty((len(X), m), dtype=np.int32)
-                for j, bk in enumerate(books):
-                    S = base[:, j * sd : (j + 1) * sd]
-                    dj = (bk**2).sum(axis=1)[None, :] - 2.0 * (S @ bk.T)
-                    codes[:, j] = dj.argmin(axis=1)
-                return codes
-
-            frames = []
-            raw_codes = None  # raw codes are cell-independent: encode once
-            for a in range(n_assign):
-                cell = ranked[:, a].astype(np.int32)
-                if encode == "raw":
-                    if raw_codes is None:
-                        raw_codes = encode_for(cell)
-                    codes = raw_codes
-                else:
-                    codes = encode_for(cell)
-                frames.append(
-                    pd.DataFrame(
-                        {id_col: pdf[id_col].values, "cell": cell,
-                         "codes": list(codes)}
-                    )
+            codes = np.empty((len(X), m), dtype=np.int32)
+            for j, bk in enumerate(books):
+                S = X[:, j * sd : (j + 1) * sd]
+                dj = (bk**2).sum(axis=1)[None, :] - 2.0 * (S @ bk.T)
+                codes[:, j] = dj.argmin(axis=1)
+            frames = [
+                pd.DataFrame(
+                    {id_col: pdf[id_col].values, "cell": ranked[:, a].astype(np.int32),
+                     "codes": list(codes)}
                 )
+                for a in range(n_assign)
+            ]
             yield frames[0] if n_assign == 1 else pd.concat(
                 frames, ignore_index=True
             )
@@ -874,7 +813,6 @@ def ivfpq_topk(
     full_vectors: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    encode: str = "raw",
 ) -> DataFrame:
     """IVFADC top-k: probe-cell-pruned ADC scan over PQ codes → exact
     rerank. This composes the two scale levers the r4 surfaces carried
@@ -889,15 +827,12 @@ def ivfpq_topk(
     O(partitions × queries × refine) rows; the exact rerank joins
     ``refine`` candidate ids back to full vectors. No cross join anywhere.
 
-    ``encode`` must match the value used in ``ivfpq_index`` — for
-    ``"residual"`` the per-query LUT is built per probed cell
-    (``||(q − centroid)_sub − code||²``), still driver-tiny:
-    nq × nprobe × m × k doubles."""
+    Codes are cell-independent (``ivfpq_index``), so each query has one
+    driver-tiny ADC lookup table of m × k doubles for all its probed
+    cells."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-    if encode not in ("raw", "residual"):
-        raise ValueError(f"encode must be 'raw' or 'residual', got {encode!r}")
     cents = np.asarray(centroids, dtype=np.float64)
     books = [np.asarray(b, dtype=np.float64) for b in codebooks]
     m = len(books)
@@ -914,22 +849,13 @@ def ivfpq_topk(
     order = np.argsort(qd2, axis=1, kind="stable")[:, :nprobe]
     probe_pairs = [(qi, int(c)) for qi in range(len(Q)) for c in order[qi]]
 
-    # per-(query, probed-cell) ADC lookup tables, driver-side and tiny
-    def lut_for(q_vec):
-        return np.stack(
-            [
-                ((q_vec[j * sd : (j + 1) * sd][None, :] - books[j]) ** 2).sum(axis=1)
-                for j in range(m)
-            ]
-        )  # (m, k)
-
-    if encode == "residual":
-        luts = {
-            (qi, c): lut_for(Q[qi] - cents[c]) for qi, c in probe_pairs
-        }
-    else:
-        base_lut = {qi: lut_for(Q[qi]) for qi in range(len(Q))}
-        luts = {(qi, c): base_lut[qi] for qi, c in probe_pairs}
+    # per-query ADC lookup tables (m, k), driver-side and tiny
+    luts = [
+        np.stack(
+            [((q[j * sd : (j + 1) * sd][None, :] - books[j]) ** 2).sum(axis=1) for j in range(m)]
+        )
+        for q in Q
+    ]
 
     # cell-membership filter prunes the scan (partition pruning when the
     # index is written partitioned by cell); NO probe join — each index
@@ -970,7 +896,7 @@ def ivfpq_topk(
                 codes_c = codes[sel]
                 ids_c = ids[sel]
                 # (len(qlist), m, k) LUT stack → dist (len(qlist), n_c)
-                lut3 = np.stack([luts[(qi, int(c))] for qi in qlist])
+                lut3 = np.stack([luts[qi] for qi in qlist])
                 dist = lut3[:, jix[None, :], codes_c].sum(axis=2)
                 # keep only each query's best `refine` of THIS cell — the
                 # per-batch merge below re-refines across cells. Self is
@@ -1022,7 +948,6 @@ def ivfpq_dup_pairs(
     n_assign: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    encode: str = "raw",
     block: int = 2048,
 ) -> DataFrame:
     """Corpus-vs-corpus embedding near-dup pairs THROUGH the compressed
@@ -1047,9 +972,7 @@ def ivfpq_dup_pairs(
     surviving candidates. Per-cell work is O(n_c²·m) on uint8 codes in
     row blocks of ``block`` (memory O(block·n_c)); at 10^9 vectors size
     ``nlist`` ≈ √N so cells stay ~√N and the quadratic term stays flat
-    per cell. For same-cell pairs the centroid term cancels, so the SAME
-    LUT serves ``encode="residual"`` (reconstruction difference is the
-    sub-codeword difference).
+    per cell.
 
     Cites the FAISS IVFADC construction (Jégou et al., "Product
     Quantization for Nearest Neighbor Search", TPAMI 2011, §V) — SDC
@@ -1072,8 +995,7 @@ def ivfpq_dup_pairs(
     )  # (m, k, k)
 
     idx = ivfpq_index(
-        df, centroids, codebooks, id_col=id_col, vec_col=vec_col,
-        encode=encode, n_assign=n_assign,
+        df, centroids, codebooks, id_col=id_col, vec_col=vec_col, n_assign=n_assign
     )
 
     id_type = df.schema[id_col].dataType
@@ -1125,8 +1047,7 @@ def ivfpq_dup_pairs(
         .groupBy("cell")
         .applyInPandas(cell_pairs, schema=pair_schema)
         # multi-assigned pairs co-occur in up to n_assign shared cells:
-        # dedup on the pair key (min SDC — identical for raw encode,
-        # tightest cell's estimate for residual)
+        # dedup on the pair key (the SDC is the same in every cell)
         .groupBy("id_a", "id_b")
         .agg(F.min("sdc").alias("sdc"))
     )

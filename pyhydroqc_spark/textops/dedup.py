@@ -12,7 +12,7 @@ whole-stage codegen; the only shuffles are the ones the semantics demand):
   noise. AQE skew-join handles the rest.
 * ``minhash_lsh``     — shingle→minhash→band→bucket-join: candidate pairs
   only for docs sharing a band bucket; cost is O(candidates), not O(n²).
-* ``simhash``         — 64-bit near-dup signature; hamming-ball pairing via
+* ``simhash``         — 60-bit near-dup signature; hamming-ball pairing via
   band buckets on signature quarters.
 """
 
@@ -34,16 +34,8 @@ def md5_60(col):
     Identical in Spark (``conv(substring(md5(x),1,15),16,10)``) and DuckDB
     (``CAST('0x' || substr(md5(x),1,15) AS BIGINT)``) — used by the oracle
     path so DuckDB can replay minhash/simhash/fingerprint bit-for-bit.
-    xxhash64 stays the default (one JVM intrinsic vs md5+hex-parse)."""
+    It is the one base hash of every text operator. md5(NULL) is NULL."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _hash64(col, hash_fn: str = "xxhash64"):
-    if hash_fn == "xxhash64":
-        return F.xxhash64(col)
-    if hash_fn == "md5":
-        return md5_60(col)
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
 
 
 def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -389,7 +381,6 @@ def minhash_signatures(
     text_col: str = "text",
     num_perm: int = 32,
     shingle_k: int = 5,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """(id, signature array<long>): min over permuted shingle hashes.
 
@@ -399,8 +390,8 @@ def minhash_signatures(
     num_perm multiply-adds per shingle instead of num_perm hashes. The
     base-hash pass and the per-permutation mins are separated by a
     projection so the hash array is computed once, not CSE'd by luck.
-    ``hash_fn="md5"`` uses the portable 60-bit md5 base hash so an external
-    SQL engine replays the signatures bit-for-bit (constants from
+    The base hash is the portable 60-bit ``md5_60`` so an external SQL
+    engine replays the signatures bit-for-bit (constants from
     ``minhash_params`` are md5-derived, regenerable anywhere).
 
     Physical shape: explode the shingle hashes and compute the
@@ -418,7 +409,7 @@ def minhash_signatures(
     # at 200k docs)
     hs = F.transform(
         F.sequence(F.lit(1), F.greatest(F.lit(1), n - (shingle_k - 1))),
-        lambda i: F.pmod(_hash64(c.substr(i, F.lit(shingle_k)), hash_fn), F.lit(MERSENNE31)),
+        lambda i: F.pmod(md5_60(c.substr(i, F.lit(shingle_k))), F.lit(MERSENNE31)),
     )
     exploded = df.select(
         F.col(id_col).alias("id"), F.explode_outer(hs).alias("__h")
@@ -443,9 +434,7 @@ def minhash_signatures(
     return counted.select("id", sig.alias("signature"))
 
 
-def banded_buckets(
-    sig_df: DataFrame, bands: int = 8, hash_fn: str = "xxhash64"
-) -> DataFrame:
+def banded_buckets(sig_df: DataFrame, bands: int = 8) -> DataFrame:
     """(id, band, bucket): hash each signature band to its LSH bucket.
 
     Band b covers signature positions [floor(b·n/bands), floor((b+1)·n/bands))
@@ -458,7 +447,7 @@ def banded_buckets(
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bidx: _hash64(
+                lambda bidx: md5_60(
                     F.array_join(
                         F.transform(
                             F.slice(
@@ -470,16 +459,13 @@ def banded_buckets(
                         ),
                         ",",
                     ),
-                    hash_fn,
                 ),
             )
         ).alias("band", "bucket"),
     )
 
 
-def minhash_candidates(
-    sig_df: DataFrame, bands: int = 8, hash_fn: str = "xxhash64"
-) -> DataFrame:
+def minhash_candidates(sig_df: DataFrame, bands: int = 8) -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate pairs
     (id_a < id_b under the id type's natural ordering).
 
@@ -489,7 +475,7 @@ def minhash_candidates(
     it. Bucket member lists are near-dup-sized by construction; a
     pathological hot bucket shows up as one big task, the cue to raise
     ``bands`` (more, narrower buckets), not to cap silently."""
-    banded = banded_buckets(sig_df, bands, hash_fn)
+    banded = banded_buckets(sig_df, bands)
     # pin the bucket-stage parallelism (the simhash/cosine_dup lesson):
     # banded rows are tiny by BYTES so AQE coalescing would serialize the
     # CPU-quadratic in-bucket enumeration onto one task
@@ -522,12 +508,11 @@ def simhash(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = 64,
-    hash_fn: str = "xxhash64",
+    bits: int = 60,
 ) -> DataFrame:
     """SimHash over distinct words: bit j of the signature is the sign of
-    Σ_w (±1 depending on bit j of hash(w)). ``hash_fn="md5"`` gives the
-    portable 60-bit hash (use bits<=60 with it) replayable in plain SQL.
+    Σ_w (±1 depending on bit j of ``md5_60(w)``), a portable 60-bit hash
+    (so bits<=60) replayable in plain SQL.
 
     Physical shape: explode the distinct words and compute the per-bit ±1
     sums as ``bits`` conditional SUM aggregates in ONE hash aggregation —
@@ -540,15 +525,14 @@ def simhash(
     O(words). The per-bit sums and the signature fold are SQL text: as
     Column-API trees they cost ~11k py4j round trips to build on the
     driver, as text about 500."""
-    if hash_fn == "md5" and bits > 60:
+    if bits > 60:
         raise ValueError("md5 hash provides 60 bits; pass bits<=60")
     words = F.array_distinct(_words(text_col))
-    w = F.col("__w")
-    # xxhash64(NULL) is its seed, not NULL: hash only real words so the
-    # NULL word explode_outer emits for a zero-word doc is not counted
+    # md5_60(NULL) is NULL, so the NULL word explode_outer emits for a
+    # zero-word doc is not counted
     exploded = df.select(
         F.col(id_col).alias("id"), F.explode_outer(words).alias("__w")
-    ).select("id", F.when(w.isNotNull(), _hash64(w, hash_fn)).alias("__hv"))
+    ).select("id", md5_60(F.col("__w")).alias("__hv"))
     # acc_j = Σ ±1 = 2·(count of words with bit j set) − n, so the sign
     # test acc_j > 0 becomes 2·c_j > n. explode_outer keeps zero-word docs
     # (n = 0 → all bits fail the test → signature 0).
@@ -755,7 +739,6 @@ def _marked_spans(
     n: int,
     id_col: str,
     text_col: str,
-    hash_fn: str,
     skew_guard: bool = True,
     guard_pct: int = 1,
     guard_min_count: int = 8,
@@ -795,7 +778,7 @@ def _marked_spans(
         return src.select("id", F.posexplode(gram_arr).alias("pos0", "gram")).select(
             "id",
             (F.col("pos0") + 1).alias("pos"),  # 1-based start word index
-            _hash64(F.col("gram"), hash_fn).alias("__gh"),
+            md5_60(F.col("gram")).alias("__gh"),
         )
 
     occ = occurrences(base)
@@ -844,7 +827,6 @@ def dup_spans(
     n: int = 12,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "xxhash64",
     skew_guard: bool = True,
 ) -> DataFrame:
     """(id, n_words, n_dup_spans, dup_words, dup_word_frac): per-document
@@ -872,7 +854,7 @@ def dup_spans(
     materializing anything per gram. The span-merge window partitions by
     doc — bounded by document length.
     """
-    _base, marked = _marked_spans(df, n, id_col, text_col, hash_fn, skew_guard)
+    _base, marked = _marked_spans(df, n, id_col, text_col, skew_guard)
 
     w_ord = Window.partitionBy("id").orderBy("pos")
     prev_end = F.max("end").over(w_ord.rowsBetween(Window.unboundedPreceding, -1))

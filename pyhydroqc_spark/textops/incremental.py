@@ -25,10 +25,7 @@ Physical shape per batch — the store is NEVER shuffled:
 1. signature + banding of the new batch only (one pass over batch text);
 2. candidate pairs vs the store: the batch's bucket rows BROADCAST
    against the store's bucket table, which therefore streams map-side —
-   a linear scan of small rows, no shuffle, no sort (set
-   ``broadcast_batch=False`` for batches too large to broadcast; the
-   join then shuffles both sides — still proportional to store SIZE
-   only in the one hash-exchange, never a sort);
+   a linear scan of small rows, no shuffle, no sort;
 3. signature verification: candidate ids (near-dup-sized) broadcast
    against the store's signature table — again a map-side stream;
 4. in-batch pairs via the ordinary ``minhash_candidates`` path;
@@ -90,10 +87,8 @@ def _decide(
     num_perm: int,
     bands: int,
     shingle_k: int,
-    hash_fn: str,
     id_col: str,
     text_col: str,
-    broadcast_batch: bool,
 ):
     """Core decision pass: returns (decisions, sig_new, b_new, bounds)
     with decisions fully materialized and ``sig_new`` still persisted
@@ -103,9 +98,9 @@ def _decide(
     spark = new_docs.sparkSession
     sig_new = minhash_signatures(
         new_docs, id_col=id_col, text_col=text_col,
-        num_perm=num_perm, shingle_k=shingle_k, hash_fn=hash_fn,
+        num_perm=num_perm, shingle_k=shingle_k,
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    b_new = banded_buckets(sig_new, bands=bands, hash_fn=hash_fn)
+    b_new = banded_buckets(sig_new, bands=bands)
 
     # id-order contract: decisions can never be retracted, so every id in
     # this batch must exceed everything already stored
@@ -124,10 +119,9 @@ def _decide(
     old_b = store.read_buckets(spark)
     matches = []
     if old_b is not None:
-        probe = F.broadcast(b_new) if broadcast_batch else b_new
         cand_old = (
             old_b.withColumnRenamed("id", "id_a")
-            .join(probe.withColumnRenamed("id", "id_b"), ["band", "bucket"])
+            .join(F.broadcast(b_new).withColumnRenamed("id", "id_b"), ["band", "bucket"])
             # id_a < id_b is a no-op in a consistent store (everything
             # stored is smaller by the id-order contract) but shields a
             # replay after an interrupted commit, where the batch can see
@@ -158,7 +152,7 @@ def _decide(
         matches.append(verified_old)
 
     # --- in-batch candidates (id_a < id_b already guaranteed)
-    cand_new = minhash_candidates(sig_new, bands=bands, hash_fn=hash_fn)
+    cand_new = minhash_candidates(sig_new, bands=bands)
     verified_new = (
         cand_new.join(
             sig_new.select(F.col("id").alias("id_a"), F.col("signature").alias("__sa")),
@@ -201,23 +195,18 @@ def incremental_dedup(
     num_perm: int = 32,
     bands: int = 8,
     shingle_k: int = 5,
-    hash_fn: str = "xxhash64",
     id_col: str = "doc_id",
     text_col: str = "text",
-    update_store: bool = True,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """(id, keep, dup_of): the batch's keep/drop decisions against
     everything the store has seen plus the batch itself; ``dup_of`` is
     the smallest verified-duplicate neighbor id (NULL when kept).
-    Appends the batch's state to the store (``update_store=False`` for
-    a dry run). The returned frame is small (one row per batch doc) and
+    Appends the batch's state to the store. The returned frame is small (one row per batch doc) and
     fully decided at return time."""
     decisions, sig_new, b_new, bounds = _decide(
-        new_docs, store, threshold, num_perm, bands, shingle_k,
-        hash_fn, id_col, text_col, broadcast_batch,
+        new_docs, store, threshold, num_perm, bands, shingle_k, id_col, text_col
     )
-    if update_store and bounds["n"] > 0:
+    if bounds["n"] > 0:
         tag = f"ids_le_{bounds['hi']}"
         # buckets FIRST, sigs (carrying the max_id high-water mark) LAST.
         # The reverse order could crash after the sigs append: max_id

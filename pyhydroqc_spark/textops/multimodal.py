@@ -2,8 +2,7 @@
 
 The Spark-side machinery is real and tested: typed schema, Arrow-batched
 ``mapInPandas`` decode/feature/resize/frame-sample kernels with bounded
-batch memory. Codecs (``decode="real"``)
-are REAL for the lib-free formats — P6 PPM, uncompressed 24-bit BMP, and
+batch memory. Codecs are REAL for the lib-free formats — P6 PPM, uncompressed 24-bit BMP, and
 8-bit PNG images (PNG via stdlib ``zlib`` + numpy: chunk walk, inflate,
 all five scanline filters, gray/RGB/palette/alpha color types — no PIL)
 with nearest-neighbor resize and 8×8 grayscale features, BASELINE and
@@ -16,8 +15,7 @@ real JPEG per frame) → frame-sampled mean image features — and GIF
 (textops/gif.py: full variable-width LZW + interlacing, pure Python).
 The remaining formats (MP3, H.264 video) require ffmpeg, absent from
 this container: those branches raise NotImplementedError for a deployment
-to swap in. ``decode="fake"`` keeps the deterministic content-hash
-stand-in for plumbing tests.
+to swap in.
 
 Schema convention::
 
@@ -29,7 +27,6 @@ Schema convention::
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import numpy as np
@@ -444,29 +441,20 @@ def real_decode(payload: bytes, kind: str) -> np.ndarray:
         return video_features(decode_avi(payload)[0])
     raise NotImplementedError(
         f"no lib-free codec for this {kind} payload (magic={payload[:4]!r}); "
-        "deploy with PIL/ffmpeg or use decode='fake' for the stand-in"
+        "deploy with PIL/ffmpeg"
     )
-
-
-def fake_decode(payload: bytes, kind: str) -> np.ndarray:
-    """Deterministic stand-in: features seeded from the content digest, so
-    the plumbing (batching, schema, ordering) is fully testable."""
-    seed = int.from_bytes(hashlib.sha256(payload).digest()[:8], "big") % (2**32)
-    rng = np.random.default_rng(seed)
-    return rng.normal(0, 1, FEATURE_DIM).astype(np.float32)
 
 
 def extract_features(
     df: DataFrame,
-    decode: str = "fake",
     id_col: str = "media_id",
     media_col: str = "media",
     kind_col: str = "kind",
     batch_rows: int = 256,
 ) -> DataFrame:
     """binary → array<float> features via mapInPandas (one Arrow batch per
-    call; memory bounded by batch_rows × payload size)."""
-    dec = fake_decode if decode == "fake" else real_decode
+    call; memory bounded by batch_rows × payload size); ``real_decode``
+    per payload."""
     schema = StructType(
         [
             StructField("media_id", StringType(), False),
@@ -479,7 +467,7 @@ def extract_features(
             for start in range(0, len(pdf), batch_rows):
                 chunk = pdf.iloc[start : start + batch_rows]
                 feats = [
-                    dec(bytes(m), k).tolist()
+                    real_decode(bytes(m), k).tolist()
                     for m, k in zip(chunk[media_col], chunk[kind_col])
                 ]
                 yield pd.DataFrame(

@@ -3,6 +3,7 @@ token counting, document fingerprinting. All pure column expressions."""
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 # tiny deterministic marker lexicons (public common-word lists)
@@ -119,12 +120,11 @@ def fingerprint(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 8,
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Winnowing-style fingerprint: min hash over character k-gram shingles
-    (order-insensitive, whitespace-normalized). ``hash_fn="md5"`` uses the
-    portable 60-bit md5 hash so plain-SQL engines can replay it."""
-    from .dedup import _hash64
+    (order-insensitive, whitespace-normalized). The hash is the portable
+    60-bit ``md5_60`` so plain-SQL engines can replay it."""
+    from .dedup import md5_60
 
     c = F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")
     n = F.length(c)
@@ -134,7 +134,7 @@ def fingerprint(
     )
     return df.select(
         F.col(id_col).alias("id"),
-        F.array_min(F.transform(sh, lambda g: _hash64(g, hash_fn))).alias("fingerprint"),
+        F.array_min(F.transform(sh, md5_60)).alias("fingerprint"),
     )
 
 
@@ -142,7 +142,6 @@ def ngram_perplexity(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_model: bool = True,
 ) -> DataFrame:
     """(id, log2_ppl): per-doc bigram-LM perplexity under a model trained
     on the CORPUS ITSELF — the classic statistical quality signal for
@@ -161,11 +160,9 @@ def ngram_perplexity(
     and the vocabulary size V is a 1-row broadcast aggregate over c2's
     keys — so at 100 TB there are two full-corpus passes, not five.
     Catalyst expands every *reference* to c2 back to its full subtree
-    (plans are trees, not DAGs), so with ``cache_model=True`` (default)
-    the bigram table — the model, NOT the corpus — is persisted
-    memory-and-disk: its one corpus pass runs once and c1/V/model read
-    the cache. Pass False for a fully-lazy, side-effect-free plan that
-    re-derives c2 per reference (fine for small corpora). The "model"
+    (plans are trees, not DAGs), so the bigram table — the model, NOT
+    the corpus — is persisted memory-and-disk: its one corpus pass runs
+    once and c1/V/model read the cache. The "model"
     never leaves the cluster — at 10^9 docs it is a distributed table,
     not a driver artifact. Docs with <2 words have no bigrams and come
     back with NULL ``log2_ppl`` (reinstated by a left join on the input
@@ -185,11 +182,11 @@ def ngram_perplexity(
             F.col("__cur").alias("cur"),
         )
     )
-    c2 = pairs.groupBy("prev", "cur").agg(F.count("*").alias("c2"))
-    if cache_model:
-        from pyspark import StorageLevel
-
-        c2 = c2.persist(StorageLevel.MEMORY_AND_DISK)
+    c2 = (
+        pairs.groupBy("prev", "cur")
+        .agg(F.count("*").alias("c2"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
     # context counts from c2, NOT from a second pairs scan: every
     # occurrence of context w is inside exactly one (w, ·) bigram count
     c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))

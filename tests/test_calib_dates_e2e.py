@@ -20,7 +20,15 @@ LRO_DIR = "/root/reference/LRO_data"
 MS2017 = f"{LRO_DIR}/MS2017.csv"
 pytestmark = pytest.mark.skipif(not os.path.exists(MS2017), reason="LRO fixture absent")
 
-REF = load_reference()
+
+@pytest.fixture(scope="module")
+def REF():
+    """The pyhydroqc reference modules; the tests here skip with this
+    reason when the checkout is not importable."""
+    try:
+        return load_reference()
+    except ImportError as e:
+        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
 
 
 def _pandas_calib(sensor: str) -> pd.DataFrame:
@@ -48,7 +56,7 @@ def test_load_calib_dates_real_files(spark, sensor):
 
 
 @pytest.fixture(scope="module")
-def ms_ph(spark):
+def ms_ph(spark, REF):
     """MS2017 ph series: engine-loaded Spark frame + the identical reference
     pandas series (ingest parity is separately tested in test_sources_lro)."""
     long_df = (
@@ -77,7 +85,7 @@ def calib_2017(ms_ph):
     )
 
 
-def test_find_gaps_parity_on_real_calib_dates(spark, ms_ph, calib_2017):
+def test_find_gaps_parity_on_real_calib_dates(spark, REF, ms_ph, calib_2017):
     long_df, ser = ms_ph
     assert len(calib_2017) > 0
     cands = spark.createDataFrame(
@@ -99,7 +107,7 @@ def test_find_gaps_parity_on_real_calib_dates(spark, ms_ph, calib_2017):
         assert pd.Timestamp(row["end"]) == ref_end, end_ts
 
 
-def test_drift_correct_chain_parity_on_real_gaps(spark, ms_ph, calib_2017):
+def test_drift_correct_chain_parity_on_real_gaps(spark, REF, ms_ph, calib_2017):
     """Full FindCompareGaps drift loop: start_k = end_{k-1} (first −30 days),
     chained lin_drift_cor with replace=True (FindCompareGaps.py:110-121)."""
     long_df, ser = ms_ph

@@ -153,12 +153,12 @@ def test_streaming_merge_survives_all_sentinel_batch(spark, tmp_path):
     spark.createDataFrame(
         [("a", [30000] * 10 + [31000] * 10, 20, "s")], TOK_SCHEMA
     ).write.mode("append").parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(900,))
     spark.createDataFrame(
         [("gap", [-1] * 20, 20, "s")], TOK_SCHEMA
     ).write.mode("append").parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir)
-    agg = SnapshotTable(os.path.join(out_dir, "agg")).read(spark).toPandas()
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(900,))
+    agg = SnapshotTable(os.path.join(out_dir, "agg_900s")).read(spark).toPandas()
     a = agg[agg["doc_id"] == "a"]
     assert int(a["cnt"].sum()) == 20
     g = agg[agg["doc_id"] == "gap"]

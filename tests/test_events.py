@@ -114,6 +114,28 @@ def test_group_bools_hypothesis(spark, REF, flags):
     assert got == exp
 
 
+def _group_bools_np(flags):
+    """Group index 0,1,2,… per series: a cumulative sum of change points
+    (a row whose flag differs from the previous row's)."""
+    f = np.asarray(flags, dtype=int)
+    return np.cumsum(np.r_[0, f[1:] != f[:-1]]).tolist()
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.lists(st.booleans(), min_size=1, max_size=50), st.lists(st.booleans(), max_size=20))
+def test_group_bools_matches_cumsum_of_change_points(spark, flags, other):
+    by_doc = {"x": [int(f) for f in flags]}
+    if other:
+        by_doc["y"] = [int(f) for f in other]
+    got = (
+        events.group_bools(_to_df(spark, by_doc), "flag", "grp")
+        .orderBy("doc_id", "pos")
+        .toPandas()
+    )
+    for d, fl in by_doc.items():
+        assert got[got.doc_id == d]["grp"].tolist() == _group_bools_np(fl), d
+
+
 def test_run_lengths(spark):
     df = _to_df(spark, {"x": [0, 1, 1, 0, 1, 1, 1]})
     out = events.run_ids(df, "flag", "rid")

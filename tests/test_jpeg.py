@@ -152,7 +152,7 @@ def test_jpeg_through_spark_kernel(spark, smooth_img):
         pd.DataFrame(rows, columns=["media_id", "media", "kind"])
     )
     feats = (
-        multimodal.extract_features(df, decode="real")
+        multimodal.extract_features(df)
         .toPandas()
         .set_index("media_id")["features"]
     )

@@ -1,4 +1,5 @@
-"""Parity: compare_events / metrics / event_metrics vs the reference."""
+"""Parity: compare_events / metrics / event_metrics vs the reference, and
+the same operators against each other and plain numpy counts without it."""
 
 import warnings
 
@@ -9,7 +10,16 @@ import pytest
 from pyhydroqc_spark.operators import events as ev_ops, metrics
 from tests.reference_oracle import load_reference
 
-REF = load_reference()
+
+@pytest.fixture(scope="module")
+def REF():
+    """The pyhydroqc reference modules. Only the reference-parity tests use
+    them; they skip when the checkout is not importable, and the
+    kernel-vs-SQL and numpy-count comparisons run without it."""
+    try:
+        return load_reference()
+    except ImportError as e:
+        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
 
 
 def _mk_events(spark, labeled, detected):
@@ -28,7 +38,7 @@ def _mk_events(spark, labeled, detected):
     return df, pdf
 
 
-def _ref_compare(pdf, wf=1):
+def _ref_compare(REF, pdf, wf=1):
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
         la = REF["anomaly_utilities"].anomaly_events(pdf["labeled_anomaly"], wf=1)
@@ -44,8 +54,11 @@ def _ref_compare(pdf, wf=1):
         return REF["anomaly_utilities"].compare_events(rdf, wf=wf)
 
 
-@pytest.mark.parametrize("seed,n,pl,pdet", [(0, 120, 0.08, 0.1), (1, 200, 0.15, 0.02), (2, 80, 0.3, 0.3)])
-def test_compare_events_parity(spark, seed, n, pl, pdet):
+FLAG_CASES = [(0, 120, 0.08, 0.1), (1, 200, 0.15, 0.02), (2, 80, 0.3, 0.3)]
+
+
+@pytest.mark.parametrize("seed,n,pl,pdet", FLAG_CASES)
+def test_compare_events_parity(spark, REF, seed, n, pl, pdet):
     rng = np.random.default_rng(seed)
     labeled = rng.random(n) < pl
     detected = rng.random(n) < pdet
@@ -57,18 +70,80 @@ def test_compare_events_parity(spark, seed, n, pl, pdet):
         .toPandas()["conf_mtx"]
         .tolist()
     )
-    exp = _ref_compare(pdf)["conf_mtx"].tolist()
+    exp = _ref_compare(REF, pdf)["conf_mtx"].tolist()
     assert got == exp
 
 
-def test_point_metrics_parity(spark):
+@pytest.mark.parametrize("seed,n,pl,pdet", FLAG_CASES)
+@pytest.mark.parametrize("wf", [0, 1, 2])
+def test_compare_events_kernel_equals_sql_on_random_flags(spark, seed, n, pl, pdet, wf):
+    """The grouped-map kernel and the Window-expression form agree row for
+    row on events built by ``anomaly_events`` from seeded random flags."""
+    rng = np.random.default_rng(seed)
+    df, _ = _mk_events(spark, rng.random(n) < pl, rng.random(n) < pdet)
+
+    def conf(fn):
+        return fn(df, wf=wf).orderBy("pos").toPandas()["conf_mtx"].tolist()
+
+    assert conf(metrics.compare_events) == conf(metrics.compare_events_sql)
+
+
+def _div(a, b):
+    return a / b if b else None
+
+
+def test_point_and_event_metrics_equal_numpy_counts(spark):
+    """point_metrics counts each confusion category over all rows;
+    event_metrics counts the rows where a series' category changes into
+    tp/fp/fn (the first row compares against "tn"). Both equal plain
+    numpy counts over the collected conf_mtx column, ratios included."""
+    rng = np.random.default_rng(8)
+    n = 250
+    rows = []
+    for d in ("a", "b"):
+        labeled = rng.random(n) < 0.1
+        detected = labeled & (rng.random(n) < 0.7) | (rng.random(n) < 0.05)
+        df, _ = _mk_events(spark, labeled, detected)
+        cm = metrics.compare_events(df, wf=1).toPandas().assign(doc_id=d)
+        rows.append(cm)
+    pdf = pd.concat(rows, ignore_index=True).sort_values(["doc_id", "pos"])
+    cm_df = spark.createDataFrame(pdf[["doc_id", "pos", "conf_mtx"]])
+
+    cat = pdf["conf_mtx"].to_numpy()
+    tp, fp, fn, tn = (int((cat == c).sum()) for c in ("tp", "fp", "fn", "tn"))
+    prc, rcl = _div(tp, tp + fp), _div(tp, tp + fn)
+    got = metrics.point_metrics(cm_df).toPandas().iloc[0]
+    assert (got["tp"], got["fp"], got["fn"], got["tn"]) == (tp, fp, fn, tn)
+    np.testing.assert_allclose(
+        [got["prc"], got["npv"], got["acc"], got["rcl"], got["f1"], got["f2"]],
+        [prc, _div(tn, tn + fn), _div(tp + tn, tp + tn + fp + fn), rcl,
+         _div(2.0 * prc * rcl, prc + rcl), _div(5.0 * tp, 5.0 * tp + 4.0 * fn + fp)],
+        atol=1e-12,
+    )
+
+    prev = pdf.groupby("doc_id")["conf_mtx"].shift(1).fillna("tn").to_numpy()
+    new = cat != prev
+    etp, efp, efn = (int((new & (cat == c)).sum()) for c in ("tp", "fp", "fn"))
+    assert min(etp, efp, efn) > 0  # every counted category occurs
+    got = metrics.event_metrics(cm_df).toPandas().iloc[0]
+    assert (got["tp"], got["fp"], got["fn"]) == (etp, efp, efn)
+    eprc, ercl = _div(etp, etp + efp), _div(etp, etp + efn)
+    np.testing.assert_allclose(
+        [got["prc"], got["rcl"], got["f1"], got["f2"]],
+        [eprc, ercl, _div(2.0 * eprc * ercl, eprc + ercl),
+         _div(5.0 * etp, 5.0 * etp + 4.0 * efn + efp)],
+        atol=1e-12,
+    )
+
+
+def test_point_metrics_parity(spark, REF):
     rng = np.random.default_rng(5)
     labeled = rng.random(300) < 0.1
     detected = labeled & (rng.random(300) < 0.8) | (rng.random(300) < 0.05)
     df, pdf = _mk_events(spark, labeled, detected)
     cm = metrics.compare_events(df, wf=1)
     got = metrics.point_metrics(cm).toPandas().iloc[0]
-    rdf = _ref_compare(pdf)
+    rdf = _ref_compare(REF, pdf)
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
         exp = REF["anomaly_utilities"].metrics(rdf)
@@ -83,14 +158,14 @@ def test_point_metrics_parity(spark):
     )
 
 
-def test_event_metrics_parity(spark):
+def test_event_metrics_parity(spark, REF):
     rng = np.random.default_rng(6)
     labeled = rng.random(300) < 0.12
     detected = labeled & (rng.random(300) < 0.7) | (rng.random(300) < 0.04)
     df, pdf = _mk_events(spark, labeled, detected)
     cm = metrics.compare_events(df, wf=1)
     got = metrics.event_metrics(cm).toPandas().iloc[0]
-    rdf = _ref_compare(pdf)
+    rdf = _ref_compare(REF, pdf)
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
         exp = REF["anomaly_utilities"].event_metrics(rdf)

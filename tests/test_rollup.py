@@ -3,7 +3,7 @@
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from pyhydroqc_spark.operators import rollup
 
@@ -239,8 +239,11 @@ def test_counter_increments_reset_rule(spark):
             "value": [10.0, 15.0, 3.0, 8.0, 8.0, 1.0],
         }
     )
-    df = spark.createDataFrame(pdf)
-    inc = rollup.with_counter_increments(df, value_col="value", order_col="pos")
+    v = F.col("value")
+    prev = F.lag("value").over(Window.partitionBy("doc_id").orderBy("pos"))
+    inc = spark.createDataFrame(pdf).withColumn(
+        "increment", rollup.counter_increment_expr(v, prev)
+    )
     got = {r["pos"]: r["increment"] for r in inc.collect()}
     #     first  +5   reset->3  +5   flat  reset->1
     assert got == {0: 0.0, 1: 5.0, 2: 3.0, 3: 5.0, 4: 0.0, 5: 1.0}

@@ -92,6 +92,20 @@ def test_group_size_parity(long_df, REF):
         assert int(sizes.get(d, 0)) == size, d
 
 
+def test_group_size_matches_longest_run(long_df):
+    """group_size is the longest ``run_ids_np`` run of each series' flags;
+    a series with no flagged row has no row (read as 0)."""
+    flagged = rules.persistence(rules.range_check(long_df, MAXR, MINR), PERSIST)
+    sizes = rules.group_size(flagged).toPandas().set_index("doc_id")["max_run_len"]
+    got = _by_doc(flagged, "anomaly")
+    longest = {}
+    for d, g in got.items():
+        runs = fused.run_ids_np(g["anomaly"].astype(bool).to_numpy())
+        longest[d] = int(np.bincount(runs)[1:].max(initial=0))
+        assert int(sizes.get(d, 0)) == longest[d], d
+    assert max(longest.values()) >= PERSIST  # a persistence run is flagged
+
+
 def test_interpolate_parity(long_df, REF):
     flagged = rules.persistence(rules.range_check(long_df, MAXR, MINR), PERSIST)
     out = rules.interpolate(flagged)

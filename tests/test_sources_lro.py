@@ -17,7 +17,15 @@ from tests.reference_oracle import load_reference
 LRO = "/root/reference/LRO_data/FB2017.csv"
 pytestmark = pytest.mark.skipif(not os.path.exists(LRO), reason="LRO fixture absent")
 
-REF = load_reference()
+
+@pytest.fixture(scope="module")
+def REF():
+    """The pyhydroqc reference modules; the tests here skip with this
+    reason when the checkout is not importable."""
+    try:
+        return load_reference()
+    except ImportError as e:
+        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
 
 # FranklinBasin temp-sensor QC knobs (reference parameters.py:72-79 semantics)
 MAXR, MINR, PERSIST = 13.0, -2.0, 30
@@ -29,7 +37,7 @@ def lro_long(spark):
 
 
 @pytest.fixture(scope="module")
-def ref_arrays():
+def ref_arrays(REF):
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
         return REF["anomaly_utilities"].get_data(
@@ -55,7 +63,7 @@ def test_ingest_matches_get_data(lro_long, ref_arrays):
         assert not mine["labeled_anomaly"].any()
 
 
-def test_rules_qc_parity_on_real_data(lro_long, ref_arrays):
+def test_rules_qc_parity_on_real_data(REF, lro_long, ref_arrays):
     temp = lro_long.where(F.col("sensor") == "temp").withColumnRenamed("raw", "value")
     out = rules.interpolate(
         rules.persistence(rules.range_check(temp, MAXR, MINR), PERSIST)

@@ -28,7 +28,7 @@ def _tok_schema():
 
 
 def _read_agg(spark, out_dir):
-    return SnapshotTable(os.path.join(out_dir, "agg")).read(spark)
+    return SnapshotTable(os.path.join(out_dir, "agg_900s")).read(spark)
 
 
 def test_streaming_rollup_incremental(spark, tmp_path):
@@ -40,7 +40,7 @@ def test_streaming_rollup_incremental(spark, tmp_path):
     first, second = pdf.iloc[:2], pdf.iloc[2:]
     spark.createDataFrame(first, schema=_tok_schema()).write.mode("append").parquet(in_dir)
 
-    streaming.run_streaming_rollup(spark, in_dir, out_dir)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(900,))
     agg1 = _read_agg(spark, out_dir)
     assert set(r["doc_id"] for r in agg1.select("doc_id").distinct().collect()) == set(
         first["doc_id"]
@@ -48,7 +48,7 @@ def test_streaming_rollup_incremental(spark, tmp_path):
 
     # second batch of files lands; rerun drains ONLY the new ones
     spark.createDataFrame(second, schema=_tok_schema()).write.mode("append").parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(900,))
     agg2 = (
         _read_agg(spark, out_dir)
         .orderBy("doc_id", "bucket_start")
@@ -78,9 +78,9 @@ def test_streaming_merge_rewrites_only_touched_days(spark, tmp_path):
     # batch 1: one series spanning ~8 days (800 tokens @ 15min cadence)
     pdf = gen_token_table(n_series=2, n_tok=800, seed=7)
     spark.createDataFrame(pdf, schema=_tok_schema()).write.mode("append").parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(900,))
 
-    store = SnapshotTable(os.path.join(out_dir, "agg"))
+    store = SnapshotTable(os.path.join(out_dir, "agg_900s"))
     before = {
         p: set(store.files_for_partitions({p})) for p in store.partitions()
     }
@@ -90,7 +90,7 @@ def test_streaming_merge_rewrites_only_touched_days(spark, tmp_path):
     pdf2 = gen_token_table(n_series=1, n_tok=96, seed=11)
     pdf2["doc_id"] = "late-" + pdf2["doc_id"]
     spark.createDataFrame(pdf2, schema=_tok_schema()).write.mode("append").parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(900,))
 
     after = {p: set(store.files_for_partitions({p})) for p in store.partitions()}
     touched = {p for p in before if before[p] != after.get(p)}
@@ -136,13 +136,13 @@ def test_late_data_same_bucket_cross_batch_merge(spark, tmp_path):
          "n_tok": [4], "source": ["s1"]}
     )
     spark.createDataFrame(b1, schema=_tok_schema()).write.mode("append").parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=3600)
-    store = SnapshotTable(os.path.join(out_dir, "agg"))
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(3600,))
+    store = SnapshotTable(os.path.join(out_dir, "agg_3600s"))
     first = store.read(spark).orderBy("bucket_start").toPandas()
     assert first["cnt"].tolist() == [4, 4]
 
     spark.createDataFrame(b2, schema=_tok_schema()).write.mode("append").parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=3600)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(3600,))
 
     got = store.read(spark).orderBy("bucket_start").toPandas()
     full = pd.concat([b1, b2], ignore_index=True)
@@ -167,25 +167,25 @@ def test_foreachbatch_retry_is_idempotent(spark, tmp_path):
     """foreachBatch delivers at-least-once: a retried micro-batch (same
     batch id) must NOT fold into the cells twice. The batch id rides the
     atomic snapshot commit, so the replay is recognized and skipped."""
-    agg_path = os.path.join(str(tmp_path), "agg")
+    out_dir = str(tmp_path)
     pdf = pd.DataFrame(
         {"doc_id": ["r-A"], "tokens": [[100, 200, 300, 400]],
          "n_tok": [4], "source": ["s1"]}
     )
     batch = explode_tokens(spark.createDataFrame(pdf, schema=_tok_schema()))
 
-    assert streaming.merge_batch(batch, 0, agg_path, tier_seconds=3600) is True
-    store = SnapshotTable(agg_path)
+    assert streaming.merge_batch_tiers(batch, 0, out_dir, (3600,)) == 1
+    store = SnapshotTable(os.path.join(out_dir, "agg_3600s"))
     once = store.read(spark).orderBy("bucket_start").toPandas()
     assert once["cnt"].tolist() == [4]
 
     # retry of the SAME batch id: skipped, store byte-identical
-    assert streaming.merge_batch(batch, 0, agg_path, tier_seconds=3600) is False
+    assert streaming.merge_batch_tiers(batch, 0, out_dir, (3600,)) == 0
     again = store.read(spark).orderBy("bucket_start").toPandas()
     pd.testing.assert_frame_equal(once, again)
 
     # the next real batch still applies
-    assert streaming.merge_batch(batch, 1, agg_path, tier_seconds=3600) is True
+    assert streaming.merge_batch_tiers(batch, 1, out_dir, (3600,)) == 1
     final = store.read(spark).orderBy("bucket_start").toPandas()
     assert final["cnt"].tolist() == [8]
 
@@ -254,22 +254,22 @@ def test_retry_after_interleaved_commit_still_skipped(spark, tmp_path):
     its retry carries no stream_batch_id; replay detection must walk the
     snapshot lineage, not just read the CURRENT snapshot, or the retry
     double-counts."""
-    agg_path = os.path.join(str(tmp_path), "agg")
+    out_dir = str(tmp_path)
     pdf = pd.DataFrame(
         {"doc_id": ["i-A"], "tokens": [[10, 20, 30, 40]],
          "n_tok": [4], "source": ["s1"]}
     )
     batch = explode_tokens(spark.createDataFrame(pdf, schema=_tok_schema()))
-    assert streaming.merge_batch(batch, 0, agg_path, tier_seconds=3600) is True
+    assert streaming.merge_batch_tiers(batch, 0, out_dir, (3600,)) == 1
 
-    store = SnapshotTable(agg_path)
+    store = SnapshotTable(os.path.join(out_dir, "agg_3600s"))
     # interleaved maintenance commit with no stream metadata
     extra_row = store.read(spark).limit(1).withColumn("day", F.lit("9999-01-01"))
     store.append(extra_row, partition="9999-01-01")
     assert store.snapshot_extra().get("stream_batch_id") is None
 
     # retry of batch 0 after the interleaved commit: must still be skipped
-    assert streaming.merge_batch(batch, 0, agg_path, tier_seconds=3600) is False
+    assert streaming.merge_batch_tiers(batch, 0, out_dir, (3600,)) == 0
     cnts = (
         store.read(spark).where(F.col("day") != "9999-01-01")
         .orderBy("bucket_start").toPandas()["cnt"].tolist()
@@ -295,9 +295,9 @@ def test_drain_retention_drain_preserves_batch_lineage(spark, tmp_path):
     spark.createDataFrame(first, schema=_tok_schema()).write.mode(
         "append"
     ).parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(900,))
 
-    store = SnapshotTable(os.path.join(out_dir, "agg"))
+    store = SnapshotTable(os.path.join(out_dir, "agg_900s"))
     days = sorted(
         r["day"]
         for r in store.read(spark).select(
@@ -314,7 +314,7 @@ def test_drain_retention_drain_preserves_batch_lineage(spark, tmp_path):
     spark.createDataFrame(second, schema=_tok_schema()).write.mode(
         "append"
     ).parquet(in_dir)
-    streaming.run_streaming_rollup(spark, in_dir, out_dir)
+    streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=(900,))
 
     got = (
         store.read(spark)
@@ -355,13 +355,9 @@ def test_drain_retention_drain_preserves_batch_lineage(spark, tmp_path):
     # the idempotence high-water mark survived retention + manifest expiry:
     # a retry of drain 2's batch id (1) must be recognized and skipped
     batch = explode_tokens(spark.createDataFrame(second, schema=_tok_schema()))
-    assert streaming.merge_batch(
-        batch, 1, os.path.join(out_dir, "agg"), tier_seconds=900
-    ) is False
+    assert streaming.merge_batch_tiers(batch, 1, out_dir, (900,)) == 0
     # and the next real batch id still applies
-    assert streaming.merge_batch(
-        batch, 2, os.path.join(out_dir, "agg"), tier_seconds=900
-    ) is True
+    assert streaming.merge_batch_tiers(batch, 2, out_dir, (900,)) == 1
 
 
 def test_crash_between_tier_commits_self_heals(spark, tmp_path):

@@ -229,10 +229,13 @@ def test_simhash_near_dups(spark):
 
 
 def test_simhash_matches_reference_signature(spark):
-    """The default 64-bit xxhash64 signature equals a plain-Python rebuild
-    from each doc's distinct lower-cased word hashes: bit j is set iff
-    2·c_j > n (c_j words with bit j set, of n), and a doc with no words
-    signs 0. Pins bit 63 (the sign bit) and the fold order."""
+    """The 60-bit md5_60 signature equals a plain-Python rebuild from each
+    doc's distinct lower-cased words, hashed with ``hashlib`` (first 15
+    hex digits of md5): bit j is set iff 2·c_j > n (c_j words with bit j
+    set, of n), and a doc with no words signs 0. Pins bit 59 (the top
+    bit) and the fold order."""
+    import hashlib
+
     texts = [
         "alpha beta gamma delta epsilon zeta eta theta iota kappa",
         "Alpha  alpha BETA beta gamma",
@@ -250,20 +253,21 @@ def test_simhash_matches_reference_signature(spark):
         F.explode(F.array_distinct(F.array_remove(F.split(F.lower("text"), r"\s+"), ""))).alias("w"),
     )
     hashes = {}
-    for r in words.select("doc_id", F.xxhash64("w").alias("h")).collect():
-        hashes.setdefault(r["doc_id"], []).append(r["h"] & (2**64 - 1))
+    for r in words.collect():
+        h = int(hashlib.md5(r["w"].encode()).hexdigest()[:15], 16)
+        hashes.setdefault(r["doc_id"], []).append(h)
     expect = {}
     for i in range(len(texts)):
         hs = hashes.get(i, [])
         sig = 0
-        for j in range(64):
+        for j in range(60):
             if 2 * sum((h >> j) & 1 for h in hs) > len(hs):
                 sig |= 1 << j
-        expect[i] = sig - 2**64 if sig >= 2**63 else sig
+        expect[i] = sig
     got = {r["id"]: r["simhash"] for r in dedup.simhash(df).collect()}
     assert got == expect
     assert expect[4] == expect[5] == expect[6] == 0
-    assert any(v < 0 for v in expect.values())  # bit 63 is reached
+    assert any(v >= 2**59 for v in expect.values())  # bit 59 is reached
 
 
 def test_cosine_topk_matches_numpy(spark, emb):
@@ -331,19 +335,26 @@ def test_token_count_and_fingerprint(spark, docs):
 
 
 def test_multimodal_plumbing(spark):
-    rows = [(f"m{i}", bytes([i % 251] * (100 + i)), "image", 3000 + i) for i in range(20)]
-    df = spark.createDataFrame(rows, "media_id string, media binary, kind string, duration_ms int")
-    feats = multimodal.extract_features(df, decode="fake").toPandas()
+    schema = "media_id string, media binary, kind string, duration_ms int"
+    rows = [
+        (f"m{i}", _ppm_bytes(3 + i % 5, 2 + i % 3, [(i * 37 + k) % 256 for k in range(
+            3 * (3 + i % 5) * (2 + i % 3))]), "image", 3000 + i)
+        for i in range(20)
+    ]
+    df = spark.createDataFrame(rows, schema)
+    feats = multimodal.extract_features(df).toPandas()
     assert len(feats) == 20
     assert all(len(f) == multimodal.FEATURE_DIM for f in feats["features"])
     # determinism: same payload → same features
-    feats2 = multimodal.extract_features(df, decode="fake").toPandas()
+    feats2 = multimodal.extract_features(df.repartition(3)).toPandas()
     a = feats.sort_values("media_id").reset_index(drop=True)
     b = feats2.sort_values("media_id").reset_index(drop=True)
     for x, y in zip(a["features"], b["features"]):
         np.testing.assert_array_equal(x, y)
+    # a payload no lib-free codec recognises raises
+    junk = spark.createDataFrame([("j", bytes([7] * 100), "image", 0)], schema)
     with pytest.raises(Exception):
-        multimodal.extract_features(df, decode="real").toPandas()
+        multimodal.extract_features(junk).toPandas()
 
 
 def _ppm_bytes(w, h, rgb):
@@ -417,7 +428,7 @@ def test_real_decode_through_spark(spark):
         rows, "media_id string, media binary, kind string, duration_ms int"
     )
     feats = (
-        multimodal.extract_features(df, decode="real")
+        multimodal.extract_features(df)
         .toPandas()
         .set_index("media_id")["features"]
     )
@@ -765,7 +776,7 @@ def test_png_features_through_spark_kernel(spark):
         pd.DataFrame(rows, columns=["media_id", "media", "kind"])
     )
     feats = (
-        mm.extract_features(df, decode="real")
+        mm.extract_features(df)
         .toPandas().set_index("media_id")["features"]
     )
     np.testing.assert_allclose(feats["png"], feats["ppm"], atol=1e-6)
@@ -811,7 +822,7 @@ def test_avi_roundtrip_and_video_features(spark):
         )
     )
     feats = (
-        mm.extract_features(df, decode="real")
+        mm.extract_features(df)
         .toPandas().set_index("media_id")["features"]
     )
     assert all(len(v) == mm.FEATURE_DIM for v in feats)
@@ -966,7 +977,7 @@ def test_gif_roundtrip_real_lzw_and_interlace(spark):
         )
     )
     feats = (
-        mm.extract_features(df, decode="real")
+        mm.extract_features(df)
         .toPandas().set_index("media_id")["features"]
     )
     np.testing.assert_allclose(feats["gif"], feats["png"], atol=1e-6)
@@ -1076,8 +1087,8 @@ def test_pq_topk_external_queries_and_adc_naming(spark):
 def test_ivfpq_topk_prunes_cells_and_keeps_recall(spark):
     """IVFADC (r5): (a) index rows carry (cell, m codes); (b) the scored
     candidate set only touches PROBED cells — the full-corpus ADC scan that
-    made pq_topk 'weak' is gone; (c) trained residual encoding reaches the
-    recall of IVF-flat at the same nprobe (exact rerank recovers it);
+    made pq_topk 'weak' is gone; (c) trained codebooks reach the recall
+    of IVF-flat at the same nprobe (exact rerank recovers it);
     (d) every query returns exactly k rows."""
     import numpy as np
     import pandas as pd
@@ -1099,18 +1110,15 @@ def test_ivfpq_topk_prunes_cells_and_keeps_recall(spark):
     queries = df.where(F.col("vec_id") % 89 == 0)
 
     cents = ann.train_ivf_centroids(dfn, nlist=8, sample_n=800, seed=3)
-    # residual-trained codebooks — the distribution encode="residual"
-    # actually quantizes
-    books = ann.train_pq_codebooks_residual(df, cents, m=4, k=32, sample_n=800, seed=3)
-    idx = ann.ivfpq_index(df, cents, books, encode="residual")
+    books = ann.train_pq_codebooks(df, m=4, k=32, sample_n=800, seed=3)
+    idx = ann.ivfpq_index(df, cents, books)
     ipdf = idx.toPandas()
     assert set(ipdf.columns) == {"vec_id", "cell", "codes"}
     assert ipdf["codes"].map(len).eq(4).all()
     assert ipdf["cell"].between(0, 7).all()
 
     got = ann.ivfpq_topk(
-        idx, queries, cents, books, k=10, nprobe=4, refine=60,
-        full_vectors=df, encode="residual",
+        idx, queries, cents, books, k=10, nprobe=4, refine=60, full_vectors=df
     ).toPandas()
     assert got.groupby("query_id").size().eq(10).all()
 
@@ -1126,8 +1134,7 @@ def test_ivfpq_topk_prunes_cells_and_keeps_recall(spark):
     # pruning contract: with nprobe=1 each query's candidates all come
     # from ONE cell — neighbor cells of returned rows == the probed cell
     got1 = ann.ivfpq_topk(
-        idx, queries, cents, books, k=5, nprobe=1, refine=20,
-        full_vectors=df, encode="residual",
+        idx, queries, cents, books, k=5, nprobe=1, refine=20, full_vectors=df
     ).toPandas()
     cells = ipdf.set_index("vec_id")["cell"]
     C = np.asarray(cents, dtype=np.float64)
@@ -1138,18 +1145,6 @@ def test_ivfpq_topk_prunes_cells_and_keeps_recall(spark):
         probed = int(((C**2).sum(1) - 2 * (C @ qv)).argmin())
         neigh = got1[got1.query_id == qr["vec_id"]]["neighbor_id"]
         assert (cells.loc[neigh] == probed).all()
-
-    # raw encoding with the same budget (its own rightly-trained books)
-    # must not beat residual encoding with residual-trained books
-    books_raw = ann.train_pq_codebooks(df, m=4, k=32, sample_n=800, seed=3)
-    idx_raw = ann.ivfpq_index(df, cents, books_raw, encode="raw")
-    got_raw = ann.ivfpq_topk(
-        idx_raw, queries, cents, books_raw, k=10, nprobe=4, refine=60,
-        full_vectors=df, encode="raw",
-    ).toPandas()
-    byq_r = got_raw.groupby("query_id")["neighbor_id"].apply(set)
-    hits_r = sum(len(truth[q] & byq_r.get(q, set())) for q in truth.index)
-    assert hits_r <= hits + 5  # residual ≥ raw (small slack for rerank ties)
 
 
 def test_ivfpq_index_partitioned_by_cell_prunes_scan(spark, tmp_path):
@@ -1171,7 +1166,7 @@ def test_ivfpq_index_partitioned_by_cell_prunes_scan(spark, tmp_path):
     )
     cents = ann.ivf_centroids(16, 8)
     books = ann.pq_codebooks_hash(16, m=4, k=16)
-    idx = ann.ivfpq_index(df, cents, books, encode="raw")
+    idx = ann.ivfpq_index(df, cents, books)
     out = str(tmp_path / "ivfpq_index")
     idx.write.partitionBy("cell").parquet(out)
 
@@ -1238,14 +1233,12 @@ def test_ivfpq_dup_pairs_corpus_self_join_through_codes(spark):
         "vec_id long, embedding array<double>",
     )
     cents = ann.train_ivf_centroids(dfn, nlist=8, sample_n=560, seed=5)
-    books = ann.train_pq_codebooks_residual(
-        df, cents, m=4, k=32, sample_n=560, seed=5
-    )
+    books = ann.train_pq_codebooks(df, m=4, k=32, sample_n=560, seed=5)
 
     def run(n_assign, **kw):
         out = ann.ivfpq_dup_pairs(
             df, cents, books, sdc_threshold=0.5, cos_threshold=0.97,
-            n_assign=n_assign, encode="residual", **kw,
+            n_assign=n_assign, **kw,
         ).toPandas()
         return {(int(a), int(b)) for a, b in zip(out.id_a, out.id_b)}
 
@@ -1457,14 +1450,6 @@ def test_dup_spans_matches_reference(spark):
     assert got[8][1] == 2             # gapped spans stay separate
 
 
-def test_dup_spans_md5_hash_parity(spark):
-    """The md5-60 oracle hash path marks exactly what xxhash64 marks."""
-    df = spark.createDataFrame(pd.DataFrame(_SPAN_CORPUS, columns=["doc_id", "text"]))
-    a = dedup.dup_spans(df, n=3).orderBy("id").collect()
-    b = dedup.dup_spans(df, n=3, hash_fn="md5").orderBy("id").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
 def test_dup_spans_real_docs_duckdb_parity(spark, docs):
     """Full-value parity vs an independent DuckDB transcription on the
     sf0.001 documents table (the driver gate replays the same shape at
@@ -1473,7 +1458,7 @@ def test_dup_spans_real_docs_duckdb_parity(spark, docs):
 
     n = 12
     got = (
-        dedup.dup_spans(docs, n=n, hash_fn="md5")
+        dedup.dup_spans(docs, n=n)
         .select("id", "n_dup_spans", "dup_words")
         .orderBy("id")
         .toPandas()
