@@ -1645,10 +1645,6 @@ def q_dup_keep_list(spark, sf_dir):
 # that construct a FRESH DataFrame (fresh shuffle ids, full recompute,
 # and fresh Catalyst planning) on every call.
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _raw_queries()
-
-
-def _raw_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "range_counts": q_range_counts,
         "max_anomaly_run": q_max_anomaly_run,

@@ -19,7 +19,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 STATUS_DONE = "done"
 STATUS_FAILED = "failed"

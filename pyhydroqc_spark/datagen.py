@@ -23,7 +23,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-from .quantize import quantize, SENTINEL
+from .quantize import quantize
 
 T0 = pd.Timestamp("2022-01-01 00:00:00")
 CADENCE_S = 900  # 15 minutes

@@ -139,7 +139,7 @@ def arima_residuals_sql(
     consumer reuses the same shuffle output anyway where one exists.
     """
     import pandas as pd
-    from pyspark.sql.types import ArrayType, DoubleType, StringType, StructField, StructType
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
     p, d, q = order
     if q != 0 or d > 2:

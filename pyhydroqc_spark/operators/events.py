@@ -18,7 +18,7 @@ reuses the sort/exchange).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 SERIES_KEY = "doc_id"
 ORDER_COL = "pos"

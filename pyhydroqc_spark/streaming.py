@@ -1,4 +1,5 @@
-"""Structured-Streaming surface for incremental rollup maintenance.
+"""Structured-Streaming surface: incremental rollup maintenance and
+stateful per-series QC.
 
 The engine's primary incremental path is batch-over-snapshots
 (pipeline.py); this module is the equivalent expressed as Structured
@@ -13,15 +14,25 @@ Cell-level MERGE semantics: rollup aggregates (cnt/sum/min/max) are
 commutative monoids, so merging a micro-batch's partial aggregates into
 stored cells is associative — late/new data for an existing bucket folds
 in without recomputing the series (`avg = merged sum / merged cnt`).
+
+Stateful detect (``run_streaming_detect``): range + persistence flags on
+a point stream, with batch semantics across micro-batches and drains.
+Per (trigger, series), the buffered repeats of the still-short open run
+are replayed in front of the new rows through the same numpy rule
+kernels the fused pipeline runs (``range_flags_np``, ``run_ids_np``), so
+the stream keeps no rule logic of its own.
 """
 
 from __future__ import annotations
 
 import os
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .ingest import explode_tokens
+from .operators.fused import range_flags_np, run_ids_np
 from .operators.rollup import rollup_points
 from .tables import SnapshotTable, commit_tables
 
@@ -198,222 +209,47 @@ def run_streaming_rollup(
 # ------------------------------------------------- stateful streaming detect
 
 DETECT_OUT_SCHEMA = "doc_id string, pos bigint, value double, anomaly boolean"
-DETECT_STATE_SCHEMA = (
-    "prev double, reps bigint, flagged boolean, "
-    "buf_pos array<bigint>, buf_val array<double>, buf_rng array<boolean>"
-)
+DETECT_STATE_SCHEMA = "prev double, reps bigint, buf_pos array<bigint>, buf_val array<double>"
 
 
-def stateful_detect_stream(
-    points,
-    max_range: float,
-    min_range: float,
-    persist_len: int,
-    key: str = "doc_id",
-    flush_pos: int | None = None,
-):
-    """Per-series QC (range_check + persistence) as a CUSTOM STATEFUL
-    streaming operator — ``applyInPandasWithState`` carrying the run state
-    across micro-batches, so a persistence run that straddles a batch (or
-    drain) boundary is flagged exactly as the batch operator flags it on
-    the concatenated series (`rules_detect.py:11-52` semantics: the first
-    point of an equal stretch is NOT part of the persist group; a stretch
-    of k equal values flags its k−1 repeats iff k−1 ≥ persist_len).
+def _detect_group(key_, pdf_iter, state, max_range, min_range, persist_len, flush_pos):
+    """One (trigger, series) step of the stateful detect: the buffered
+    repeats of the open run go back in front of the trigger's rows, and
+    the whole stretch runs through the batch rule kernels once.
 
-    Emission is APPEND-mode-final: a point is emitted once its flag can
-    never change — immediately for non-repeat points and for members of a
-    run already ≥ persist_len; repeats of a still-short OPEN run are
-    buffered in state (bounded: at most persist_len−1 rows — once a run
-    reaches the threshold it flushes flagged and later repeats emit
-    immediately).
-
-    Missing values match the BATCH operators exactly: a NULL/NaN value is
-    emitted as a row with ``anomaly = false`` (range_check coalesces NULL
-    to false) and breaks the repeat chain on both sides (NULL diffs are
-    not repeats) — closing any open run short, so its buffered repeats
-    emit with only their range flags. An END-OF-SERIES flush is signalled
-    OUT OF BAND via a reserved position: rows with ``pos >= flush_pos``
-    (when set) close the open run the same way and are themselves
-    dropped, never emitted. (Earlier revisions overloaded NULL as the
-    flush sentinel, which made a genuine missing value silently vanish.)
-    Caveat: Arrow hands the kernel NaN for both NULL and NaN doubles, so
-    a literal NaN value is treated as missing too — deliberately, since
-    Spark's NaN-is-largest ordering (NaN > max_range ⇒ true) is never
-    the intent for a sensor feed's not-a-number readings.
-
-    The kernel is vectorized per (trigger × series): the group's Arrow
-    chunks are drained fully, concatenated, and sorted by ``pos`` ONCE —
-    ``applyInPandasWithState`` only groups rows by key; it does not order
-    them, and a series whose trigger data spans several Arrow batches (or
-    several input files) would otherwise be processed out of order. State
-    is per-group, so the concat is bounded by one series' trigger data.
-    Run boundaries then come from one shifted-comparison pass, per-run
-    flags from one reduceat — only the ≤2 state-boundary runs are handled
-    individually."""
-    import numpy as np
-    import pandas as pd
-
-    def fn(key_, pdf_iter, state):
-        if state.exists:
-            prev, reps, flagged, buf_pos, buf_val, buf_rng = state.get
-            buf_pos, buf_val, buf_rng = list(buf_pos), list(buf_val), list(buf_rng)
-        else:
-            prev, reps, flagged = None, 0, False
-            buf_pos, buf_val, buf_rng = [], [], []
-        out_frames = []
-
-        def process_span(pos, val, rng_flag, rep):
-            """One sentinel-free span. Vectorized: stretch ids by cumsum of
-            non-repeat heads, per-stretch repeat counts by bincount; only
-            the two state-boundary stretches get scalar bookkeeping."""
-            nonlocal prev, reps, flagged, buf_pos, buf_val, buf_rng
-            n = len(pos)
-            if n == 0:
-                return None
-            nonrep = ~rep
-            sid = np.cumsum(nonrep)          # carried-run members have sid 0
-            last = int(sid[-1])
-            rep_counts = np.bincount(sid[rep], minlength=last + 1)
-            totals = rep_counts.astype(np.int64)
-            continues = bool(rep[0])         # batch head continues the open run
-            if continues:
-                totals[0] += reps
-            # per-point persist flag (rep members of a qualifying stretch)
-            pflag = rep & (totals[sid] >= persist_len)
-            flags = rng_flag | pflag
-
-            head_frames = []
-            # resolve the carried buffer
-            if buf_pos:
-                if continues and totals[0] >= persist_len:
-                    bflags = [True] * len(buf_pos)   # run crossed threshold
-                elif continues and last == 0:
-                    bflags = None                     # still open, still short
-                else:
-                    bflags = list(buf_rng)            # run closed short
-                if bflags is not None:
-                    head_frames.append((list(buf_pos), list(buf_val), bflags))
-                    buf_pos, buf_val, buf_rng = [], [], []
-            elif not continues:
-                pass  # nothing carried to resolve
-
-            # trailing open stretch: defer its unflagged rep members
-            open_short = totals[last] < persist_len
-            tail_mask = rep & (sid == last) if open_short else np.zeros(n, bool)
-            emit_mask = ~tail_mask
-            if tail_mask.any():
-                buf_pos.extend(int(x) for x in pos[tail_mask])
-                buf_val.extend(float(x) for x in val[tail_mask])
-                buf_rng.extend(bool(x) for x in rng_flag[tail_mask])
-
-            # state for the open run
-            if continues and last == 0:
-                reps = int(totals[0])
-            else:
-                reps = int(rep_counts[last])
-            flagged = bool(totals[last] >= persist_len)
-            prev = float(val[-1])
-
-            return head_frames, pos[emit_mask], val[emit_mask], flags[emit_mask]
-
-        # drain the WHOLE trigger for this group before touching the span
-        # kernel: chunk-local sorts are not a global order when one
-        # series' rows span several Arrow batches
-        chunks = [c for c in pdf_iter if len(c)]
-        if chunks:
-            pdf = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True)
-            )
-            pdf = pdf.sort_values("pos")
-            pos_all = pdf["pos"].to_numpy(dtype=np.int64)
-            val_all = pdf["value"].to_numpy(dtype=np.float64)
-            missing = np.isnan(val_all)
-            if flush_pos is not None:
-                is_flush = pos_all >= flush_pos
-                missing &= ~is_flush
-            else:
-                is_flush = np.zeros(len(val_all), dtype=bool)
-            rng_all = np.where(
-                missing | is_flush,
-                False,
-                (val_all > max_range) | (val_all < min_range),
-            )
-            # split at run breaks: flush sentinels (reserved pos, dropped)
-            # and missing values (emitted anomaly=false); both close the
-            # open run, so its buffered repeats emit with range flags only
-            breaks = np.flatnonzero(missing | is_flush)
-            bounds = [-1] + list(breaks) + [len(val_all)]
-            for b in range(len(bounds) - 1):
-                lo, hi = bounds[b] + 1, bounds[b + 1]
-                bi = bounds[b]
-                if bi >= 0:  # a break row sits at bi
-                    if buf_pos:
-                        out_frames.append(
-                            pd.DataFrame(
-                                {"doc_id": key_[0], "pos": buf_pos,
-                                 "value": buf_val, "anomaly": buf_rng}
-                            )
-                        )
-                    buf_pos, buf_val, buf_rng = [], [], []
-                    reps, flagged, prev = 0, False, None
-                    if missing[bi]:
-                        # genuine NULL: keep the row, batch semantics
-                        out_frames.append(
-                            pd.DataFrame(
-                                {"doc_id": key_[0],
-                                 "pos": [int(pos_all[bi])],
-                                 "value": [float("nan")],
-                                 "anomaly": [False]}
-                            )
-                        )
-                if hi <= lo:
-                    continue
-                pos, val, rngf = pos_all[lo:hi], val_all[lo:hi], rng_all[lo:hi]
-                rep = np.zeros(hi - lo, dtype=bool)
-                rep[1:] = val[1:] == val[:-1]
-                if prev is not None:
-                    rep[0] = val[0] == prev
-                res = process_span(pos, val, rngf.astype(bool), rep)
-                if res is None:
-                    continue
-                head_frames, e_pos, e_val, e_flag = res
-                for hp, hv, hf in head_frames:
-                    out_frames.append(
-                        pd.DataFrame(
-                            {"doc_id": key_[0], "pos": hp, "value": hv,
-                             "anomaly": hf}
-                        )
-                    )
-                if len(e_pos):
-                    out_frames.append(
-                        pd.DataFrame(
-                            {"doc_id": key_[0], "pos": e_pos, "value": e_val,
-                             "anomaly": e_flag}
-                        )
-                    )
-        state.update(
-            (
-                prev if prev is None else float(prev),
-                int(reps),
-                bool(flagged),
-                buf_pos,
-                buf_val,
-                buf_rng,
-            )
-        )
-        for f in out_frames:
-            yield f
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return points.groupBy(key).applyInPandasWithState(
-        fn,
-        outputStructType=DETECT_OUT_SCHEMA,
-        stateStructType=DETECT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    State is ``(prev, reps, buf_pos, buf_val)``: the value of the last
+    received row, the repeats already emitted in the open run (non-zero
+    only once that run reached ``persist_len``), and the buffered repeats
+    of an open run that is still short."""
+    prev, reps, buf_pos, buf_val = state.get if state.exists else (np.nan, 0, [], [])
+    chunks = list(pdf_iter)
+    pos = np.concatenate(
+        [np.asarray(buf_pos, np.int64)] + [c["pos"].to_numpy(np.int64) for c in chunks]
+    )
+    if not len(pos):
+        return
+    val = np.concatenate(
+        [np.asarray(buf_val, float)] + [c["value"].to_numpy(float) for c in chunks]
+    )
+    order = np.argsort(pos, kind="stable")
+    pos, val = pos[order], val[order]
+    keep = pos < flush_pos
+    val[~keep] = np.nan  # a flush row breaks the run as a missing value does
+    rep = np.r_[val[0] == prev, val[1:] == val[:-1]]
+    grp = run_ids_np(rep)
+    sizes = np.bincount(grp)
+    if rep[0]:
+        sizes[1] += reps
+    flags = range_flags_np(val, max_range, min_range) | (rep & (sizes[grp] >= persist_len))
+    run = int(grp[-1])  # the trailing repeat run, 0 if the last row repeats nothing
+    reps = int(sizes[run]) if run else 0
+    held = rep & (grp == run) & (reps < persist_len)
+    state.update((
+        float(val[-1]), reps if reps >= persist_len else 0, pos[held].tolist(), val[held].tolist()
+    ))
+    emit = keep & ~held
+    yield pd.DataFrame(
+        {"doc_id": key_[0], "pos": pos[emit], "value": val[emit], "anomaly": flags[emit]}
     )
 
 
@@ -424,21 +260,58 @@ def run_streaming_detect(
     max_range: float,
     min_range: float,
     persist_len: int,
-    flush_pos: int | None = None,
+    flush_pos: int,
 ) -> None:
-    """Drain pending point files → stateful QC → append flagged points.
+    """Drain pending point files → per-series QC (range_check +
+    persistence) → append flagged points to ``out_dir/flags``.
 
-    ``Trigger.AvailableNow`` + the Spark state store under the checkpoint:
-    a run that straddles two DRAINS (separate invocations, possibly after
-    a crash) is still flagged exactly once with batch semantics, because
-    the open-run buffer lives in checkpointed state, not in the driver."""
+    A CUSTOM STATEFUL streaming operator: ``applyInPandasWithState``
+    carries the open run across micro-batches, so a persistence run that
+    straddles a batch (or drain) boundary is flagged exactly as the batch
+    operator flags it on the concatenated series (`rules_detect.py:11-52`
+    semantics: the first point of an equal stretch is NOT part of the
+    persist group; a stretch of k equal values flags its k−1 repeats iff
+    k−1 ≥ persist_len). ``Trigger.AvailableNow`` + the Spark state store
+    under the checkpoint: a run that straddles two DRAINS (separate
+    invocations, possibly after a crash) is still flagged exactly once,
+    because the open-run buffer lives in checkpointed state, not in the
+    driver.
+
+    Emission is APPEND-mode-final: a point is emitted once its flag can
+    never change — immediately, except for the repeats of a still-short
+    OPEN run, which are buffered in state. The buffer is bounded: at most
+    persist_len−1 rows, since a run that reaches the threshold emits
+    flagged and later repeats emit immediately.
+
+    Missing values match the BATCH operators exactly: a NULL/NaN value is
+    emitted with ``anomaly = false`` and breaks the repeat chain on both
+    sides. Arrow hands the kernel NaN for both NULL and NaN doubles, so a
+    literal NaN is missing too. The END-OF-SERIES flush is OUT OF BAND:
+    rows with ``pos >= flush_pos`` close the open run as a missing value
+    does and are never emitted.
+
+    Each (trigger, series) is one pass of the batch rule kernels
+    (``_detect_group``). The state schema is ``DETECT_STATE_SCHEMA``; a
+    checkpoint written under an older schema fails Spark's state-schema
+    check, so such a stream restarts on fresh directories."""
+    from functools import partial
+
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
     stream = (
         spark.readStream.schema("doc_id string, pos bigint, value double")
         .option("maxFilesPerTrigger", 64)
         .parquet(input_dir)
     )
-    flagged = stateful_detect_stream(
-        stream, max_range, min_range, persist_len, flush_pos=flush_pos
+    flagged = stream.groupBy("doc_id").applyInPandasWithState(
+        partial(
+            _detect_group, max_range=max_range, min_range=min_range,
+            persist_len=persist_len, flush_pos=flush_pos,
+        ),
+        outputStructType=DETECT_OUT_SCHEMA,
+        stateStructType=DETECT_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
     q = (
         flagged.writeStream.format("parquet")

@@ -734,100 +734,11 @@ def simhash_candidates(
 # --------------------------------------------------------------------------
 
 
-def _marked_spans(
-    df: DataFrame,
-    n: int,
-    id_col: str,
-    text_col: str,
-    skew_guard: bool = True,
-    guard_pct: int = 1,
-    guard_min_count: int = 8,
-):
-    """Shared marking stage: returns (base, marked) where base = (id, __w)
-    and marked = (id, pos, end), one row per n-gram occurrence whose gram
-    appears >= 2 times corpus-wide. One full explode pass: the
-    corpus-wide count is a window count over the gram-hash partition (no
-    ORDER BY — an unbounded-frame count), so the occurrence subtree is
-    never evaluated twice.
-
-    Hot-gram skew guard (default on, the jaccard hot-token pattern): a
-    boilerplate gram with 10^9 occurrences would put 10^9 rows on one
-    count partition. A deterministic ``guard_pct``% doc sample is
-    exploded (a pct-sized pass) and grams seen >= ``guard_min_count``
-    times in it form a broadcast hot set. The shortcut is EXACT, not
-    approximate: the sample is a subset of the corpus, so sample count
-    >= 2 proves corpus count >= 2 — a hot occurrence is marked by the
-    flag alone, so its window partition key is SALTED (id mod 64): the
-    hot gram's rows spread across 64 count partitions whose (now
-    meaningless) counts are never consulted, while cold grams keep salt
-    0 and their exact count. One corpus pass either way — a first cut
-    that split hot/cold into a union made Catalyst re-expand the explode
-    AND the sample subtree per branch (two corpus passes; the same
-    plan-reference re-expansion the perplexity rewrite fixed). Output is
-    identical with the guard on or off."""
-    base = df.select(F.col(id_col).alias("id"), _words(text_col).alias("__w"))
-
-    def occurrences(src):
-        gram_arr = F.when(
-            F.size("__w") >= n,
-            F.expr(
-                f"transform(sequence(1, size(__w) - {n - 1}),"
-                f" i -> concat_ws(' ', slice(__w, i, {n})))"
-            ),
-        ).otherwise(F.expr("CAST(array() AS array<string>)"))
-        return src.select("id", F.posexplode(gram_arr).alias("pos0", "gram")).select(
-            "id",
-            (F.col("pos0") + 1).alias("pos"),  # 1-based start word index
-            md5_60(F.col("gram")).alias("__gh"),
-        )
-
-    occ = occurrences(base)
-    span = lambda rows: rows.select(  # noqa: E731
-        "id", "pos", (F.col("pos") + (n - 1)).alias("end")
-    )
-
-    if skew_guard:
-        samp = base.where(
-            F.pmod(F.xxhash64(F.col("id"), F.lit(1315423911)), F.lit(100))
-            < guard_pct
-        )
-        hot = (
-            occurrences(samp)
-            .groupBy("__gh")
-            .agg(F.count("*").alias("__hc"))
-            .where(F.col("__hc") >= max(2, guard_min_count))
-            .select("__gh", F.lit(True).alias("__hot"))
-        )
-        # hash the id before the mod: a plain pmod(id, 64) silently casts
-        # string ids to NULL (or errors under ANSI), collapsing every hot
-        # gram onto one NULL salt — the exact skew this guard spreads
-        flagged = occ.join(F.broadcast(hot), "__gh", "left").withColumn(
-            "__salt",
-            F.when(
-                F.col("__hot"), F.pmod(F.xxhash64(F.col("id")), F.lit(64))
-            ).otherwise(F.lit(0)),
-        )
-        marked = span(
-            flagged.withColumn(
-                "__c", F.count("*").over(Window.partitionBy("__gh", "__salt"))
-            ).where(F.coalesce(F.col("__hot"), F.lit(False)) | (F.col("__c") >= 2))
-        )
-        return base, marked
-
-    marked = span(
-        occ.withColumn("__c", F.count("*").over(Window.partitionBy("__gh"))).where(
-            F.col("__c") >= 2
-        )
-    )
-    return base, marked
-
-
 def dup_spans(
     df: DataFrame,
     n: int = 12,
     id_col: str = "doc_id",
     text_col: str = "text",
-    skew_guard: bool = True,
 ) -> DataFrame:
     """(id, n_words, n_dup_spans, dup_words, dup_word_frac): per-document
     profile of corpus-wide duplicated substrings.
@@ -842,19 +753,36 @@ def dup_spans(
 
     Scale (100 TB): the occurrence stream is (id, pos, 60-bit gram hash)
     — ~20 B/row, never the gram text. Corpus-wide counting is a window
-    count over the gram-hash partition, so the expensive
-    explode+gram-hash subtree is evaluated ONCE: a first version counted
-    via map-side-combined ``groupBy(hash)`` + join, but that re-evaluates
-    the explode for each side (two full corpus passes, measured 2×3-4s of
-    the 11s wall at 200k docs), and at real scale the dup-gram set
-    outgrows a broadcast so the big side gets shuffled by hash anyway —
-    identical shuffle + skew exposure, one fewer corpus pass. A
-    boilerplate gram concentrates its rows on one count partition either
-    way; the count-only window streams them (sort-spill) rather than
-    materializing anything per gram. The span-merge window partitions by
-    doc — bounded by document length.
+    count over the gram-hash partition (no ORDER BY — an unbounded-frame
+    count), so the expensive explode+gram-hash subtree is evaluated ONCE:
+    a first version counted via map-side-combined ``groupBy(hash)`` +
+    join, but that re-evaluates the explode for each side (two full
+    corpus passes, measured 2×3-4s of the 11s wall at 200k docs), and at
+    real scale the dup-gram set outgrows a broadcast so the big side gets
+    shuffled by hash anyway — identical shuffle + skew exposure, one
+    fewer corpus pass. A boilerplate gram concentrates its rows on one
+    count partition; the count-only window streams them (sort-spill)
+    rather than materializing anything per gram. The span-merge window
+    partitions by doc — bounded by document length.
     """
-    _base, marked = _marked_spans(df, n, id_col, text_col, skew_guard)
+    base = df.select(F.col(id_col).alias("id"), _words(text_col).alias("__w"))
+    gram_arr = F.when(
+        F.size("__w") >= n,
+        F.expr(
+            f"transform(sequence(1, size(__w) - {n - 1}),"
+            f" i -> concat_ws(' ', slice(__w, i, {n})))"
+        ),
+    ).otherwise(F.expr("CAST(array() AS array<string>)"))
+    occ = base.select("id", F.posexplode(gram_arr).alias("pos0", "gram")).select(
+        "id",
+        (F.col("pos0") + 1).alias("pos"),  # 1-based start word index
+        md5_60(F.col("gram")).alias("__gh"),
+    )
+    marked = (
+        occ.withColumn("__c", F.count("*").over(Window.partitionBy("__gh")))
+        .where(F.col("__c") >= 2)
+        .select("id", "pos", (F.col("pos") + (n - 1)).alias("end"))
+    )
 
     w_ord = Window.partitionBy("id").orderBy("pos")
     prev_end = F.max("end").over(w_ord.rowsBetween(Window.unboundedPreceding, -1))
@@ -875,7 +803,7 @@ def dup_spans(
         F.sum(F.col("__e") - F.col("__s") + 1).alias("dup_words"),
     )
 
-    nw = _base.select("id", F.size("__w").alias("n_words"))
+    nw = base.select("id", F.size("__w").alias("n_words"))
     return nw.join(per_doc, "id", "left").select(
         "id",
         F.col("n_words").cast("long").alias("n_words"),

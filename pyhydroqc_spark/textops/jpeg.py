@@ -515,6 +515,37 @@ _DC_SYMS = list(range(12))
 _AC_SYMS = [(r << 4) | s for r in range(16) for s in range(11)]
 
 
+# spatial basis of each zigzag coefficient: block = Σ_k coef_k · _BASIS[k]
+_BASIS = (_DCT[:, None, :, None] * _DCT[None, :, None, :]).reshape(64, 8, 8)[ZIGZAG]
+
+
+def _fit_visible(zz: np.ndarray, block: np.ndarray, rows: int, cols: int,
+                 q: np.ndarray) -> None:
+    """±1 coordinate descent on one edge block's quantized coefficients
+    (in place): minimise the squared error over its visible ``rows`` ×
+    ``cols`` pixels only. Rounding each coefficient spreads the whole
+    block's quantization error over pixels the image crop never shows,
+    so on a tiny image the few visible ones can carry all of it. The
+    residual is kept as its inner products with the step images, so a
+    step costs one 64-vector update."""
+    step = _BASIS[:, :rows, :cols].reshape(64, -1) * q[:, None]
+    gram = step @ step.T
+    g = step @ (zz @ step - block[:rows, :cols].ravel())
+    for _ in range(32):  # at most one unit move per coefficient per sweep
+        moved = False
+        for k in range(64):
+            for d in (1, -1):
+                # SSE change of zz[k] += d: 2·d·<step_k, resid> + |step_k|²;
+                # |zz| <= 1023 keeps every value inside the Huffman tables
+                if 2 * d * g[k] + gram[k, k] < 0 and abs(zz[k] + d) <= 1023:
+                    zz[k] += d
+                    g += d * gram[k]
+                    moved = True
+                    break
+        if not moved:
+            return
+
+
 class _Encoder:
     """Shared state for the sequential and progressive emitters."""
 
@@ -532,9 +563,15 @@ class _Encoder:
             bh, bw = p.shape[0] // 8, p.shape[1] // 8
             blocks = p.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3) - 128.0
             coef = _DCT[None, None] @ blocks @ _DCT.T[None, None]
-            self.zz[c["id"]] = np.round(
-                coef.reshape(bh, bw, 64)[..., ZIGZAG] / q
-            ).astype(np.int64)
+            zz = np.round(coef.reshape(bh, bw, 64)[..., ZIGZAG] / q).astype(np.int64)
+            # blocks the image edge cuts: fit the visible pixels only
+            for by in range(bh):
+                for bx in range(bw):
+                    rows = min(max(c["vh"] - 8 * by, 0), 8)
+                    cols = min(max(c["vw"] - 8 * bx, 0), 8)
+                    if 0 < rows * cols < 64:
+                        _fit_visible(zz[by, bx], blocks[by, bx], rows, cols, q)
+            self.zz[c["id"]] = zz
             c["bh"], c["bw"] = bh, bw
 
     # -- entropy helpers ---------------------------------------------------
@@ -847,8 +884,9 @@ def encode_jpeg(
         "vmax": vmax,
     }
     for c in comps:
-        c["cw"] = -(-(-(-w * c["h"] // hmax)) // 8)
-        c["ch"] = -(-(-(-h * c["v"] // vmax)) // 8)
+        # visible extent of the component plane, then its block count
+        c["vw"], c["vh"] = -(-w * c["h"] // hmax), -(-h * c["v"] // vmax)
+        c["cw"], c["ch"] = -(-c["vw"] // 8), -(-c["vh"] // 8)
 
     enc = _Encoder(planes, comps, q.astype(np.float64), restart_every)
 

@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
-    IntegerType,
     StringType,
     StructField,
     StructType,

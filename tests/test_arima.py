@@ -4,7 +4,6 @@ tests assert statistical properties, determinism, and pipeline behavior)."""
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from pyhydroqc_spark.operators import arima, detect
 

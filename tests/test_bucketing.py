@@ -2,7 +2,6 @@
 big-big joins at 100 TB — both sides written bucketed on the join key
 join WITHOUT any Exchange in the plan."""
 
-import pytest
 from pyspark.sql import functions as F
 
 

@@ -10,7 +10,6 @@ import warnings
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from pyhydroqc_spark import sources
 from pyhydroqc_spark.operators import calibration

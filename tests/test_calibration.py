@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from pyhydroqc_spark.operators import calibration, events, rules
+from pyhydroqc_spark.operators import calibration, rules
 from pyhydroqc_spark.params import CalibParams
 from tests.reference_oracle import load_reference
 

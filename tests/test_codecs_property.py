@@ -3,7 +3,7 @@ roundtrip EXACTLY for arbitrary images/clips; JPEG must stay within its
 quantization budget. No Spark session needed — pure kernel properties."""
 
 import numpy as np
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyhydroqc_spark.textops import gif, jpeg, multimodal as mm
 
@@ -61,6 +61,9 @@ def test_avi_roundtrip_any_clip(n, h, w, seed):
 
 @settings(max_examples=15, deadline=None)
 @given(dims, st.sampled_from(["444", "420"]))
+# one 8×8 block cut to 2×2 visible pixels: 27.53 dB when the encoder
+# rounded the whole padded block instead of fitting the visible pixels
+@example((2, 2, 0), "444")
 def test_jpeg_roundtrip_within_budget(hw, sub):
     h, w, seed = hw
     img = _img(h, w, seed)

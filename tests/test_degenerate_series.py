@@ -3,9 +3,7 @@ empty, single-point, all-missing, and all-constant series — every path
 (fused cells, fused rows, native chain) must survive them and agree."""
 
 import numpy as np
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from pyhydroqc_spark.ingest import explode_tokens
 from pyhydroqc_spark.operators import fused

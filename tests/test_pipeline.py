@@ -14,7 +14,6 @@ import shutil
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from pyhydroqc_spark import pipeline as P
 from pyhydroqc_spark.checkpoint import CheckpointLog

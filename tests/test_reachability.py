@@ -21,7 +21,11 @@ share a name are reached together.
 Selector options: a public ``bool``/``str`` parameter of a top-level
 package function picks a code path. Its values in use are collected from
 the calls the same entry files and the package modules make (tests do
-not count); an option with one value in use has a branch nothing runs."""
+not count); an option with one value in use has a branch nothing runs.
+
+Imports: every name an ``import`` binds in the package, the entry and
+bench files or the tests is read somewhere in its file (or listed in
+its ``__all__``)."""
 
 import ast
 import os
@@ -197,8 +201,6 @@ SINGLE_VALUE_SELECTORS_ON_PURPOSE = {
     "pyhydroqc_spark.textops.sample.stratified_sample.prefilter":
         "the guard-off path is the reference its tests compare against",
     "pyhydroqc_spark.textops.sample.token_budget_sample.prefilter":
-        "the guard-off path is the reference its tests compare against",
-    "pyhydroqc_spark.textops.dedup.dup_spans.skew_guard":
         "the guard-off path is the reference its tests compare against",
     "pyhydroqc_spark.operators.windowed_detect.windowed_regression_residuals.intercept":
         "the reference LSTM workflows carry a bias; the contract drops it only for DuckDB replay",
@@ -400,3 +402,30 @@ def test_every_selector_option_has_two_values_in_use():
     # every exemption names an option that exists and still has one value
     stale = set(SINGLE_VALUE_SELECTORS_ON_PURPOSE) - set(single)
     assert not stale, f"exempt but gone or in use with two values: {sorted(stale)}"
+
+
+def test_every_imported_name_is_read():
+    files = [os.path.join(ROOT, f) for f in ("__spark_entry__.py", "bench.py", "bench_extra.py")]
+    for base in (PACKAGE, "tests"):
+        for dirpath, _, names in os.walk(os.path.join(ROOT, base)):
+            files += [os.path.join(dirpath, n) for n in sorted(names) if n.endswith(".py")]
+    unread = []
+    for path in files:
+        tree = _parse(path)
+        bound = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                bound.update({a.asname or a.name.split(".")[0]: node.lineno for a in node.names})
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                bound.update({a.asname or a.name: node.lineno for a in node.names if a.name != "*"})
+        read = {
+            n.id for n in ast.walk(tree) if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)
+        }
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+            ):
+                read |= {e.value for e in node.value.elts}
+        rel = os.path.relpath(path, ROOT)
+        unread += [f"{rel}:{line} {name}" for name, line in bound.items() if name not in read]
+    assert not unread, "imported but never read: " + ", ".join(sorted(unread))

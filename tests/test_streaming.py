@@ -510,3 +510,58 @@ def test_stateful_streaming_detect_matches_batch_across_drains(spark, tmp_path):
     assert not s0.loc[20:24].any()
     g0 = got[got.doc_id == "s0"].set_index("pos")["value"]
     assert np.isnan(g0.loc[22])
+
+
+class _StubState:
+    """The slice of Spark's ``GroupState`` the detect kernel touches."""
+
+    exists, get = False, None
+
+    def update(self, value):
+        self.exists, self.get = True, value
+
+
+_MX, _MN, _FLUSH = 5.0, 0.5, 10_000
+
+
+def _drive_detect(seed):
+    """One random series through ``_detect_group`` as a stream sees it:
+    1–4 drains, each shuffled into 1–2 chunks, the last one ending with an
+    out-of-band flush row. Returns (series, emitted frame, persist_len,
+    buffer length after each trigger)."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    plen = int(rng.integers(1, 6))
+    n = int(rng.integers(1, 40))
+    x = rng.choice([0.0, 1.0, 2.0, 9.0, np.nan], n, p=[0.3, 0.3, 0.15, 0.15, 0.1])
+    pos, val = np.r_[np.arange(n), _FLUSH], np.r_[x, np.nan]
+    cuts = np.sort(rng.choice(np.arange(1, n + 1), min(n, int(rng.integers(0, 4))), replace=False))
+    state, out, buf_lens = _StubState(), [], []
+    for drain in np.split(np.arange(n + 1), cuts):
+        drain = rng.permutation(drain)
+        chunks = [
+            pd.DataFrame({"doc_id": "s", "pos": pos[c], "value": val[c]})
+            for c in np.array_split(drain, int(rng.integers(1, 3)))
+        ]
+        out.extend(streaming._detect_group(("s",), iter(chunks), state, _MX, _MN, plen, _FLUSH))
+        buf_lens.append(len(state.get[2]) if state.exists else 0)
+    return x, pd.concat(out), plen, buf_lens
+
+
+def test_detect_group_matches_batch_rules_over_random_drains():
+    """The stream kernel, driven with a stub state over 1,200 seeded
+    random series split into drains and chunks, emits every non-flush row
+    exactly once, with the batch rules' flags on the whole series, and
+    never buffers persist_len rows or more."""
+    import numpy as np
+
+    from pyhydroqc_spark.operators.fused import persistence_np, range_flags_np
+
+    for seed in range(1200):
+        x, got, plen, buf_lens = _drive_detect(seed)
+        got = got.sort_values("pos")
+        assert got["pos"].tolist() == list(range(len(x))), seed
+        exp = range_flags_np(x, _MX, _MN) | persistence_np(x, np.zeros(len(x), bool), plen)[0]
+        assert got["anomaly"].to_numpy(bool).tolist() == exp.tolist(), seed
+        assert max(buf_lens) < plen, (seed, buf_lens)

@@ -1449,6 +1449,18 @@ def test_dup_spans_matches_reference(spark):
     assert got[5][1] == 1             # contiguous spans merge
     assert got[8][1] == 2             # gapped spans stay separate
 
+    # a planted ultra-hot boilerplate gram: 400 docs open and close with
+    # the same 12 words, so its rows all land on one count partition
+    boiler = " ".join(f"b{i}" for i in range(12))
+    hot_rows = [(i, boiler + f" filler{i} mid{i} " + boiler) for i in range(400)]
+    hot = dedup.dup_spans(
+        spark.createDataFrame(pd.DataFrame(hot_rows, columns=["doc_id", "text"])), n=12
+    ).collect()
+    assert {r["id"]: (r["n_words"], r["n_dup_spans"], r["dup_words"]) for r in hot} == (
+        _dup_spans_reference(hot_rows, 12)
+    )
+    assert all(r["n_dup_spans"] >= 1 for r in hot)  # every doc covered
+
 
 def test_dup_spans_real_docs_duckdb_parity(spark, docs):
     """Full-value parity vs an independent DuckDB transcription on the
@@ -1505,26 +1517,3 @@ ORDER BY id
     assert got["n_dup_spans"].tolist() == ref["n_dup_spans"].tolist()
     assert got["dup_words"].tolist() == ref["dup_words"].tolist()
     assert (got["n_dup_spans"] > 0).any()  # the fixture corpus has real dups
-
-
-def test_dup_spans_skew_guard_invariance(spark, docs):
-    """The hot-gram guard is an exact shortcut: output identical on/off,
-    including on a planted ultra-hot boilerplate gram."""
-    boiler = " ".join(f"b{i}" for i in range(12))
-    hotdocs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": list(range(400)),
-                "text": [
-                    boiler + f" filler{i} mid{i} " + boiler for i in range(400)
-                ],
-            }
-        )
-    )
-    for frame in (docs, hotdocs):
-        on = dedup.dup_spans(frame, n=12, skew_guard=True).orderBy("id").collect()
-        off = dedup.dup_spans(frame, n=12, skew_guard=False).orderBy("id").collect()
-        assert [tuple(r) for r in on] == [tuple(r) for r in off]
-    # the boilerplate corpus really is all-hot: every doc fully covered
-    prof = dedup.dup_spans(hotdocs, n=12).toPandas()
-    assert (prof["n_dup_spans"] >= 1).all()

@@ -6,7 +6,6 @@ import warnings
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from pyhydroqc_spark.operators import fused, threshold
 from tests.reference_oracle import load_reference
