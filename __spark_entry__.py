@@ -1077,17 +1077,10 @@ def q_aggregate_results(spark, sf_dir):
     )
 
 
-def q_point_metrics(spark, sf_dir):
-    """Full comparison workflow gated end-to-end: labels (value>420) and
-    detections (value>400) → widened events → compare_events state machine
-    (group merge + exit-only categorization + trailing-group quirk) →
-    point confusion metrics. One global row.
-
-    Deliberately runs the sequential grouped-map KERNEL (the clean-room
-    reference twin); the production/scale path is the pure-Window
-    compare_events_sql, gated separately by `event_metrics` (~14× faster
-    here). At gate scale AQE coalesces this CPU-heavy-but-tiny chain; the
-    kernel stays correctness-first by design."""
+def _conf_mtx(spark, sf_dir):
+    """The comparison chain both metrics gates share: labels (value>420)
+    and detections (value>400) → widened events → compare_events_sql
+    (group merge + exit-only categorization + trailing-group quirk)."""
     from pyhydroqc_spark.operators import events, metrics
 
     df = (
@@ -1097,8 +1090,15 @@ def q_point_metrics(spark, sf_dir):
     )
     df = events.anomaly_events(df, "labeled", wf=1, out_col="labeled_event")
     df = events.anomaly_events(df, "det", wf=1, out_col="detected_event")
-    cm = metrics.compare_events(_pin(spark, df), wf=1)
-    out = metrics.point_metrics(cm)
+    return metrics.compare_events_sql(df, wf=1)
+
+
+def q_point_metrics(spark, sf_dir):
+    """Point confusion metrics over the shared comparison chain: one
+    global row of tp/fp/fn/tn counts and ratios."""
+    from pyhydroqc_spark.operators import metrics
+
+    out = metrics.point_metrics(_conf_mtx(spark, sf_dir))
     return out.select(
         F.col("tp").cast("long").alias("tp"),
         F.col("fp").cast("long").alias("fp"),
@@ -1168,20 +1168,11 @@ def q_fingerprint(spark, sf_dir):
 
 def q_event_metrics(spark, sf_dir):
     """Event-level confusion counts (reference event_metrics,
-    `anomaly_utilities.py:250-295`): each category transition into tp/fp/fn
-    counts one event. Runs the pure-Window compare_events_sql twin end-to-
-    end (the kernel path is gated by point_metrics)."""
-    from pyhydroqc_spark.operators import events, metrics
+    `anomaly_utilities.py:250-295`) over the shared comparison chain: each
+    category transition into tp/fp/fn counts one event."""
+    from pyhydroqc_spark.operators import metrics
 
-    df = (
-        _events_long(spark, sf_dir)
-        .withColumn("labeled", F.col("value") > 420)
-        .withColumn("det", F.col("value") > 400)
-    )
-    df = events.anomaly_events(df, "labeled", wf=1, out_col="labeled_event")
-    df = events.anomaly_events(df, "det", wf=1, out_col="detected_event")
-    cm = metrics.compare_events_sql(df, wf=1)
-    out = metrics.event_metrics(cm)
+    out = metrics.event_metrics(_conf_mtx(spark, sf_dir))
     return out.select(
         F.col("tp").cast("long").alias("tp"),
         F.col("fp").cast("long").alias("fp"),

@@ -6,13 +6,15 @@ grouping, conditional widening of too-short valid groups, then an
 iterative shortest-event-first loop that forecasts from the preceding
 valid group, backcasts from the following one, and cross-fades the two.
 
-The whole loop is inherently sequential *within* a series (group ids are
-renumbered as events are corrected) and embarrassingly parallel *across*
-series — exactly the applyInPandas shape. Forecasts come from the engine's
-own numpy ARIMA (`arima.forecast_arima`) at the given order, or at the
-order the ``auto_order`` AIC grid picks when none is given; the
-reference's pmdarima calls are swapped for the same function in the
-parity tests so the loop logic is compared like-for-like.
+The loop is sequential *within* a series (group ids are renumbered as
+events are corrected) and independent *across* series, so it is a plain
+numpy kernel: ``correct_series`` runs once per series as the last step of
+``fused.fused_series_kernel``, inside the pipeline's one Python stage.
+Forecasts come from the engine's own numpy ARIMA
+(`arima.forecast_arima`) at the given order, or at the order the
+``auto_order`` AIC grid picks when none is given; the reference's
+pmdarima calls are swapped for the same function in the parity tests so
+the loop logic is compared like-for-like.
 
 Deviation from the reference (documented): when a series is entirely
 anomalous the reference prints an error and loops forever
@@ -24,11 +26,8 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
 from .arima import forecast_arima
-from .events import SERIES_KEY, ORDER_COL
 
 MIN_GROUP_LEN = 20  # `arima_correct.py:13` default
 MODEL_LIMIT_DAYS = 6  # `arima_correct.py:69` default
@@ -151,45 +150,3 @@ def correct_series(
             agrp[agrp > i] -= 2
 
     return det_cor, corrected
-
-
-def generate_corrections(
-    df: DataFrame,
-    observed_col: str = "observed",
-    event_col: str = "detected_event",
-    key: str = SERIES_KEY,
-    order_col: str = ORDER_COL,
-    ts_col: str = "ts",
-    min_group_len: int = MIN_GROUP_LEN,
-    model_limit_days: int = MODEL_LIMIT_DAYS,
-    arima_order=None,
-) -> DataFrame:
-    """Distributed correction: one grouped-map UDF per series.
-
-    Adds ``det_cor`` (double) and ``corrected`` (boolean). The corrected
-    series is what every retention-tier rollup aggregates — byte-parity here
-    anchors "exact match to reference aggregates" (BASELINE.json).
-    """
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField("det_cor", DoubleType(), True),
-            StructField("corrected", BooleanType(), True),
-        ]
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        det, cor = correct_series(
-            pdf[observed_col].to_numpy(dtype=float),
-            pdf[event_col].to_numpy(),
-            pd.DatetimeIndex(pdf[ts_col]),
-            min_group_len=min_group_len,
-            model_limit_days=model_limit_days,
-            order=arima_order,
-        )
-        pdf["det_cor"] = det
-        pdf["corrected"] = cor
-        return pdf
-
-    return df.groupBy(key).applyInPandas(run, schema=out_schema)

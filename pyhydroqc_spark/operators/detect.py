@@ -1,14 +1,18 @@
-"""ARIMA-residual detection pipeline (reference workflow F1).
+"""ARIMA residuals as Spark operators, for the query surface.
 
-Re-expression of `/root/reference/pyhydroqc/model_workflow.py:19-87`
-(`arima_detect`): rules QC → per-series ARIMA residuals → dynamic threshold
-→ residual test → OR with rules flags → widen+enumerate events.
+The pipeline fits each series' ARIMA inside the fused kernel
+(`fused.fused_series_kernel`); these operators serve the queries that
+need residuals on long (doc_id, pos, value) rows:
 
-Physical plan: one grouped-map Arrow UDF per series computes residuals/
-predictions (the only sequential math); everything else is native Window/
-column expressions. The UDF returns full rows, so no re-join is needed —
-the series grouping IS the shuffle, and downstream windows over the same
-key reuse it.
+* ``arima_residuals_sql`` — AR(p)/ARI(p,d) with q=0, fit JVM-side from
+  lag-product moment sums; only one coefficient row per series crosses
+  into Python.
+* ``arima_residuals_fixed`` — a fixed (c, phi, theta, d) model fit
+  offline, applied per series in one grouped-map pass (any q).
+
+Both add ``residual`` and ``prediction`` columns; the dynamic threshold,
+the residual test and event widening that follow are the `threshold` and
+`events` operators.
 """
 
 from __future__ import annotations
@@ -16,53 +20,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
 from . import arima as arima_mod
-from .events import SERIES_KEY, ORDER_COL, anomaly_events
-from .rules import interpolate, persistence, range_check
-from .threshold import detect_threshold_anomalies, dynamic_threshold
-
-
-def arima_residuals(
-    df: DataFrame,
-    value_col: str = "observed",
-    order=(1, 1, 1),
-    key: str = SERIES_KEY,
-    order_col: str = ORDER_COL,
-    resid_col: str = "residual",
-    pred_col: str = "prediction",
-) -> DataFrame:
-    """Per-series ARIMA(p,d,q) in-sample residuals + one-step predictions."""
-    out_schema = StructType(
-        list(df.schema.fields)
-        + [
-            StructField(resid_col, DoubleType(), True),
-            StructField(pred_col, DoubleType(), True),
-        ]
-    )
-    o = tuple(order)
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        x = pdf[value_col].to_numpy(dtype=float)
-        valid = ~np.isnan(x)
-        resid = np.full(len(x), np.nan)
-        pred = np.full(len(x), np.nan)
-        if valid.all() and len(x) > max(o[0], o[2]) + o[1] + 2:
-            resid, pred, _ = arima_mod.fit_arima(x, *o)
-        elif valid.any():
-            # gaps survive QC only for fully-missing stretches; fit on the
-            # contiguous valid prefix view and leave NaN elsewhere
-            xi = np.where(valid, x, np.interp(np.arange(len(x)), np.flatnonzero(valid), x[valid]))
-            r, p_, _ = arima_mod.fit_arima(xi, *o)
-            resid = np.where(valid, r, np.nan)
-            pred = p_
-        pdf[resid_col] = resid
-        pdf[pred_col] = pred
-        return pdf
-
-    return df.groupBy(key).applyInPandas(fit, schema=out_schema)
+from .events import SERIES_KEY, ORDER_COL
 
 
 def arima_residuals_fixed(
@@ -129,8 +90,8 @@ def arima_residuals_sql(
     aggregation. Only the (p+1)-vector of coefficients per series crosses
     the Python boundary (a mapInPandas solve over one row per series);
     predictions/residuals are then pure column expressions. Numerically
-    identical (≤1e-9) to the grouped-map ``fit_arima`` path, ~10× cheaper
-    at scale because the fact rows never leave the JVM.
+    identical (≤1e-8, tested) to ``arima.fit_arima`` run per series; the
+    fact rows never leave the JVM.
 
     The lagged plan is consumed twice (moment sums, then the fact-side
     join) and is recomputed, not persisted: at cluster scale persisting the
@@ -138,12 +99,12 @@ def arima_residuals_sql(
     hotter caches) than replaying a columnar scan + window, and the second
     consumer reuses the same shuffle output anyway where one exists.
     """
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
     p, d, q = order
     if q != 0 or d > 2:
-        raise ValueError("SQL path supports q=0, d<=2; use arima_residuals")
+        raise ValueError(
+            "SQL path supports q=0, d<=2; for q>0 apply an offline fit "
+            "with arima_residuals_fixed"
+        )
 
     w = Window.partitionBy(key).orderBy(order_col)
     x = F.col(value_col)
@@ -171,7 +132,6 @@ def arima_residuals_sql(
             )
     moments = tmp.groupBy(key).agg(*aggs)
 
-    n_terms = p + 1
     key_type = df.schema[key].dataType
     coef_schema = StructType(
         [
@@ -186,8 +146,6 @@ def arima_residuals_sql(
             for _, r in pdf.iterrows():
                 n = r["n"]
                 # build X'X / X'y from the moment sums; term 0 is y itself
-                import numpy as np
-
                 k = p + (1 if intercept else 0)
                 XtX = np.zeros((k, k))
                 Xty = np.zeros(k)
@@ -245,57 +203,3 @@ def arima_residuals_sql(
     out = joined.withColumn(pred_col, pred).withColumn(resid_col, resid)
     drop = ["__y", "__coef"] + [f"__yl{j}" for j in range(1, p + 1)]
     return out.drop(*drop)
-
-
-def arima_detect(
-    df: DataFrame,
-    params,
-    rules: bool = True,
-    value_col: str = "value",
-    key: str = SERIES_KEY,
-    order_col: str = ORDER_COL,
-) -> DataFrame:
-    """Full detection workflow (`model_workflow.py:19-60`):
-
-    1. (rules) range_check + persistence + interpolate → observed
-    2. per-series ARIMA residuals on observed
-    3. dynamic threshold over residuals
-    4. residual-vs-threshold anomalies, OR'd with rules anomalies
-    5. widen + enumerate → detected_event
-
-    ``params`` is a SeriesParams (engine defaults if None).
-    """
-    from ..params import DEFAULT_PARAMS
-
-    p = params or DEFAULT_PARAMS
-    out = df
-    if rules:
-        out = range_check(out, p.max_range, p.min_range, value_col)
-        out = persistence(out, p.persist, value_col)
-        out = interpolate(out, 10000, value_col)
-        obs_col = "observed"
-    else:
-        out = out.withColumn("anomaly", F.lit(False)).withColumn(
-            "observed", F.col(value_col)
-        )
-        obs_col = "observed"
-    pdq = tuple(p.pdq)
-    if pdq[2] == 0 and pdq[1] <= 2:
-        out = arima_residuals_sql(out, obs_col, order=pdq, key=key, order_col=order_col)
-    else:
-        out = arima_residuals(out, obs_col, order=pdq, key=key, order_col=order_col)
-    out = dynamic_threshold(
-        out,
-        "residual",
-        window_sz=p.window_sz,
-        alpha=p.alpha,
-        min_range=p.threshold_min,
-        key=key,
-        order=order_col,
-    )
-    out = detect_threshold_anomalies(out)
-    out = out.withColumn(
-        "all_anomalies", F.col("detected_anomaly") | F.col("anomaly")
-    )
-    out = anomaly_events(out, "all_anomalies", wf=p.widen, out_col="detected_event", key=key, order=order_col)
-    return out

@@ -1,11 +1,12 @@
-"""Fused per-series kernel — QC → detect → correct in ONE grouped-map pass.
+"""Fused per-series kernel — QC → detect → correct in ONE Python pass.
 
-Alternative physical strategy to the JVM-native operator chain: the long
-pipeline (≈15 window ops + 2 Python crossings + a broadcast join) becomes a
-single shuffle on doc_id and a single Arrow crossing, with all per-series
-math in numpy/pandas. Semantics are identical — each step mirrors the
-reference function the JVM operators also mirror (tests drive both against
-the genuine reference):
+The pipeline's only per-series math. ``fused_tokens_to_tiers`` reads the
+token table (one row per complete series), and per series
+``_token_series_tiers`` dequantizes, runs ``fused_series_kernel`` and
+reduces the corrected values to every retention tier's cells with
+``np.*.reduceat``; one row per (series, tier) crosses back, carrying the
+cell vectors and the tier blob the pipeline commits. Each kernel step is a
+numpy function mirroring the reference:
 
 * range check       ↔ rules_detect.range_check      (:11-27)
 * persistence       ↔ rules_detect.persistence      (:30-52)
@@ -13,12 +14,11 @@ the genuine reference):
 * ARIMA residuals   ↔ modeling_utilities.build_arima_model (engine ARIMA)
 * dynamic threshold ↔ anomaly_utilities.set_dynamic_threshold (:381-423)
 * detect + events   ↔ anomaly_utilities.detect_anomalies/anomaly_events
-* correction        ↔ arima_correct.generate_corrections (correct.py kernel)
+* correction        ↔ arima_correct.py:69-188 (``correct.correct_series``)
 
-When to choose which: the fused kernel wins when series are long and the
-cluster is Python-worker-rich (fewer barriers, no repeated sorts); the
-native chain wins when only part of the pipeline is needed, when q=0 lets
-the AR fit stay JVM-side, or when Python workers are the scarce resource.
+The JVM operators (`rules`, `detect.arima_residuals_sql`, `threshold`,
+`events`, `rollup`) express the same steps for the queries over long
+rows; the tests pin each numpy step and the whole kernel against them.
 """
 
 from __future__ import annotations
@@ -26,19 +26,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from ..params import DEFAULT_PARAMS, SeriesParams
 from ..stats import z_for_alpha
 from .arima import fit_arima
 from .correct import correct_series
-from .events import SERIES_KEY, ORDER_COL
+from .events import SERIES_KEY
 
 
 def range_flags_np(x: np.ndarray, max_range: float, min_range: float) -> np.ndarray:
@@ -131,17 +125,6 @@ def widen_events_np(flags: np.ndarray, wf: int) -> np.ndarray:
     near = (c[hi + 1] - c[lo]) > 0
     interior = (i >= wf) & (i < n - wf)
     return run_ids_np(near & interior)
-
-
-FUSED_SCHEMA_FIELDS = [
-    StructField("anomaly", BooleanType(), True),
-    StructField("observed", DoubleType(), True),
-    StructField("residual", DoubleType(), True),
-    StructField("detected_anomaly", BooleanType(), True),
-    StructField("detected_event", IntegerType(), True),
-    StructField("det_cor", DoubleType(), True),
-    StructField("corrected", BooleanType(), True),
-]
 
 
 def fused_series_kernel(
@@ -359,9 +342,9 @@ def fused_tokens_to_cells(
     kernel emits EVERY tier's cells in the same pass (distinguished by the
     ``tier`` column) — the coarser-tier re-aggregation shuffles disappear
     entirely (select the tier by filter, a narrow op). Output matches
-    ``rollup_points(fused_qc_correct(explode_tokens(tok)), t)`` per tier
-    (cnt=0 cells carry NULL aggregates, like count/sum/min/max over an
-    all-NULL bucket).
+    ``rollup_points`` per tier over ``fused_series_kernel``'s ``det_cor``
+    on the exploded rows (cnt=0 cells carry NULL aggregates, like
+    count/sum/min/max over an all-NULL bucket).
     """
     return explode_tier_cells(
         fused_tokens_to_tiers(
@@ -370,33 +353,3 @@ def fused_tokens_to_cells(
         ),
         key,
     )
-
-
-def fused_qc_correct(
-    df: DataFrame,
-    params: SeriesParams | None = None,
-    arima_order=(1, 1, 0),
-    value_col: str = "value",
-    key: str = SERIES_KEY,
-    order_col: str = ORDER_COL,
-    ts_col: str = "ts",
-) -> DataFrame:
-    """One grouped-map pass per series over (doc_id, pos, ts, value)."""
-    p = params or DEFAULT_PARAMS
-    in_fields = [df.schema[c] for c in (key, order_col, ts_col, value_col)]
-    schema = StructType(list(in_fields) + FUSED_SCHEMA_FIELDS)
-    slim = df.select(key, order_col, ts_col, value_col)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        out = fused_series_kernel(
-            pdf[value_col].to_numpy(dtype=float),
-            pd.DatetimeIndex(pdf[ts_col]),
-            p,
-            arima_order,
-        )
-        for k, v in out.items():
-            pdf[k] = v
-        return pdf
-
-    return slim.groupBy(key).applyInPandas(run, schema=schema)

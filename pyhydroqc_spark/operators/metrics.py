@@ -1,11 +1,11 @@
 """Validation surface — event comparison + confusion-matrix metrics.
 
-Re-expression of `/root/reference/pyhydroqc/anomaly_utilities.py`:
+Re-expression of the reference's `pyhydroqc/anomaly_utilities.py`:
 
-* ``compare_events``   (:138-208) — a genuinely sequential two-state scan
-  merging labeled & detected event runs into confusion-matrix groups
+* ``compare_events_sql`` (:138-208) — the reference's sequential two-state
+  scan merging labeled & detected event runs into confusion-matrix groups
   (flip-flop / tn transition rules, tn-trimmed group edges via assign_cm
-  :122-135). Runs clean-room per series inside applyInPandas.
+  :122-135), written as a running group id over Window expressions.
 * ``point_metrics``    (:215-247) — conditional-count aggregation + ratio
   columns, fully native Spark.
 * ``event_metrics``    (:250-295) — transition counts via lag windows.
@@ -18,76 +18,9 @@ row transitions out of it), so it stays 'tn'.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 from .events import SERIES_KEY, ORDER_COL, series_window
-
-
-def _compare_one(labeled: np.ndarray, detected: np.ndarray, wf: int) -> np.ndarray:
-    """Sequential group merge + categorize for one series."""
-    n = len(labeled)
-    grp = np.zeros(n, dtype=int)
-    gi = 0
-    prev_la, prev_da = labeled[0], detected[0]
-    for i in range(n):
-        la, da = labeled[i], detected[i]
-        if la != prev_la or da != prev_da:
-            if prev_la == 0 and prev_da == 0:
-                gi += 1
-            elif la == 0 and da == 0:
-                gi += 1
-            elif la != prev_la and da != prev_da:
-                gi += 1
-        grp[i] = gi
-        prev_la, prev_da = la, da
-
-    cm = np.full(n, "tn", dtype=object)
-    # categorize every group except the last (reference assigns on exit
-    # only). Group ids are nondecreasing (cumsum), so each group is a
-    # contiguous slice — O(n) total instead of an O(n·G) mask rescan.
-    starts = np.r_[0, np.flatnonzero(np.diff(grp)) + 1]
-    ends = np.r_[starts[1:], n]
-    for s, e in zip(starts, ends):
-        if grp[s] >= gi:  # trailing group: never categorized
-            continue
-        has_d = detected[s:e].any()
-        has_l = labeled[s:e].any()
-        if not (has_d or has_l):
-            continue
-        val = "tp" if (has_d and has_l) else ("fp" if has_d else "fn")
-        lo, hi = s + wf, e - wf
-        if hi > lo:
-            cm[lo:hi] = val
-    return cm
-
-
-def compare_events(
-    df: DataFrame,
-    wf: int = 1,
-    labeled_col: str = "labeled_event",
-    detected_col: str = "detected_event",
-    out_col: str = "conf_mtx",
-    key: str = SERIES_KEY,
-    order: str = ORDER_COL,
-) -> DataFrame:
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, StringType(), True)]
-    )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order).reset_index(drop=True)
-        if len(pdf) == 0:
-            pdf[out_col] = pd.Series(dtype=str)
-            return pdf
-        pdf[out_col] = _compare_one(
-            pdf[labeled_col].to_numpy(), pdf[detected_col].to_numpy(), wf
-        )
-        return pdf
-
-    return df.groupBy(key).applyInPandas(run, schema=out_schema)
 
 
 def compare_events_sql(
@@ -99,15 +32,15 @@ def compare_events_sql(
     key: str = SERIES_KEY,
     order: str = ORDER_COL,
 ) -> DataFrame:
-    """`compare_events` as pure Window expressions — no Python kernel.
+    """The reference's `compare_events` as pure Window expressions.
 
-    The reference's sequential merge is a running group id: a new group
-    starts on a (labeled, detected) transition out of / into (0, 0) or when
-    BOTH ids change; categories assign on group exit only (the trailing
-    group never categorizes — quirk preserved) and ``wf`` edge rows of each
-    categorized group stay 'tn'. Output-identical to the grouped-map kernel
-    (tested); at scale this keeps the comparison inside whole-stage codegen
-    with one exchange on the series key.
+    The sequential merge is a running group id: a new group starts on a
+    (labeled, detected) transition out of / into (0, 0) or when BOTH ids
+    change; categories assign on group exit only (the trailing group never
+    categorizes — quirk preserved) and ``wf`` edge rows of each categorized
+    group stay 'tn'. Row-identical to a sequential numpy scan of the
+    reference loop (tested); the comparison stays inside whole-stage
+    codegen with one exchange on the series key.
     """
     w = series_window(key, order)
     la, da = F.col(labeled_col), F.col(detected_col)

@@ -59,27 +59,23 @@ def test_auto_order_picks_differencing():
     assert d2 == 0
 
 
-def test_arima_detect_flags_spikes_without_rules(spark):
+def test_arima_detect_flags_spikes_without_rules():
+    """pyhydroqc's detection workflow on the fused kernel: with the default
+    (unbounded) range and persistence the rules flag nothing, so the
+    residual threshold alone finds the two spikes."""
+    from pyhydroqc_spark.operators import fused
+    from pyhydroqc_spark.params import SeriesParams
+
     x, _ = _ar1(600, phi=0.7, sigma=0.3)
     x[100] += 8.0
     x[400] -= 8.0
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["s"] * len(x),
-            "pos": range(len(x)),
-            "ts": pd.date_range("2022-01-01", periods=len(x), freq="15min"),
-            "value": x,
-        }
-    )
-    from pyhydroqc_spark.params import SeriesParams
-
-    df = spark.createDataFrame(pdf)
-    out = detect.arima_detect(
-        df,
+    got = fused.fused_series_kernel(
+        x,
+        pd.date_range("2022-01-01", periods=len(x), freq="15min"),
         SeriesParams(window_sz=40, alpha=0.0001, threshold_min=0.1, pdq=(1, 0, 0), widen=1),
-        rules=False,
     )
-    got = out.orderBy("pos").select("detected_anomaly", "detected_event").toPandas()
+    assert not got["anomaly"].any()
+    np.testing.assert_array_equal(got["observed"], x)
     assert got["detected_anomaly"][100] and got["detected_anomaly"][400]
     # events are widened ±1 around each spike and enumerated
     assert got["detected_event"][99] > 0 and got["detected_event"][101] > 0
@@ -90,28 +86,28 @@ def test_arima_detect_flags_spikes_without_rules(spark):
 
 @pytest.mark.parametrize("order", [(1, 1, 0), (2, 0, 0), (3, 1, 0), (1, 2, 0)])
 def test_sql_residuals_match_udf_path(spark, order):
+    """``arima_residuals_sql``'s JVM-side fit equals ``arima.fit_arima`` run
+    per series, the kernel's fit."""
     rng = np.random.default_rng(17)
     rows = []
+    want = {}
     for d in ["a", "b", "c"]:
         x = np.cumsum(rng.normal(0.05, 1.0, 400)) + 10
+        want[d] = arima.fit_arima(x, *order)[:2]
         for i, v in enumerate(x):
             ts = (pd.Timestamp("2022-01-01") + pd.Timedelta(minutes=15 * i)).to_pydatetime()
             rows.append((d, i, ts, float(v)))
     df = spark.createDataFrame(rows, "doc_id string, pos int, ts timestamp, observed double")
-    a = (
-        detect.arima_residuals(df, "observed", order=order)
-        .orderBy("doc_id", "pos")
-        .select("residual", "prediction")
-        .toPandas()
-    )
-    b = (
+    got = (
         detect.arima_residuals_sql(df, "observed", order=order)
         .orderBy("doc_id", "pos")
-        .select("residual", "prediction")
+        .select("doc_id", "residual", "prediction")
         .toPandas()
     )
-    np.testing.assert_allclose(a["residual"], b["residual"], atol=1e-8)
-    np.testing.assert_allclose(a["prediction"], b["prediction"], atol=1e-8)
+    for d, (resid, pred) in want.items():
+        g = got[got["doc_id"] == d]
+        np.testing.assert_allclose(g["residual"], resid, atol=1e-8, err_msg=d)
+        np.testing.assert_allclose(g["prediction"], pred, atol=1e-8, err_msg=d)
 
 
 def test_arima_residuals_fixed_requires_model():

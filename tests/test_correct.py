@@ -2,7 +2,7 @@
 with pmdarima patched to the engine's own forecaster on BOTH sides so the
 loop logic (grouping, widening, ordering, renumbering, crossfade) is
 compared like-for-like. The parity tests skip without the reference
-checkout; the termination and Spark-wrapper tests run without it."""
+checkout; the termination test runs without it."""
 
 import warnings
 
@@ -129,23 +129,3 @@ def test_all_anomalous_terminates():
     np.testing.assert_array_equal(det, x)  # left uncorrected, no hang
     assert not cor.any()
 
-
-def test_generate_corrections_spark(spark):
-    rdf = _series_with_events(2)
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["a"] * len(rdf),
-            "pos": range(len(rdf)),
-            "ts": rdf.index,
-            "observed": rdf["observed"].values,
-            "detected_event": rdf["detected_event"].values,
-        }
-    )
-    df = spark.createDataFrame(pdf)
-    out = correct.generate_corrections(df, arima_order=(1, 1, 0))
-    got = out.orderBy("pos").select("det_cor", "corrected").toPandas()
-    mine_det, mine_cor = correct.correct_series(
-        rdf["observed"].to_numpy(), rdf["detected_event"].to_numpy(), rdf.index, order=(1, 1, 0)
-    )
-    np.testing.assert_allclose(got["det_cor"].to_numpy(), mine_det, atol=1e-12)
-    assert got["corrected"].astype(bool).tolist() == mine_cor.astype(bool).tolist()

@@ -1,6 +1,8 @@
 """Degenerate-series robustness: at 10^12 sequences the table WILL contain
 empty, single-point, all-missing, and all-constant series — every path
-(fused cells, fused rows, native chain) must survive them and agree."""
+(fused cells, the pipeline's commits, the stream merge, the windowed
+detectors) must survive them, and the fused cells must agree with the
+kernel run per exploded series."""
 
 import numpy as np
 import pytest
@@ -9,6 +11,7 @@ from pyhydroqc_spark.ingest import explode_tokens
 from pyhydroqc_spark.operators import fused
 from pyhydroqc_spark.operators.rollup import rollup_points
 from pyhydroqc_spark.params import SeriesParams
+from tests.qc_chain import kernel_rows
 
 P = SeriesParams(max_range=25.0, min_range=-1.0, persist=30, window_sz=30,
                  alpha=0.0001, threshold_min=0.25, widen=1, pdq=(1, 1, 0))
@@ -55,7 +58,7 @@ def test_fused_cells_agrees_with_exploded_on_degenerates(spark, tok):
         .orderBy("doc_id", "bucket_start")
         .toPandas()
     )
-    base = fused.fused_qc_correct(explode_tokens(tok), P)
+    base = kernel_rows(spark, tok, P)
     exp = (
         rollup_points(
             base.select("doc_id", "ts", "pos", "det_cor"), 900, value_col="det_cor"

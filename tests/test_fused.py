@@ -1,15 +1,16 @@
 """Fused kernel parity: numpy per-series helpers vs the genuine reference,
-and the fused Spark pass vs the native operator chain."""
+the kernel vs the JVM operator chain, and the token-table Spark pass vs
+the kernel run per exploded series with JVM rollups."""
 
 import warnings
 
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from pyhydroqc_spark.operators import fused
 from pyhydroqc_spark.params import SeriesParams
+from tests.qc_chain import correct_on_driver, jvm_detect, kernel_frame, kernel_rows
 from tests.reference_oracle import load_reference
 
 
@@ -80,49 +81,37 @@ def test_events_np_matches_reference(wf, REF):
 
 
 def test_fused_spark_matches_native_chain(spark):
-    from pyhydroqc_spark.operators import correct as C
-    from pyhydroqc_spark.operators import detect as D
-    from pyhydroqc_spark.operators import rules as R
-    from pyhydroqc_spark.operators import threshold as T
-    from pyhydroqc_spark.operators.events import anomaly_events
-
+    """The kernel equals the JVM operator chain over the same rows:
+    rules flags, observed, residuals and events, and the correction of
+    the chain's events equals the kernel's."""
     rows = []
-    for d in ["a", "b"]:
-        x = _series(3 if d == "a" else 4)
+    for seed in (3, 4, 5, 6):
+        x = _series(seed)
         ts = pd.date_range("2022-01-01", periods=len(x), freq="15min")
         for i in range(len(x)):
-            rows.append((d, i, ts[i].to_pydatetime(), None if np.isnan(x[i]) else float(x[i])))
+            rows.append((f"s{seed}", i, ts[i].to_pydatetime(), None if np.isnan(x[i]) else float(x[i])))
     df = spark.createDataFrame(rows, "doc_id string, pos int, ts timestamp, value double")
 
-    fz = fused.fused_qc_correct(df, P).orderBy("doc_id", "pos").toPandas()
-
-    qc = R.interpolate(R.persistence(R.range_check(df, P.max_range, P.min_range), P.persist))
-    det = D.arima_residuals(qc, "observed", order=P.pdq)
-    det = T.dynamic_threshold(det, "residual", window_sz=P.window_sz, alpha=P.alpha, min_range=P.threshold_min)
-    det = T.detect_threshold_anomalies(det)
-    det = det.withColumn("all_anomalies", F.col("detected_anomaly") | F.col("anomaly"))
-    det = anomaly_events(det, "all_anomalies", wf=P.widen, out_col="detected_event")
-    nat_det = det.orderBy("doc_id", "pos").select(
-        "anomaly", "observed", "detected_event"
-    ).toPandas()
-    cor = C.generate_corrections(
-        det.select("doc_id", "pos", "ts", "observed", "detected_event"),
-        "observed", "detected_event", arima_order=(1, 1, 0),
+    kz = kernel_frame(df.toPandas(), P)
+    nat = correct_on_driver(
+        jvm_detect(df, P)
+        .select("doc_id", "pos", "ts", "anomaly", "observed", "residual", "detected_event")
+        .toPandas()
     )
-    nat_cor = cor.orderBy("doc_id", "pos").select("det_cor", "corrected").toPandas()
 
-    assert fz["anomaly"].tolist() == nat_det["anomaly"].tolist()
-    np.testing.assert_allclose(fz["observed"], nat_det["observed"], atol=1e-9, equal_nan=True)
-    assert fz["detected_event"].tolist() == nat_det["detected_event"].tolist()
-    np.testing.assert_allclose(fz["det_cor"], nat_cor["det_cor"], atol=1e-9, equal_nan=True)
-    assert fz["corrected"].tolist() == nat_cor["corrected"].tolist()
+    assert kz["anomaly"].any() and kz["detected_event"].max() > 0
+    assert kz["anomaly"].tolist() == nat["anomaly"].tolist()
+    np.testing.assert_allclose(kz["observed"], nat["observed"], atol=1e-9, equal_nan=True)
+    np.testing.assert_allclose(kz["residual"], nat["residual"], atol=1e-8, equal_nan=True)
+    assert kz["detected_event"].tolist() == nat["detected_event"].tolist()
+    np.testing.assert_allclose(kz["det_cor"], nat["det_cor"], atol=1e-9, equal_nan=True)
+    assert kz["corrected"].tolist() == nat["corrected"].tolist()
 
 
 def test_fused_tokens_to_cells_matches_exploded_path(spark):
     """The bandwidth-optimal path (token arrays in, finished 15min cells
-    out) must equal explode → fused_qc_correct → rollup_points exactly."""
+    out) must equal explode → kernel per series → rollup_points exactly."""
     from pyhydroqc_spark.datagen import gen_token_table
-    from pyhydroqc_spark.ingest import explode_tokens
     from pyhydroqc_spark.operators.rollup import rollup_points
 
     pdf = gen_token_table(n_series=3, n_tok=900, seed=4)
@@ -134,7 +123,7 @@ def test_fused_tokens_to_cells_matches_exploded_path(spark):
         .orderBy("doc_id", "bucket_start")
         .toPandas()
     )
-    base = fused.fused_qc_correct(explode_tokens(tok), P)
+    base = kernel_rows(spark, tok, P)
     exp = (
         rollup_points(
             base.select("doc_id", "ts", "pos", "det_cor"), 900, value_col="det_cor"
@@ -157,7 +146,6 @@ def test_fused_cells_coarser_tiers_compose(spark):
     """1h/1d re-aggregated from the kernel's 15min cells equal the tiers
     built from the exploded path."""
     from pyhydroqc_spark.datagen import gen_token_table
-    from pyhydroqc_spark.ingest import explode_tokens
     from pyhydroqc_spark.operators.rollup import rollup_from_rollup, rollup_points
 
     pdf = gen_token_table(n_series=2, n_tok=700, seed=8)
@@ -170,7 +158,7 @@ def test_fused_cells_coarser_tiers_compose(spark):
         .orderBy("doc_id", "bucket_start")
         .toPandas()
     )
-    base = fused.fused_qc_correct(explode_tokens(tok), P)
+    base = kernel_rows(spark, tok, P)
     exp = (
         rollup_points(
             base.select("doc_id", "ts", "pos", "det_cor"), 86400, value_col="det_cor"
@@ -190,7 +178,6 @@ def test_fused_multi_tier_emission_matches_per_tier(spark):
     """tier_seconds as a tuple: the kernel's per-tier cells equal the
     per-tier rollups of the exploded path, for every tier at once."""
     from pyhydroqc_spark.datagen import gen_token_table
-    from pyhydroqc_spark.ingest import explode_tokens
     from pyhydroqc_spark.operators.rollup import rollup_points
 
     pdf = gen_token_table(n_series=2, n_tok=900, seed=12)
@@ -200,7 +187,7 @@ def test_fused_multi_tier_emission_matches_per_tier(spark):
     cells = fused.fused_tokens_to_cells(
         tok, P, tier_seconds=(900, 3600, 86400)
     ).toPandas()
-    base = fused.fused_qc_correct(explode_tokens(tok), P)
+    base = kernel_rows(spark, tok, P)
     slim = base.select("doc_id", "ts", "pos", "det_cor")
     for t in (900, 3600, 86400):
         got = (

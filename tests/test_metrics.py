@@ -1,5 +1,6 @@
-"""Parity: compare_events / metrics / event_metrics vs the reference, and
-the same operators against each other and plain numpy counts without it."""
+"""Parity: compare_events_sql / point_metrics / event_metrics vs the
+reference, and without it against a sequential numpy scan of the
+reference loop and plain numpy counts."""
 
 import warnings
 
@@ -20,6 +21,65 @@ def REF():
         return load_reference()
     except ImportError as e:
         pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
+
+
+def _compare_one(labeled: np.ndarray, detected: np.ndarray, wf: int) -> np.ndarray:
+    """The numpy spec of ``compare_events`` for one series: the reference's
+    sequential group merge (`anomaly_utilities.py:168-181`), then each
+    group but the trailing one categorized with ``wf`` edge rows left
+    'tn' (assign_cm, :122-135)."""
+    n = len(labeled)
+    grp = np.zeros(n, dtype=int)
+    gi = 0
+    prev_la, prev_da = labeled[0], detected[0]
+    for i in range(n):
+        la, da = labeled[i], detected[i]
+        if la != prev_la or da != prev_da:
+            if prev_la == 0 and prev_da == 0:
+                gi += 1
+            elif la == 0 and da == 0:
+                gi += 1
+            elif la != prev_la and da != prev_da:
+                gi += 1
+        grp[i] = gi
+        prev_la, prev_da = la, da
+
+    cm = np.full(n, "tn", dtype=object)
+    starts = np.r_[0, np.flatnonzero(np.diff(grp)) + 1]
+    ends = np.r_[starts[1:], n]
+    for s, e in zip(starts, ends):
+        if grp[s] >= gi:  # trailing group: never categorized
+            continue
+        has_d = detected[s:e].any()
+        has_l = labeled[s:e].any()
+        if not (has_d or has_l):
+            continue
+        val = "tp" if (has_d and has_l) else ("fp" if has_d else "fn")
+        lo, hi = s + wf, e - wf
+        if hi > lo:
+            cm[lo:hi] = val
+    return cm
+
+
+def _spec_conf(df, wf):
+    """``_compare_one`` per series of collected event rows, in (doc_id,
+    pos) order."""
+    pdf = df.select("doc_id", "pos", "labeled_event", "detected_event").toPandas()
+    out = []
+    for _, g in pdf.sort_values(["doc_id", "pos"]).groupby("doc_id", sort=True):
+        out += _compare_one(
+            g["labeled_event"].to_numpy(), g["detected_event"].to_numpy(), wf
+        ).tolist()
+    return out
+
+
+def _sql_conf(df, wf):
+    return (
+        metrics.compare_events_sql(df, wf=wf)
+        .orderBy("doc_id", "pos")
+        .toPandas()["conf_mtx"]
+        .tolist()
+    )
 
 
 def _mk_events(spark, labeled, detected):
@@ -63,13 +123,7 @@ def test_compare_events_parity(spark, REF, seed, n, pl, pdet):
     labeled = rng.random(n) < pl
     detected = rng.random(n) < pdet
     df, pdf = _mk_events(spark, labeled, detected)
-    got = (
-        metrics.compare_events(df, wf=1)
-        .orderBy("pos")
-        .select("conf_mtx")
-        .toPandas()["conf_mtx"]
-        .tolist()
-    )
+    got = _sql_conf(df, wf=1)
     exp = _ref_compare(REF, pdf)["conf_mtx"].tolist()
     assert got == exp
 
@@ -77,15 +131,13 @@ def test_compare_events_parity(spark, REF, seed, n, pl, pdet):
 @pytest.mark.parametrize("seed,n,pl,pdet", FLAG_CASES)
 @pytest.mark.parametrize("wf", [0, 1, 2])
 def test_compare_events_kernel_equals_sql_on_random_flags(spark, seed, n, pl, pdet, wf):
-    """The grouped-map kernel and the Window-expression form agree row for
-    row on events built by ``anomaly_events`` from seeded random flags."""
+    """The numpy spec and the Window-expression form agree row for row on
+    events built by ``anomaly_events`` from seeded random flags."""
     rng = np.random.default_rng(seed)
     df, _ = _mk_events(spark, rng.random(n) < pl, rng.random(n) < pdet)
-
-    def conf(fn):
-        return fn(df, wf=wf).orderBy("pos").toPandas()["conf_mtx"].tolist()
-
-    assert conf(metrics.compare_events) == conf(metrics.compare_events_sql)
+    got = _sql_conf(df, wf)
+    assert got == _spec_conf(df, wf)
+    assert set(got) - {"tn"}  # some group is categorized
 
 
 def _div(a, b):
@@ -104,7 +156,7 @@ def test_point_and_event_metrics_equal_numpy_counts(spark):
         labeled = rng.random(n) < 0.1
         detected = labeled & (rng.random(n) < 0.7) | (rng.random(n) < 0.05)
         df, _ = _mk_events(spark, labeled, detected)
-        cm = metrics.compare_events(df, wf=1).toPandas().assign(doc_id=d)
+        cm = metrics.compare_events_sql(df, wf=1).toPandas().assign(doc_id=d)
         rows.append(cm)
     pdf = pd.concat(rows, ignore_index=True).sort_values(["doc_id", "pos"])
     cm_df = spark.createDataFrame(pdf[["doc_id", "pos", "conf_mtx"]])
@@ -141,7 +193,7 @@ def test_point_metrics_parity(spark, REF):
     labeled = rng.random(300) < 0.1
     detected = labeled & (rng.random(300) < 0.8) | (rng.random(300) < 0.05)
     df, pdf = _mk_events(spark, labeled, detected)
-    cm = metrics.compare_events(df, wf=1)
+    cm = metrics.compare_events_sql(df, wf=1)
     got = metrics.point_metrics(cm).toPandas().iloc[0]
     rdf = _ref_compare(REF, pdf)
     with warnings.catch_warnings():
@@ -163,7 +215,7 @@ def test_event_metrics_parity(spark, REF):
     labeled = rng.random(300) < 0.12
     detected = labeled & (rng.random(300) < 0.7) | (rng.random(300) < 0.04)
     df, pdf = _mk_events(spark, labeled, detected)
-    cm = metrics.compare_events(df, wf=1)
+    cm = metrics.compare_events_sql(df, wf=1)
     got = metrics.event_metrics(cm).toPandas().iloc[0]
     rdf = _ref_compare(REF, pdf)
     with warnings.catch_warnings():
@@ -188,10 +240,8 @@ def test_aggregate_results(spark):
 
 def test_compare_events_sql_equals_kernel(spark):
     """The Window-expression compare_events must be row-identical to the
-    grouped-map kernel on adversarial event sequences (overlaps, touching
-    groups, trailing group, singleton groups)."""
-    import numpy as np
-
+    numpy spec on adversarial event sequences (overlaps, touching groups,
+    trailing group, singleton groups) over several series."""
     rng = np.random.default_rng(17)
     rows = []
     for d in ["a", "b", "c"]:
@@ -211,20 +261,12 @@ def test_compare_events_sql_equals_kernel(spark):
         li, di = ids(lab), ids(det)
         for i in range(n):
             rows.append((d, i, int(li[i]), int(di[i])))
+    # a series that ends inside an overlapping labeled/detected group
+    lab_end = [0] * 10 + [1] * 10 + [0] * 10 + [2] * 10
+    det_end = [0] * 12 + [1] * 3 + [0] * 20 + [2] * 5
+    rows += [("d", i, la, da) for i, (la, da) in enumerate(zip(lab_end, det_end))]
     df = spark.createDataFrame(
         rows, "doc_id string, pos long, labeled_event long, detected_event long"
     )
     for wf in (0, 1, 2):
-        a = (
-            metrics.compare_events(df, wf=wf)
-            .orderBy("doc_id", "pos")
-            .toPandas()["conf_mtx"]
-            .tolist()
-        )
-        b = (
-            metrics.compare_events_sql(df, wf=wf)
-            .orderBy("doc_id", "pos")
-            .toPandas()["conf_mtx"]
-            .tolist()
-        )
-        assert a == b, wf
+        assert _sql_conf(df, wf) == _spec_conf(df, wf), wf

@@ -2,7 +2,7 @@
 incremental maintenance, retention.
 
 The read-only assertions (end-to-end shape, lineage/metrics, tier parity
-with the native operator chain, blob parity) and the destructive tests
+with the JVM operator chain, blob parity) and the destructive tests
 (retention, incremental, resume and crash baselines) share ONE canonical
 pipeline run via the module-scoped ``canon`` fixture — destructive tests
 clone its tree (manifests embed absolute paths, so the clone rewrites
@@ -108,18 +108,23 @@ def test_pipeline_end_to_end(spark, canon):
 
 
 def test_pipeline_tiers_equal_native_chain(spark, canon):
-    """The pipeline's tier tables equal the native operator chain over the
-    same input: arima_detect(rules=True) → generate_corrections →
-    rollup_points for the finest tier, rollup_from_rollup for the rest."""
+    """The pipeline's tier tables equal the JVM operator chain over the
+    same input: rules → arima_residuals_sql → dynamic threshold → events,
+    then correct_series per series, then rollup_points for the finest
+    tier and rollup_from_rollup for the rest."""
     from pyhydroqc_spark.ingest import explode_tokens
-    from pyhydroqc_spark.operators import correct, detect
     from pyhydroqc_spark.operators.rollup import rollup_from_rollup, rollup_points
+    from tests.qc_chain import correct_on_driver, jvm_detect
 
     tok = spark.createDataFrame(canon["pdf"], schema=_tok_schema())
-    detected = detect.arima_detect(explode_tokens(tok), PARAMS, rules=True)
-    corrected = correct.generate_corrections(
-        detected.select("doc_id", "pos", "ts", "observed", "detected_event"),
-        "observed", "detected_event", arima_order=(1, 1, 0),
+    detected = jvm_detect(explode_tokens(tok), PARAMS).select(
+        "doc_id", "pos", "ts", "observed", "detected_event"
+    )
+    corrected = spark.createDataFrame(
+        correct_on_driver(detected.toPandas(), arima_order=(1, 1, 0))[
+            ["doc_id", "pos", "ts", "det_cor"]
+        ],
+        "doc_id string, pos int, ts timestamp, det_cor double",
     )
     agg = rollup_points(corrected.select("doc_id", "ts", "pos", "det_cor"), TIERS[0])
     for t in TIERS:
@@ -127,7 +132,7 @@ def test_pipeline_tiers_equal_native_chain(spark, canon):
             agg = rollup_from_rollup(agg.drop("tier"), t)
         got = _read_tier(spark, canon["out"], t).reset_index(drop=True)
         want = agg.orderBy("doc_id", "bucket_start").toPandas()[list(got.columns)]
-        pd.testing.assert_frame_equal(got, want, check_exact=False, atol=1e-9)
+        pd.testing.assert_frame_equal(got, want, check_exact=False, rtol=0, atol=1e-9)
 
 
 def test_resume_equivalence(spark, canon, tmp_path):

@@ -40,12 +40,6 @@ UNREACHED_ON_PURPOSE = {"pyhydroqc_spark.sources"}
 
 # Top-level definitions no entry point reaches, kept on purpose.
 UNREACHED_DEFS_ON_PURPOSE = {
-    # the native detection/correction chain the pipeline parity tests
-    # build their reference tiers from
-    "pyhydroqc_spark.operators.detect.arima_detect": "native reference chain",
-    "pyhydroqc_spark.operators.detect.arima_residuals": "native reference chain (q>0 orders)",
-    "pyhydroqc_spark.operators.correct.generate_corrections": "native reference chain",
-    "pyhydroqc_spark.operators.fused.fused_qc_correct": "native reference chain (per-point fused rows)",
     # test-only inputs kept on purpose
     "pyhydroqc_spark.textops.ann.train_ivf_centroids": "IVF trainer the ANN tests fit their inputs with",
     "pyhydroqc_spark.textops.ann.train_pq_codebooks": "PQ trainer the ANN tests fit their inputs with",

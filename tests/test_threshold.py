@@ -6,6 +6,7 @@ import warnings
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from pyhydroqc_spark.operators import fused, threshold
 from tests.reference_oracle import load_reference
@@ -80,6 +81,47 @@ def test_dynamic_threshold_matches_numpy_kernel(spark, window_sz, alpha, min_ran
         got = out[out.doc_id == d].reset_index(drop=True)
         np.testing.assert_allclose(got["low"].values, lo, atol=1e-9, err_msg=d)
         np.testing.assert_allclose(got["high"].values, hi, atol=1e-9, err_msg=d)
+
+
+def test_detect_threshold_anomalies_matches_numpy_rule(spark):
+    """The residual test is the fused kernel's rule: a point is flagged
+    iff its residual lies outside [low, high], and a missing residual or
+    bound never flags by itself. Residuals carry NULL gaps and spikes,
+    bounds come from ``dynamic_threshold`` over them, a few residuals sit
+    exactly on a bound and a few rows get a NULL bound."""
+    rng = np.random.default_rng(21)
+    rows = []
+    for d, n in (("a", 300), ("b", 60), ("c", 9)):
+        r = rng.normal(0, 1, n)
+        r[rng.choice(n, size=max(1, n // 30), replace=False)] *= 8.0
+        for i, v in enumerate(r):
+            rows.append((d, i, None if rng.random() < 0.1 else float(v)))
+    df = spark.createDataFrame(rows, "doc_id string, pos int, residual double")
+    out = threshold.dynamic_threshold(df, window_sz=20, alpha=0.01, min_range=0.1)
+    # a residual exactly on a bound is inside the band
+    on_bound = F.col("pos") % 41
+    out = out.withColumn(
+        "residual",
+        F.when(on_bound == 7, F.col("high")).when(on_bound == 8, F.col("low")).otherwise(F.col("residual")),
+    )
+    nulled = F.col("pos") % 37 == 5
+    out = out.withColumn("low", F.when(nulled, None).otherwise(F.col("low")))
+    out = out.withColumn("high", F.when(nulled & (F.col("doc_id") == "a"), None).otherwise(F.col("high")))
+    got = (
+        threshold.detect_threshold_anomalies(out)
+        .orderBy("doc_id", "pos")
+        .select("residual", "low", "high", "detected_anomaly")
+        .toPandas()
+    )
+    r, lo, hi = (got[c].to_numpy(dtype=float) for c in ("residual", "low", "high"))
+    with np.errstate(invalid="ignore"):
+        want = (r < lo) | (r > hi)
+    want = np.where(np.isnan(r), False, want)
+    flags = got["detected_anomaly"].to_numpy()
+    assert flags.dtype == bool
+    np.testing.assert_array_equal(flags, want)
+    assert flags.sum() >= 5 and np.isnan(r).sum() >= 10 and np.isnan(lo).sum() >= 5
+    assert ((r == hi) | (r == lo)).sum() >= 10
 
 
 def test_detect_anomalies_parity(spark, REF):
