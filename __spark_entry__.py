@@ -918,7 +918,7 @@ def q_windowed_detect_counts(spark, sf_dir):
 
     df = _pin(spark, _events_long(spark, sf_dir).withColumnRenamed("value", "observed"))
     out = windowed_detect.windowed_regression_residuals(
-        df, "observed", time_steps=2, intercept=False, ridge=0.0
+        df, "observed", time_steps=2
     )
     out = threshold.dynamic_threshold(out, "residual", window_sz=30, alpha=0.05, min_range=1.0)
     out = threshold.detect_threshold_anomalies(out, "residual")
@@ -935,7 +935,7 @@ def q_windowed_bidir_counts(spark, sf_dir):
 
     df = _pin(spark, _events_long(spark, sf_dir).withColumnRenamed("value", "observed"))
     out = windowed_detect.windowed_regression_residuals(
-        df, "observed", time_steps=1, mode="bidir", intercept=False, ridge=0.0
+        df, "observed", time_steps=1, mode="bidir"
     )
     out = threshold.dynamic_threshold(out, "residual", window_sz=30, alpha=0.05, min_range=1.0)
     out = threshold.detect_threshold_anomalies(out, "residual")
@@ -980,9 +980,6 @@ def q_multivar_residuals(spark, sf_dir):
         frame,
         "observed",
         time_steps=1,
-        mode="vanilla",
-        ridge=0.0,
-        intercept=False,
         site_col="site",
         sensor_col="sensor",
         order_col="pos",

@@ -12,9 +12,10 @@ numpy kernel: ``correct_series`` runs once per series as the last step of
 ``fused.fused_series_kernel``, inside the pipeline's one Python stage.
 Forecasts come from the engine's own numpy ARIMA
 (`arima.forecast_arima`) at the given order, or at the order the
-``auto_order`` AIC grid picks when none is given; the reference's
-pmdarima calls are swapped for the same function in the parity tests so
-the loop logic is compared like-for-like.
+``auto_order`` AIC grid picks when none is given, in place of the
+reference's pmdarima calls. ``tests/test_correct.py`` checks the loop
+against a plain numpy spec of the same steps, forecasting with the same
+function.
 
 Deviation from the reference (documented): when a series is entirely
 anomalous the reference prints an error and loops forever
@@ -74,15 +75,17 @@ def _widen_groups(event_vals: np.ndarray, grp: np.ndarray, min_group_len: int):
 def correct_series(
     values: np.ndarray,
     event_vals: np.ndarray,
-    ts: pd.DatetimeIndex,
+    ts: np.ndarray,
     min_group_len: int = MIN_GROUP_LEN,
     model_limit_days: int = MODEL_LIMIT_DAYS,
     order=None,
 ):
     """Run the correction loop on one series.
 
-    Returns (det_cor, corrected) — the corrected value per point and a
-    bool marking which points were synthesized.
+    ``ts`` holds the points' timestamps as int64 ns since the epoch (a
+    datetime64[ns] array or ``DatetimeIndex`` reads the same). Returns
+    (det_cor, corrected) — the corrected value per point and a bool
+    marking which points were synthesized.
     """
     vals = np.asarray(values, dtype=float)
     n = len(vals)
@@ -90,9 +93,9 @@ def correct_series(
     ev, agrp = _widen_groups(np.asarray(event_vals), grp, min_group_len)
     det_cor = vals.copy()
     corrected = ev.copy()
-    # label-based DatetimeIndex slicing is the kernel's hot spot at scale;
-    # the same inclusive-endpoint semantics in int64 ns via searchsorted
-    ts_i8 = ts.asi8
+    # the reference's label-based DatetimeIndex slicing, with the same
+    # inclusive-endpoint semantics, in int64 ns via searchsorted
+    ts_i8 = np.asarray(ts).view(np.int64)
     limit_ns = pd.Timedelta(days=model_limit_days).value
 
     while ev.any():

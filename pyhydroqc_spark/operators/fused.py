@@ -129,11 +129,13 @@ def widen_events_np(flags: np.ndarray, wf: int) -> np.ndarray:
 
 def fused_series_kernel(
     x: np.ndarray,
-    ts: pd.DatetimeIndex,
+    ts: np.ndarray,
     p: SeriesParams,
     arima_order=(1, 1, 0),
 ):
-    """Whole per-series pipeline in numpy. Returns dict of output arrays."""
+    """Whole per-series pipeline in numpy. ``ts`` holds the points'
+    timestamps as int64 ns (see ``correct_series``). Returns dict of
+    output arrays."""
     anom = range_flags_np(x, p.max_range, p.min_range)
     anom, _ = persistence_np(x, anom, p.persist)
     observed = interpolate_np(x, anom)
@@ -178,9 +180,7 @@ def _token_series_tiers(toks, p, arima_order, tiers, t0_epoch, cadence_s, lo, hi
     if n == 0:
         return
     epochs = t0_epoch + np.arange(n, dtype=np.int64) * cadence_s
-    out = fused_series_kernel(
-        x, pd.DatetimeIndex(pd.to_datetime(epochs, unit="s")), p, arima_order
-    )
+    out = fused_series_kernel(x, epochs * 1_000_000_000, p, arima_order)
     v = out["det_cor"]
     valid = np.isfinite(v)
     vz = np.where(valid, v, 0.0)

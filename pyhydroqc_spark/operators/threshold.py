@@ -1,13 +1,14 @@
 """Dynamic residual thresholds + anomaly detection.
 
-Re-expression of `/root/reference/pyhydroqc/anomaly_utilities.py:381-423`
+Re-expression of pyhydroqc's `anomaly_utilities.py:381-423`
 (`set_dynamic_threshold`) and `:448-471` (`detect_anomalies`).
 
 The reference computes, per point i, mean ± z·std of residuals over the
 index slice [max(0,i−w) : min(i+w,n−1)] inclusive — exactly a clamped
 centered window, i.e. Spark ``rowsBetween(-w, w)``. (Its explicit lo/hi
-clamping at `:403-410` reduces to Python-slice clamping; verified in
-tests/test_threshold.py against the reference function itself.)
+clamping at `:403-410` reduces to Python-slice clamping;
+tests/test_threshold.py checks the window against the fused kernel's
+prefix-sum threshold, ``fused.dynamic_threshold_np``.)
 
 One physical strategy: native windowed avg/stddev_samp — Spark maintains
 central moments, numerically agreeing with pandas ``.std()`` (ddof=1).
@@ -49,12 +50,16 @@ def detect_threshold_anomalies(
     high_col: str = "high",
     flag_col: str = "detected_anomaly",
 ) -> DataFrame:
-    """anomaly := resid < low OR resid > high (`anomaly_utilities.py:464`)."""
-    r = F.col(resid_col)
-    return df.withColumn(
-        flag_col,
-        F.coalesce((r < F.col(low_col)) | (F.col(high_col) < r), F.lit(False)),
-    )
+    """anomaly := resid < low OR resid > high (`anomaly_utilities.py:464`);
+    a missing (NULL or NaN) residual or bound never flags by itself."""
+    return _outside(df, flag_col, F.col(resid_col), F.col(low_col), F.col(high_col))
+
+
+def _outside(df: DataFrame, flag_col: str, r, low, high) -> DataFrame:
+    """``flag_col`` := r < low OR high < r, with NaN read as NULL: Spark
+    orders NaN above every number, so ``NaN > high`` would be true."""
+    r, low, high = (F.nanvl(c, F.lit(None).cast("double")) for c in (r, low, high))
+    return df.withColumn(flag_col, F.coalesce((r < low) | (high < r), F.lit(False)))
 
 
 def constant_threshold(
@@ -83,7 +88,4 @@ def constant_threshold_anomalies(
     flag_col: str = "detected_anomaly",
 ) -> DataFrame:
     """Constant-threshold variant (`anomaly_utilities.py:474-491`)."""
-    r = F.col(resid_col)
-    return df.withColumn(
-        flag_col, F.coalesce((r < F.lit(low)) | (F.lit(high) < r), F.lit(False))
-    )
+    return _outside(df, flag_col, F.col(resid_col), F.lit(low), F.lit(high))

@@ -6,7 +6,8 @@ one-step residuals (`pyhydroqc/modeling_utilities.py:125-536`, workflows
 `model_workflow.py:97-189` univar / `:192-317` multivar). Keras/tensorflow
 are absent from this runtime, so the engine keeps the windowing — one-step
 predictions from ``time_steps`` neighbours — and swaps the model for one
-deterministic ridge linear autoregressor fit by normal equations in numpy
+deterministic linear autoregressor (no bias term) fit by least squares
+on the normal equations in numpy
 (per series, inside one grouped-map Arrow UDF; the series axis is the
 parallel one, the same physical shape as the ARIMA path). The residuals
 feed the same chain the ARIMA residuals do: ``threshold.dynamic_threshold``
@@ -23,7 +24,8 @@ Window conventions mirror the reference exactly:
 
 Multivar (`model_workflow.py:192-317`): every sensor of a site contributes
 its window to the feature block and each sensor gets its own regression
-head — the linear analogue of the reference's n-output LSTM.
+head — the linear analogue of the reference's n-output LSTM. It runs
+the vanilla window only.
 """
 
 from __future__ import annotations
@@ -36,8 +38,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from .events import ORDER_COL, SERIES_KEY
 
 
-def _fit_predict(x: np.ndarray, time_steps: int, mode: str, ridge: float,
-                 intercept: bool) -> np.ndarray:
+def _fit_predict(x: np.ndarray, time_steps: int, mode: str) -> np.ndarray:
     """One series → one-step predictions (NaN on the undefined edges)."""
     n = len(x)
     ts = time_steps
@@ -53,11 +54,8 @@ def _fit_predict(x: np.ndarray, time_steps: int, mode: str, ridge: float,
         cols += [x[lo + j + 1 : hi + j + 1] for j in range(ts)]  # x_{t+1}..x_{t+ts}
     X = np.column_stack(cols)
     t = x[lo:hi]
-    if intercept:
-        X = np.column_stack([np.ones(len(X)), X])
-    XtX = X.T @ X + ridge * np.eye(X.shape[1])
     try:
-        beta = np.linalg.lstsq(XtX, X.T @ t, rcond=None)[0]
+        beta = np.linalg.lstsq(X.T @ X, X.T @ t, rcond=None)[0]
     except np.linalg.LinAlgError:
         return pred
     pred[lo:hi] = X @ beta
@@ -69,8 +67,6 @@ def windowed_regression_residuals(
     value_col: str = "observed",
     time_steps: int = 10,
     mode: str = "vanilla",
-    ridge: float = 1e-3,
-    intercept: bool = True,
     key: str = SERIES_KEY,
     order_col: str = ORDER_COL,
     resid_col: str = "residual",
@@ -100,7 +96,7 @@ def windowed_regression_residuals(
                 valid, x,
                 np.interp(np.arange(len(x)), np.flatnonzero(valid), x[valid]),
             )
-        pred = _fit_predict(x, time_steps, mode, ridge, intercept)
+        pred = _fit_predict(x, time_steps, mode)
         pdf[pred_col] = pred
         pdf[resid_col] = pdf[value_col].to_numpy(dtype=float) - pred
         return pdf
@@ -112,9 +108,6 @@ def multivar_regression_residuals(
     df: DataFrame,
     value_col: str = "observed",
     time_steps: int = 10,
-    mode: str = "vanilla",
-    ridge: float = 1e-3,
-    intercept: bool = True,
     site_col: str = "source",
     sensor_col: str = "sensor",
     order_col: str = ORDER_COL,
@@ -125,8 +118,6 @@ def multivar_regression_residuals(
     `modeling_utilities.py:354-536`). Input: long rows keyed by
     (site, sensor, pos); the site is the grouping axis — one grouped-map
     Arrow UDF per site, sensors pivoted wide inside the kernel."""
-    if mode not in ("vanilla", "bidir"):
-        raise ValueError(f"mode must be vanilla|bidir, got {mode!r}")
     out_schema = StructType(
         list(df.schema.fields)
         + [
@@ -151,19 +142,15 @@ def multivar_regression_residuals(
             if not valid.all() and valid.any():
                 M[:, j] = np.interp(np.arange(len(col)), np.flatnonzero(valid), col[valid])
         n = M.shape[0]
-        lo, hi = (ts, n) if mode == "vanilla" else (ts, n - ts)
+        lo, hi = ts, n
         preds = {s: np.full(n, np.nan) for s in sensors}
         # all-missing sensors survive interpolation as all-NaN: exclude
         # them from the feature block and leave their predictions NaN
         finite = [j for j in range(M.shape[1]) if np.isfinite(M[:, j]).all()]
         if finite and hi - lo >= ts * len(finite) + 2:
             Mf = M[:, finite]
-            blocks = [Mf[lo - j - 1 : hi - j - 1, :] for j in range(ts)]
-            if mode == "bidir":
-                blocks += [Mf[lo + j + 1 : hi + j + 1, :] for j in range(ts)]
-            cols = ([np.ones(hi - lo)] if intercept else []) + blocks
-            X = np.column_stack(cols)
-            XtX = X.T @ X + ridge * np.eye(X.shape[1])
+            X = np.column_stack([Mf[lo - j - 1 : hi - j - 1, :] for j in range(ts)])
+            XtX = X.T @ X
             for sj in finite:
                 s = sensors[sj]
                 t = M[lo:hi, sj]

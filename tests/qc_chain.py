@@ -42,6 +42,11 @@ def jvm_detect(df, p, value_col="value"):
     return anomaly_events(out, "all_anomalies", wf=p.widen, out_col="detected_event")
 
 
+def _ns(ts: pd.Series):
+    """A timestamp column as int64 ns, the kernels' time axis."""
+    return ts.to_numpy("datetime64[ns]").view("i8")
+
+
 def correct_on_driver(pdf: pd.DataFrame, arima_order=(1, 1, 0)) -> pd.DataFrame:
     """``det_cor``/``corrected`` per series of collected (doc_id, pos, ts,
     observed, detected_event) rows, sorted by (doc_id, pos)."""
@@ -50,7 +55,7 @@ def correct_on_driver(pdf: pd.DataFrame, arima_order=(1, 1, 0)) -> pd.DataFrame:
         det_cor, corrected = correct.correct_series(
             g["observed"].to_numpy(dtype=float),
             g["detected_event"].to_numpy(),
-            pd.DatetimeIndex(g["ts"]),
+            _ns(g["ts"]),
             order=arima_order,
         )
         parts.append(g.assign(det_cor=det_cor, corrected=corrected))
@@ -63,7 +68,7 @@ def kernel_frame(pdf: pd.DataFrame, p, arima_order=(1, 1, 0)) -> pd.DataFrame:
     parts = []
     for _, g in pdf.sort_values(["doc_id", "pos"]).groupby("doc_id", sort=True):
         out = fused.fused_series_kernel(
-            g["value"].to_numpy(dtype=float), pd.DatetimeIndex(g["ts"]), p, arima_order
+            g["value"].to_numpy(dtype=float), _ns(g["ts"]), p, arima_order
         )
         parts.append(g.assign(**out))
     return pd.concat(parts, ignore_index=True)

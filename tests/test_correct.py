@@ -1,131 +1,142 @@
-"""Parity: correction loop vs the genuine reference generate_corrections,
-with pmdarima patched to the engine's own forecaster on BOTH sides so the
-loop logic (grouping, widening, ordering, renumbering, crossfade) is
-compared like-for-like. The parity tests skip without the reference
-checkout; the termination test runs without it."""
-
-import warnings
+"""The correction loop vs a plain numpy spec of SURVEY M6/M8 and the
+xfade blend (§2.7), both forecasting with the engine's fixed-order
+``arima.forecast_arima``, and the all-anomalous termination."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from pyhydroqc_spark.operators import correct
 from pyhydroqc_spark.operators.arima import forecast_arima
-from tests.reference_oracle import load_reference
+
+ORDER = (1, 1, 0)
+DAY_NS = 86_400 * 10**9
 
 
-@pytest.fixture(scope="module")
-def REF():
-    """The pyhydroqc reference modules. Only the parity tests use them;
-    they skip when the checkout is not importable."""
-    try:
-        return load_reference()
-    except ImportError as e:
-        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
+def _ts(n):
+    """15-minute timestamps as int64 ns."""
+    return np.arange(n, dtype=np.int64) * 900 * 10**9
 
 
-class _PatchedModel:
-    def __init__(self, x):
-        self.x = np.asarray(x, dtype=float)
-
-    def predict(self, l):
-        return forecast_arima(self.x, l, order=(1, 1, 0))
-
-
-@pytest.fixture
-def ref_patched(REF, monkeypatch):
-    """The reference with its pmdarima forecaster swapped for the engine's
-    fixed-order one, and pandas' positional-axis drop restored."""
-    import sys
-
-    monkeypatch.setattr(
-        sys.modules["pmdarima"], "auto_arima", lambda x, **k: _PatchedModel(x), raising=False
-    )
-    # pandas 2.x removed positional-axis drop; the reference calls drop(col, 1)
-    orig_drop = pd.DataFrame.drop
-
-    def drop_compat(self, labels=None, axis=0, **kw):
-        if axis == 1 and isinstance(labels, str):
-            return orig_drop(self, columns=labels, **kw)
-        return orig_drop(self, labels, axis=axis, **kw)
-
-    monkeypatch.setattr(pd.DataFrame, "drop", drop_compat)
-    return REF
+def _runs(mask):
+    """group_bools: a new group id at every change of the mask."""
+    g = np.zeros(len(mask), dtype=int)
+    for k in range(1, len(mask)):
+        g[k] = g[k - 1] + (mask[k] != mask[k - 1])
+    return g
 
 
-def _series_with_events(seed=0, n=800):
-    rng = np.random.default_rng(seed)
-    x = 10 + np.sin(np.arange(n) / 20) * 3 + rng.normal(0, 0.2, n)
-    ev = np.zeros(n, dtype=int)
-    # three detected events of varying length, separated by long valid runs
-    ev[100:110] = 1
-    ev[300:340] = 2
-    ev[600:605] = 3
-    idx = pd.date_range("2022-01-01", periods=n, freq="15min")
-    return pd.DataFrame({"observed": x, "detected_event": ev}, index=idx)
+def _correct_np(x, ev, ts, min_group_len=20, model_limit_days=6):
+    """SURVEY M6 then M8 (`arima_correct.py:13-188`).
+
+    M6: a valid run shorter than ``min_group_len`` joins the anomalous
+    runs around it. M8: while anomalous runs remain, take the shortest;
+    forecast it from the valid run before it (its last
+    ``model_limit_days``), backcast it from the valid run after it (its
+    first ``model_limit_days``, reversed), and blend the two with the
+    xfade weights w_i = (i+1)/(n+1): flip(w)·forecast + w·backcast. A run
+    at a series edge takes its one cast; a series with no valid run is
+    left as observed. The corrected run then counts as valid, so it
+    joins its neighbours in the input windows of later casts, at its
+    observed values. Returns (det_cor, corrected, the length of each run
+    in the order it was corrected)."""
+    x = np.asarray(x, dtype=float)
+    pending = np.asarray(ev) != 0
+    raw = _runs(pending)
+    for gid in range(raw.max() + 1):
+        run = raw == gid
+        if not pending[run][0] and run.sum() < min_group_len:
+            pending[run] = True
+    det, corrected, order = x.copy(), pending.copy(), []
+    limit = model_limit_days * DAY_NS
+    while pending.any():
+        g = _runs(pending)
+        ids = sorted(set(g[pending]))
+        lens = [int((g == k).sum()) for k in ids]
+        i, n = ids[lens.index(min(lens))], min(lens)
+        order.append(n)
+        run = g == i
+        yfor = ybac = None
+        if i > 0:
+            before = g == i - 1
+            keep = before & (ts >= ts[before][-1] - limit)
+            yfor = forecast_arima(x[keep], n, order=ORDER)
+        if i < g.max():
+            after = g == i + 1
+            keep = after & (ts <= ts[after][0] + limit)
+            ybac = forecast_arima(x[keep][::-1], n, order=ORDER)[::-1]
+        if yfor is not None and ybac is not None:
+            w = np.array([(k + 1) / (n + 1) for k in range(n)])
+            det[run] = w[::-1] * yfor + w * ybac
+        elif yfor is not None:
+            det[run] = yfor
+        elif ybac is not None:
+            det[run] = ybac
+        else:
+            corrected[run] = False
+        pending[run] = False
+    return det, corrected, order
+
+
+def _check(x, ev):
+    """The engine equals the spec, and the spec's runs have distinct
+    lengths, so the shortest-first order needs no tie rule."""
+    ts = _ts(len(x))
+    det, cor = correct.correct_series(x, ev, ts, order=ORDER)
+    want_det, want_cor, lens = _correct_np(x, ev, ts)
+    assert len(set(lens)) == len(lens), lens
+    np.testing.assert_allclose(det, want_det, rtol=0, atol=1e-9)
+    assert cor.tolist() == want_cor.tolist()
+    return det, cor, lens
 
 
 @pytest.mark.parametrize("seed", [0, 1])
-def test_correct_series_parity(ref_patched, seed):
-    rdf = _series_with_events(seed)
-    mine_det, mine_cor = correct.correct_series(
-        rdf["observed"].to_numpy(),
-        rdf["detected_event"].to_numpy(),
-        rdf.index,
-        order=(1, 1, 0),
-    )
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        ref = ref_patched["arima_correct"].generate_corrections(
-            rdf.copy(), "observed", "detected_event"
-        )
-    np.testing.assert_allclose(mine_det, ref["det_cor"].to_numpy(), atol=1e-9)
-    assert mine_cor.astype(bool).tolist() == ref["corrected"].astype(bool).tolist()
+def test_correct_series_matches_numpy_spec(seed):
+    """Three events of 10, 40 and 5 points between long valid runs; each
+    is blended from both sides, the 5-point one first."""
+    n = 800
+    rng = np.random.default_rng(seed)
+    x = 10 + np.sin(np.arange(n) / 20) * 3 + rng.normal(0, 0.2, n)
+    ev = np.zeros(n, dtype=int)
+    ev[100:110] = 1
+    ev[300:340] = 2
+    ev[600:605] = 3
+    det, cor, lens = _check(x, ev)
+    assert lens == [5, 10, 40]
+    assert cor.sum() == 55 and np.array_equal(det[~cor], x[~cor])
 
 
-def test_correct_short_valid_group_merging(ref_patched):
-    # valid group of 8 (< min_group_len=20) between two events must be absorbed
+@pytest.mark.parametrize("valid_len", [8, 19])
+def test_short_valid_group_is_merged(valid_len):
+    """A valid run shorter than min_group_len=20 between two events is
+    corrected with them, as one run."""
     n = 300
     rng = np.random.default_rng(4)
     x = 5 + rng.normal(0, 0.1, n)
     ev = np.zeros(n, dtype=int)
     ev[100:120] = 1
-    ev[128:150] = 2  # 8 valid points between events
-    idx = pd.date_range("2022-01-01", periods=n, freq="15min")
-    rdf = pd.DataFrame({"observed": x, "detected_event": ev}, index=idx)
-    mine_det, mine_cor = correct.correct_series(
-        x, ev, idx, order=(1, 1, 0)
-    )
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        ref = ref_patched["arima_correct"].generate_corrections(rdf.copy(), "observed", "detected_event")
-    np.testing.assert_allclose(mine_det, ref["det_cor"].to_numpy(), atol=1e-9)
-    assert mine_cor[125]  # the sandwiched valid points were corrected too
+    ev[120 + valid_len : 150 + valid_len] = 2
+    _, cor, lens = _check(x, ev)
+    assert lens == [50 + valid_len]
+    assert cor[120 : 120 + valid_len].all()
 
 
-def test_event_at_edges_parity(ref_patched):
+def test_events_at_both_edges():
+    """An event at the series start takes the backcast only, one at the
+    end the forecast only."""
     n = 400
     rng = np.random.default_rng(8)
     x = 3 + np.cos(np.arange(n) / 30) + rng.normal(0, 0.15, n)
     ev = np.zeros(n, dtype=int)
-    ev[:25] = 1       # event at series start -> backcast only
-    ev[-30:] = 2      # event at series end -> forecast only
-    idx = pd.date_range("2022-01-01", periods=n, freq="15min")
-    rdf = pd.DataFrame({"observed": x, "detected_event": ev}, index=idx)
-    mine_det, _ = correct.correct_series(x, ev, idx, order=(1, 1, 0))
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        ref = ref_patched["arima_correct"].generate_corrections(rdf.copy(), "observed", "detected_event")
-    np.testing.assert_allclose(mine_det, ref["det_cor"].to_numpy(), atol=1e-9)
+    ev[:25] = 1
+    ev[-30:] = 2
+    _, _, lens = _check(x, ev)
+    assert lens == [25, 30]
 
 
 def test_all_anomalous_terminates():
     n = 50
     x = np.ones(n)
     ev = np.ones(n, dtype=int)
-    idx = pd.date_range("2022-01-01", periods=n, freq="15min")
-    det, cor = correct.correct_series(x, ev, idx, order=(1, 0, 0))
+    det, cor = correct.correct_series(x, ev, _ts(n), order=(1, 0, 0))
     np.testing.assert_array_equal(det, x)  # left uncorrected, no hang
     assert not cor.any()
-

@@ -1,28 +1,13 @@
-"""Fused kernel parity: numpy per-series helpers vs the genuine reference,
-the kernel vs the JVM operator chain, and the token-table Spark pass vs
-the kernel run per exploded series with JVM rollups."""
-
-import warnings
+"""Fused kernel parity: the kernel vs the JVM operator chain, the
+token-table Spark pass vs the kernel run per exploded series with JVM
+rollups, and ``interpolate_np`` vs pandas."""
 
 import numpy as np
 import pandas as pd
-import pytest
 
 from pyhydroqc_spark.operators import fused
 from pyhydroqc_spark.params import SeriesParams
 from tests.qc_chain import correct_on_driver, jvm_detect, kernel_frame, kernel_rows
-from tests.reference_oracle import load_reference
-
-
-@pytest.fixture(scope="module")
-def REF():
-    """The pyhydroqc reference modules. Only the three reference-parity
-    tests use them; they skip when the checkout is not importable, and
-    every other pin in this module runs without it."""
-    try:
-        return load_reference()
-    except ImportError as e:
-        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
 
 
 P = SeriesParams(max_range=25.0, min_range=-1.0, persist=30, window_sz=30,
@@ -36,48 +21,6 @@ def _series(seed=0, n=900):
     x[300:340] = x[300]
     x[500:505] = np.nan
     return x
-
-
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_numpy_helpers_match_reference(seed, REF):
-    x = _series(seed)
-    idx = pd.date_range("2022-01-01", periods=len(x), freq="15min")
-    rdf = pd.DataFrame({"raw": x}, index=idx)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        rdf, _ = REF["rules_detect"].range_check(rdf, P.max_range, P.min_range)
-        rdf, _ = REF["rules_detect"].persistence(rdf, P.persist)
-        rdf = REF["rules_detect"].interpolate(rdf)
-
-    anom = fused.range_flags_np(x, P.max_range, P.min_range)
-    anom, _ = fused.persistence_np(x, anom, P.persist)
-    obs = fused.interpolate_np(x, anom)
-    assert anom.tolist() == rdf["anomaly"].astype(bool).tolist()
-    np.testing.assert_allclose(obs, rdf["observed"].to_numpy(), atol=1e-12, equal_nan=True)
-
-
-def test_threshold_np_matches_reference(REF):
-    rng = np.random.default_rng(5)
-    r = rng.normal(0, 1, 400)
-    lo, hi = fused.dynamic_threshold_np(r, 30, 0.001, 0.1)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        th = REF["anomaly_utilities"].set_dynamic_threshold(
-            pd.Series(r), window_sz=30, alpha=0.001, min_range=0.1
-        )
-    np.testing.assert_allclose(lo, th["low"].to_numpy(), atol=1e-9)
-    np.testing.assert_allclose(hi, th["high"].to_numpy(), atol=1e-9)
-
-
-@pytest.mark.parametrize("wf", [0, 1, 3])
-def test_events_np_matches_reference(wf, REF):
-    rng = np.random.default_rng(9)
-    flags = rng.random(200) < 0.1
-    got = fused.widen_events_np(flags, wf)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        exp = REF["anomaly_utilities"].anomaly_events(pd.Series(flags.astype(int)), wf=wf, sf=1.0)
-    assert got.tolist() == list(exp)
 
 
 def test_fused_spark_matches_native_chain(spark):

@@ -1,26 +1,11 @@
-"""Parity: compare_events_sql / point_metrics / event_metrics vs the
-reference, and without it against a sequential numpy scan of the
-reference loop and plain numpy counts."""
-
-import warnings
+"""compare_events_sql / point_metrics / event_metrics vs a sequential
+numpy scan of the reference loop and plain numpy counts."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from pyhydroqc_spark.operators import events as ev_ops, metrics
-from tests.reference_oracle import load_reference
-
-
-@pytest.fixture(scope="module")
-def REF():
-    """The pyhydroqc reference modules. Only the reference-parity tests use
-    them; they skip when the checkout is not importable, and the
-    kernel-vs-SQL and numpy-count comparisons run without it."""
-    try:
-        return load_reference()
-    except ImportError as e:
-        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
 
 
 def _compare_one(labeled: np.ndarray, detected: np.ndarray, wf: int) -> np.ndarray:
@@ -98,34 +83,7 @@ def _mk_events(spark, labeled, detected):
     return df, pdf
 
 
-def _ref_compare(REF, pdf, wf=1):
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        la = REF["anomaly_utilities"].anomaly_events(pdf["labeled_anomaly"], wf=1)
-        da = REF["anomaly_utilities"].anomaly_events(pdf["detected_anomaly"], wf=1)
-        rdf = pd.DataFrame(
-            {
-                "labeled_anomaly": pdf["labeled_anomaly"].values,
-                "detected_anomaly": pdf["detected_anomaly"].values,
-                "labeled_event": la,
-                "detected_event": da,
-            }
-        )
-        return REF["anomaly_utilities"].compare_events(rdf, wf=wf)
-
-
 FLAG_CASES = [(0, 120, 0.08, 0.1), (1, 200, 0.15, 0.02), (2, 80, 0.3, 0.3)]
-
-
-@pytest.mark.parametrize("seed,n,pl,pdet", FLAG_CASES)
-def test_compare_events_parity(spark, REF, seed, n, pl, pdet):
-    rng = np.random.default_rng(seed)
-    labeled = rng.random(n) < pl
-    detected = rng.random(n) < pdet
-    df, pdf = _mk_events(spark, labeled, detected)
-    got = _sql_conf(df, wf=1)
-    exp = _ref_compare(REF, pdf)["conf_mtx"].tolist()
-    assert got == exp
 
 
 @pytest.mark.parametrize("seed,n,pl,pdet", FLAG_CASES)
@@ -186,44 +144,6 @@ def test_point_and_event_metrics_equal_numpy_counts(spark):
          _div(5.0 * etp, 5.0 * etp + 4.0 * efn + efp)],
         atol=1e-12,
     )
-
-
-def test_point_metrics_parity(spark, REF):
-    rng = np.random.default_rng(5)
-    labeled = rng.random(300) < 0.1
-    detected = labeled & (rng.random(300) < 0.8) | (rng.random(300) < 0.05)
-    df, pdf = _mk_events(spark, labeled, detected)
-    cm = metrics.compare_events_sql(df, wf=1)
-    got = metrics.point_metrics(cm).toPandas().iloc[0]
-    rdf = _ref_compare(REF, pdf)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        exp = REF["anomaly_utilities"].metrics(rdf)
-    assert got["tp"] == exp.true_positives
-    assert got["fp"] == exp.false_positives
-    assert got["fn"] == exp.false_negatives
-    assert got["tn"] == exp.true_negatives
-    np.testing.assert_allclose(
-        [got["prc"], got["npv"], got["acc"], got["rcl"], got["f1"], got["f2"]],
-        [exp.prc, exp.npv, exp.acc, exp.rcl, exp.f1, exp.f2],
-        atol=1e-12,
-    )
-
-
-def test_event_metrics_parity(spark, REF):
-    rng = np.random.default_rng(6)
-    labeled = rng.random(300) < 0.12
-    detected = labeled & (rng.random(300) < 0.7) | (rng.random(300) < 0.04)
-    df, pdf = _mk_events(spark, labeled, detected)
-    cm = metrics.compare_events_sql(df, wf=1)
-    got = metrics.event_metrics(cm).toPandas().iloc[0]
-    rdf = _ref_compare(REF, pdf)
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        exp = REF["anomaly_utilities"].event_metrics(rdf)
-    assert got["tp"] == exp.true_positives
-    assert got["fp"] == exp.false_positives
-    assert got["fn"] == exp.false_negatives
 
 
 def test_aggregate_results(spark):

@@ -34,9 +34,8 @@ import re
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "pyhydroqc_spark"
 
-# The only reader of the paper's LRO CSV files: its tests run against the
-# pyhydroqc reference checkout, and no query or benchmark loads those files.
-UNREACHED_ON_PURPOSE = {"pyhydroqc_spark.sources"}
+# Package modules no entry point imports, kept on purpose.
+UNREACHED_ON_PURPOSE: set[str] = set()
 
 # Top-level definitions no entry point reaches, kept on purpose.
 UNREACHED_DEFS_ON_PURPOSE = {
@@ -196,12 +195,6 @@ SINGLE_VALUE_SELECTORS_ON_PURPOSE = {
         "the guard-off path is the reference its tests compare against",
     "pyhydroqc_spark.textops.sample.token_budget_sample.prefilter":
         "the guard-off path is the reference its tests compare against",
-    "pyhydroqc_spark.operators.windowed_detect.windowed_regression_residuals.intercept":
-        "the reference LSTM workflows carry a bias; the contract drops it only for DuckDB replay",
-    "pyhydroqc_spark.operators.windowed_detect.multivar_regression_residuals.intercept":
-        "the reference LSTM workflows carry a bias; the contract drops it only for DuckDB replay",
-    "pyhydroqc_spark.operators.windowed_detect.multivar_regression_residuals.mode":
-        "the reference multivariate workflow has a bidirectional mode; the contract runs vanilla",
     "pyhydroqc_spark.pipeline.run_pipeline.mode": "perfbench passes it",
 }
 

@@ -1,7 +1,5 @@
-"""Rules operators vs the genuine reference (rules_detect.py) and vs the
-fused kernel's numpy rules, which need no reference checkout."""
-
-import warnings
+"""Rules operators vs the fused kernel's numpy rules (range, persistence,
+interpolation, longest run) and vs pandas' own interpolation."""
 
 import numpy as np
 import pandas as pd
@@ -9,34 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyhydroqc_spark.operators import fused, rules
-from tests.reference_oracle import load_reference
-
-
-@pytest.fixture(scope="module")
-def REF():
-    """The pyhydroqc reference modules. Only the reference-parity tests use
-    them; they skip when the checkout is not importable, and the numpy
-    kernel comparisons run without it."""
-    try:
-        return load_reference()
-    except ImportError as e:
-        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
-
-
-def spark_series(long_df, doc_id):
-    pdf = (
-        long_df.where(F.col("doc_id") == doc_id)
-        .orderBy("pos")
-        .select("pos", "value")
-        .toPandas()
-    )
-    return pdf
-
-
-def ref_frame(long_df, doc_id):
-    pdf = spark_series(long_df, doc_id)
-    idx = pd.date_range("2022-01-01", periods=len(pdf), freq="15min")
-    return pd.DataFrame({"raw": pdf["value"].values}, index=idx)
 
 
 def doc_ids(long_df):
@@ -45,51 +15,6 @@ def doc_ids(long_df):
 
 MAXR, MINR = 25.0, -1.0
 PERSIST = 30
-
-
-def test_range_check_parity(long_df, REF):
-    out = (
-        rules.range_check(long_df, MAXR, MINR)
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("anomaly").cast("int")).alias("n"))
-        .toPandas()
-        .set_index("doc_id")["n"]
-    )
-    for d in doc_ids(long_df):
-        rdf = ref_frame(long_df, d)
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            _, cnt = REF["rules_detect"].range_check(rdf, MAXR, MINR)
-        assert out[d] == cnt, d
-
-
-def test_persistence_parity(long_df, REF):
-    flagged = rules.range_check(long_df, MAXR, MINR)
-    out = rules.persistence(flagged, PERSIST, output_grp=True)
-    got = out.orderBy("doc_id", "pos").select("doc_id", "anomaly", "persist_grp").toPandas()
-    for d in doc_ids(long_df):
-        rdf = ref_frame(long_df, d)
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            rdf, _ = REF["rules_detect"].range_check(rdf, MAXR, MINR)
-            rdf, pc = REF["rules_detect"].persistence(rdf, PERSIST, output_grp=True)
-        mine = got[got.doc_id == d]
-        assert mine["anomaly"].astype(bool).tolist() == rdf["anomaly"].astype(bool).tolist(), d
-        assert mine["persist_grp"].tolist() == list(rdf["persist_grp"]), d
-        assert int((mine["persist_grp"] != 0).sum()) == pc
-
-
-def test_group_size_parity(long_df, REF):
-    flagged = rules.persistence(rules.range_check(long_df, MAXR, MINR), PERSIST)
-    sizes = rules.group_size(flagged).toPandas().set_index("doc_id")["max_run_len"]
-    got = flagged.orderBy("doc_id", "pos").select("doc_id", "anomaly").toPandas()
-    for d in doc_ids(long_df):
-        sub = got[got.doc_id == d].reset_index(drop=True)
-        rdf = pd.DataFrame({"anomaly": sub["anomaly"].astype(bool)})
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            size = REF["rules_detect"].group_size(rdf)
-        assert int(sizes.get(d, 0)) == size, d
 
 
 def test_group_size_matches_longest_run(long_df):
@@ -104,25 +29,6 @@ def test_group_size_matches_longest_run(long_df):
         longest[d] = int(np.bincount(runs)[1:].max(initial=0))
         assert int(sizes.get(d, 0)) == longest[d], d
     assert max(longest.values()) >= PERSIST  # a persistence run is flagged
-
-
-def test_interpolate_parity(long_df, REF):
-    flagged = rules.persistence(rules.range_check(long_df, MAXR, MINR), PERSIST)
-    out = rules.interpolate(flagged)
-    got = out.orderBy("doc_id", "pos").select("doc_id", "value", "anomaly", "observed").toPandas()
-    for d in doc_ids(long_df):
-        sub = got[got.doc_id == d].reset_index(drop=True)
-        idx = pd.date_range("2022-01-01", periods=len(sub), freq="15min")
-        rdf = pd.DataFrame(
-            {"raw": sub["value"].values, "anomaly": sub["anomaly"].astype(bool).values},
-            index=idx,
-        )
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            rdf = REF["rules_detect"].interpolate(rdf)
-        np.testing.assert_allclose(
-            sub["observed"].values, rdf["observed"].values, rtol=0, atol=1e-12
-        )
 
 
 def _by_doc(df, *cols):
@@ -204,9 +110,3 @@ def test_add_labels(spark):
     assert _spark_labels(spark) == [False, True, True, True]
 
 
-def test_add_labels_parity(spark, REF):
-    rdf = LABEL_PDF.rename(columns={"value": "raw"}).copy()
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        rdf = REF["rules_detect"].add_labels(rdf)
-    assert _spark_labels(spark) == rdf["labeled_anomaly"].astype(bool).tolist()

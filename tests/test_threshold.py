@@ -1,26 +1,12 @@
-"""Parity: dynamic threshold vs reference set_dynamic_threshold — including
-the edge-clamping subtlety (`anomaly_utilities.py:403-413`)."""
-
-import warnings
+"""Dynamic threshold vs the fused kernel's prefix-sum threshold — including
+the edge clamping (`anomaly_utilities.py:403-413`) — and the residual test
+vs its numpy rule."""
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from pyhydroqc_spark.operators import fused, threshold
-from tests.reference_oracle import load_reference
-
-
-@pytest.fixture(scope="module")
-def REF():
-    """The pyhydroqc reference modules. Only the reference-parity tests use
-    them; they skip when the checkout is not importable, and the numpy
-    kernel comparison runs without it."""
-    try:
-        return load_reference()
-    except ImportError as e:
-        pytest.skip(f"pyhydroqc reference checkout not importable: {e}")
 
 
 def _mk(spark, resids_by_doc):
@@ -56,21 +42,6 @@ def _spark_threshold(spark, resids, window_sz, alpha, min_range):
 
 
 @pytest.mark.parametrize("window_sz,alpha,min_range", CASES)
-def test_dynamic_threshold_parity(spark, REF, window_sz, alpha, min_range):
-    resids = _resids()
-    out = _spark_threshold(spark, resids, window_sz, alpha, min_range)
-    for d, rs in resids.items():
-        with warnings.catch_warnings():
-            warnings.simplefilter("ignore")
-            exp = REF["anomaly_utilities"].set_dynamic_threshold(
-                pd.Series(rs), window_sz=window_sz, alpha=alpha, min_range=min_range
-            )
-        got = out[out.doc_id == d].reset_index(drop=True)
-        np.testing.assert_allclose(got["low"].values, exp["low"].values, atol=1e-9, err_msg=d)
-        np.testing.assert_allclose(got["high"].values, exp["high"].values, atol=1e-9, err_msg=d)
-
-
-@pytest.mark.parametrize("window_sz,alpha,min_range", CASES)
 def test_dynamic_threshold_matches_numpy_kernel(spark, window_sz, alpha, min_range):
     """The Spark window operator and the fused kernel's prefix-sum
     threshold agree on the same clamped centered window."""
@@ -88,7 +59,8 @@ def test_detect_threshold_anomalies_matches_numpy_rule(spark):
     iff its residual lies outside [low, high], and a missing residual or
     bound never flags by itself. Residuals carry NULL gaps and spikes,
     bounds come from ``dynamic_threshold`` over them, a few residuals sit
-    exactly on a bound and a few rows get a NULL bound."""
+    exactly on a bound, a few rows get a NULL bound, and two rows carry
+    NaN (not NULL): a NaN residual and NaN bounds."""
     rng = np.random.default_rng(21)
     rows = []
     for d, n in (("a", 300), ("b", 60), ("c", 9)):
@@ -107,6 +79,13 @@ def test_detect_threshold_anomalies_matches_numpy_rule(spark):
     nulled = F.col("pos") % 37 == 5
     out = out.withColumn("low", F.when(nulled, None).otherwise(F.col("low")))
     out = out.withColumn("high", F.when(nulled & (F.col("doc_id") == "a"), None).otherwise(F.col("high")))
+    nan = float("nan")
+    out = out.unionByName(
+        spark.createDataFrame(
+            [("n", 0, nan, 0.0, 1.0), ("n", 1, 0.5, nan, nan)],
+            "doc_id string, pos int, residual double, low double, high double",
+        )
+    )
     got = (
         threshold.detect_threshold_anomalies(out)
         .orderBy("doc_id", "pos")
@@ -124,21 +103,16 @@ def test_detect_threshold_anomalies_matches_numpy_rule(spark):
     assert ((r == hi) | (r == lo)).sum() >= 10
 
 
-def test_detect_anomalies_parity(spark, REF):
-    rng = np.random.default_rng(3)
-    rs = rng.normal(0, 1, 200)
-    rs[[20, 80, 150]] = [9.0, -9.0, 7.5]
-    df = _mk(spark, {"a": rs})
-    out = threshold.dynamic_threshold(df, window_sz=30, alpha=0.001, min_range=0.1)
-    out = threshold.detect_threshold_anomalies(out)
-    got = out.orderBy("pos").select("detected_anomaly").toPandas()["detected_anomaly"]
-    with warnings.catch_warnings():
-        warnings.simplefilter("ignore")
-        th = REF["anomaly_utilities"].set_dynamic_threshold(
-            pd.Series(rs), window_sz=30, alpha=0.001, min_range=0.1
-        )
-        det = REF["anomaly_utilities"].detect_anomalies(
-            pd.Series(rs), pd.Series(rs), pd.Series(rs), th, summary=False
-        )
-    assert got.astype(bool).tolist() == det["anomaly"].astype(bool).tolist()
-    assert got[20] and got[80] and got[150]
+def test_constant_threshold_anomalies_reads_nan_as_missing(spark):
+    """The scalar-bound test flags r < low or r > high; a NULL or NaN
+    residual, or NaN bounds, never flag."""
+    nan = float("nan")
+    rs = [-2.0, -1.0, 0.5, 1.0, 2.0, None, nan]
+    df = spark.createDataFrame([(i, r) for i, r in enumerate(rs)], "pos int, residual double")
+
+    def flags(low, high):
+        out = threshold.constant_threshold_anomalies(df, "residual", low, high)
+        return out.orderBy("pos").toPandas()["detected_anomaly"].tolist()
+
+    assert flags(-1.0, 1.0) == [True, False, False, False, True, False, False]
+    assert flags(nan, nan) == [False] * len(rs)

@@ -116,14 +116,9 @@ def test_multivar_uses_sibling_sensors(spark):
 
 
 def test_mode_is_validated(spark, spiky):
-    """Both residual functions reject an unknown mode up front: past the
-    check, a typo such as "bidr" would trim the bidir edge but add no
-    lead features, a mis-trimmed vanilla model."""
+    """The univariate residual function rejects an unknown mode up front:
+    past the check, a typo such as "bidr" would trim the bidir edge but
+    add no lead features, a mis-trimmed vanilla model."""
     df = spiky.withColumnRenamed("value", "observed")
     with pytest.raises(ValueError, match="mode"):
         wd.windowed_regression_residuals(df, mode="bidr")
-    with pytest.raises(ValueError, match="mode"):
-        wd.multivar_regression_residuals(
-            df.withColumn("source", df["doc_id"]).withColumn("sensor", df["doc_id"]),
-            mode="bidr",
-        )
