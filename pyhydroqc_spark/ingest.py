@@ -24,6 +24,10 @@ from pyspark.sql import DataFrame, functions as F
 from .datagen import T0, CADENCE_S, VAL_LO, VAL_HI
 from .quantize import TOKEN_MAX, SENTINEL
 
+# the token table's schema: readers pass it instead of inferring it from
+# parquet footers, which costs a Spark job per read
+TOKEN_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
+
 
 def explode_tokens(
     tok_df: DataFrame,

@@ -19,7 +19,15 @@ table).
 
 Skew: series are hash-repartitioned by doc_id before the kernel (hot
 sources own ~50% of series; doc_id hashing spreads them evenly; a series
-never splits across groups).
+never splits across groups). AQE then coalesces that exchange's small
+partitions, also inside the cached kernel frame
+(``canChangeCachedPlanOutputPartitioning``, session.py), so the data
+size, not ``spark.sql.shuffle.partitions``, sets the kernel's task
+count, and the two writes that read the cached frame inherit it: a small
+partition runs one kernel task and one task per write. Coalescing stops
+at the 1 MB ``minPartitionSize``: about 262k int32 tokens, or ~2.3 s of
+kernel time at ~8.8 µs per point, so a large partition keeps its
+parallelism.
 """
 
 from __future__ import annotations
@@ -30,7 +38,7 @@ import uuid
 from pyspark.sql import SparkSession, functions as F
 
 from .checkpoint import CheckpointLog, STATUS_DONE
-from .ingest import repartition_series
+from .ingest import TOKEN_SCHEMA, repartition_series
 from .operators.fused import explode_tier_cells, fused_tokens_to_tiers
 from .operators.rollup import DEFAULT_TIERS
 from .params import DEFAULT_PARAMS
@@ -94,7 +102,10 @@ def run_pipeline(
             if seen_files[last_snap].issuperset(part_files):
                 res.partitions_skipped.append(part)
                 continue
-        tok = spark.read.parquet(*part_files).withColumn("source", F.lit(part))
+        tok = (
+            spark.read.schema(TOKEN_SCHEMA).parquet(*part_files)
+            .withColumn("source", F.lit(part))
+        )
         n_points = _process_partition(
             spark, tok, part, p, tiers, tier_tables, tier_comp_tables, arima_order,
         )

@@ -12,6 +12,14 @@ falls back to Spark's path when no pyspark and py4j are installed outside
 the archives or the installed pyspark's ``version.py`` differs from the
 zip's. Sessions built elsewhere (``spark-submit`` on a cluster) keep
 Spark's own daemon.
+
+Task counts follow the data, not ``spark.sql.shuffle.partitions``: AQE
+coalesces small shuffle partitions (to the 1 MB ``minPartitionSize``
+under the default ``parallelismFirst``), and
+``canChangeCachedPlanOutputPartitioning`` lets it do so inside a cached
+plan too, so the pipeline's cached kernel frame and the writes that read
+it run one task for a small partition instead of one per shuffle
+partition.
 """
 
 from __future__ import annotations
@@ -52,6 +60,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")

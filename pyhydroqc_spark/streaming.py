@@ -31,12 +31,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .ingest import explode_tokens
+from .ingest import TOKEN_SCHEMA, explode_tokens
 from .operators.fused import range_flags_np, run_ids_np
-from .operators.rollup import rollup_points
+from .operators.rollup import bucket_col
 from .tables import SnapshotTable, commit_tables
-
-TOKEN_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
 
 def _merge_cells(existing: DataFrame | None, incoming: DataFrame) -> DataFrame:
@@ -67,11 +65,12 @@ def merge_batch_tiers(
     value_col: str = "value",
 ) -> int:
     """Multi-tier continuous aggregates: fold one micro-batch into EVERY
-    retention tier's store (``agg_{t}s``). The finest tier aggregates the
-    raw batch; coarser tiers re-aggregate the finest tier's PARTIAL cells
-    (cnt/sum/min/max are monoids, so partials of partials are exact) — the
-    batch is scanned once regardless of tier count, and all pending tiers
-    merge in one write.
+    retention tier's store (``agg_{t}s``). Every pending tier's partial
+    cells come from ONE ``groupBy(doc_id, tier, bucket_start)`` over the
+    batch points, each point exploded once per pending tier (cnt/sum/
+    min/max are mergeable, so no tier needs another tier's cells): the
+    batch is scanned once and aggregated in one shuffle regardless of
+    tier count, and all pending tiers merge in one write.
 
     Cell-scoped MERGE: read ONLY the day-partitions the batch touches,
     fold the batch's partial aggregates in, and atomically replace just
@@ -85,29 +84,28 @@ def merge_batch_tiers(
     already folded in — that store skips it, or cnt/sum would double. A
     crash between tier commits therefore replays safely: finished tiers
     skip, unfinished tiers apply. Returns how many tiers applied."""
-    from functools import reduce
-
-    from .operators.rollup import rollup_from_rollup
-
-    tiers_sorted = sorted(int(t) for t in tiers)
-    stores = {t: os.path.join(out_dir, f"agg_{t}s") for t in tiers_sorted}
+    stores = {t: os.path.join(out_dir, f"agg_{t}s") for t in sorted(int(t) for t in tiers)}
     pending = _pending_stores(stores, batch_id)
     if not pending:
         return 0
-    finest = rollup_points(batch_df, tiers_sorted[0], value_col=value_col).persist()
-    try:
-        agg, parts = finest, []
-        for t in tiers_sorted:
-            if t != tiers_sorted[0]:
-                agg = rollup_from_rollup(agg.drop("tier"), t)
-            if t in pending:
-                parts.append(agg)
-        _merge_cells_into(
-            batch_df.sparkSession, reduce(DataFrame.unionByName, parts),
-            batch_id, pending,
+    v = F.col(value_col)
+    cells = (
+        batch_df.withColumn("tier", F.explode(F.array(*map(F.lit, pending))))
+        .withColumn("bucket_start", bucket_col("ts", F.col("tier")))
+        .groupBy("doc_id", "tier", "bucket_start")
+        .agg(
+            F.count(v).alias("cnt"),
+            F.sum(v).alias("sum_val"),
+            F.min(v).alias("min_val"),
+            F.max(v).alias("max_val"),
         )
-    finally:
-        finest.unpersist()
+        # a first batch is written as it is: keep the stores' column order
+        .select(
+            "doc_id", "bucket_start", "cnt", "sum_val",
+            (F.col("sum_val") / F.col("cnt")).alias("avg_val"), "min_val", "max_val", "tier",
+        )
+    )
+    _merge_cells_into(batch_df.sparkSession, cells, batch_id, pending)
     return len(pending)
 
 
@@ -149,10 +147,10 @@ def _merge_cells_into(spark, cells: DataFrame, batch_id: int, stores: dict) -> N
         )
         # each write task writes one file per (tier, day) it holds: range
         # partitioning gives a task one or two of them instead of all, and
-        # doc_id still splits a large finest-tier day across tasks
-        merged = merged.repartitionByRange(
-            int(spark.conf.get("spark.sql.shuffle.partitions")), "tier", "day", "doc_id"
-        )
+        # doc_id still splits a large finest-tier day across tasks. No
+        # partition count: AQE sizes the exchange to the merged cells, so
+        # a small batch writes one file per (tier, day)
+        merged = merged.repartitionByRange("tier", "day", "doc_id")
         # the tier stays inside the store files: write a copy as the key
         commit_tables(
             merged.withColumn("__tier", F.col("tier")), "__tier", stores,

@@ -272,6 +272,20 @@ def test_fused_cells_partition_runs_at_most_four_jobs(spark, tmp_path, monkeypat
         assert 1 <= n <= 4, (part, n)
 
 
+def test_small_partition_commits_one_file_per_table(spark, canon):
+    """AQE sizes the kernel and write stages to the data: a small
+    partition's cached kernel frame coalesces to one task, so each commit
+    writes one file into every rollup_{t}s and comp_tier_{t}s table, not
+    one per shuffle partition."""
+    for tier in TIERS:
+        for name in (f"rollup_{tier}s", f"comp_tier_{tier}s"):
+            t = SnapshotTable(os.path.join(canon["out"], name))
+            parts = t.partitions()
+            assert parts, name
+            for part in parts:
+                assert len(t.files_for_partitions({part})) == 1, (name, part)
+
+
 def test_fused_cells_crash_between_table_commits_resumes(spark, canon, tmp_path):
     """A crash after the staged write, between two tables' commits: no
     table shows part of a partition, no checkpoint row is written, no

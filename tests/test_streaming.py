@@ -219,14 +219,15 @@ def test_multi_tier_streaming_matches_batch(spark, tmp_path):
         )
         pd.testing.assert_frame_equal(
             got.reset_index(drop=True)[exp.columns], exp.reset_index(drop=True),
-            check_dtype=False,
+            check_dtype=False, check_exact=False, rtol=0, atol=1e-9,
         )
 
 
 def test_multi_tier_drain_file_fan_out(spark, tmp_path):
-    """The merge write range-partitions by (tier, day, doc_id): a write
-    task holds one or two (tier, day) groups, so a store gets at most
-    one file per write task plus one per day, not one per (task, day)."""
+    """The merge write range-partitions by (tier, day, doc_id) with no
+    fixed partition count: AQE coalesces a small drain's exchange into
+    one write task, so a store gets one file per day it touches, not one
+    per (shuffle partition, day)."""
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
     os.makedirs(in_dir)
@@ -236,7 +237,6 @@ def test_multi_tier_drain_file_fan_out(spark, tmp_path):
     spark.createDataFrame(pdf, schema=_tok_schema()).write.mode("append").parquet(in_dir)
     streaming.run_streaming_rollup(spark, in_dir, out_dir, tier_seconds=tiers)
 
-    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
     for t in tiers:
         store = SnapshotTable(os.path.join(out_dir, f"agg_{t}s"))
         n_days = (
@@ -246,7 +246,7 @@ def test_multi_tier_drain_file_fan_out(spark, tmp_path):
             .count()
         )
         assert n_days > 1
-        assert len(store.files()) <= n_tasks + n_days, t
+        assert len(store.files()) <= n_days, t
 
 
 def test_retry_after_interleaved_commit_still_skipped(spark, tmp_path):
@@ -408,7 +408,7 @@ def test_crash_between_tier_commits_self_heals(spark, tmp_path):
         )
         pd.testing.assert_frame_equal(
             got.reset_index(drop=True)[exp.columns], exp.reset_index(drop=True),
-            check_dtype=False,
+            check_dtype=False, check_exact=False, rtol=0, atol=1e-9,
         )
 
 
