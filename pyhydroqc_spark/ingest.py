@@ -29,6 +29,23 @@ from .quantize import TOKEN_MAX, SENTINEL
 TOKEN_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
 
 
+def token_count(paths: list) -> int:
+    """Points held by token-table parquet files, read from their footers
+    (the value count of the ``tokens`` leaf column): no Spark job."""
+    import pyarrow.parquet as pq
+
+    n = 0
+    for path in paths:
+        md = pq.ParquetFile(path).metadata
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            n += sum(
+                rg.column(j).num_values for j in range(rg.num_columns)
+                if rg.column(j).path_in_schema.split(".", 1)[0] == "tokens"
+            )
+    return n
+
+
 def explode_tokens(
     tok_df: DataFrame,
     t0=None,

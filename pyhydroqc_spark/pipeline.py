@@ -19,15 +19,13 @@ table).
 
 Skew: series are hash-repartitioned by doc_id before the kernel (hot
 sources own ~50% of series; doc_id hashing spreads them evenly; a series
-never splits across groups). AQE then coalesces that exchange's small
-partitions, also inside the cached kernel frame
-(``canChangeCachedPlanOutputPartitioning``, session.py), so the data
-size, not ``spark.sql.shuffle.partitions``, sets the kernel's task
-count, and the two writes that read the cached frame inherit it: a small
-partition runs one kernel task and one task per write. Coalescing stops
-at the 1 MB ``minPartitionSize``: about 262k int32 tokens, or ~2.3 s of
-kernel time at ~8.8 µs per point, so a large partition keeps its
-parallelism.
+never splits across groups). The exchange's partition count follows the
+kernel's cost, not the bytes AQE sees: one task per
+``KERNEL_POINTS_PER_TASK`` points, read from the input's parquet footers,
+capped at ``spark.sql.shuffle.partitions``. The frame is cached, so the
+two writes that read it run the same number of tasks: a small partition
+runs one kernel task and one task per write and commits one file per
+table, and a large one keeps the full width.
 """
 
 from __future__ import annotations
@@ -38,11 +36,16 @@ import uuid
 from pyspark.sql import SparkSession, functions as F
 
 from .checkpoint import CheckpointLog, STATUS_DONE
-from .ingest import TOKEN_SCHEMA, repartition_series
+from .ingest import TOKEN_SCHEMA, repartition_series, token_count
 from .operators.fused import explode_tier_cells, fused_tokens_to_tiers
 from .operators.rollup import DEFAULT_TIERS
 from .params import DEFAULT_PARAMS
 from .tables import SnapshotTable, commit_tables
+
+# points per kernel task: ~0.15 s of kernel work at the ~5 µs per point a
+# one-task stage measures, about a task's fixed cost (scheduling, Arrow
+# hand-off, a Python worker's first start)
+KERNEL_POINTS_PER_TASK = 1 << 15
 
 
 class PipelineResult:
@@ -108,6 +111,7 @@ def run_pipeline(
         )
         n_points = _process_partition(
             spark, tok, part, p, tiers, tier_tables, tier_comp_tables, arima_order,
+            _kernel_tasks(spark, part_files),
         )
         ckpt.write(
             run_id, stage, part, in_snap, n_points,
@@ -121,8 +125,16 @@ def run_pipeline(
     return res
 
 
+def _kernel_tasks(spark, part_files) -> int:
+    """Kernel tasks for one partition: one per ``KERNEL_POINTS_PER_TASK``
+    points (counted from the parquet footers), at least one and at most
+    ``spark.sql.shuffle.partitions``."""
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-token_count(part_files) // KERNEL_POINTS_PER_TASK)))
+
+
 def _process_partition(
-    spark, tok, part, p, tiers, tier_tables, tier_comp_tables, arima_order,
+    spark, tok, part, p, tiers, tier_tables, tier_comp_tables, arima_order, n_tasks,
 ) -> int:
     # bandwidth-optimal: token arrays straight into the kernel, which
     # emits one row per (series, tier) carrying that tier's cell vectors
@@ -130,7 +142,7 @@ def _process_partition(
     # The small packed frame is cached and committed by two writes: every
     # tier's cells, then every tier's blobs.
     packed = fused_tokens_to_tiers(
-        repartition_series(tok), p, tier_seconds=tuple(sorted(tiers)),
+        repartition_series(tok, n_tasks), p, tier_seconds=tuple(sorted(tiers)),
         arima_order=arima_order,
     ).cache()
     try:

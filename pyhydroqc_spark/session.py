@@ -13,13 +13,15 @@ the archives or the installed pyspark's ``version.py`` differs from the
 zip's. Sessions built elsewhere (``spark-submit`` on a cluster) keep
 Spark's own daemon.
 
-Task counts follow the data, not ``spark.sql.shuffle.partitions``: AQE
-coalesces small shuffle partitions (to the 1 MB ``minPartitionSize``
-under the default ``parallelismFirst``), and
-``canChangeCachedPlanOutputPartitioning`` lets it do so inside a cached
-plan too, so the pipeline's cached kernel frame and the writes that read
-it run one task for a small partition instead of one per shuffle
-partition.
+AQE sizes shuffles to their map-output bytes: under the default
+``parallelismFirst`` it coalesces a shuffle's partitions toward
+max(1 MB ``minPartitionSize``, min(64 MB advisory size, bytes / default
+parallelism)). ``canChangeCachedPlanOutputPartitioning`` lets AQE plan
+cached frames too (Spark otherwise runs a cached plan without AQE), so
+the stream merge's cached partial cells coalesce like any other shuffle.
+Bytes do not measure the QC kernel's cost, so the pipeline gives its
+kernel exchange an explicit partition count (pipeline.py), which AQE
+leaves as it is.
 """
 
 from __future__ import annotations

@@ -18,6 +18,7 @@ import pytest
 from pyhydroqc_spark import pipeline as P
 from pyhydroqc_spark.checkpoint import CheckpointLog
 from pyhydroqc_spark.datagen import gen_token_table
+from pyhydroqc_spark.ingest import token_count
 from pyhydroqc_spark.params import SeriesParams
 from pyhydroqc_spark.tables import SnapshotTable
 
@@ -273,10 +274,10 @@ def test_fused_cells_partition_runs_at_most_four_jobs(spark, tmp_path, monkeypat
 
 
 def test_small_partition_commits_one_file_per_table(spark, canon):
-    """AQE sizes the kernel and write stages to the data: a small
-    partition's cached kernel frame coalesces to one task, so each commit
-    writes one file into every rollup_{t}s and comp_tier_{t}s table, not
-    one per shuffle partition."""
+    """A partition below KERNEL_POINTS_PER_TASK points runs one kernel
+    task, and the two writes read its cached frame with one task each, so
+    each commit writes one file into every rollup_{t}s and comp_tier_{t}s
+    table, not one per shuffle partition."""
     for tier in TIERS:
         for name in (f"rollup_{tier}s", f"comp_tier_{tier}s"):
             t = SnapshotTable(os.path.join(canon["out"], name))
@@ -284,6 +285,35 @@ def test_small_partition_commits_one_file_per_table(spark, canon):
             assert parts, name
             for part in parts:
                 assert len(t.files_for_partitions({part})) == 1, (name, part)
+
+
+def test_kernel_tasks_follow_points(spark, tmp_path, monkeypatch):
+    """The kernel exchange gets one task per KERNEL_POINTS_PER_TASK
+    points, counted from the parquet footers, capped at the shuffle
+    partitions: a partition above the budget keeps its width, and each
+    write commits at most one file per kernel task."""
+    tbl, pdf = _input_table(spark, str(tmp_path), n_series=8, n_tok=800, seed=11)
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    monkeypatch.setattr(P, "KERNEL_POINTS_PER_TASK", 1000)
+    real = P._process_partition
+    got = {}
+
+    def spy(spark_, tok, part, *a):
+        got[part] = a[-1]
+        return real(spark_, tok, part, *a)
+
+    monkeypatch.setattr(P, "_process_partition", spy)
+    out = str(tmp_path / "out")
+    P.run_pipeline(spark, tbl, out, PARAMS, tiers=(900,))
+
+    files = SnapshotTable(os.path.join(out, "rollup_900s"))
+    points = pdf.groupby("source")["n_tok"].sum()
+    assert max(points) > 1000 * 2
+    for part, n in points.items():
+        assert token_count(tbl.files_for_partitions({part})) == n
+        assert got[part] == min(cap, -(-n // 1000)), part
+        assert 1 <= len(files.files_for_partitions({part})) <= got[part], part
+    assert len(files.files_for_partitions({points.idxmax()})) > 1
 
 
 def test_fused_cells_crash_between_table_commits_resumes(spark, canon, tmp_path):
