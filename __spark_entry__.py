@@ -173,7 +173,12 @@ _ROLLUP_SCALARS = (
 )
 
 
-def _rollup_gate_cols(agg_with_stats):
+# the direct row-sets' labels, read from the multi-tier cells' seconds
+_TIER_LABEL = "CASE `tier` WHEN 900 THEN '15min' WHEN 3600 THEN '1h' WHEN 86400 THEN '1d' END"
+
+
+def _rollup_gate_cols(agg_with_stats, tier):
+    """A tier row-set's output columns; ``tier`` is its label as SQL text."""
     return agg_with_stats.selectExpr(
         *_ROLLUP_SCALARS,
         "round(`open_val`, 6) AS open_val",
@@ -182,80 +187,39 @@ def _rollup_gate_cols(agg_with_stats):
         "hist_checksum",
         "p50_bin",
         "p95_bin",
+        f"{tier} AS tier",
+        "false AS is_gap",
     )
 
 
-def _rollup(df, tier):
-    """Scalar aggregates AND the percentile sketch in ONE hash
-    aggregation (hist= rides the same groupBy — no second pass, no
-    join), stats derived in a projection. ``df`` is the checkpointed long
-    frame, which carries ``increment`` (computed once in the same window
-    as ``pos``), so no row-set pays its own lag window."""
+def _rollup_cells(spark, sf_dir):
+    """The gate's (15min, 1h, 1d) cells — scalars, OHLC, counter delta
+    and the percentile sketch — from ONE multi-tier aggregation of the
+    windowed events."""
     from pyhydroqc_spark.operators import rollup
-
-    out = rollup.rollup_points(
-        df, tier, value_col="value", hist=HIST, order_col="pos",
-        sum_cols={"increment": "counter_delta"}, key="user_id",
-    )
-    return _rollup_gate_cols(rollup.hist_stats(out))
-
-
-def _rollup_tiered_1d(df):
-    from pyhydroqc_spark.operators import rollup
-
-    # the sketch composes through the cascade (rollup_from_rollup sums
-    # the 1h histograms elementwise): composed 1d stats must hash-match
-    # the direct 1d row-set — the driver-checked mergeability proof
-    h1 = rollup.rollup_points(
-        df, 3600, value_col="value", hist=HIST, order_col="pos",
-        sum_cols={"increment": "counter_delta"}, key="user_id",
-    )
-    d1 = rollup.rollup_from_rollup(
-        h1.drop("tier"), 86400, sum_cols=("counter_delta",), key="user_id"
-    )
-    return _rollup_gate_cols(rollup.hist_stats(d1))
-
-
-def _rollup_long_checkpointed(spark, sf_dir):
-    # localCheckpoint, NOT persist: a persisted frame is plan-matched by
-    # Spark's CacheManager into EVERY other query that derives the same
-    # _events_long subtree (ar1_residuals' audited no-persist contract
-    # broke from a cache created here); a LogicalRDD is a distinct plan
-    # that nothing else can silently substitute.
-    #
-    # Deliberately NOT memoized across invocations: every call rebuilds
-    # the frame from events.parquet and re-materializes it, so a repeated
-    # gate run (e.g. the bench's min-of-2) pays the scan+window each time.
-    # The checkpoint's only job is WITHIN-invocation sharing — the gate's
-    # six row-sets read one materialized copy instead of each re-running
-    # the scan+window subtree (6× the work, measured 4.7s -> ~1.4s at
-    # sf0.1) — plus plan truncation for Catalyst.
-    from pyhydroqc_spark.operators.rollup import counter_increment_expr
 
     # pos AND the counter increment in ONE window pass: lag() rides the
-    # same (user_id; ts, event_id) exchange+sort as row_number(), so
-    # the four tier row-sets that need `increment` skip their own
-    # per-subtree lag window (was 4 extra exchange+sorts per gate run).
-    # RAW user_id stays in the frame: the row-sets group on the 8-byte
-    # long key and project the string doc_id back after aggregation —
-    # narrower exchanges (guide §2.3) and cheaper hashing than the
-    # string cast. (An InMemoryRelation persist whose preserved
-    # hashpartitioning(user_id) made the row-sets fully exchange-free
-    # was built and measured: 6-rep interleaved min 2.64 vs 2.47 for
-    # this checkpoint — the columnar cache scan cost more than the
-    # ~100k-row exchanges it removed, so the checkpoint stays.)
+    # same (user_id; ts, event_id) exchange+sort as row_number(). RAW
+    # user_id is the grouping key: the row-sets group on the 8-byte long
+    # and project the string doc_id back after aggregation — narrower
+    # exchanges (guide §2.3) and cheaper hashing than the string cast —
+    # and the window's hashpartitioning(user_id) already clusters the
+    # (user_id, tier, bucket) aggregation, so it needs no exchange.
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    v = F.col("value")
     long_inc = ev.select(
         "user_id",
-        F.col("user_id").cast("string").alias("doc_id"),
         (F.row_number().over(w) - 1).cast("long").alias("pos"),
         "ts",
         "value",
-        counter_increment_expr(v, F.lag("value").over(w)).alias("increment"),
+        rollup.counter_increment_expr(F.col("value"), F.lag("value").over(w)).alias(
+            "increment"
+        ),
     )
-    return long_inc.localCheckpoint(eager=True)
+    return rollup.rollup_points(
+        long_inc, (900, 3600, 86400), value_col="value", hist=HIST, order_col="pos",
+        sum_cols={"increment": "counter_delta"}, key="user_id",
+    )
 
 
 def q_rollup_tiers(spark, sf_dir):
@@ -264,35 +228,71 @@ def q_rollup_tiers(spark, sf_dir):
     direct 1d), unioned under a ``tier`` label so every tier's values are
     hash-checked independently. Consolidates the four r4 gates
     rollup_15min/1h/1d/tiered_1d into one queries() slot (the driver
-    artifact caps near 50 entries — see CHANGES_r05.md)."""
-    # ONE checkpointed copy of the windowed long frame feeds all six
-    # row-sets: the gate deliberately computes every tier DIRECT from
-    # facts (to cross-check the cascade), so without the shared copy the
-    # six subtrees each redo the scan+window — 4.7s -> ~1.4s at sf0.1.
-    # It is materialized EAGERLY (one cheap action) and rebuilt on every
-    # invocation (no cross-call memo — see _rollup_long_checkpointed).
-    # At corpus scale you would not cache facts; the pipeline's
-    # tier-from-tier cascade (rollup_from_rollup) scans them once instead.
-    long_df = _rollup_long_checkpointed(spark, sf_dir)
-    parts = [
-        _rollup(long_df, 900).withColumn("tier", F.lit("15min")),
-        _rollup(long_df, 3600).withColumn("tier", F.lit("1h")),
-        _rollup(long_df, 86400).withColumn("tier", F.lit("1d")),
-        _rollup_tiered_1d(long_df).withColumn("tier", F.lit("tiered_1d")),
-    ]
-    out = parts[0].withColumn("is_gap", F.lit(False))
-    for p in parts[1:]:
-        out = out.unionByName(p.withColumn("is_gap", F.lit(False)))
-    # r6 session-4: the gap-fill READ operators (time_bucket_gapfill /
-    # locf / interpolate analogues) join the gate as two more row-sets:
-    # the dense 1d grid with the default fills (cnt/sum→0, stats
-    # interpolated in bucket time), and a 6-series 1h grid exercising
-    # every strategy at once (locf avg, interpolated min, NULL-densified
-    # max). is_gap marks the synthesized rows, hash-checked like all else.
-    return out.unionByName(_gapfill_tier(long_df)).unionByName(_gapfill_tier_1h(long_df))
+    artifact caps near 50 entries — see CHANGES_r05.md).
+
+    ONE checkpointed frame of multi-tier cells feeds all six row-sets:
+    the three direct tiers are one ``hist_stats`` projection of it, the
+    cascade re-aggregates its 1h cells, and the two gap-fill row-sets
+    densify its 1d and 1h scalars. The wide histogram aggregation is
+    therefore planned, generated and compiled once per invocation. At
+    corpus scale you would not aggregate every tier from facts; the
+    pipeline's tier-from-tier cascade (rollup_from_rollup) scans them
+    once instead."""
+    from pyhydroqc_spark.operators import rollup
+
+    # localCheckpoint, NOT persist: a persisted frame is plan-matched by
+    # Spark's CacheManager into EVERY other query that derives the same
+    # subtree (ar1_residuals' audited no-persist contract broke from a
+    # cache created here); a LogicalRDD is a distinct plan that nothing
+    # else can silently substitute.
+    #
+    # Materialized EAGERLY and deliberately NOT memoized across
+    # invocations: every call rebuilds the cells from events.parquet, so
+    # a repeated gate run (e.g. the bench's min-of-2) pays the scan,
+    # window and aggregation each time. The checkpoint's only job is
+    # WITHIN-invocation sharing, and it sits AFTER the aggregation:
+    # Catalyst pushes a filter on a grouping key (``tier``) below the
+    # aggregate, so any split of an un-materialized multi-tier frame
+    # would plan — and compile — the wide 32-bin aggregation once per
+    # consumer again.
+    cells = _rollup_cells(spark, sf_dir).localCheckpoint(eager=True)
+    direct = _rollup_gate_cols(rollup.hist_stats(cells), _TIER_LABEL)
+    # the sketch composes through the cascade (rollup_from_rollup sums
+    # the 1h histograms elementwise): composed 1d stats must hash-match
+    # the direct 1d row-set — the driver-checked mergeability proof
+    d1 = rollup.rollup_from_rollup(
+        cells.where("tier = 3600").drop("tier"), 86400,
+        sum_cols=("counter_delta",), key="user_id",
+    )
+    tiered = _rollup_gate_cols(rollup.hist_stats(d1), "'tiered_1d'")
+    # the gap-fill READ operators (time_bucket_gapfill / locf /
+    # interpolate analogues): the dense 1d grid with the default fills
+    # (cnt/sum→0, stats interpolated in bucket time), and a 6-series 1h
+    # grid exercising every strategy at once (locf avg, interpolated min,
+    # NULL-densified max). is_gap marks the synthesized rows, hash-checked
+    # like all else.
+    scalars = ("user_id", "bucket_start", "cnt", "sum_val", "avg_val", "min_val", "max_val")
+    gf_1d = rollup.gapfill(cells.where("tier = 86400").select(*scalars), 86400, key="user_id")
+    gf_1h = rollup.gapfill(
+        cells.where("tier = 3600 AND user_id % 25 = 0").select(*scalars),
+        3600,
+        key="user_id",
+        fill={
+            "cnt": "zero",
+            "sum_val": "zero",
+            "avg_val": "locf",
+            "min_val": "interpolate",
+            "max_val": "null",
+        },
+    )
+    return (
+        direct.unionByName(tiered)
+        .unionByName(_gapfill_parts(gf_1d, "gapfill_1d"))
+        .unionByName(_gapfill_parts(gf_1h, "gapfill_1h_s25"))
+    )
 
 
-def _gapfill_parts(gf):
+def _gapfill_parts(gf, tier):
     return gf.selectExpr(
         *_ROLLUP_SCALARS,
         "is_gap",
@@ -304,36 +304,8 @@ def _gapfill_parts(gf):
         "CAST(NULL AS BIGINT) AS hist_checksum",
         "CAST(NULL AS INT) AS p50_bin",
         "CAST(NULL AS INT) AS p95_bin",
+        f"'{tier}' AS tier",
     )
-
-
-def _gapfill_tier(df):
-    from pyhydroqc_spark.operators import rollup
-
-    agg = rollup.rollup_points(df, 86400, value_col="value", key="user_id").drop("tier")
-    return _gapfill_parts(rollup.gapfill(agg, 86400, key="user_id")).withColumn(
-        "tier", F.lit("gapfill_1d")
-    )
-
-
-def _gapfill_tier_1h(df):
-    from pyhydroqc_spark.operators import rollup
-
-    df = df.where(F.col("doc_id").cast("long") % 25 == 0)
-    agg = rollup.rollup_points(df, 3600, value_col="value", key="user_id").drop("tier")
-    gf = rollup.gapfill(
-        agg,
-        3600,
-        key="user_id",
-        fill={
-            "cnt": "zero",
-            "sum_val": "zero",
-            "avg_val": "locf",
-            "min_val": "interpolate",
-            "max_val": "null",
-        },
-    )
-    return _gapfill_parts(gf).withColumn("tier", F.lit("gapfill_1h_s25"))
 
 
 def q_edge_filter(spark, sf_dir):

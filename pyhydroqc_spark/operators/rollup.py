@@ -5,15 +5,18 @@ series (`det_cor`, the output of the correction pass — semantics anchor
 `pyhydroqc/arima_correct.py:96,151,161,171`).
 
 Scale design:
-* the 15min tier aggregates the long fact table (``rollup_points``):
-  ``groupBy(doc_id, bucket)`` → partial+final hash aggregation from
-  Catalyst (map-side combine shrinks the shuffle by the bucket fan-in,
-  here 1 row per 1..N points);
-* coarser tiers re-aggregate the next-finer tier (``rollup_from_rollup``:
-  1h from 15min, 1d from 1h) — sum/min/max/count compose, avg is
-  recomputed as Σsum/Σcnt; this is a ~96× smaller input than re-scanning
-  facts. The optional histogram, OHLC and counter columns compose
-  tier-from-tier too;
+* ``rollup_points`` aggregates the long fact table: each point is
+  exploded once per requested tier and one ``groupBy(doc_id, tier,
+  bucket)`` → partial+final hash aggregation from Catalyst computes every
+  tier (map-side combine shrinks the shuffle by the bucket fan-in, here
+  1 row per 1..N points per tier). A caller that needs several row-sets
+  of several tiers materializes these cells once and reads them, instead
+  of planning (and compiling) one aggregation per tier;
+* coarser tiers can instead re-aggregate the next-finer tier
+  (``rollup_from_rollup``: 1h from 15min, 1d from 1h) — sum/min/max/count
+  compose, avg is recomputed as Σsum/Σcnt; this is a ~96× smaller input
+  than re-scanning facts. The optional histogram, OHLC and counter
+  columns compose tier-from-tier too;
 * bucket = epoch-floor, a pure column expression (partition-prunable when
   the table is laid out by bucket day).
 """
@@ -49,7 +52,7 @@ def bucket_col(ts_col: str, tier_seconds: int):
 
 def rollup_points(
     df: DataFrame,
-    tier_seconds: int,
+    tier_seconds: int | tuple,
     value_col: str = "det_cor",
     ts_col: str = "ts",
     key: str = "doc_id",
@@ -57,19 +60,29 @@ def rollup_points(
     order_col: str | None = None,
     sum_cols: dict | None = None,
 ) -> DataFrame:
-    """Fact rows → one aggregate row per (series, bucket). ``hist=(bins,
-    lo, hi)`` rides the composable percentile sketch in the SAME hash
-    aggregation (one conditional count per bin — no second corpus pass,
-    no join; this is how a continuous aggregate keeps percentile state
-    next to its scalars). Bin ``clamp(floor((v-lo)/(hi-lo)·bins), 0,
-    bins-1)``: out-of-domain values land in the edge bins.
-    ``order_col=`` adds OHLC open/close columns (the bucket's first/last
-    value in that order); ``sum_cols={in: out}`` rides extra plain sums
-    (e.g. counter increments) in the same aggregation.
+    """Fact rows → one aggregate row per (series, tier, bucket), columns
+    ``key, tier, bucket_start`` then the aggregates.
+    ``tier_seconds`` is one tier or a tuple of them: each point is
+    exploded once per tier and ONE ``groupBy(key, tier, bucket_start)``
+    aggregates every tier (an int is the one-tier tuple), so the finer
+    and coarser tiers share a scan and an aggregation instead of each
+    planning its own. ``hist=(bins, lo, hi)`` rides the composable
+    percentile sketch in the SAME hash aggregation (one conditional count
+    per bin — no second corpus pass, no join; this is how a continuous
+    aggregate keeps percentile state next to its scalars). Bin
+    ``clamp(floor((v-lo)/(hi-lo)·bins), 0, bins-1)``: out-of-domain
+    values land in the edge bins, a NaN in bin 0 (it is counted by
+    ``cnt`` too, so ``cnt == Σ hist``). ``order_col=`` adds OHLC
+    open/close columns (the bucket's first/last value in that order);
+    ``sum_cols={in: out}`` rides extra plain sums (e.g. counter
+    increments) in the same aggregation.
 
     The bin counts are one SQL-text ``array(count(...), ...)``
     expression: the driver parses the wide list once instead of paying a
     py4j round trip per Column-API node (~10 per bin)."""
+    tiers = (
+        tuple(tier_seconds) if isinstance(tier_seconds, (tuple, list)) else (tier_seconds,)
+    )
     aggs = [
         F.count(value_col).alias("cnt"),
         F.sum(value_col).alias("sum_val"),
@@ -102,10 +115,10 @@ def rollup_points(
         )
         aggs.append(F.expr(f"array({counts}) AS `hist`"))
     return (
-        df.withColumn("bucket_start", bucket_col(ts_col, tier_seconds))
-        .groupBy(key, "bucket_start")
+        df.withColumn("tier", F.explode(F.array(*[F.lit(int(t)) for t in tiers])))
+        .withColumn("bucket_start", bucket_col(ts_col, F.col("tier")))
+        .groupBy(key, "tier", "bucket_start")
         .agg(*aggs)
-        .withColumn("tier", F.lit(int(tier_seconds)))
     )
 
 
@@ -298,37 +311,37 @@ def gapfill(
 
 
 def hist_stats(hist_df: DataFrame, quantiles=(0.5, 0.95)) -> DataFrame:
-    """Read-side derivation from the sketch: total count, an
+    """Read-side derivation from the sketch: total count (``hist_n``, the
+    row's ``cnt``, which counts exactly the values the bins count), an
     order-weighted checksum (Σ cnt_b·(b+1) — pins the full histogram in
     one integer), and the bin index of each requested quantile (smallest
     bin whose cumulative count covers q·total, decided in exact integer
-    arithmetic: 100·cum ≥ q·100·total). The folds are SQL-lambda text:
-    the same HOFs built from Python lambdas cost a py4j round trip per
-    node and per lambda variable on the driver."""
-    out = hist_df.selectExpr(
-        "*",
-        "aggregate(`hist`, CAST(0 AS BIGINT), (a, x) -> a + x) AS hist_n",
-        "aggregate(zip_with(`hist`, sequence(1, size(`hist`)), "
-        "(c, i) -> c * CAST(i AS BIGINT)), CAST(0 AS BIGINT), (a, x) -> a + x)"
-        " AS hist_checksum",
+    arithmetic: 100·cum ≥ q·100·total).
+
+    All of it is ONE O(bins) fold: a struct accumulator carries the
+    cumulative count, the checksum, the bin index and each quantile's
+    found bin (a slice-sum cumulative array is O(bins²) of interpreted
+    HOF ops per bucket — measured ~2s over 130k buckets at sf0.1). The
+    fold is SQL-lambda text: the same HOFs built from Python lambdas cost
+    a py4j round trip per node and per lambda variable on the driver."""
+    qis = [int(round(q * 100)) for q in quantiles]
+    found = "".join(
+        f", coalesce(acc.b{qi}, CASE WHEN 100 * (acc.c + x) >= {qi} * `cnt` "
+        f"AND `cnt` > 0 THEN acc.i END) AS b{qi}"
+        for qi in qis
     )
-    # each quantile bin in ONE O(bins) fold (a slice-sum cumulative array
-    # is O(bins²) of interpreted HOF ops per bucket — measured ~2s over
-    # 130k buckets at sf0.1): carry (cumulative, found-bin, index) through
-    # a struct accumulator and keep the first bin whose cumulative count
-    # crosses q·total in exact integer arithmetic
-    qcols = []
-    for q in quantiles:
-        qi = int(round(q * 100))
-        qcols.append(
-            "CAST(aggregate(`hist`, struct(CAST(0 AS BIGINT) AS c, "
-            "CAST(NULL AS INT) AS b, CAST(0 AS INT) AS i), "
-            "(acc, x) -> struct(acc.c + x AS c, coalesce(acc.b, "
-            f"CASE WHEN 100 * (acc.c + x) >= {qi} * hist_n AND hist_n > 0 "
-            "THEN acc.i END) AS b, acc.i + 1 AS i)).b AS INT)"
-            f" AS p{qi}_bin"
-        )
-    return out.selectExpr("*", *qcols)
+    start = "".join(f", CAST(NULL AS INT) AS b{qi}" for qi in qis)
+    fold = (
+        "aggregate(`hist`, struct(CAST(0 AS BIGINT) AS c, CAST(0 AS BIGINT) AS s, "
+        f"CAST(0 AS INT) AS i{start}), (acc, x) -> struct(acc.c + x AS c, "
+        f"acc.s + x * CAST(acc.i + 1 AS BIGINT) AS s, acc.i + 1 AS i{found}))"
+    )
+    return hist_df.selectExpr("*", f"{fold} AS `__hs`").selectExpr(
+        *[f"`{c}`" for c in hist_df.columns],
+        "CAST(`cnt` AS BIGINT) AS hist_n",
+        "`__hs`.s AS hist_checksum",
+        *[f"`__hs`.b{qi} AS p{qi}_bin" for qi in qis],
+    )
 
 
 # -- counter aggregates (Prometheus increase() / TimescaleDB counter_agg) ----

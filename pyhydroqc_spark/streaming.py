@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .ingest import TOKEN_SCHEMA, explode_tokens
 from .operators.fused import range_flags_np, run_ids_np
-from .operators.rollup import bucket_col
+from .operators.rollup import rollup_points
 from .tables import SnapshotTable, commit_tables
 
 
@@ -66,9 +66,9 @@ def merge_batch_tiers(
 ) -> int:
     """Multi-tier continuous aggregates: fold one micro-batch into EVERY
     retention tier's store (``agg_{t}s``). Every pending tier's partial
-    cells come from ONE ``groupBy(doc_id, tier, bucket_start)`` over the
-    batch points, each point exploded once per pending tier (cnt/sum/
-    min/max are mergeable, so no tier needs another tier's cells): the
+    cells come from ONE multi-tier ``rollup_points`` over the batch
+    points, each point exploded once per pending tier (cnt/sum/min/max
+    are mergeable, so no tier needs another tier's cells): the
     batch is scanned once and aggregated in one shuffle regardless of
     tier count, and all pending tiers merge in one write.
 
@@ -88,22 +88,12 @@ def merge_batch_tiers(
     pending = _pending_stores(stores, batch_id)
     if not pending:
         return 0
-    v = F.col(value_col)
-    cells = (
-        batch_df.withColumn("tier", F.explode(F.array(*map(F.lit, pending))))
-        .withColumn("bucket_start", bucket_col("ts", F.col("tier")))
-        .groupBy("doc_id", "tier", "bucket_start")
-        .agg(
-            F.count(v).alias("cnt"),
-            F.sum(v).alias("sum_val"),
-            F.min(v).alias("min_val"),
-            F.max(v).alias("max_val"),
-        )
-        # a first batch is written as it is: keep the stores' column order
-        .select(
-            "doc_id", "bucket_start", "cnt", "sum_val",
-            (F.col("sum_val") / F.col("cnt")).alias("avg_val"), "min_val", "max_val", "tier",
-        )
+    # a first batch is written as it is: keep the stores' column order,
+    # with avg as Σsum/cnt, the form _merge_cells recomputes it in (the
+    # operator's avg aggregate is pruned from the plan)
+    cells = rollup_points(batch_df, tuple(pending), value_col=value_col).select(
+        "doc_id", "bucket_start", "cnt", "sum_val",
+        (F.col("sum_val") / F.col("cnt")).alias("avg_val"), "min_val", "max_val", "tier",
     )
     _merge_cells_into(batch_df.sparkSession, cells, batch_id, pending)
     return len(pending)

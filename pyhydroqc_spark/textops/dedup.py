@@ -553,27 +553,29 @@ def simhash(
     return counted.selectExpr("id", f"{sig} AS simhash")
 
 
-def _enumerate_bucket_pairs(grouped: DataFrame) -> DataFrame:
-    """In-bucket pair enumeration over a ``ms: array<struct<id, simhash>>``
-    column (array_sort orders by id, so x < y positionally)."""
-    ms = F.col("ms")
-    combos = F.flatten(
-        F.transform(
-            ms,
-            lambda x, i: F.transform(
-                F.slice(ms, i + 2, F.greatest(F.size(ms) - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x["id"].alias("id_a"),
-                    y["id"].alias("id_b"),
-                    x["simhash"].alias("h_a"),
-                    y["simhash"].alias("h_b"),
-                ),
-            ),
-        )
-    )
-    return grouped.select(F.explode(combos).alias("p")).select(
-        "p.id_a", "p.id_b", "p.h_a", "p.h_b"
-    )
+# in-bucket pair enumeration over an id-sorted ``ms: array<struct<id,
+# simhash>>`` (array_sort orders by id, so x < y positionally)
+_BUCKET_PAIRS = (
+    "inline(flatten(transform(ms, (x, i) -> transform("
+    "slice(ms, i + 2, greatest(size(ms) - i - 1, 0)), "
+    "y -> struct(x.id AS id_a, y.id AS id_b, x.simhash AS h_a, y.simhash AS h_b)))))"
+)
+_MEMBERS = "array_sort(collect_list(struct(id, simhash))) AS ms"
+# the signature's four 16-bit quarters
+_QUARTERS = "array(" + ", ".join(
+    f"shiftright(simhash, {16 * q}) & 65535" for q in range(4)
+) + ")"
+# the 48 bits outside quarter q, packed into one long
+_R48 = (
+    f"(element_at(filter({_QUARTERS}, (x, i) -> i != q), 1)"
+    f" | shiftleft(element_at(filter({_QUARTERS}, (x, i) -> i != q), 2), 16)"
+    f" | shiftleft(element_at(filter({_QUARTERS}, (x, i) -> i != q), 3), 32))"
+)
+
+
+def _buckets(banded: DataFrame, *keys: str) -> DataFrame:
+    """(keys..., ms) of every bucket with two or more members."""
+    return banded.groupBy(*keys).agg(F.expr(_MEMBERS)).where("size(ms) > 1")
 
 
 def simhash_candidates(
@@ -595,70 +597,37 @@ def simhash_candidates(
     from O(m²) to Σ O(m_s²) with E[m_s] ≈ m/2^12; truly identical-signature
     clusters remain output-bound (every pair IS a result) which no banding
     can avoid. For corpora where even the sub-buckets run hot, minhash
-    banding (tunable band count) is the documented scale path."""
-    quarters = F.array(
-        *[
-            F.shiftright(F.col("simhash"), q * 16).bitwiseAND(F.lit(0xFFFF))
-            for q in range(4)
-        ]
-    )
-    banded = sig_df.select("id", "simhash", F.posexplode(quarters).alias("q", "qv"))
+    banding (tunable band count) is the documented scale path.
+
+    Every expression is SQL text: as Column-API trees the banding and
+    the pair enumeration cost ~2,200 py4j round trips per build."""
+    n = sig_df.sparkSession.sparkContext.defaultParallelism
+    cap = int(bucket_cap)
     # one aggregation + in-bucket pair enumeration — the signature subtree
     # is computed once, not re-derived per self-join input. The explicit
     # repartition pins the bucket stage's parallelism: the banded rows are
     # tiny by BYTES (AQE would coalesce to one task) while the signature
     # fold feeding them is CPU-heavy.
-    n = sig_df.sparkSession.sparkContext.defaultParallelism
-    banded = banded.repartition(n, "q", "qv")
-    grouped = (
-        banded.groupBy("q", "qv")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("id"), F.col("simhash")))
-            ).alias("ms")
-        )
-        .where(F.size("ms") > 1)
-    )
-    small_pairs = _enumerate_bucket_pairs(grouped.where(F.size("ms") <= bucket_cap))
+    banded = sig_df.selectExpr(
+        "id", "simhash", f"posexplode({_QUARTERS}) AS (q, qv)"
+    ).repartition(n, "q", "qv")
+    grouped = _buckets(banded, "q", "qv")
+    small_pairs = grouped.where(f"size(ms) <= {cap}").selectExpr(_BUCKET_PAIRS)
 
     # hot buckets: explode back to members and re-band on the remaining
     # 48 bits (the three quarters OTHER than the bucket's own, packed into
     # one long) split into four 12-bit sub-blocks
-    hot = (
-        grouped.where(F.size("ms") > bucket_cap)
-        .select("q", "qv", F.explode("ms").alias("m"))
-        .select(
-            "q",
-            "qv",
-            F.col("m.id").alias("id"),
-            F.col("m.simhash").alias("simhash"),
-        )
+    hot = grouped.where(f"size(ms) > {cap}").selectExpr(
+        "q", "qv", "inline(ms)"
     )
-    rem = F.filter(quarters, lambda x, i: i != F.col("q"))
-    r48 = (
-        F.element_at(rem, 1)
-        .bitwiseOR(F.shiftleft(F.element_at(rem, 2), 16))
-        .bitwiseOR(F.shiftleft(F.element_at(rem, 3), 32))
-    )
-    subs = F.array(
-        *[
-            F.shiftright(r48, 12 * s).bitwiseAND(F.lit(0xFFF))
-            for s in range(4)
-        ]
-    )
-    sub_banded = hot.select(
-        "q", "qv", "id", "simhash", F.posexplode(subs).alias("sq", "sv")
+    subs = "array(" + ", ".join(
+        f"shiftright({_R48}, {12 * s}) & 4095" for s in range(4)
+    ) + ")"
+    sub_banded = hot.selectExpr(
+        "q", "qv", "id", "simhash", f"posexplode({subs}) AS (sq, sv)"
     ).repartition(n, "q", "qv", "sq", "sv")
-    hot_grouped = (
-        sub_banded.groupBy("q", "qv", "sq", "sv")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("id"), F.col("simhash")))
-            ).alias("ms")
-        )
-        .where(F.size("ms") > 1)
-    )
-    hot_pairs = _enumerate_bucket_pairs(hot_grouped.where(F.size("ms") <= bucket_cap))
+    hot_grouped = _buckets(sub_banded, "q", "qv", "sq", "sv")
+    hot_pairs = hot_grouped.where(f"size(ms) <= {cap}").selectExpr(_BUCKET_PAIRS)
 
     # SECOND split level (r5): a sub-bucket still over the cap agrees on
     # 16 + 12 = 28 bits, so a qualifying pair's ≤3 differing bits lie in
@@ -668,57 +637,35 @@ def simhash_candidates(
     # large boilerplate clusters). Identical-signature clusters remain
     # output-bound at every level — past that, minhash banding (tunable
     # band count) is the documented routing escape.
-    hot2 = (
-        hot_grouped.where(F.size("ms") > bucket_cap)
-        .select("q", "qv", "sq", "sv", F.explode("ms").alias("m"))
-        .select(
-            "q", "qv", "sq", "sv",
-            F.col("m.id").alias("id"),
-            F.col("m.simhash").alias("simhash"),
-        )
+    hot2 = hot_grouped.where(f"size(ms) > {cap}").selectExpr(
+        "q", "qv", "sq", "sv", "inline(ms)"
     )
     # r36 = the 48 non-quarter bits with the sq-th 12-bit block removed
     # (shift amounts must be literals under ANSI — CASE over the 4 values)
-    cases = []
-    for s in range(4):
-        low = r48.bitwiseAND(F.lit((1 << (12 * s)) - 1))
-        high = F.shiftleft(F.shiftright(r48, 12 * (s + 1)), 12 * s)
-        cases.append((s, low.bitwiseOR(high)))
-    r36 = F.when(F.col("sq") == cases[0][0], cases[0][1])
-    for s, expr in cases[1:]:
-        r36 = r36.when(F.col("sq") == s, expr)
-    sub2 = F.array(
-        *[
-            F.shiftright(r36, 9 * s2).bitwiseAND(F.lit(0x1FF))
-            for s2 in range(4)
-        ]
-    )
+    r36 = "CASE" + "".join(
+        f" WHEN sq = {s} THEN ({_R48} & {(1 << (12 * s)) - 1})"
+        f" | shiftleft(shiftright({_R48}, {12 * (s + 1)}), {12 * s})"
+        for s in range(4)
+    ) + " END"
+    sub2 = "array(" + ", ".join(
+        f"shiftright({r36}, {9 * s2}) & 511" for s2 in range(4)
+    ) + ")"
     # no forced repartition here (unlike level 1): the level-2 subtree is
     # EMPTY unless 12-bit sub-buckets run hot, and a pinned 32-task
     # exchange on an empty stage costs ~1.5s of pure scheduling at bench
     # SF; when the stage does carry data its parallelism is bounded by
     # the (small) hot-sub-bucket count anyway, which AQE sizes correctly
-    sub2_banded = hot2.select(
-        "q", "qv", "sq", "sv", "id", "simhash",
-        F.posexplode(sub2).alias("ssq", "ssv"),
+    sub2_banded = hot2.selectExpr(
+        "q", "qv", "sq", "sv", "id", "simhash", f"posexplode({sub2}) AS (ssq, ssv)"
     )
-    hot2_grouped = (
-        sub2_banded.groupBy("q", "qv", "sq", "sv", "ssq", "ssv")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("id"), F.col("simhash")))
-            ).alias("ms")
-        )
-        .where(F.size("ms") > 1)
+    hot2_pairs = _buckets(sub2_banded, "q", "qv", "sq", "sv", "ssq", "ssv").selectExpr(
+        _BUCKET_PAIRS
     )
-    hot2_pairs = _enumerate_bucket_pairs(hot2_grouped)
 
     pairs = small_pairs.union(hot_pairs).union(hot2_pairs).distinct()
-    return (
-        pairs.withColumn("hamming", F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return pairs.selectExpr(
+        "id_a", "id_b", "bit_count(h_a ^ h_b) AS hamming"
+    ).where(f"hamming <= {int(max_hamming)}")
 
 
 # --------------------------------------------------------------------------

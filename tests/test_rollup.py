@@ -193,6 +193,45 @@ def test_hist_sketch_composes_and_quantiles(spark):
         rollup.rollup_points(null_df, 86400, value_col="value", hist=hist)
     ).collect()[0]
     assert zrow["hist_checksum"] == 0 and zrow["p50_bin"] is None
+    # a literal NaN (not NULL) lands in bin 0 and counts in cnt, so
+    # cnt == Σ hist and hist_n (read from cnt) is the sketch's total
+    nan_df = spark.sql(
+        "SELECT doc_id, timestamp_seconds(0) AS ts, value FROM VALUES "
+        "('n', CAST('NaN' AS DOUBLE)), ('n', 1.0D), ('n', CAST(NULL AS DOUBLE)) "
+        "AS t(doc_id, value)"
+    )
+    nrow = rollup.hist_stats(
+        rollup.rollup_points(nan_df, 86400, value_col="value", hist=hist)
+    ).collect()[0]
+    assert nrow["hist"][0] == 1 and nrow["hist"][5] == 1
+    assert sum(nrow["hist"]) == nrow["cnt"] == nrow["hist_n"] == 2
+    assert nrow["hist_checksum"] == 1 + 6
+
+
+def test_multi_tier_rollup_equals_single_tier_calls(fact):
+    """rollup_points over a tuple of tiers (one explode, one aggregation)
+    returns exactly the rows of one call per tier: counts and sketches
+    equal, floats within 1e-9."""
+    df, _ = fact
+    df = df.withColumn("increment", F.col("det_cor") - 10)
+    kw = dict(hist=(32, 0.0, 20.0), order_col="pos",
+              sum_cols={"increment": "counter_delta"})
+    tiers = (900, 3600, 86400)
+    keys = ["tier", "doc_id", "bucket_start"]
+    multi = rollup.rollup_points(df, tiers, **kw)
+    single = rollup.rollup_points(df, tiers[0], **kw)
+    for t in tiers[1:]:
+        single = single.unionByName(rollup.rollup_points(df, t, **kw))
+    assert multi.columns == single.columns
+    got = multi.toPandas().sort_values(keys).reset_index(drop=True)
+    exp = single.toPandas().sort_values(keys).reset_index(drop=True)
+    assert len(got) == len(exp) and set(got.tier) == set(tiers)
+    for c in keys + ["cnt"]:
+        assert got[c].tolist() == exp[c].tolist(), c
+    assert [list(h) for h in got["hist"]] == [list(h) for h in exp["hist"]]
+    for c in ("sum_val", "avg_val", "min_val", "max_val", "open_val",
+              "close_val", "counter_delta"):
+        np.testing.assert_allclose(got[c], exp[c], rtol=0, atol=1e-9, err_msg=c)
 
 
 def test_ohlc_composes(spark):

@@ -76,13 +76,17 @@ def main():
         note="5-row params dim broadcast against the fact side.",
     )
 
-    # 2. rollup: partial (map-side) aggregation before the exchange
+    # 2. rollup: partial (map-side) aggregation of the multi-tier cells
+    # that rollup_tiers checkpoints (its post-checkpoint plan only reads
+    # them)
     audit(
-        "rollup_tiers (A+)",
-        qs["rollup_tiers"](spark, SF_DIR),
+        "rollup_tiers cells (A+)",
+        entry._rollup_cells(spark, SF_DIR),
         must=[r"partial_count", r"HashAggregate"],
-        note="Catalyst partial+final hash aggregation; the exchange carries "
-        "one row per (series, bucket), not per point.",
+        note="One Catalyst partial+final hash aggregation over every tier: "
+        "each point is exploded once per tier (Generate), and the window's "
+        "user_id partitioning already clusters the (user_id, tier, bucket) "
+        "groups.",
     )
 
     # 3. column pruning: lang_stats must scan only (lang, n_chars)
