@@ -44,9 +44,12 @@ def _double(x: float) -> str:
     return f"({float(x)!r}D)"
 
 
-def bucket_col(ts_col: str, tier_seconds: int):
-    return F.timestamp_seconds(
-        F.floor(F.unix_timestamp(F.col(ts_col)) / tier_seconds) * tier_seconds
+def bucket_col(ts_col: str, tier_seconds):
+    """The bucket start of ``ts_col``: the epoch floored to a multiple of
+    ``tier_seconds`` (an int, or the name of a column of them)."""
+    t = _ident(tier_seconds) if isinstance(tier_seconds, str) else str(int(tier_seconds))
+    return F.expr(
+        f"timestamp_seconds(floor(unix_timestamp({_ident(ts_col)}) / {t}) * {t})"
     )
 
 
@@ -77,18 +80,19 @@ def rollup_points(
     ``sum_cols={in: out}`` rides extra plain sums (e.g. counter
     increments) in the same aggregation.
 
-    The bin counts are one SQL-text ``array(count(...), ...)``
-    expression: the driver parses the wide list once instead of paying a
-    py4j round trip per Column-API node (~10 per bin)."""
+    The aggregates are SQL text, the bin counts one ``array(count(...),
+    ...)`` expression: the driver parses the wide list once instead of
+    paying a py4j round trip per Column-API node (~10 per bin)."""
     tiers = (
         tuple(tier_seconds) if isinstance(tier_seconds, (tuple, list)) else (tier_seconds,)
     )
+    v = _ident(value_col)
     aggs = [
-        F.count(value_col).alias("cnt"),
-        F.sum(value_col).alias("sum_val"),
-        F.avg(value_col).alias("avg_val"),
-        F.min(value_col).alias("min_val"),
-        F.max(value_col).alias("max_val"),
+        f"count({v}) AS cnt",
+        f"sum({v}) AS sum_val",
+        f"avg({v}) AS avg_val",
+        f"min({v}) AS min_val",
+        f"max({v}) AS max_val",
     ]
     if order_col is not None:
         # open/close: the value at the first/last row of the bucket in
@@ -97,14 +101,12 @@ def rollup_points(
         # through rollup_from_rollup (value of the earliest/latest finer
         # bucket), unlike avg which must be recomputed from sums.
         aggs += [
-            F.min_by(value_col, order_col).alias("open_val"),
-            F.max_by(value_col, order_col).alias("close_val"),
+            f"min_by({v}, {_ident(order_col)}) AS open_val",
+            f"max_by({v}, {_ident(order_col)}) AS close_val",
         ]
-    for c_in, c_out in (sum_cols or {}).items():
-        aggs.append(F.sum(c_in).alias(c_out))
+    aggs += [f"sum({_ident(c_in)}) AS {_ident(c_out)}" for c_in, c_out in (sum_cols or {}).items()]
     if hist is not None:
         n_bins, lo, hi = hist
-        v = _ident(value_col)
         b = (
             f"least(greatest(CAST(floor(({v} - {_double(lo)}) / "
             f"{_double(hi - lo)} * {int(n_bins)}) AS INT), 0), {int(n_bins) - 1})"
@@ -113,12 +115,13 @@ def rollup_points(
             f"count(CASE WHEN {b} = {i} AND {v} IS NOT NULL THEN 1 END)"
             for i in range(n_bins)
         )
-        aggs.append(F.expr(f"array({counts}) AS `hist`"))
+        aggs.append(f"array({counts}) AS `hist`")
+    tier_list = ", ".join(str(int(t)) for t in tiers)
     return (
-        df.withColumn("tier", F.explode(F.array(*[F.lit(int(t)) for t in tiers])))
-        .withColumn("bucket_start", bucket_col(ts_col, F.col("tier")))
+        df.withColumn("tier", F.expr(f"explode(array({tier_list}))"))
+        .withColumn("bucket_start", bucket_col(ts_col, "tier"))
         .groupBy(key, "tier", "bucket_start")
-        .agg(*aggs)
+        .agg(*map(F.expr, aggs))
     )
 
 
@@ -133,13 +136,12 @@ def rollup_from_rollup(
     integer sum — the property raw percentiles lack; ``sum_cols`` names
     extra columns that compose by plain sum (counter deltas)."""
     aggs = [
-        F.sum("cnt").alias("cnt"),
-        F.sum("sum_val").alias("sum_val"),
-        F.min("min_val").alias("min_val"),
-        F.max("max_val").alias("max_val"),
+        "sum(cnt) AS cnt",
+        "sum(sum_val) AS sum_val",
+        "min(min_val) AS min_val",
+        "max(max_val) AS max_val",
     ]
-    for c in sum_cols:
-        aggs.append(F.sum(c).alias(c))
+    aggs += [f"sum({_ident(c)}) AS {_ident(c)}" for c in sum_cols]
     has_ohlc = "open_val" in agg_df.columns
     if has_ohlc:
         # the earliest finer bucket's open / latest finer bucket's close —
@@ -147,20 +149,19 @@ def rollup_from_rollup(
         # bucket_start column is overwritten with the coarse bucket and
         # would be constant within the group)
         aggs += [
-            F.min_by("open_val", "__fine_b").alias("open_val"),
-            F.max_by("close_val", "__fine_b").alias("close_val"),
+            "min_by(open_val, __fine_b) AS open_val",
+            "max_by(close_val, __fine_b) AS close_val",
         ]
     has_hist = "hist" in agg_df.columns
     if has_hist:
         aggs.append(
-            F.expr(
-                "aggregate(collect_list(`hist`), CAST(array() AS array<bigint>), "
-                "(acc, x) -> CASE WHEN size(acc) = 0 THEN x "
-                "ELSE zip_with(acc, x, (a, v) -> a + v) END) AS `hist`"
-            )
+            "aggregate(collect_list(`hist`), CAST(array() AS array<bigint>), "
+            "(acc, x) -> CASE WHEN size(acc) = 0 THEN x "
+            "ELSE zip_with(acc, x, (a, v) -> a + v) END) AS `hist`"
         )
-    cols = [key, "bucket_start", "cnt", "sum_val", "avg_val", "min_val", "max_val"]
-    cols += list(sum_cols)
+    cols = [_ident(key), "bucket_start", "cnt", "sum_val", "sum_val / cnt AS avg_val",
+            "min_val", "max_val"]
+    cols += [_ident(c) for c in sum_cols]
     if has_ohlc:
         cols += ["open_val", "close_val"]
     if has_hist:
@@ -171,10 +172,8 @@ def rollup_from_rollup(
     return (
         src.withColumn("bucket_start", bucket_col("bucket_start", tier_seconds))
         .groupBy(key, "bucket_start")
-        .agg(*aggs)
-        .withColumn("avg_val", F.col("sum_val") / F.col("cnt"))
-        .select(*cols)
-        .withColumn("tier", F.lit(int(tier_seconds)))
+        .agg(*map(F.expr, aggs))
+        .selectExpr(*cols, f"{int(tier_seconds)} AS tier")
     )
 
 
@@ -213,8 +212,6 @@ def gapfill(
     (unboundedPreceding..current over asc and desc order) — never a
     ``currentRow..unboundedFollowing`` frame, which Spark evaluates
     O(n²) per partition."""
-    from pyspark.sql import Window
-
     if fill is not None:
         fill = dict(fill)
     else:
@@ -243,59 +240,43 @@ def gapfill(
         if c not in agg_df.columns:
             raise ValueError(f"fill column {c!r} not in frame")
 
-    step = int(tier_seconds)
-    b = F.unix_timestamp(F.col(bucket))
+    k, bq, t = _ident(key), _ident(bucket), f"unix_timestamp({_ident(bucket)})"
     span = agg_df.groupBy(key).agg(
-        F.min(b).alias("__lo"), F.max(b).alias("__hi")
+        F.expr(f"min({t}) AS __lo"), F.expr(f"max({t}) AS __hi")
     )
-    grid = span.select(
-        key,
-        F.explode(F.sequence("__lo", "__hi", F.lit(step))).alias("__b"),
-    ).select(key, F.timestamp_seconds("__b").alias(bucket))
+    grid = span.selectExpr(
+        k, f"explode(sequence(__lo, __hi, {int(tier_seconds)})) AS __b"
+    ).selectExpr(k, f"timestamp_seconds(__b) AS {bq}")
 
     dense = grid.join(
         agg_df.withColumn("__real", F.lit(True)), [key, bucket], "left"
     )
-    asc = (
-        Window.partitionBy(key)
-        .orderBy(F.col(bucket).asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    desc = (
-        Window.partitionBy(key)
-        .orderBy(F.col(bucket).desc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    t = F.unix_timestamp(F.col(bucket))
+    frame = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+    asc = f"OVER (PARTITION BY {k} ORDER BY {bq} ASC {frame})"
+    desc = f"OVER (PARTITION BY {k} ORDER BY {bq} DESC {frame})"
     out_cols = []
     for c in agg_df.columns:
-        if c in (key, bucket) or c not in fill or fill[c] == "null":
-            if c not in (key, bucket):
-                out_cols.append(F.col(c))
+        if c in (key, bucket):
             continue
-        s = fill[c]
-        if s == "zero":
-            out_cols.append(F.coalesce(F.col(c), F.lit(0)).alias(c))
+        v, s = _ident(c), fill.get(c, "null")
+        if s == "null":
+            out_cols.append(v)
+        elif s == "zero":
+            out_cols.append(f"coalesce({v}, 0) AS {v}")
         elif s == "locf":
-            out_cols.append(F.last(F.col(c), ignorenulls=True).over(asc).alias(c))
+            out_cols.append(f"last({v}, true) {asc} AS {v}")
         else:  # interpolate
-            pv = F.last(F.col(c), ignorenulls=True).over(asc)
-            pt = F.last(
-                F.when(F.col(c).isNotNull(), t), ignorenulls=True
-            ).over(asc)
-            nv = F.last(F.col(c), ignorenulls=True).over(desc)
-            nt = F.last(
-                F.when(F.col(c).isNotNull(), t), ignorenulls=True
-            ).over(desc)
-            interp = F.when(F.col(c).isNotNull(), F.col(c)).otherwise(
-                pv + (nv - pv) * (t - pt) / (nt - pt)
+            pv, nv = f"last({v}, true) {asc}", f"last({v}, true) {desc}"
+            at = f"CASE WHEN {v} IS NOT NULL THEN {t} END"
+            pt, nt = f"last({at}, true) {asc}", f"last({at}, true) {desc}"
+            out_cols.append(
+                f"CASE WHEN {v} IS NOT NULL THEN {v} ELSE "
+                f"{pv} + ({nv} - {pv}) * ({t} - {pt}) / ({nt} - {pt}) END AS {v}"
             )
-            out_cols.append(interp.alias(c))
-    return dense.select(
-        key,
-        bucket,
-        *out_cols,
-        F.coalesce(~F.col("__real"), F.lit(True)).alias("is_gap"),
+    # the fill expressions are SQL text: as Column-API trees they cost
+    # ~1,400 py4j round trips per gap-filled tier on the driver
+    return dense.selectExpr(
+        k, bq, *out_cols, "coalesce(NOT __real, true) AS is_gap"
     )
 
 
