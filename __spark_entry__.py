@@ -1358,15 +1358,21 @@ def q_dup_components(spark, sf_dir):
 def q_pq_topk(spark, sf_dir):
     """Product-quantization ANN (the memory-at-rest scale path: 64-dim
     float vectors → 8 one-byte codes, ~64× smaller, ADC-scored from RAM
-    at 10^9 vectors): md5-derived sub-codebooks (replayable), PQ-encode,
-    asymmetric-distance top-30 refine, exact cosine rerank to top-10."""
+    at 10^9 vectors): md5-derived sub-codebooks (replayable), encoded by
+    the IVFADC index with ONE cell, so ``nprobe=1`` scans every code —
+    plain PQ/ADC — then asymmetric-distance top-30 refine and exact cosine
+    rerank to top-10."""
     from pyhydroqc_spark.textops import ann
 
     emb = _emb(spark, sf_dir)
+    cents = ann.ivf_centroids(64, 1)
     books = ann.pq_codebooks_hash(64, m=8, k=16)
-    codes = ann.pq_encode(emb, books)
+    idx = ann.ivfpq_index(emb, cents, books)
     queries = emb.where(F.col("vec_id") < 5)
-    out = ann.pq_topk(codes, queries, books, k=10, refine=30, full_vectors=emb)
+    out = ann.ivfpq_topk(
+        idx, queries, cents, books, k=10, nprobe=1, refine=30,
+        full_vectors=emb,
+    )
     return out.select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("neighbor_id").cast("long").alias("neighbor_id"),
@@ -1375,12 +1381,12 @@ def q_pq_topk(spark, sf_dir):
 
 
 def q_ivfpq_topk(spark, sf_dir):
-    """IVFADC (r5): the composition the r4 verdict demanded — IVF coarse
-    cells prune the scan to nprobe/nlist of the corpus, PQ/ADC scores the
-    survivors from m-byte codes, exact cosine rerank on the global top-30.
-    md5-derived centroids AND sub-codebooks so DuckDB replays the whole
-    index bit-for-bit. pq_topk's full-corpus ADC scan is gone: only codes
-    in probed cells are ever touched."""
+    """IVFADC: IVF coarse cells prune the scan to nprobe/nlist of the
+    corpus, PQ/ADC scores the survivors from m-byte codes, exact cosine
+    rerank on the global top-30. md5-derived centroids AND sub-codebooks
+    so DuckDB replays the whole index bit-for-bit. The same operator as
+    ``pq_topk`` with 16 cells and 4 probed instead of one: only codes in
+    probed cells are ever touched."""
     from pyhydroqc_spark.textops import ann
 
     emb = _emb(spark, sf_dir)
@@ -1575,17 +1581,13 @@ def q_dup_keep_list(spark, sf_dir):
         d2 = incremental.incremental_dedup(
             docs.where(F.col("doc_id") > mid), store, threshold=0.5
         )
-        inc = (
-            d1.unionByName(d2)
-            .select(
-                F.lit("minhash_inc").alias("method"),
-                F.col("id").cast("long").alias("doc_id"),
-                F.coalesce("dup_of", "id").cast("long").alias("component"),
-                "keep",
-            )
-            # decisions are already materialized (the operator decides
-            # eagerly); pin them rows-side before the store dir vanishes
-            .localCheckpoint(eager=True)
+        # each batch's decisions come back local-checkpointed, so they
+        # outlive the store dir removed below
+        inc = d1.unionByName(d2).select(
+            F.lit("minhash_inc").alias("method"),
+            F.col("id").cast("long").alias("doc_id"),
+            F.coalesce("dup_of", "id").cast("long").alias("component"),
+            "keep",
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)

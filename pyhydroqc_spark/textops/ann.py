@@ -1,11 +1,26 @@
 """Approximate-nearest-neighbor search over embedding columns.
 
+Top-k surfaces, each returning (query_id, neighbor_id, cosine, rank) with
+ties pinned by ``_top_k_by_cosine`` (cosine desc, neighbor id asc):
+
 * ``cosine_topk`` — exact brute force: broadcast the (small) query side,
   dot products via ``zip_with`` + ``aggregate`` (JVM-side, no UDF), rank
   with a window. The baseline and the correctness oracle.
-* ``lsh_topk``    — the scale path: sign-random-projection buckets (Charikar
-  hyperplane LSH); candidates only within matching buckets, then exact
-  rerank. At 10^9 vectors the bucket join replaces the full cross join.
+* ``ivf_topk``    — IVF-flat: each vector sits in its nearest coarse cell,
+  a query probes its ``nprobe`` nearest cells and reranks them exactly.
+* ``lsh_topk``    — sign-random-projection buckets (Charikar hyperplane
+  LSH); candidates only within matching buckets, then exact rerank. At
+  10^9 vectors the bucket join replaces the full cross join.
+* ``ivfpq_topk``  — IVFADC over an ``ivfpq_index`` of PQ codes: a
+  probed-cell ADC scan, then exact rerank of the best ``refine``. One
+  cell with ``nprobe=1`` is plain PQ/ADC.
+
+Near-duplicate pairs (id_a < id_b, cosine): ``cosine_dup_pairs`` (sign-LSH
+buckets over full vectors) and ``ivfpq_dup_pairs`` (per-cell symmetric
+distance over PQ codes). Cells, planes and codebooks are md5-derived
+(``ivf_centroids``, ``md5_planes``, ``pq_codebooks_hash``) so a SQL oracle
+replays them, or trained on a bounded sample (``train_ivf_centroids``,
+``train_pq_codebooks``).
 """
 
 from __future__ import annotations
@@ -113,6 +128,20 @@ def _cosine_rerank(cand: DataFrame, df: DataFrame, id_col: str, vec_col: str) ->
     return joined.select("id_a", "id_b", "__va", "__vb").mapInArrow(run, schema)
 
 
+def _top_k_by_cosine(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank): the ``k`` best neighbors of
+    each query. Ties on cosine break by neighbor id ascending — the order
+    every top-k surface and its SQL oracle pin."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def cosine_topk(
     df: DataFrame,
     queries: DataFrame,
@@ -141,14 +170,7 @@ def cosine_topk(
     scored = joined.withColumn(
         "cosine", _dot(F.col("__v"), F.col("__q")) / (F.col("__nv") * F.col("__nq"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k_by_cosine(scored, k)
 
 
 def md5_planes(
@@ -299,14 +321,7 @@ def ivf_topk(
         "cosine",
         _dot(F.col("__v"), F.col("__q")) / (_norm(F.col("__v")) * _norm(F.col("__q"))),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k_by_cosine(scored, k)
 
 
 def _with_buckets(d: DataFrame, tables, id_col: str, vec_col: str, idc: str) -> DataFrame:
@@ -494,14 +509,7 @@ def lsh_topk(
             / (_norm(F.col("__nv")) * _norm(F.col("__qv"))),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k_by_cosine(scored, k)
 
 
 # ---------------------------------------------------------------- PQ (ADC)
@@ -550,186 +558,6 @@ def train_pq_codebooks(
     return books
 
 
-def pq_encode(
-    df: DataFrame,
-    codebooks: list,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, vector) → (id, codes array<int>): each subvector replaced by
-    its nearest sub-centroid id. At 10^9 vectors this is the
-    memory-at-rest lever — a 64-dim float vector (512 B raw, 256 B as
-    float32) becomes m small ints (m bytes as a binary pack): candidates
-    can be scored from RAM where full vectors cannot. Arrow-batched
-    mapInPandas; per batch the assignment is one (batch × k) BLAS distance
-    matrix per subvector — no per-row Python."""
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
-
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    sd = books[0].shape[1]
-    key_type = df.schema[id_col].dataType
-    schema = StructType(
-        [
-            StructField(id_col, key_type, False),
-            StructField("codes", ArrayType(IntegerType(), False), False),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            X = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            codes = np.empty((len(X), m), dtype=np.int32)
-            for j, cents in enumerate(books):
-                S = X[:, j * sd : (j + 1) * sd]
-                # ||s-c||² argmin == (|c|² - 2 s·c) argmin
-                d2 = (cents**2).sum(axis=1)[None, :] - 2.0 * (S @ cents.T)
-                codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col].values, "codes": list(codes)})
-
-    return df.select(id_col, vec_col).mapInPandas(run, schema=schema)
-
-
-def pq_topk(
-    codes_df: DataFrame,
-    queries: DataFrame,
-    codebooks: list,
-    k: int = 10,
-    refine: int = 50,
-    full_vectors: DataFrame | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes → exact rerank.
-
-    Per query the (m × k_centroids) table of exact subvector→centroid
-    distances is computed DRIVER-side (tiny: queries are the small side by
-    contract) and broadcast in the kernel closure; a candidate's
-    approximate distance is the sum of m table lookups — numpy fancy
-    indexing over the whole Arrow batch at once. Each partition emits only
-    its top ``refine`` per query (partial top-k — the shuffle carries
-    O(partitions × queries × refine) rows, never O(n)); the global top
-    ``refine`` are exactly reranked against ``full_vectors`` (true cosine)
-    when provided, else ranked by ADC score. Returns (query_id,
-    neighbor_id, cosine, rank) like the other top-k surfaces."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, StructField, StructType,
-    )
-
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    m = len(books)
-    sd = books[0].shape[1]
-    qrows = queries.select(id_col, vec_col).collect()
-    qids = [r[id_col] for r in qrows]
-    Qraw = [list(map(float, r[vec_col])) for r in qrows]
-    Q = np.array(Qraw, dtype=np.float64)
-    Q = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-    # LUT[qi, j, c] = ||q_sub - c||²  (exact, asymmetric)
-    lut = np.stack(
-        [
-            np.stack(
-                [
-                    ((Q[:, j * sd : (j + 1) * sd] - books[j][c][None, :]) ** 2).sum(axis=1)
-                    for c in range(len(books[j]))
-                ],
-                axis=1,
-            )
-            for j in range(m)
-        ],
-        axis=1,
-    )  # (nq, m, k)
-
-    out_schema = StructType(
-        [
-            StructField("query_ix", LongType(), False),
-            StructField("neighbor_id", codes_df.schema[id_col].dataType, False),
-            StructField("adc", DoubleType(), False),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (n, m)
-            ids = pdf[id_col].values
-            # dist[qi, n] = Σ_j lut[qi, j, codes[n, j]]
-            dist = np.zeros((len(Q), len(codes)))
-            for j in range(m):
-                dist += lut[:, j, :][:, codes[:, j]]
-            rows = []
-            for qi in range(len(Q)):
-                # self-exclusion BEFORE the partial top-k (a self row must
-                # not consume a refine slot — the SQL oracle filters self
-                # first), and (adc, id) lexsort so exact-ADC ties at the
-                # refine boundary resolve by neighbor id like the oracle's
-                # ORDER BY dist, nid — not by batch layout
-                mask = ids != qids[qi]
-                ids_q = ids[mask]
-                d_q = dist[qi][mask]
-                top = min(refine, len(d_q))
-                keep = np.lexsort((ids_q, d_q))[:top]
-                for n_ix in keep:
-                    rows.append((qi, ids_q[n_ix], float(d_q[n_ix])))
-            yield pd.DataFrame(rows, columns=["query_ix", "neighbor_id", "adc"])
-
-    cand = codes_df.mapInPandas(score, schema=out_schema)
-    return _finish_adc_topk(
-        cand, codes_df, queries, qids, Qraw, k, refine, full_vectors, id_col, vec_col
-    )
-
-
-def _finish_adc_topk(
-    cand, codes_df, queries, qids, Qraw, k, refine, full_vectors, id_col, vec_col
-):
-    """Shared tail for ADC-scored top-k surfaces (pq_topk / ivfpq_topk):
-    global top-``refine`` per query by (adc, neighbor_id), then exact
-    cosine rerank against ``full_vectors`` when provided."""
-    w = Window.partitionBy("query_ix").orderBy(F.col("adc").asc(), F.col("neighbor_id").asc())
-    top_r = cand.withColumn("__r", F.row_number().over(w)).where(F.col("__r") <= refine)
-
-    qmap = codes_df.sparkSession.createDataFrame(
-        [(i, q) for i, q in enumerate(qids)], f"query_ix long, query_id {codes_df.schema[id_col].dataType.simpleString()}"
-    )
-    top_r = top_r.join(F.broadcast(qmap), "query_ix")
-
-    if full_vectors is None:
-        # ADC squared distance, ascending-good — deliberately NOT named
-        # "cosine" so callers can't mis-rank it against true-cosine surfaces
-        return (
-            top_r.where(F.col("__r") <= k)
-            .select("query_id", "neighbor_id", "adc", F.col("__r").alias("rank"))
-        )
-    vecs = full_vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
-    )
-    # query vectors come from the caller-supplied queries frame (already
-    # collected above) — NOT from full_vectors, so external queries whose id
-    # is absent from the corpus still rerank correctly
-    qvecs = codes_df.sparkSession.createDataFrame(
-        [(qids[i], Qraw[i]) for i in range(len(qids))],
-        f"query_id {codes_df.schema[id_col].dataType.simpleString()}, "
-        f"__q {queries.schema[vec_col].dataType.simpleString()}",
-    )
-    scored = (
-        top_r.join(vecs, "neighbor_id")
-        .join(F.broadcast(qvecs), "query_id")
-        .withColumn(
-            "cosine",
-            _dot(F.col("__v"), F.col("__q")) / (_norm(F.col("__v")) * _norm(F.col("__q"))),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def ivfpq_index(
     df: DataFrame,
     centroids: list,
@@ -744,7 +572,7 @@ def ivfpq_index(
 
     Vectors are L2-normalized first (cells partition the unit sphere, so
     coarse assignment ranks like cosine — same convention as
-    ``train_pq_codebooks``/``pq_encode``). Codes quantize ``x`` itself,
+    ``train_pq_codebooks``). Codes quantize ``x`` itself,
     not the residual ``x − centroid[cell]``: they are independent of the
     cell, so a SQL oracle can replay them with the ``pq_codebooks_hash``
     recipe and a multi-assigned vector is encoded once.
@@ -807,24 +635,28 @@ def ivfpq_topk(
     queries: DataFrame,
     centroids: list,
     codebooks: list,
+    full_vectors: DataFrame,
     k: int = 10,
     nprobe: int = 4,
     refine: int = 50,
-    full_vectors: DataFrame | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVFADC top-k: probe-cell-pruned ADC scan over PQ codes → exact
-    rerank. This composes the two scale levers the r4 surfaces carried
-    separately: ``ivf_topk``'s cell pruning (touch ``nprobe/nlist`` of the
-    corpus per query, not all of it) and ``pq_topk``'s at-rest compression
-    (score m-byte codes from RAM via a driver-tiny lookup table).
+    rerank against ``full_vectors``: (query_id, neighbor_id, cosine,
+    rank). It composes two scale levers: ``ivf_topk``'s cell pruning
+    (touch ``nprobe/nlist`` of the corpus per query, not all of it) and
+    product quantization's at-rest compression (score m-byte codes from
+    RAM via a driver-tiny asymmetric-distance lookup table). With one
+    cell (``ivf_centroids(dim, 1)``, ``nprobe=1``) it is plain PQ/ADC
+    over the whole corpus (Jégou et al., TPAMI 2011, §V) — the
+    ``pq_topk`` query runs it that way.
 
     Shape at 10^9 vectors: the probed-cell filter prunes the scan (a
     partition filter when the index is written partitioned by cell); the
-    (query, cell) probe pairs are broadcast; the kernel emits only each
-    partition's top ``refine`` per query, so the one shuffle carries
-    O(partitions × queries × refine) rows; the exact rerank joins
+    (query, cell) probe lists ride the kernel closure; the kernel emits
+    only each partition's top ``refine`` per query, so the one shuffle
+    carries O(partitions × queries × refine) rows; the exact rerank joins
     ``refine`` candidate ids back to full vectors. No cross join anywhere.
 
     Codes are cell-independent (``ivfpq_index``), so each query has one
@@ -934,9 +766,35 @@ def ivfpq_topk(
     cand = cand_rows.select(
         F.col(id_col), "cell", "codes"
     ).mapInPandas(score, schema=out_schema)
-    return _finish_adc_topk(
-        cand, index_df, queries, qids, Qraw, k, refine, full_vectors, id_col, vec_col
+    # global top-``refine`` per query by (adc, neighbor_id)
+    w = Window.partitionBy("query_ix").orderBy(F.col("adc").asc(), F.col("neighbor_id").asc())
+    top_r = cand.withColumn("__r", F.row_number().over(w)).where(F.col("__r") <= refine)
+
+    spark = index_df.sparkSession
+    id_type = index_df.schema[id_col].dataType.simpleString()
+    qmap = spark.createDataFrame(
+        list(enumerate(qids)), f"query_ix long, query_id {id_type}"
     )
+    top_r = top_r.join(F.broadcast(qmap), "query_ix")
+    vecs = full_vectors.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
+    )
+    # query vectors come from the caller-supplied queries frame (already
+    # collected above) — NOT from full_vectors, so external queries whose id
+    # is absent from the corpus still rerank correctly
+    qvecs = spark.createDataFrame(
+        list(zip(qids, Qraw)),
+        f"query_id {id_type}, __q {queries.schema[vec_col].dataType.simpleString()}",
+    )
+    scored = (
+        top_r.join(vecs, "neighbor_id")
+        .join(F.broadcast(qvecs), "query_id")
+        .withColumn(
+            "cosine",
+            _dot(F.col("__v"), F.col("__q")) / (_norm(F.col("__v")) * _norm(F.col("__q"))),
+        )
+    )
+    return _top_k_by_cosine(scored, k)
 
 
 def ivfpq_dup_pairs(
@@ -952,8 +810,8 @@ def ivfpq_dup_pairs(
 ) -> DataFrame:
     """Corpus-vs-corpus embedding near-dup pairs THROUGH the compressed
     codes — the actual 100 TB dedup shape, where "queries = the whole
-    corpus" and no side can be collected to the driver (``pq_topk``/
-    ``ivfpq_topk`` collect their small query set; ``cosine_dup_pairs``
+    corpus" and no side can be collected to the driver (``ivfpq_topk``
+    collects its small query set; ``cosine_dup_pairs``
     self-joins FULL vectors via sign-LSH). Here the self-join runs over
     the m-byte PQ codes grouped by IVF cell:
 

@@ -10,10 +10,17 @@ whole-stage codegen; the only shuffles are the ones the semantics demand):
   ``max_doc_freq`` drops tokens present in more than that fraction of docs
   (stopword cut), which both bounds skew and removes pairs that share only
   noise. AQE skew-join handles the rest.
-* ``minhash_lsh``     — shingle→minhash→band→bucket-join: candidate pairs
-  only for docs sharing a band bucket; cost is O(candidates), not O(n²).
-* ``simhash``         — 60-bit near-dup signature; hamming-ball pairing via
-  band buckets on signature quarters.
+  ``hot_tokens`` lists the tokens it drops.
+* ``dup_components``  — connected components over near-dup pairs → one
+  canonical keeper per component.
+* MinHash LSH         — ``minhash_signatures`` (shingle → min-hash),
+  ``banded_buckets`` (band → bucket) and ``minhash_candidates`` (docs
+  sharing a band bucket): cost is O(candidates), not O(n²).
+* ``simhash``         — 60-bit near-dup signature; ``simhash_candidates``
+  pairs signatures within a hamming ball via band buckets on signature
+  quarters.
+* ``dup_spans``       — exact-substring dedup: per-document profile of
+  corpus-wide duplicated n-gram spans.
 """
 
 from __future__ import annotations

@@ -91,8 +91,9 @@ def _decide(
     text_col: str,
 ):
     """Core decision pass: returns (decisions, sig_new, b_new, bounds)
-    with decisions fully materialized and ``sig_new`` still persisted
-    (callers write it to the store, then unpersist)."""
+    with decisions local-checkpointed (decided, and no cache entry left
+    behind) and ``sig_new`` still persisted (callers write it to the
+    store, then unpersist)."""
     from pyspark import StorageLevel
 
     spark = new_docs.sparkSession
@@ -175,9 +176,8 @@ def _decide(
         sig_new.select("id")
         .join(dup.withColumnRenamed("id_b", "id"), "id", "left")
         .select("id", F.col("dup_of").isNull().alias("keep"), "dup_of")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)  # decide BEFORE the store moves on
     )
-    decisions.count()  # decide BEFORE the store moves on
     if old_b is not None:
         cand_old.unpersist()
     return decisions, sig_new, b_new, bounds

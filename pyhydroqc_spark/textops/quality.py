@@ -3,7 +3,6 @@ token counting, document fingerprinting. All pure column expressions."""
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, functions as F
 
 # tiny deterministic marker lexicons (public common-word lists)
@@ -161,8 +160,10 @@ def ngram_perplexity(
     keys — so at 100 TB there are two full-corpus passes, not five.
     Catalyst expands every *reference* to c2 back to its full subtree
     (plans are trees, not DAGs), so the bigram table — the model, NOT
-    the corpus — is persisted memory-and-disk: its one corpus pass runs
-    once and c1/V/model read the cache. The "model"
+    the corpus — is local-checkpointed eagerly: its one corpus pass runs
+    at call time and c1/V/model read the checkpointed rows. A checkpoint,
+    not a persist: a persisted frame stays in Spark's CacheManager after
+    the call and the next call's plan would read it. The "model"
     never leaves the cluster — at 10^9 docs it is a distributed table,
     not a driver artifact. Docs with <2 words have no bigrams and come
     back with NULL ``log2_ppl`` (reinstated by a left join on the input
@@ -185,15 +186,14 @@ def ngram_perplexity(
     c2 = (
         pairs.groupBy("prev", "cur")
         .agg(F.count("*").alias("c2"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=True)
     )
     # context counts from c2, NOT from a second pairs scan: every
     # occurrence of context w is inside exactly one (w, ·) bigram count
     c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
     # V stays IN the plan (broadcast 1-row aggregate over c2's keys — the
     # distinct words of prev ∪ cur are exactly the words seen in any
-    # bigram slot) — no separate driver-blocking count job, and the whole
-    # operator remains lazy
+    # bigram slot) — no driver-blocking count job beyond c2's checkpoint
     vocab_n = (
         c2.select(F.col("prev").alias("wd"))
         .union(c2.select(F.col("cur").alias("wd")))

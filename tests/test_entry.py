@@ -142,3 +142,18 @@ def test_rollup_tiers_runs_at_most_nine_jobs(spark):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     n = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 1 <= n <= 9, n
+
+
+@pytest.mark.parametrize("name", ["text_quality", "dup_keep_list"])
+def test_query_leaves_no_cache_entry(spark, name):
+    """A query call leaves nothing in Spark's CacheManager: a cached frame
+    would be plan-matched into the next call, so a repeated timed run
+    would read the first run's rows instead of computing from parquet.
+    Intermediates a query shares within the call are local checkpoints.
+    Other tests' fixtures cache their inputs, so start from an empty
+    cache."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    QUERIES[name](spark, SF).count()
+    assert cache.isEmpty(), name

@@ -984,11 +984,12 @@ def test_gif_roundtrip_real_lzw_and_interlace(spark):
 
 
 def test_pq_adc_topk_recall_and_memory_contract(spark, monkeypatch):
-    """Product quantization: (a) codes are m small ints (the 10^9-vector
-    memory lever); (b) ADC + exact rerank reaches a recall floor vs exact
-    cosine top-k on clustered embeddings and beats ADC-only; (c) training
-    honors the bounded-sample contract; (d) rerank cosines are EXACT for
-    the neighbors it returns."""
+    """Product quantization, run as IVFADC with one cell (plain PQ/ADC):
+    (a) codes are m small ints (the 10^9-vector memory lever); (b) ADC +
+    exact rerank reaches a recall floor vs exact cosine top-k on
+    clustered embeddings; (c) training honors the bounded-sample
+    contract; (d) rerank cosines are EXACT for the neighbors it
+    returns."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.classic.dataframe import DataFrame
@@ -1017,15 +1018,17 @@ def test_pq_adc_topk_recall_and_memory_contract(spark, monkeypatch):
     assert transfers and max(transfers) <= 300
     assert len(books) == 4 and len(books[0][0]) == dim // 4
 
-    codes = ann.pq_encode(df, books)
-    crow = codes.first()
+    cents = ann.ivf_centroids(dim, 1)
+    idx = ann.ivfpq_index(df, cents, books)
+    crow = idx.first()
+    assert crow["cell"] == 0
     assert len(crow["codes"]) == 4 and all(0 <= c < 32 for c in crow["codes"])
 
     exact = ann.cosine_topk(df, queries, k=10).toPandas()
     truth = exact.groupby("query_id")["neighbor_id"].apply(set)
 
-    got = ann.pq_topk(
-        codes, queries, books, k=10, refine=40, full_vectors=df
+    got = ann.ivfpq_topk(
+        idx, queries, cents, books, k=10, nprobe=1, refine=40, full_vectors=df
     ).toPandas()
     byq = got.groupby("query_id")["neighbor_id"].apply(set)
     hits = sum(len(truth[q] & byq.get(q, set())) for q in truth.index)
@@ -1039,20 +1042,12 @@ def test_pq_adc_topk_recall_and_memory_contract(spark, monkeypatch):
     cos = float(qv @ nv / (np.linalg.norm(qv) * np.linalg.norm(nv)))
     assert abs(cos - r0["cosine"]) < 1e-9
 
-    # ADC-only (no rerank) must still be a reasonable approximation but
-    # not better than the reranked recall
-    adc_only = ann.pq_topk(codes, queries, books, k=10, refine=40).toPandas()
-    byq2 = adc_only.groupby("query_id")["neighbor_id"].apply(set)
-    hits2 = sum(len(truth[q] & byq2.get(q, set())) for q in truth.index)
-    assert hits2 / (10 * len(truth)) <= recall + 1e-9
 
-
-def test_pq_topk_external_queries_and_adc_naming(spark):
-    """(a) Query vectors come from the caller's ``queries`` frame — an id
-    ABSENT from the corpus must still rerank and return k rows (the r4
-    version joined full_vectors on query_id and silently dropped such
-    queries). (b) The no-rerank branch exposes its score as ``adc``
-    (ascending-good squared distance), never under the name ``cosine``."""
+def test_pq_topk_external_queries(spark):
+    """Query vectors come from the caller's ``queries`` frame — an id
+    ABSENT from the corpus must still rerank and return k rows (joining
+    full_vectors on query_id would silently drop such queries). Run as
+    one-cell IVFADC (plain PQ/ADC)."""
     import numpy as np
     import pandas as pd
 
@@ -1065,7 +1060,8 @@ def test_pq_topk_external_queries_and_adc_naming(spark):
         "vec_id long, embedding array<double>",
     )
     books = ann.train_pq_codebooks(df, m=4, k=16, sample_n=200, seed=3)
-    codes = ann.pq_encode(df, books)
+    cents = ann.ivf_centroids(16, 1)
+    idx = ann.ivfpq_index(df, cents, books)
 
     # external queries: corpus vector 5 under a foreign id, plus a novel one
     qX = [list(X[5]), list(X[5] * 0.5 + X[17] * 0.5)]
@@ -1073,23 +1069,21 @@ def test_pq_topk_external_queries_and_adc_naming(spark):
         pd.DataFrame({"vec_id": [100005, 100006], "embedding": qX}),
         "vec_id long, embedding array<double>",
     )
-    got = ann.pq_topk(codes, queries, books, k=5, refine=40, full_vectors=df).toPandas()
+    got = ann.ivfpq_topk(
+        idx, queries, cents, books, k=5, nprobe=1, refine=40, full_vectors=df
+    ).toPandas()
     byq = got.groupby("query_id").size().to_dict()
     assert byq == {100005: 5, 100006: 5}, byq
     # query 100005 IS corpus vector 5 → its top neighbor must be 5, cosine 1
     top = got[(got.query_id == 100005) & (got["rank"] == 1)].iloc[0]
     assert top["neighbor_id"] == 5 and abs(top["cosine"] - 1.0) < 1e-9
 
-    adc_only = ann.pq_topk(codes, queries, books, k=5, refine=40)
-    assert "adc" in adc_only.columns and "cosine" not in adc_only.columns
-
 
 def test_ivfpq_topk_prunes_cells_and_keeps_recall(spark):
     """IVFADC (r5): (a) index rows carry (cell, m codes); (b) the scored
-    candidate set only touches PROBED cells — the full-corpus ADC scan that
-    made pq_topk 'weak' is gone; (c) trained codebooks reach the recall
-    of IVF-flat at the same nprobe (exact rerank recovers it);
-    (d) every query returns exactly k rows."""
+    candidate set only touches PROBED cells, not the whole corpus;
+    (c) trained codebooks reach the recall of IVF-flat at the same nprobe
+    (exact rerank recovers it); (d) every query returns exactly k rows."""
     import numpy as np
     import pandas as pd
 
@@ -1342,12 +1336,14 @@ def test_ngram_contamination_flags_benchmark_overlap(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_adc_topk_partition_invariant_under_ties(spark):
-    """r5 regression: with duplicated identical vectors (exact ADC ties)
-    and a tight refine, pq_topk/ivfpq_topk results must not depend on how
-    the codes are partitioned — the kernel's (adc, neighbor_id) lexsort
-    prune and self-before-prune exclusion make the candidate set
-    deterministic."""
+@pytest.mark.parametrize("nlist,nprobe", [(1, 1), (4, 2)])
+def test_adc_topk_partition_invariant_under_ties(spark, nlist, nprobe):
+    """With duplicated identical vectors (exact ADC ties) and a tight
+    refine, ADC top-k results must not depend on how the codes are
+    partitioned — the kernel's (adc, neighbor_id) lexsort prune and
+    self-before-prune exclusion make the candidate set deterministic.
+    One cell is plain PQ/ADC (the ``pq_topk`` query), four cells probed
+    two at a time is IVFADC."""
     import numpy as np
     import pandas as pd
 
@@ -1363,27 +1359,17 @@ def test_adc_topk_partition_invariant_under_ties(spark):
     books = ann.pq_codebooks_hash(16, m=4, k=16)
     queries = df.where(F.col("vec_id") < 2)
 
+    cents = ann.ivf_centroids(16, nlist)
     outs = []
     for parts in (1, 7):
-        codes = ann.pq_encode(df.repartition(parts), books)
+        idx = ann.ivfpq_index(df.repartition(parts), cents, books)
         got = (
-            ann.pq_topk(codes, queries, books, k=8, refine=10, full_vectors=df)
+            ann.ivfpq_topk(idx, queries, cents, books, k=8, nprobe=nprobe,
+                           refine=10, full_vectors=df)
             .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
         )
         outs.append(got[["query_id", "neighbor_id", "rank"]])
     pd.testing.assert_frame_equal(outs[0], outs[1])
-
-    cents = ann.ivf_centroids(16, 4)
-    outs2 = []
-    for parts in (1, 7):
-        idx = ann.ivfpq_index(df.repartition(parts), cents, books)
-        got = (
-            ann.ivfpq_topk(idx, queries, cents, books, k=8, nprobe=2,
-                           refine=10, full_vectors=df)
-            .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-        )
-        outs2.append(got[["query_id", "neighbor_id", "rank"]])
-    pd.testing.assert_frame_equal(outs2[0], outs2[1])
 
 
 # --------------------------------------------------------------------------
